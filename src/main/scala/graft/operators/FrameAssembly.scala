@@ -26,7 +26,7 @@ import graft.schemas.EventListMessage
   * (map-side) aggregation applies to `collect_list` per key; key
   * cardinality = frames, values bounded by events-per-frame — no skew
   * (every frame has ≤ #digitisers contributions). The TTL/streaming
-  * variant lives in [[graft.streaming.FrameAssemblyStream]].
+  * variant lives in [[graft.streaming.FrameAssemblyTws]].
   */
 object FrameAssembly {
 
@@ -74,7 +74,7 @@ object FrameAssembly {
       // veto OR over the ACCEPTED contributions only — a rejected
       // duplicate's flags must not leak into the assembled frame (the
       // reference rejects the whole message before its flags are read,
-      // and the streaming twins OR per accepted contribution)
+      // and the streaming assembler ORs per accepted contribution)
       .withColumn(
         "vetoFlags",
         expr("aggregate(per_dig, 0, (a, x) -> a | x.vetoFlags)"))

@@ -654,10 +654,8 @@ object StreamingQueries {
   val streamTraceToEventsSql: String = PipelineQueries.traceToEventsSql
 
   /** A2 on the REAL streaming engine (RocksDB state store,
-    * `transformWithState` typed MapState + registered timers —
-    * [[graft.streaming.FrameAssemblyTws]]; the `flatMapGroupsWithState`
-    * twin [[FrameAssemblyStream]] remains as the comparison operator,
-    * StreamingSpec locks both to the same semantics), oracle-checked:
+    * `transformWithState` typed ValueState + registered timers —
+    * [[graft.streaming.FrameAssemblyTws]]), oracle-checked:
     * the closed-form
     * [[PipelineQueries.arithmeticDev2Messages]] ORIGINALS are fed
     * digitiser-by-digitiser, complete frames dispatch incrementally,

@@ -5,24 +5,21 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** Streaming frame assembly (A2) on Spark 4's `transformWithState` —
-  * the modern arbitrary-state API ([[FrameAssemblyStream]] is the
-  * `flatMapGroupsWithState` comparison twin; both render the reference's
-  * digitiser-aggregator cache,
-  * `/root/reference/digitiser-aggregator/src/frame/cache.rs:49-142`).
+  * the pipeline's one streaming rendering of the reference's
+  * digitiser-aggregator cache (`digitiser-aggregator/src/frame/cache.rs:49-142`);
+  * the batch [[graft.operators.FrameAssembly]] is its reference
+  * implementation (StreamingSpec locks the two to the same frame set).
   *
-  * Identical semantics, better state mechanics:
-  *
-  *   - per-digitiser contributions live in a typed `MapState` — each
-  *     arrival writes ONE map entry instead of re-serializing the whole
-  *     frame blob (the fMGWS version rewrites its entire `FrameState`
-  *     per message: with 8 digitisers × 10⁴ events that is 8× the write
-  *     amplification on every contribution);
+  *   - one typed `ValueState` per frame key: a call's rows merge in
+  *     memory with the stored partial, and the contributions are written
+  *     only while the frame stays partial — a frame whose digitisers all
+  *     arrive within one micro-batch (the common case) never stores its
+  *     events, only the small tombstone below;
   *   - the reference's TTL-from-FIRST-message (`partial.rs:30-31`) maps
   *     onto a REAL registered timer, armed once when the first
   *     contribution seeds the frame and left alone afterwards — unlike
   *     `GroupStateTimeout`, which clears on every function call and
-  *     must be defensively re-armed (the r5 tombstone-leak bug class
-  *     simply cannot happen here);
+  *     must be defensively re-armed;
   *   - completeness (`partial.rs:56-60`) dispatches early, deletes the
   *     pending flush timer, and re-purposes the key as a tombstone with
   *     its own TTL timer absorbing late redeliveries (`cache.rs:55-63`,
@@ -54,13 +51,26 @@ import org.apache.spark.sql.streaming._
 object FrameAssemblyTws {
 
   /** One digitiser's SoA contribution to a frame. */
-  final case class Contribution(time: Array[Long], voltage: Array[Int], channel: Array[Long])
+  final case class Contribution(
+      digitizerId: Int,
+      time: Array[Long],
+      voltage: Array[Int],
+      channel: Array[Long])
 
-  /** Frame-level accumulator: OR'd veto flags, tombstone flag, and the
-    * currently armed timer's timestamp (timers are addressed by value —
-    * re-arming must delete the old one).
+  /** Per-frame state: OR'd veto flags, tombstone flag, the currently armed
+    * timer's timestamp (timers are addressed by value — re-arming must
+    * delete the old one) and, while the frame is partial, its
+    * contributions in ascending digitiser order.
     */
-  final case class FrameMeta(vetoFlags: Int, dispatched: Boolean, timerMs: Long)
+  final case class FrameState(
+      vetoFlags: Int,
+      dispatched: Boolean,
+      timerMs: Long,
+      contributions: Array[Contribution])
+
+  // derived once per JVM: `Encoders.product` reflects over the case class,
+  // and `init` runs for every partition of every micro-batch
+  private lazy val frameStateEnc = Encoders.product[FrameState]
 
   /** A message stamped with its DELIVERY time — the event-time clock for
     * [[assembleEventTime]]. Production maps this to the broker ingestion
@@ -86,36 +96,23 @@ object FrameAssemblyTws {
 
     private val expected = expectedDigitizers.sorted
 
-    @transient private var contribs: MapState[Int, Contribution] = _
-    @transient private var meta: ValueState[FrameMeta] = _
+    @transient private var state: ValueState[FrameState] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      contribs = getHandle.getMapState[Int, Contribution](
-        "contribs",
-        Encoders.scalaInt,
-        Encoders.product[Contribution],
-        TTLConfig.NONE)
-      meta = getHandle.getValueState[FrameMeta](
-        "meta",
-        Encoders.product[FrameMeta],
-        TTLConfig.NONE)
-    }
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[FrameState]("frame", frameStateEnc, TTLConfig.NONE)
 
-    private def emit(key: FrameKey, vetoFlags: Int): AssembledFrame = {
-      val entries = contribs.iterator().toArray.sortBy(_._1)
-      val times = Array.newBuilder[Long]
-      val volts = Array.newBuilder[Int]
-      val chans = Array.newBuilder[Long]
-      entries.foreach { case (_, c) =>
-        times ++= c.time; volts ++= c.voltage; chans ++= c.channel
-      }
-      val present = entries.map(_._1)
+    /** `contributions` in ascending digitiser order. */
+    private def emit(
+        key: FrameKey,
+        contributions: Iterable[Contribution],
+        vetoFlags: Int): AssembledFrame = {
+      val present = contributions.map(_.digitizerId).toArray
       AssembledFrame(
         metadata = FrameMetadata(key.timestampNs, key.periodNumber, key.protonsPerPulse,
           key.running, key.frameNumber, vetoFlags),
-        time = times.result(),
-        voltage = volts.result(),
-        channel = chans.result(),
+        time = Array.concat(contributions.map(_.time).toSeq: _*),
+        voltage = Array.concat(contributions.map(_.voltage).toSeq: _*),
+        channel = Array.concat(contributions.map(_.channel).toSeq: _*),
         complete = present.toSeq == expected,
         digitizersPresent = present)
     }
@@ -130,44 +127,43 @@ object FrameAssemblyTws {
       val rs = rows.toVector
       if (rs.isEmpty) return Iterator.empty // data-less invocation: no-op
       val now = rs.iterator.map(rowNowMs(_, timerValues)).max
-      var m = if (meta.exists()) meta.get() else FrameMeta(0, dispatched = false, timerMs = -1L)
-      if (m.dispatched) {
+      val st = Option(state.get()).getOrElse(FrameState(0, dispatched = false, -1L, Array.empty))
+      if (st.dispatched) {
         // late message after dispatch → reject; extend the tombstone so
         // a redelivery burst keeps being absorbed (cache.rs:55-63)
-        getHandle.deleteTimer(m.timerMs)
+        getHandle.deleteTimer(st.timerMs)
         val t = now + ttlMs
         getHandle.registerTimer(t)
-        meta.update(m.copy(timerMs = t))
+        state.update(st.copy(timerMs = t))
         Iterator.empty
       } else {
+        // the stored partial plus this call's rows, merged in memory
+        val merged = scala.collection.mutable.TreeMap.empty[Int, Contribution]
+        st.contributions.foreach(c => merged(c.digitizerId) = c)
+        var veto = st.vetoFlags
         rs.foreach { row =>
           val msg = toMsg(row)
-          if (!contribs.containsKey(msg.digitizerId)) {
-            contribs.updateValue(
-              msg.digitizerId,
-              Contribution(msg.time, msg.voltage, msg.channel))
-            m = m.copy(vetoFlags = m.vetoFlags | msg.metadata.vetoFlags)
+          if (!merged.contains(msg.digitizerId)) {
+            merged(msg.digitizerId) =
+              Contribution(msg.digitizerId, msg.time, msg.voltage, msg.channel)
+            veto |= msg.metadata.vetoFlags
           } // duplicate digitiser → rejected (cache.rs:71-74)
         }
-        if (contribs.keys().toArray.sorted.toSeq == expected) {
+        if (merged.keys.toSeq == expected) {
           // completeness dispatch (partial.rs:56-60): cancel the pending
           // flush, emit, convert the key into a TTL'd tombstone
-          val out = emit(key, m.vetoFlags)
-          contribs.clear()
-          if (m.timerMs >= 0) getHandle.deleteTimer(m.timerMs)
+          if (st.timerMs >= 0) getHandle.deleteTimer(st.timerMs)
           val t = now + ttlMs
           getHandle.registerTimer(t)
-          meta.update(FrameMeta(m.vetoFlags, dispatched = true, timerMs = t))
-          Iterator.single(out)
+          state.update(FrameState(veto, dispatched = true, t, Array.empty))
+          Iterator.single(emit(key, merged.values, veto))
         } else {
           // TTL measured from the FIRST message (partial.rs:30-31): arm
           // exactly once; later contributions do NOT extend the deadline
-          if (m.timerMs < 0) {
-            val t = now + ttlMs
-            getHandle.registerTimer(t)
-            m = m.copy(timerMs = t)
-          }
-          meta.update(m)
+          val t =
+            if (st.timerMs >= 0) st.timerMs
+            else { val first = now + ttlMs; getHandle.registerTimer(first); first }
+          state.update(FrameState(veto, dispatched = false, t, merged.values.toArray))
           Iterator.empty
         }
       }
@@ -177,16 +173,13 @@ object FrameAssemblyTws {
         key: FrameKey,
         timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[AssembledFrame] = {
-      val dispatched = meta.exists() && meta.get().dispatched
-      val out =
-        if (dispatched) Iterator.empty // tombstone expiry: just clean up
-        else {
-          val veto = if (meta.exists()) meta.get().vetoFlags else 0
-          Iterator.single(emit(key, veto)) // TTL flush of the partial frame
-        }
-      contribs.clear()
-      meta.clear()
-      out
+      val st = Option(state.get())
+      state.clear()
+      st match {
+        // TTL flush of the partial frame
+        case Some(p) if !p.dispatched => Iterator.single(emit(key, p.contributions, p.vetoFlags))
+        case _ => Iterator.empty // tombstone expiry
+      }
     }
   }
 

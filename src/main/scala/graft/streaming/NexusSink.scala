@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{NexusTables, RunAssignment}
+import graft.operators.NexusTables
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1061,17 +1061,4 @@ object NexusSink {
       filesAfter: Int,
       bytesBefore: Long,
       bytesAfter: Long)
-
-  /** Wire an assembled-frame stream through run assignment into the sink:
-    * `stream.writeStream.foreachBatch(NexusSink.pipe(sink, runs))`.
-    * `runsProvider` supplies the current run catalog per batch (control
-    * topic accumulated so far) — the reference's engine cache equivalent.
-    */
-  def pipe(sink: NexusSink, runsProvider: SparkSession => DataFrame)(
-      batch: DataFrame,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val assigned = RunAssignment.assignFrames(batch, runsProvider(spark))
-    sink.writeBatch(assigned, batchId)
-  }
 }

@@ -7,24 +7,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** End-to-end streaming DAQ job: the reference's three components chained
-  * on one engine (SURVEY §3.1–3.3):
-  *
-  *   trace stream → event formation (narrow map) → stateful frame
-  *   assembly (TTL + completeness) → run assignment → NeXus run-file sink.
-  *
-  * The trace source is pluggable: tests inject a MemoryStream; a
-  * production deployment reads `spark.readStream.format("kafka")` with
-  * the dat2 decode in front (the Kafka connector is configuration — this
-  * environment ships no broker or connector jar, so that branch stays
-  * untested here). Run intervals are supplied per micro-batch by
-  * `runsProvider` — the control-topic state accumulated so far, exactly
-  * the reference engine's run cache.
-  *
-  * Scale: stage 1 is shuffle-free; stage 2 shuffles once on the frame
-  * key with state bounded by TTL × frame rate; stage 3 broadcasts the
-  * run dimension and writes partition dirs directly from executors.
-  */
 /** Driver-side run catalog — the Spark rendering of the reference
   * engine's in-memory run cache (`run_engine/engine.rs:144-173`): the
   * control stream folds its [[RunInterval]] updates in (runs are a tiny
@@ -192,32 +174,6 @@ object PipelineJobs {
       triggerMs: Long = 100L): StreamingQuery =
     logStream(alarms.toDF(), "alarm", LogTables.alarmTable, sink, catalog, checkpoint, triggerMs)
 
-  def traceToNexus(
-      traces: Dataset[TraceMessage],
-      settings: DetectorSettings,
-      expectedDigitizers: Seq[Int],
-      sink: NexusSink,
-      runsProvider: SparkSession => DataFrame,
-      ttlMs: Long = 500L,
-      checkpoint: String,
-      triggerMs: Long = 100L): StreamingQuery = {
-    allowEmptyBatches(traces)
-    val dev2 = EventFormation.formEvents(traces, settings)
-    val aev2 = FrameAssemblyTws.assemble(dev2, expectedDigitizers, ttlMs)
-    withRocksDbPinned(traces.sparkSession) {
-      aev2.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-        .foreachBatch { (batch: Dataset[graft.schemas.AssembledFrame], batchId: Long) =>
-          val spark = batch.sparkSession
-          val assigned = RunAssignment.assignFrames(batch.toDF(), runsProvider(spark))
-          sink.writeBatch(assigned, batchId)
-        }
-        .start()
-    }
-  }
-
   /** The production A2 assembler (TWS) requires the RocksDB provider.
     * Pin it ONLY for the duration of the `start()` call: a streaming
     * query snapshots the session conf into its own cloned session at
@@ -274,14 +230,31 @@ object PipelineJobs {
     }
   }
 
-  /** The reference nexus-writer's full behavior in one job pair
-    * (SURVEY §3.3): run assignment against the live control-fed
-    * [[RunCatalog]] AND linger finalization per micro-batch — stopped
-    * generations whose linger window has passed move local/ →
-    * completed/ and leave the catalog, exactly the engine's poll loop
-    * (`run_engine/engine.rs:329-356`). The frame-assembly timeout keeps
-    * micro-batches firing, so finalization polls even with no new data
-    * (the reference polls on `--cache-poll-interval-ms` the same way).
+  /** End-to-end streaming DAQ job: the reference's three components
+    * chained on one engine (SURVEY §3.1–3.3):
+    *
+    *   trace stream → event formation (narrow map) → stateful frame
+    *   assembly ([[FrameAssemblyTws]]: TTL + completeness) → run
+    *   assignment → NeXus run-file sink.
+    *
+    * The trace source is pluggable: tests inject a MemoryStream; a
+    * production deployment reads `spark.readStream.format("kafka")` with
+    * the dat2 decode in front (the Kafka connector is configuration — this
+    * environment ships no broker or connector jar, so that branch stays
+    * untested here). Run intervals come from a snapshot of the live
+    * control-fed [[RunCatalog]] per micro-batch — the reference engine's
+    * run cache — and the job adds the nexus-writer's linger
+    * finalization: stopped generations whose linger window has passed
+    * move local/ → completed/ and leave the catalog, exactly the engine's
+    * poll loop (`run_engine/engine.rs:329-356`). A processing-time
+    * `transformWithState` always asks for another batch, so empty
+    * micro-batches keep firing on the trigger and finalization polls even
+    * with no new data (the reference polls on `--cache-poll-interval-ms`
+    * the same way).
+    *
+    * Scale: stage 1 is shuffle-free; stage 2 shuffles once on the frame
+    * key with state bounded by TTL × frame rate; stage 3 broadcasts the
+    * run dimension and writes partition dirs directly from executors.
     */
   def traceToNexusWithLifecycle(
       traces: Dataset[TraceMessage],
@@ -303,39 +276,43 @@ object PipelineJobs {
       compactBeforeArchive: Boolean = false): StreamingQuery = {
     allowEmptyBatches(traces)
     val dev2 = EventFormation.formEvents(traces, settings)
-    // DELIBERATELY the fMGWS twin, not TWS: ProcessingTimeTimeout never
-    // lets the engine quiesce, and this job's linger/archive tiers poll
-    // inside foreachBatch — the perpetual empty-batch cadence is the
-    // reference nexus-writer's --cache-poll-interval-ms loop. TWS
-    // quiesces once its timers drain, which would stall finalization of
-    // already-stopped runs until new data arrived.
-    @scala.annotation.nowarn("cat=deprecation")
-    val aev2 = FrameAssemblyStream.assemble(dev2, expectedDigitizers, ttlMs)
+    val aev2 = FrameAssemblyTws.assemble(dev2, expectedDigitizers, ttlMs)
     val maintenanceSpark = traces.sparkSession
-    val query = aev2.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
-      .foreachBatch { (batch: Dataset[graft.schemas.AssembledFrame], batchId: Long) =>
-        val spark = batch.sparkSession
-        val assigned = RunAssignment.assignFrames(batch.toDF(), catalog.snapshot(spark))
-        sink.writeBatch(assigned, batchId)
-        val now = nowNs()
-        // durably mark every stopped generation (idempotent; the
-        // control query also marks at stop-commit time when wired with
-        // a sink — this is the belt to that suspender)
-        catalog.entries.foreach {
-          case (n, s, Some(u)) => sink.markStopped(n, s, u)
-          case _ => ()
+    val query = withRocksDbPinned(traces.sparkSession) {
+      aev2.writeStream
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
+        .foreachBatch { (batch: Dataset[graft.schemas.AssembledFrame], batchId: Long) =>
+          // no run open: the frames drop, as the reference drops frames
+          // with no open run (`engine.rs:214-238`). Assigning against an
+          // empty run dimension would let the planner prune the stateful
+          // operator and skip this batch's state commit, so the next batch
+          // could not load its state; count() still runs the operator.
+          // Only this thread removes catalog entries, so a non-empty check
+          // holds for the snapshot below.
+          if (catalog.entries.isEmpty) batch.count()
+          else
+            sink.writeBatch(
+              RunAssignment.assignFrames(batch.toDF(), catalog.snapshot(batch.sparkSession)),
+              batchId)
+          val now = nowNs()
+          // durably mark every stopped generation (idempotent; the
+          // control query also marks at stop-commit time when wired with
+          // a sink — this is the belt to that suspender)
+          catalog.entries.foreach {
+            case (n, s, Some(u)) => sink.markStopped(n, s, u)
+            case _ => ()
+          }
+          // the linger predicate lives in finalizeRuns alone; the catalog
+          // is updated from what it actually finalized
+          sink
+            .finalizeRuns(catalog.entries, now, lingerMs)
+            .foreach { case (n, s) => catalog.remove(n, s) }
+          ()
         }
-        // the linger predicate lives in finalizeRuns alone; the catalog
-        // is updated from what it actually finalized
-        sink
-          .finalizeRuns(catalog.entries, now, lingerMs)
-          .foreach { case (n, s) => catalog.remove(n, s) }
-        ()
-      }
-      .start()
+        .start()
+    }
     // archiver tier (flush_to_archive.rs, polled by main.rs:101-103 on
     // its own wall-clock interval): a MAINTENANCE THREAD, not a
     // foreachBatch step (r15) — the r14 shape ran compaction + archive

@@ -175,11 +175,15 @@ class WireCodecsSpec extends AnyFunSuite {
     assert(m.getAs[Long]("n_malformed") === 2L) // corrupt root + length bomb
 
     // streaming path: same transform on a MemoryStream feeds the real
-    // stateful assembler
-    implicit val sqlCtx = spark.sqlContext
+    // stateful assembler (transformWithState needs the RocksDB provider)
+    val s = spark.newSession()
+    s.conf.set(
+      "spark.sql.streaming.stateStore.providerClass",
+      graft.Sessions.RocksDBProvider)
+    implicit val sqlCtx = s.sqlContext
     val input =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Array[Byte]]
-    val assembled = graft.streaming.FrameAssemblyStream
+    val assembled = graft.streaming.FrameAssemblyTws
       .assemble(graft.streaming.WireIngest.dev2FromBinary(input.toDS()), Seq(0, 1, 2, 3))
     val name = s"wire_frames_${System.nanoTime()}"
     val ckpt = java.nio.file.Files.createTempDirectory("wire_ckpt").toString
@@ -193,10 +197,10 @@ class WireCodecsSpec extends AnyFunSuite {
     try {
       input.addData(valid.map(WireCodecs.encodeDev2) ++ Seq(dat2Buf, garbage, corrupt))
       val deadline = System.currentTimeMillis() + 30000L
-      while (spark.table(name).count() < 1 && System.currentTimeMillis() < deadline)
+      while (s.table(name).count() < 1 && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
     } finally q.stop()
-    val frames = spark.table(name).collect()
+    val frames = s.table(name).collect()
     assert(frames.length === 1)
     assert(frames.head.getAs[Boolean]("complete"))
     assert(frames.head.getAs[Seq[Long]]("time").length === 8)

@@ -31,66 +31,10 @@ class StreamingSpec extends AnyFunSuite {
     EventListMessage(did, meta(frame, veto),
       Array(1L, 2L), Array(did * 10, did * 10 + 1), Array(did * 8L, did * 8L))
 
-  /** Poll the memory sink until `pred` holds — `processAllAvailable` never
-    * returns under ProcessingTimeTimeout (the stateful operator always
-    * reports another batch may be needed, so the engine never quiesces).
-    */
-  private def awaitTable(name: String, timeoutMs: Long = 20000L)(
-      pred: Array[org.apache.spark.sql.Row] => Boolean): Array[org.apache.spark.sql.Row] = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var rows = spark.table(name).collect()
-    while (!pred(rows) && System.currentTimeMillis() < deadline) {
-      Thread.sleep(100L)
-      rows = spark.table(name).collect()
-    }
-    rows
-  }
-
-  test("stream frame assembly: completeness dispatch, TTL dispatch, late rejection") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[EventListMessage]
-    val out = FrameAssemblyStream.assemble(input.toDS(), Seq(0, 1), ttlMs = 300L)
-    val ckpt = Files.createTempDirectory("ckpt").toString
-    val query = out.writeStream
-      .format("memory")
-      .queryName("assembled")
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
-      .start()
-    try {
-      // frame 0: both digitisers → dispatches complete immediately
-      input.addData(msg(0, 0), msg(1, 0, veto = 2))
-      // frame 1: only digitiser 0 → waits for TTL
-      input.addData(msg(0, 1))
-      val afterFirst = awaitTable("assembled")(_.length >= 1)
-      assert(afterFirst.length === 1)
-      val f0 = afterFirst.head
-      assert(f0.getAs[org.apache.spark.sql.Row]("metadata").getAs[Long]("frameNumber") === 0L)
-      assert(f0.getAs[Boolean]("complete"))
-      assert(f0.getAs[org.apache.spark.sql.Row]("metadata").getAs[Int]("vetoFlags") === 2)
-      assert(f0.getAs[scala.collection.Seq[Long]]("time").length === 4)
-
-      // late message for dispatched frame 0 → rejected by tombstone;
-      // frame 1 dispatches incomplete once its TTL expires
-      input.addData(msg(1, 0))
-      val frames = awaitTable("assembled")(_.exists(
-        _.getAs[org.apache.spark.sql.Row]("metadata").getAs[Long]("frameNumber") == 1L))
-      val f1 = frames.find(_.getAs[org.apache.spark.sql.Row]("metadata").getAs[Long]("frameNumber") == 1L)
-      assert(f1.isDefined, s"frame 1 should dispatch incomplete after TTL; got ${frames.length} frames")
-      assert(!f1.get.getAs[Boolean]("complete"))
-      assert(f1.get.getAs[scala.collection.Seq[Int]]("digitizersPresent") === Seq(0))
-      // frame 0 was not re-emitted by the late message
-      assert(frames.count(_.getAs[org.apache.spark.sql.Row]("metadata")
-        .getAs[Long]("frameNumber") == 0L) === 1)
-    } finally query.stop()
-  }
-
   test("transformWithState frame assembly: completeness, first-message TTL timer, late rejection") {
-    // the TWS twin of the test above — same semantics on typed MapState +
-    // registered timers (and the TTL must run from the FIRST message:
-    // later contributions must not extend the deadline)
+    // completeness dispatch, TTL flush and late rejection on typed
+    // state + registered timers (the TTL must run from the FIRST
+    // message: later contributions must not extend the deadline)
     val s = spark.newSession()
     s.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
@@ -222,7 +166,7 @@ class StreamingSpec extends AnyFunSuite {
       // batch 1: digitiser 0 seeds the frame → first-message timer at +ttl
       addAndDrain(at(msg(0, 0), 0L))
       // batch 2: DUPLICATE digitiser 0 with a poisoned payload — the
-      // MapState containsKey guard must reject it (cache.rs:71-74) —
+      // stored partial's duplicate guard must reject it (cache.rs:71-74) —
       // then digitiser 1 completes the frame → dispatch + tombstone
       // armed at (T0+200) + ttl
       addAndDrain(
@@ -288,59 +232,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(a === b, "online training must be bit-deterministic across reruns")
   }
 
-  test("TWS and fMGWS frame assemblers produce the identical frame set (twin parity)") {
+  test("streaming frame assembly drains to the batch operator's frame set") {
     val s = spark.newSession()
     s.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       graft.Sessions.RocksDBProvider)
-    def drain(
-        assemble: org.apache.spark.sql.Dataset[EventListMessage] =>
-          org.apache.spark.sql.Dataset[AssembledFrame],
-        name: String): Set[String] = {
-      import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-      val input = MemoryStream[EventListMessage]
-      val ckpt = Files.createTempDirectory(s"ckpt_$name").toString
-      val query = assemble(input.toDS()).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
-        .start()
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    // frames 0..7; frames f%3==0 miss digitiser 1 → TTL partials
+    val feed = for {
+      f <- 0L until 8L
+      d <- Seq(0, 1) if !(f % 3 == 0 && d == 1)
+    } yield msg(d, f, veto = (f % 4).toInt)
+    def render(rows: Array[org.apache.spark.sql.Row]): Set[String] =
+      rows.map { r =>
+        val md = r.getAs[org.apache.spark.sql.Row]("metadata")
+        Seq(
+          md.getAs[Long]("frameNumber"),
+          md.getAs[Int]("vetoFlags"),
+          r.getAs[Boolean]("complete"),
+          r.getAs[scala.collection.Seq[Int]]("digitizersPresent").mkString(","),
+          r.getAs[scala.collection.Seq[Long]]("time").mkString(","),
+          r.getAs[scala.collection.Seq[Int]]("voltage").mkString(","),
+          r.getAs[scala.collection.Seq[Long]]("channel").mkString(",")).mkString("|")
+      }.toSet
+
+    val input = MemoryStream[EventListMessage]
+    val name = "assembled_vs_batch"
+    val ckpt = Files.createTempDirectory(s"ckpt_$name").toString
+    val query = FrameAssemblyTws.assemble(input.toDS(), Seq(0, 1), ttlMs = 300L)
+      .writeStream
+      .format("memory")
+      .queryName(name)
+      .outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("50 milliseconds"))
+      .start()
+    val streamed =
       try {
-        // frames 0..7; frames f%3==0 miss digitiser 1 → TTL partials
-        val feed = for {
-          f <- 0L until 8L
-          d <- Seq(0, 1) if !(f % 3 == 0 && d == 1)
-        } yield msg(d, f, veto = (f % 4).toInt)
         input.addData(feed)
         val deadline = System.currentTimeMillis() + 30000L
         while (s.table(name).count() < 8 && System.currentTimeMillis() < deadline)
           Thread.sleep(100L)
-        s.table(name)
-          .collect()
-          .map { r =>
-            val md = r.getAs[org.apache.spark.sql.Row]("metadata")
-            Seq(
-              md.getAs[Long]("frameNumber"),
-              md.getAs[Int]("vetoFlags"),
-              r.getAs[Boolean]("complete"),
-              r.getAs[scala.collection.Seq[Int]]("digitizersPresent").mkString(","),
-              r.getAs[scala.collection.Seq[Long]]("time").mkString(","),
-              r.getAs[scala.collection.Seq[Int]]("voltage").mkString(","),
-              r.getAs[scala.collection.Seq[Long]]("channel").mkString(",")).mkString("|")
-          }
-          .toSet
+        render(s.table(name).collect())
       } finally {
         try query.stop()
         finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
       }
-    }
-    val tws = drain(FrameAssemblyTws.assemble(_, Seq(0, 1), ttlMs = 300L), "twin_tws")
-    val fmgws = drain(FrameAssemblyStream.assemble(_, Seq(0, 1), ttlMs = 300L), "twin_fmgws")
-    assert(tws.size === 8)
-    assert(tws === fmgws, "the two stateful APIs must render identical reference semantics")
+    val batch = render(graft.operators.FrameAssembly.assemble(feed.toDS(), Seq(0, 1)).collect())
+    assert(streamed.size === 8)
+    assert(streamed === batch, "the TTL drain must assemble exactly the batch frame set")
   }
 
   test("run lifecycle stream: start/stop pairing, invalid stop rejected") {
@@ -386,8 +327,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("e2e").toString
     val sink = new NexusSink(outDir)
-    val runs = Seq(("run_e2e", meta(0).timestampNs - 1L, null.asInstanceOf[java.lang.Long]))
-      .toDF("run_name", "collect_from_ns", "collect_until_ns")
+    val catalog = new RunCatalog
+    catalog.update(Iterator(RunInterval("run_e2e", meta(0).timestampNs - 1L, None)))
 
     val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
     def traceMsg(did: Int, frame: Long) =
@@ -395,12 +336,12 @@ class StreamingSpec extends AnyFunSuite {
         ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
 
     val input = MemoryStream[TraceMessage]
-    val query = PipelineJobs.traceToNexus(
+    val query = PipelineJobs.traceToNexusWithLifecycle(
       input.toDS(),
       DetectorSettings(FixedThreshold(5.0, 1, 0)),
       expectedDigitizers = Seq(0, 1),
       sink = sink,
-      runsProvider = _ => runs,
+      catalog = catalog,
       ttlMs = 200L,
       checkpoint = Files.createTempDirectory("ckpt").toString)
     try {
@@ -480,8 +421,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("restart").toString
     val ckpt = Files.createTempDirectory("restart_ckpt").toString
-    val runs = Seq(("run_rs", meta(0).timestampNs - 1L, null.asInstanceOf[java.lang.Long]))
-      .toDF("run_name", "collect_from_ns", "collect_until_ns")
+    val catalog = new RunCatalog
+    catalog.update(Iterator(RunInterval("run_rs", meta(0).timestampNs - 1L, None)))
     val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
     def traceMsg(did: Int, frame: Long) =
       TraceMessage(did, meta(frame), 1000000000L, Array(
@@ -495,12 +436,12 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     val input = MemoryStream[TraceMessage]
-    def startJob(sink: NexusSink) = PipelineJobs.traceToNexus(
+    def startJob(sink: NexusSink) = PipelineJobs.traceToNexusWithLifecycle(
       input.toDS(),
       DetectorSettings(FixedThreshold(5.0, 1, 0)),
       expectedDigitizers = Seq(0, 1),
       sink = sink,
-      runsProvider = _ => runs,
+      catalog = catalog,
       ttlMs = 200L,
       checkpoint = ckpt)
 
@@ -587,6 +528,46 @@ class StreamingSpec extends AnyFunSuite {
       assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/local/events/run_name=run_chain")))
       assert(catalog.entries.isEmpty, "finalised generation must leave the catalog")
     } finally { dataQuery.stop(); controlQuery.stop() }
+  }
+
+  test("full DAQ chain: frames with no open run drop without killing the query") {
+    import graft.dsp.{DetectorSettings, FixedThreshold}
+    import graft.schemas.{ChannelTrace, TraceMessage}
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("no_run").toString
+    val catalog = new RunCatalog
+    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
+    def traceMsg(did: Int, frame: Long) =
+      TraceMessage(did, meta(frame), 1000000000L, Array(
+        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
+    def eventCount: Long =
+      try spark.read.parquet(s"$outDir/local/events").count()
+      catch { case _: Throwable => 0L }
+    val input = MemoryStream[TraceMessage]
+    val query = PipelineJobs.traceToNexusWithLifecycle(
+      input.toDS(),
+      DetectorSettings(FixedThreshold(5.0, 1, 0)),
+      expectedDigitizers = Seq(0, 1),
+      sink = new NexusSink(outDir),
+      catalog = catalog,
+      ttlMs = 200L,
+      checkpoint = Files.createTempDirectory("no_run_ckpt").toString)
+    try {
+      // a complete frame while the catalog is empty: dropped, but its
+      // batch must still commit the assembly state for the batches after
+      input.addData(traceMsg(0, 0), traceMsg(1, 0))
+      Thread.sleep(3000L)
+      assert(query.isActive, s"query died: ${query.exception}")
+      catalog.update(Iterator(RunInterval("run_late", meta(0).timestampNs - 1L, None)))
+      input.addData(traceMsg(0, 1), traceMsg(1, 1))
+      val deadline = System.currentTimeMillis() + 20000L
+      while (eventCount < 8 && query.isActive && System.currentTimeMillis() < deadline)
+        Thread.sleep(200L)
+      assert(query.isActive, s"query died: ${query.exception}")
+      // only the second frame: 2 digitisers × 2 channels × 2 events
+      assert(eventCount === 8)
+    } finally query.stop()
   }
 
   test("nexus sink: per-run layout, linger finalisation, crash resume") {
