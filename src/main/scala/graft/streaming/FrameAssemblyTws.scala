@@ -10,11 +10,12 @@ import org.apache.spark.sql.streaming._
   * the batch [[graft.operators.FrameAssembly]] is its reference
   * implementation (StreamingSpec locks the two to the same frame set).
   *
-  *   - one typed `ValueState` per frame key: a call's rows merge in
-  *     memory with the stored partial, and the contributions are written
-  *     only while the frame stays partial — a frame whose digitisers all
-  *     arrive within one micro-batch (the common case) never stores its
-  *     events, only the small tombstone below;
+  *   - per-digitiser contributions live in a typed `MapState`, and a
+  *     call's rows merge in memory with any stored partial: only a frame
+  *     that stays partial writes its NEW contributions (one map entry
+  *     each, never a rewrite of the whole frame), so a frame whose
+  *     digitisers all arrive within one micro-batch stores no events at
+  *     all, only the small tombstone below;
   *   - the reference's TTL-from-FIRST-message (`partial.rs:30-31`) maps
   *     onto a REAL registered timer, armed once when the first
   *     contribution seeds the frame and left alone afterwards — unlike
@@ -51,26 +52,18 @@ import org.apache.spark.sql.streaming._
 object FrameAssemblyTws {
 
   /** One digitiser's SoA contribution to a frame. */
-  final case class Contribution(
-      digitizerId: Int,
-      time: Array[Long],
-      voltage: Array[Int],
-      channel: Array[Long])
+  final case class Contribution(time: Array[Long], voltage: Array[Int], channel: Array[Long])
 
-  /** Per-frame state: OR'd veto flags, tombstone flag, the currently armed
-    * timer's timestamp (timers are addressed by value — re-arming must
-    * delete the old one) and, while the frame is partial, its
-    * contributions in ascending digitiser order.
+  /** Frame-level accumulator: OR'd veto flags, tombstone flag, and the
+    * currently armed timer's timestamp (timers are addressed by value —
+    * re-arming must delete the old one).
     */
-  final case class FrameState(
-      vetoFlags: Int,
-      dispatched: Boolean,
-      timerMs: Long,
-      contributions: Array[Contribution])
+  final case class FrameMeta(vetoFlags: Int, dispatched: Boolean, timerMs: Long)
 
   // derived once per JVM: `Encoders.product` reflects over the case class,
   // and `init` runs for every partition of every micro-batch
-  private lazy val frameStateEnc = Encoders.product[FrameState]
+  private lazy val contributionEnc = Encoders.product[Contribution]
+  private lazy val metaEnc = Encoders.product[FrameMeta]
 
   /** A message stamped with its DELIVERY time — the event-time clock for
     * [[assembleEventTime]]. Production maps this to the broker ingestion
@@ -96,25 +89,29 @@ object FrameAssemblyTws {
 
     private val expected = expectedDigitizers.sorted
 
-    @transient private var state: ValueState[FrameState] = _
+    @transient private var contribs: MapState[Int, Contribution] = _
+    @transient private var meta: ValueState[FrameMeta] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FrameState]("frame", frameStateEnc, TTLConfig.NONE)
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      contribs = getHandle.getMapState[Int, Contribution](
+        "contribs", Encoders.scalaInt, contributionEnc, TTLConfig.NONE)
+      meta = getHandle.getValueState[FrameMeta]("meta", metaEnc, TTLConfig.NONE)
+    }
 
-    /** `contributions` in ascending digitiser order. */
+    /** `contributions` keyed and ordered by digitiser id. */
     private def emit(
         key: FrameKey,
-        contributions: Iterable[Contribution],
+        contributions: scala.collection.SortedMap[Int, Contribution],
         vetoFlags: Int): AssembledFrame = {
-      val present = contributions.map(_.digitizerId).toArray
+      val cs = contributions.values.toSeq
       AssembledFrame(
         metadata = FrameMetadata(key.timestampNs, key.periodNumber, key.protonsPerPulse,
           key.running, key.frameNumber, vetoFlags),
-        time = Array.concat(contributions.map(_.time).toSeq: _*),
-        voltage = Array.concat(contributions.map(_.voltage).toSeq: _*),
-        channel = Array.concat(contributions.map(_.channel).toSeq: _*),
-        complete = present.toSeq == expected,
-        digitizersPresent = present)
+        time = Array.concat(cs.map(_.time): _*),
+        voltage = Array.concat(cs.map(_.voltage): _*),
+        channel = Array.concat(cs.map(_.channel): _*),
+        complete = contributions.keys.toSeq == expected,
+        digitizersPresent = contributions.keys.toArray)
     }
 
     override def handleInputRows(
@@ -127,43 +124,48 @@ object FrameAssemblyTws {
       val rs = rows.toVector
       if (rs.isEmpty) return Iterator.empty // data-less invocation: no-op
       val now = rs.iterator.map(rowNowMs(_, timerValues)).max
-      val st = Option(state.get()).getOrElse(FrameState(0, dispatched = false, -1L, Array.empty))
-      if (st.dispatched) {
+      val stored = Option(meta.get())
+      val m = stored.getOrElse(FrameMeta(0, dispatched = false, timerMs = -1L))
+      if (m.dispatched) {
         // late message after dispatch → reject; extend the tombstone so
         // a redelivery burst keeps being absorbed (cache.rs:55-63)
-        getHandle.deleteTimer(st.timerMs)
+        getHandle.deleteTimer(m.timerMs)
         val t = now + ttlMs
         getHandle.registerTimer(t)
-        state.update(st.copy(timerMs = t))
+        meta.update(m.copy(timerMs = t))
         Iterator.empty
       } else {
-        // the stored partial plus this call's rows, merged in memory
+        // a stored non-tombstone meta marks a partial whose contributions
+        // are in `contribs`; merge them with this call's rows in memory
         val merged = scala.collection.mutable.TreeMap.empty[Int, Contribution]
-        st.contributions.foreach(c => merged(c.digitizerId) = c)
-        var veto = st.vetoFlags
+        if (stored.isDefined) contribs.iterator().foreach { case (d, c) => merged(d) = c }
+        val fresh = scala.collection.mutable.ArrayBuffer.empty[Int]
+        var veto = m.vetoFlags
         rs.foreach { row =>
           val msg = toMsg(row)
           if (!merged.contains(msg.digitizerId)) {
-            merged(msg.digitizerId) =
-              Contribution(msg.digitizerId, msg.time, msg.voltage, msg.channel)
+            merged(msg.digitizerId) = Contribution(msg.time, msg.voltage, msg.channel)
+            fresh += msg.digitizerId
             veto |= msg.metadata.vetoFlags
           } // duplicate digitiser → rejected (cache.rs:71-74)
         }
         if (merged.keys.toSeq == expected) {
           // completeness dispatch (partial.rs:56-60): cancel the pending
           // flush, emit, convert the key into a TTL'd tombstone
-          if (st.timerMs >= 0) getHandle.deleteTimer(st.timerMs)
+          if (stored.isDefined) contribs.clear()
+          if (m.timerMs >= 0) getHandle.deleteTimer(m.timerMs)
           val t = now + ttlMs
           getHandle.registerTimer(t)
-          state.update(FrameState(veto, dispatched = true, t, Array.empty))
-          Iterator.single(emit(key, merged.values, veto))
+          meta.update(FrameMeta(veto, dispatched = true, timerMs = t))
+          Iterator.single(emit(key, merged, veto))
         } else {
           // TTL measured from the FIRST message (partial.rs:30-31): arm
           // exactly once; later contributions do NOT extend the deadline
+          fresh.foreach(d => contribs.updateValue(d, merged(d)))
           val t =
-            if (st.timerMs >= 0) st.timerMs
+            if (m.timerMs >= 0) m.timerMs
             else { val first = now + ttlMs; getHandle.registerTimer(first); first }
-          state.update(FrameState(veto, dispatched = false, t, merged.values.toArray))
+          meta.update(FrameMeta(veto, dispatched = false, timerMs = t))
           Iterator.empty
         }
       }
@@ -173,12 +175,15 @@ object FrameAssemblyTws {
         key: FrameKey,
         timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[AssembledFrame] = {
-      val st = Option(state.get())
-      state.clear()
-      st match {
-        // TTL flush of the partial frame
-        case Some(p) if !p.dispatched => Iterator.single(emit(key, p.contributions, p.vetoFlags))
-        case _ => Iterator.empty // tombstone expiry
+      val m = Option(meta.get())
+      meta.clear()
+      m match {
+        case Some(p) if !p.dispatched =>
+          // TTL flush of the partial frame
+          val partial = scala.collection.immutable.TreeMap.from(contribs.iterator())
+          contribs.clear()
+          Iterator.single(emit(key, partial, p.vetoFlags))
+        case _ => Iterator.empty // tombstone expiry: `contribs` is already empty
       }
     }
   }

@@ -252,6 +252,11 @@ object PipelineJobs {
     * with no new data (the reference polls on `--cache-poll-interval-ms`
     * the same way).
     *
+    * A checkpoint written by the earlier `flatMapGroupsWithState` assembly
+    * of this job has a different state schema and cannot be restarted
+    * here: start on a fresh checkpoint directory ([[RunCatalog.resumeFrom]]
+    * still recovers the runs from the sink layout).
+    *
     * Scale: stage 1 is shuffle-free; stage 2 shuffles once on the frame
     * key with state bounded by TTL × frame rate; stage 3 broadcasts the
     * run dimension and writes partition dirs directly from executors.

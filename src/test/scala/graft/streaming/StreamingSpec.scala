@@ -31,6 +31,33 @@ class StreamingSpec extends AnyFunSuite {
     EventListMessage(did, meta(frame, veto),
       Array(1L, 2L), Array(did * 10, did * 10 + 1), Array(did * 8L, did * 8L))
 
+  // two channels per digitiser; under FixedThreshold(5.0, 1, 0) each
+  // channel forms 2 events (t=8,11), so a 2-digitiser frame carries 8
+  private val fixtureTrace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
+
+  private def traceMsg(did: Int, frame: Long) =
+    TraceMessage(did, meta(frame), 1000000000L, Array(
+      ChannelTrace(did * 8L, fixtureTrace), ChannelTrace(did * 8L + 1, fixtureTrace)))
+
+  /** Row count of a parquet dir; 0 until the dir exists. */
+  private def countAt(dir: String): Long =
+    try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
+
+  /** The lifecycle job on [[fixtureTrace]] frames from digitisers 0 and 1. */
+  private def lifecycleJob(
+      input: MemoryStream[TraceMessage],
+      sink: NexusSink,
+      catalog: RunCatalog,
+      checkpoint: String) =
+    PipelineJobs.traceToNexusWithLifecycle(
+      input.toDS(),
+      graft.dsp.DetectorSettings(graft.dsp.FixedThreshold(5.0, 1, 0)),
+      expectedDigitizers = Seq(0, 1),
+      sink = sink,
+      catalog = catalog,
+      ttlMs = 200L,
+      checkpoint = checkpoint)
+
   test("transformWithState frame assembly: completeness, first-message TTL timer, late rejection") {
     // completeness dispatch, TTL flush and late rejection on typed
     // state + registered timers (the TTL must run from the FIRST
@@ -321,35 +348,18 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("end-to-end streaming job: traces → events → frames → run-assigned sink") {
-    import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("e2e").toString
-    val sink = new NexusSink(outDir)
     val catalog = new RunCatalog
     catalog.update(Iterator(RunInterval("run_e2e", meta(0).timestampNs - 1L, None)))
-
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
-
     val input = MemoryStream[TraceMessage]
-    val query = PipelineJobs.traceToNexusWithLifecycle(
-      input.toDS(),
-      DetectorSettings(FixedThreshold(5.0, 1, 0)),
-      expectedDigitizers = Seq(0, 1),
-      sink = sink,
-      catalog = catalog,
-      ttlMs = 200L,
-      checkpoint = Files.createTempDirectory("ckpt").toString)
+    val query = lifecycleJob(input, new NexusSink(outDir), catalog,
+      Files.createTempDirectory("ckpt").toString)
     try {
       input.addData(traceMsg(0, 0), traceMsg(1, 0), traceMsg(0, 1), traceMsg(1, 1))
       val deadline = System.currentTimeMillis() + 20000L
-      def eventCount: Long =
-        try spark.read.parquet(s"$outDir/local/events").count()
-        catch { case _: Throwable => 0L }
+      def eventCount = countAt(s"$outDir/local/events")
       while (eventCount < 16 && System.currentTimeMillis() < deadline) Thread.sleep(200L)
       // 2 frames × 2 digitisers × 2 channels × 2 events (t=8,11 fixture)
       assert(eventCount === 16)
@@ -361,14 +371,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("producer side: assembled frames stream to a binary topic as aev2 wire buffers (K1)") {
     import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage, WireCodecs}
+    import graft.schemas.WireCodecs
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val topicDir = Files.createTempDirectory("wire_topic").toString
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
     val input = MemoryStream[TraceMessage]
     val query = PipelineJobs.framesToWireTopic(
       input.toDS(),
@@ -415,35 +421,20 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("end-to-end restart: new sink + same checkpoint resumes event_index from disk, no duplicates") {
-    import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("restart").toString
     val ckpt = Files.createTempDirectory("restart_ckpt").toString
     val catalog = new RunCatalog
     catalog.update(Iterator(RunInterval("run_rs", meta(0).timestampNs - 1L, None)))
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
-    def eventCount: Long =
-      try spark.read.parquet(s"$outDir/local/events").count()
-      catch { case _: Throwable => 0L }
+    def eventCount = countAt(s"$outDir/local/events")
     def await(target: Long): Unit = {
       val deadline = System.currentTimeMillis() + 20000L
       while (eventCount < target && System.currentTimeMillis() < deadline) Thread.sleep(200L)
     }
 
     val input = MemoryStream[TraceMessage]
-    def startJob(sink: NexusSink) = PipelineJobs.traceToNexusWithLifecycle(
-      input.toDS(),
-      DetectorSettings(FixedThreshold(5.0, 1, 0)),
-      expectedDigitizers = Seq(0, 1),
-      sink = sink,
-      catalog = catalog,
-      ttlMs = 200L,
-      checkpoint = ckpt)
+    def startJob(sink: NexusSink) = lifecycleJob(input, sink, catalog, ckpt)
 
     val q1 = startJob(new NexusSink(outDir))
     try {
@@ -470,7 +461,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("full DAQ chain: control stream drives run catalog, sink, and linger finalisation") {
     import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("chain").toString
@@ -485,10 +475,6 @@ class StreamingSpec extends AnyFunSuite {
       control.toDS(), catalog, Files.createTempDirectory("chain_ctl_ckpt").toString,
       stopSink = Some(sink))
 
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
 
     val input = MemoryStream[TraceMessage]
     // deterministic "now": far past the stop's linger window, so the
@@ -511,8 +497,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(catalog.entries === Seq(("run_chain", startMs * 1000000L, None)))
 
       input.addData(traceMsg(0, 0), traceMsg(1, 0), traceMsg(0, 1), traceMsg(1, 1))
-      def countAt(dir: String): Long =
-        try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
       val deadline = System.currentTimeMillis() + 20000L
       while (countAt(s"$outDir/local/events") < 16 && System.currentTimeMillis() < deadline)
         Thread.sleep(200L)
@@ -531,38 +515,28 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("full DAQ chain: frames with no open run drop without killing the query") {
-    import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("no_run").toString
     val catalog = new RunCatalog
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
-    def eventCount: Long =
-      try spark.read.parquet(s"$outDir/local/events").count()
-      catch { case _: Throwable => 0L }
+    def eventCount = countAt(s"$outDir/local/events")
     val input = MemoryStream[TraceMessage]
-    val query = PipelineJobs.traceToNexusWithLifecycle(
-      input.toDS(),
-      DetectorSettings(FixedThreshold(5.0, 1, 0)),
-      expectedDigitizers = Seq(0, 1),
-      sink = new NexusSink(outDir),
-      catalog = catalog,
-      ttlMs = 200L,
-      checkpoint = Files.createTempDirectory("no_run_ckpt").toString)
+    val query = lifecycleJob(input, new NexusSink(outDir), catalog,
+      Files.createTempDirectory("no_run_ckpt").toString)
     try {
       // a complete frame while the catalog is empty: dropped, but its
       // batch must still commit the assembly state for the batches after
-      input.addData(traceMsg(0, 0), traceMsg(1, 0))
-      Thread.sleep(3000L)
-      assert(query.isActive, s"query died: ${query.exception}")
+      val fed = input.addData(traceMsg(0, 0), traceMsg(1, 0)).json
+      // a pruned plan reports no input rows, so match the source offset
+      def frameBatchDone = query.recentProgress.exists(_.sources.exists(_.endOffset == fed))
+      val deadline = System.currentTimeMillis() + 20000L
+      while (!frameBatchDone && query.isActive && System.currentTimeMillis() < deadline)
+        Thread.sleep(100L)
+      assert(frameBatchDone, s"the first frame's batch never finished: ${query.exception}")
       catalog.update(Iterator(RunInterval("run_late", meta(0).timestampNs - 1L, None)))
       input.addData(traceMsg(0, 1), traceMsg(1, 1))
-      val deadline = System.currentTimeMillis() + 20000L
-      while (eventCount < 8 && query.isActive && System.currentTimeMillis() < deadline)
+      val deadline2 = System.currentTimeMillis() + 20000L
+      while (eventCount < 8 && query.isActive && System.currentTimeMillis() < deadline2)
         Thread.sleep(200L)
       assert(query.isActive, s"query died: ${query.exception}")
       // only the second frame: 2 digitisers × 2 channels × 2 events
@@ -989,7 +963,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("full DAQ chain: per-run log tables (runlog/selog/alarm) written, finalized, archived") {
     import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("chain_logs").toString
@@ -1014,10 +987,6 @@ class StreamingSpec extends AnyFunSuite {
     val alarmQuery = PipelineJobs.alarmsToNexus(
       alarmIn.toDS(), sink, catalog, Files.createTempDirectory("cl_al_ckpt").toString)
 
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
     val input = MemoryStream[TraceMessage]
     // real wall-clock "now": the 2023-epoch fixture stop lingered out long
     // ago, and an ADVANCING clock lets the interval-gated archive poll
@@ -1034,8 +1003,6 @@ class StreamingSpec extends AnyFunSuite {
       archiveIntervalMs = 1L,
       // maintenance tier on: generations must reach archive/ compacted
       compactBeforeArchive = true)
-    def countAt(dir: String): Long =
-      try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
     def await(what: String)(pred: => Boolean): Unit = {
       val deadline = System.currentTimeMillis() + 30000L
       while (!pred && System.currentTimeMillis() < deadline) Thread.sleep(200L)
@@ -1149,8 +1116,6 @@ class StreamingSpec extends AnyFunSuite {
       checkpoint = Files.createTempDirectory("sc_ckpt").toString,
       lingerMs = 500L,
       archiveIntervalMs = 1L)
-    def countAt(dir: String): Long =
-      try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
     def await(what: String)(pred: => Boolean): Unit = {
       val deadline = System.currentTimeMillis() + 30000L
       while (!pred && System.currentTimeMillis() < deadline) Thread.sleep(200L)
@@ -1192,7 +1157,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("restart at scale: 1k-source se00/f144 log tables stay complete, event_index continuous") {
     import graft.dsp.{DetectorSettings, FixedThreshold}
-    import graft.schemas.{ChannelTrace, TraceMessage}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val outDir = Files.createTempDirectory("restart_scale").toString
@@ -1208,17 +1172,11 @@ class StreamingSpec extends AnyFunSuite {
     def selogMsg(i: Int) =
       SampleEnvLog(s"se_$i", i % 8, t0 + i.toLong * 1000L, 250000.0, "Start",
         Array(i / 4.0, i / 2.0), Array.empty[Long], i.toLong)
-    val trace = Array(0, 1, 2, 1, 0, 1, 2, 1, 8, 0, 2, 8, 3, 1, 2)
-    def traceMsg(did: Int, frame: Long) =
-      TraceMessage(did, meta(frame), 1000000000L, Array(
-        ChannelTrace(did * 8L, trace), ChannelTrace(did * 8L + 1, trace)))
 
     val control = MemoryStream[ControlMessage]
     val runlogIn = MemoryStream[LogData]
     val selogIn = MemoryStream[SampleEnvLog]
     val input = MemoryStream[TraceMessage]
-    def countAt(dir: String): Long =
-      try spark.read.parquet(dir).count() catch { case _: Throwable => 0L }
     def await(what: String)(pred: => Boolean): Unit = {
       val deadline = System.currentTimeMillis() + 40000L
       while (!pred && System.currentTimeMillis() < deadline) Thread.sleep(200L)
