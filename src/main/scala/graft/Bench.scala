@@ -1,7 +1,57 @@
 package graft
+import graft.obs.Obs
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 object Bench {
+
+  /** One timing of one query: its wall seconds, whether it succeeded,
+    * and the work the measurement spine saw under its tag (empty when the
+    * timing failed).
+    */
+  final case class Timing(wall: Double, ok: Boolean, work: Obs.Work = Obs.Work())
+
+  /** A query's pooled timings: the timing that set the wall minimum, the
+    * gap between the two closest timings, and whether every timing failed.
+    */
+  final case class Pooled(best: Timing, spread: Double, allFailed: Boolean)
+
+  /** Pool one query's timings. Successful timings only, unless every
+    * timing failed: then all of them, so the query still reports a wall,
+    * and `allFailed` keeps that failure wall out of the board total.
+    * The spread is the gap between the two CLOSEST timings: a large one
+    * flags a timing contaminated by a one-off spike, so cross-round
+    * per-query deltas smaller than the spread are noise, not plan changes.
+    */
+  def pool(timings: Seq[Timing]): Pooled = {
+    val okOnly = timings.filter(_.ok)
+    val kept = if (okOnly.nonEmpty) okOnly else timings
+    val walls = kept.map(_.wall).sorted
+    val spread =
+      if (walls.size < 2) 0.0 else walls.sliding(2).map(w => w(1) - w(0)).min
+    Pooled(kept.minBy(_.wall), spread, allFailed = okOnly.isEmpty)
+  }
+
+  /** The queries owed a third timing, at most `cap` of them, each group
+    * in name order: first every query with a failed timing (its wall is
+    * meaningless, so it needs a SUCCESSFUL sample), then every query whose
+    * two passes disagree by more than max(0.5 s, 50% of the faster one).
+    */
+  def retimeQueue(pass1: Map[String, Timing], pass2: Map[String, Timing], cap: Int = 40): Seq[String] = {
+    val names = pass1.keys.toSeq.sorted
+    val failed = names.filter(n => !pass1(n).ok || !pass2(n).ok)
+    val spiked = names.filterNot(failed.contains).filter { n =>
+      val (a, b) = (pass1(n).wall, pass2(n).wall)
+      math.abs(a - b) > math.max(0.5, 0.5 * math.min(a, b))
+    }
+    (failed ++ spiked).take(cap)
+  }
+
+  private def jstr(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** A JSON object from already-encoded values, keys in name order. */
+  private def jobj(kvs: Iterable[(String, String)]): String =
+    kvs.toSeq.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -70,20 +120,29 @@ object Bench {
     // failure during any pass (e.g. OOM under churn) must not land its
     // short failure wall-clock as the official per-query minimum. The
     // timing still returns a wall (so a query that fails EVERY pass keeps
-    // a number rather than vanishing) but failed timings are excluded
-    // from the min/spread whenever at least one timing succeeded, and the
-    // failing queries are stamped in the JSON.
+    // a number rather than vanishing) but [[pool]] excludes failed
+    // timings whenever one succeeded, and the failing queries are stamped
+    // in the JSON. Each timing runs under its own job tag, so the spine
+    // hands back the jobs, tasks and executor CPU of exactly that timing.
     val failedTimings = mutable.Map[String, Int]().withDefaultValue(0)
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def timeOnce(name: String, pass: Int, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Timing = {
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => failedTimings(name) += 1; false }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val timing =
+        try {
+          val (wall, work) = Obs.measured(spark, s"graft-bench-$pass-$name") {
+            fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }
+          Timing(wall, ok = true, work)
+        } catch {
+          case _: Throwable =>
+            failedTimings(name) += 1
+            Timing((System.nanoTime() - t0) / 1e9, ok = false)
+        }
       // drop anything a query cached/registered so the next measurement
       // starts from the same cold-cache state
       spark.catalog.clearCache()
-      (dt, ok)
+      timing
     }
     // two passes, report the per-query minimum: a single pass is exposed
     // to one-off JIT/GC/host-contention spikes that say nothing about the
@@ -118,7 +177,6 @@ object Bench {
     // artifact is self-contained: the exclusion REASON (and the in-sweep
     // sampled sibling that keeps its law measurable) is in the JSON, not
     // just in SCALE.md prose (VERDICT r15 ask #2)
-    def jstr(v: String) = "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val excludedJson = skippedNames.map { n =>
       val c = SparkEntry.contracts(n)
       jstr(n) + ":{" +
@@ -146,11 +204,11 @@ object Bench {
     // falls back to the loadavg check alone; comparable-minimum claims
     // still require the default two passes.
     val onePass = sys.env.get("SPARK_GRAFT_PASSES").contains("1")
-    val pass1 = ordered.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
+    val pass1 = ordered.map { case (name, fn) => name -> timeOnce(name, 1, fn) }.toMap
     graft.queries.DedupQueries.clearClusterMemo(spark)
     val pass2 =
       if (onePass) pass1
-      else ordered.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
+      else ordered.map { case (name, fn) => name -> timeOnce(name, 2, fn) }.toMap
     // Targeted third timing for SPIKED queries only (r16): one external
     // churn episode hitting one pass of one query (measured: a 27.6 s
     // pass-1 spike on q_als_rank1 against a 2.0 s pass-2) inflates the
@@ -162,44 +220,43 @@ object Bench {
     // plan's true cost) and the spread is recomputed over the two
     // CLOSEST timings (the spike, once out-voted 2-to-1, is evidence of
     // host churn, not of the plan). The re-measured set is recorded in
-    // the JSON; bounded to 40 queries so churn cannot stretch the run.
-    val spiked =
-      if (onePass) Seq.empty
-      else ordered.map(_._1).filter { n =>
-        val lo = math.min(pass1(n)._1, pass2(n)._1)
-        math.abs(pass1(n)._1 - pass2(n)._1) > math.max(0.5, 0.5 * lo) ||
-          // a failed timing always earns the re-timing slot: its wall is
-          // meaningless, so the query needs a second SUCCESSFUL sample
-          !pass1(n)._2 || !pass2(n)._2
-      }.take(40)
+    // the JSON; bounded to 40 queries so churn cannot stretch the run,
+    // with failed-timing queries served before spiked ones.
+    val spiked = if (onePass) Seq.empty else retimeQueue(pass1, pass2)
     val pass3 = spiked.map { n =>
       graft.queries.DedupQueries.clearClusterMemo(spark)
-      n -> timeOnce(n, ordered.toMap.apply(n))
+      n -> timeOnce(n, 3, ordered.toMap.apply(n))
     }.toMap
     val loadAfter = fmtLoad(loadavgVals())
-    // per-query timing pool: successful timings only, unless every timing
-    // failed (then keep all so the query still reports a number and the
-    // failure is visible via failed_timings)
-    def pool(name: String): Seq[Double] = {
-      val all = Seq(pass1(name), pass2(name)) ++ pass3.get(name)
-      val okOnly = all.filter(_._2)
-      (if (okOnly.nonEmpty) okOnly else all).map(_._1)
+    val pooled = pass1.map { case (name, _) =>
+      name -> pool(Seq(pass1(name), pass2(name)) ++ pass3.get(name))
     }
-    val results = pass1.map { case (name, _) => name -> pool(name).min }
-    // per-query spread = gap between the two CLOSEST timings: a large
-    // spread flags a timing contaminated by a one-off spike, so
-    // cross-round per-query deltas smaller than the spread are noise,
-    // not plan changes
-    val spreads = pass1.map { case (name, _) =>
-      val sorted = pool(name).sorted
-      name -> (if (sorted.size < 2) 0.0
-               else sorted.sliding(2).map(w => w(1) - w(0)).min)
-    }
-    val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val sp = spreads.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val results = pooled.map { case (name, p) => name -> p.best.wall }
+    val spreads = pooled.map { case (name, p) => name -> p.spread }
+    // a query that failed every timing reports its failure wall in
+    // "queries" but stays out of the total (listed in "all_failed"), so
+    // a failure can never deflate a cross-round total
+    val allFailed = pooled.collect { case (name, p) if p.allFailed => name }.toSeq.sorted
+    // per-query work from the spine, taken from the timing that set the
+    // wall minimum; stream_* only for queries that ran micro-batches
+    val works = pooled.collect { case (name, p) if !p.allFailed => name -> p.best.work }
+    val streamed = works.filter(_._2.progress.nonEmpty)
+    def perQuery(ws: Map[String, Obs.Work])(f: Obs.Work => Any): String =
+      jobj(ws.map { case (n, w) => n -> f(w).toString })
+    val workJson = Seq(
+      "cpu_sec" -> perQuery(works)(_.cpuSec),
+      "tasks" -> perQuery(works)(_.tasks),
+      "jobs" -> perQuery(works)(_.jobs),
+      "shuffle_bytes" -> perQuery(works)(_.shuffleWriteBytes),
+      "spill_bytes" -> perQuery(works)(_.diskSpillBytes),
+      "stream_batches" -> perQuery(streamed)(_.progress.size),
+      "stream_batch_ms" -> perQuery(streamed)(_.streamBatchMs),
+      "stream_durations_ms" -> perQuery(streamed)(w =>
+        jobj(w.streamDurationsMs.map { case (k, v) => k -> v.toString }))
+    ).map { case (k, v) => jstr(k) + ":" + v }.mkString(",")
+    val qs = jobj(results.map { case (k, v) => k -> v.toString })
+    val sp = jobj(spreads.map { case (k, v) => k -> v.toString })
+    val total = results.collect { case (n, v) if !allFailed.contains(n) => v }.sum
     // contention self-identification (r11 forensics, automated): a run
     // that starts on a loaded host (1-min loadavg > 4.0 on 32 cpus) or
     // whose pass-to-pass spread exceeds 25% of the total is tagged
@@ -226,11 +283,11 @@ object Bench {
         f"WARNING: bench run contended (loadavg_launch=$launchLoad1%.2f, " +
           f"spread_total=$spreadTotalAll%.1f s vs total=$total%.1f s) — " +
           "timings unreliable; re-run on a quiet host")
-    val remeasuredJson = spiked.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failedTimings.toSeq.sortBy(_._1)
-      .map { case (n, c) => "\"" + n + "\":" + c }.mkString("{", ",", "}")
+    val remeasuredJson = spiked.sorted.map(jstr).mkString("[", ",", "]")
+    val allFailedJson = allFailed.map(jstr).mkString("[", ",", "]")
+    val failedJson = jobj(failedTimings.map { case (n, c) => n -> c.toString })
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","contended":$contended,"calibration":${calibration.json},"gate":$gateJson,"skipped":$skippedJson,"excluded":$excludedJson,"only":$onlyJson,"remeasured":$remeasuredJson,"failed_timings":$failedJson,"queries":$qs,"spread":$sp,"loadavg_launch":$launchLoad1,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","contended":$contended,"calibration":${calibration.json},"gate":$gateJson,"skipped":$skippedJson,"excluded":$excludedJson,"only":$onlyJson,"remeasured":$remeasuredJson,"failed_timings":$failedJson,"all_failed":$allFailedJson,"queries":$qs,"spread":$sp,$workJson,"loadavg_launch":$launchLoad1,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir"}"""
     // The full per-query JSON (~5 KB at 166 queries) exceeds the 2000-char
     // stdout tail a capture harness keeps, so a full-map println can never
     // parse from the tail. Persist the complete JSON to a file, then print
@@ -247,7 +304,7 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"unit":"sec","n_queries":${results.size},"n_skipped":${skippedNames.size},"n_remeasured":${spiked.size},"n_failed_timings":${failedTimings.size},"contended":$contended,"calibration":${calibration.json},"gate":$gateJson,"spread_total":${BigDecimal(spreadTotalAll).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"loadavg_launch":$launchLoad1,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"queries":$slowest,"queries_full":"${out.toString}","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${BigDecimal(total).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"unit":"sec","n_queries":${results.size},"n_skipped":${skippedNames.size},"n_remeasured":${spiked.size},"n_failed_timings":${failedTimings.size},"n_all_failed":${allFailed.size},"contended":$contended,"calibration":${calibration.json},"gate":$gateJson,"spread_total":${BigDecimal(spreadTotalAll).setScale(3, BigDecimal.RoundingMode.HALF_UP)},"loadavg_launch":$launchLoad1,"loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"queries":$slowest,"queries_full":"${out.toString}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -115,7 +115,7 @@ object Sessions {
       s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
       if (highChurnStateStore(s)) {
         // HIGH-CHURN profile (frame assembly and anything else whose
-        // keys live ~1 TTL then die): the FrameSoak A/B (SCALE.md r13)
+        // keys live ~1 TTL then die): the frame-soak A/B (SCALE.md r13)
         // measured changelog checkpointing pinning RocksDB
         // delete-tombstones — per-batch cost grew LINEARLY at constant
         // live state as timer scans and map seeks read through them —
@@ -145,6 +145,18 @@ object Sessions {
       .orElse(sys.env.get("GRAFT_STATE_STORE_HIGH_CHURN"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
+  /** A boolean env knob as a Spark conf value: `default` when unset,
+    * `true`/`false` as given, and anything else fails the session build
+    * with a message naming the variable (rather than a Spark conf parse
+    * error far from it).
+    */
+  private[graft] def boolKnob(env: Map[String, String], name: String, default: Boolean): String =
+    env.get(name) match {
+      case None => default.toString
+      case Some(v @ ("true" | "false")) => v
+      case Some(v) => throw new IllegalArgumentException(s"$name must be true or false, got '$v'")
+    }
+
   def local(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession
       .builder()
@@ -172,14 +184,14 @@ object Sessions {
       //   explicitly at their persist sites instead; flip per deployment.
       .config(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_AQE_CACHED_REPART", "false"))
+        boolKnob(sys.env, "GRAFT_AQE_CACHED_REPART", default = false))
       // - parallelismFirst=true (Spark default) targets partition count ≈
       //   cores for small shuffles; false targets advisoryPartitionSize
       //   (fewer, larger partitions — the §2.2 posture). Kept env-
       //   flippable because the right answer is deployment-dependent.
       .config(
         "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
+        boolKnob(sys.env, "GRAFT_AQE_PARALLELISM_FIRST", default = true))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -332,7 +332,7 @@ final class NexusSink(
         ms.sortBy(_.tsNs).foreach { m =>
           frameRows.add(org.apache.spark.sql.Row(
             name, start, m.tsNs - start, idx, m.periodNumber,
-            m.frameNumber, m.complete, m.running, m.vetoFlags, batchId))
+            m.frameNumber, m.complete, m.running, m.vetoFlags))
           idx += m.nEvents
         }
       }
@@ -351,46 +351,48 @@ final class NexusSink(
     val eventsFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val eventsThread = new Thread(
       () =>
-        try
-          NexusTables
-            .eventTable(cached)
-            .withColumn("batch_id", lit(batchId))
-            .write
-            .mode(SaveMode.Overwrite)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_name", "run_start_ns", "batch_id")
-            .parquet(local.resolve("events").toString)
+        try writePlane(NexusTables.eventTable(cached), "events", batchId)
         catch { case t: Throwable => eventsFailure.set(t) },
       "nexus-events-write")
     eventsThread.setDaemon(true)
     eventsThread.start()
     try {
       import spark.implicits._
-      // dynamic partition OVERWRITE, not append: replaying a micro-batch
-      // after restart must replace its (run, batch_id) partitions — a
-      // blind append would duplicate every row of the replayed batch
-      spark
-        .createDataFrame(frameRows, NexusSink.frameplaneSchema)
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_name", "run_start_ns", "batch_id")
-        .parquet(local.resolve("frames").toString)
+      writePlane(spark.createDataFrame(frameRows, NexusSink.frameplaneSchema), "frames", batchId)
       // periods group: per-period accumulation from frame metadata
       // (period.rs:23-55, UpdatePeriodList) — same derived-plane shape
-      periodRows
-        .toDF("run_name", "run_start_ns", "period_number", "n_frames", "n_events")
-        .withColumn("batch_id", lit(batchId))
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_name", "run_start_ns", "batch_id")
-        .parquet(local.resolve("periods").toString)
+      writePlane(
+        periodRows.toDF("run_name", "run_start_ns", "period_number", "n_frames", "n_events"),
+        "periods",
+        batchId)
     } finally eventsThread.join()
     val failure = eventsFailure.get()
     if (failure != null) throw failure
     batchCounts.foreach { case (r, n) => eventBase(r) = eventBase(r) + n }
   }
+
+  /** Write one plane's rows of micro-batch `batchId` under
+    * `local/<table>`. Dynamic partition OVERWRITE, not append: replaying
+    * a micro-batch after restart must replace its
+    * `(run_name, run_start_ns, batch_id)` partitions — a blind append
+    * would duplicate every row of the replayed batch.
+    *
+    * The batch id enters as a STRING literal. Spark inlines a Long
+    * literal into the generated Java source, so every new batch id used
+    * to compile new classes, growing the JIT code cache batch after
+    * batch in a long-running job; a string literal is passed by
+    * reference, so one compiled write serves every batch. The on-disk
+    * layout is the same either way: partition values live only in the
+    * `batch_id=N` paths.
+    */
+  private def writePlane(rows: DataFrame, table: String, batchId: Long): Unit =
+    rows
+      .withColumn("batch_id", lit(batchId.toString))
+      .write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("run_name", "run_start_ns", "batch_id")
+      .parquet(local.resolve(table).toString)
 
   /** The r13-shaped fully distributed write path, kept as the fallback
     * for batches larger than [[maxDriverFramesPerBatch]] (e.g. one giant
@@ -414,36 +416,19 @@ final class NexusSink(
       val onDisk = onDiskEventCounts(spark, newRuns, batchId)
       newRuns.foreach(r => eventBase(r) = onDisk.getOrElse(r, 0L))
     }
-    NexusTables
-      .eventTable(cached)
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_name", "run_start_ns", "batch_id")
-      .parquet(local.resolve("events").toString)
-    NexusTables
-      .frameTable(cached, eventBase.toMap)
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_name", "run_start_ns", "batch_id")
-      .parquet(local.resolve("frames").toString)
-    cached
-      .groupBy(
-        col("run_name"),
-        col("run_start_ns"),
-        col("metadata.periodNumber").as("period_number"))
-      .agg(
-        count(lit(1)).as("n_frames"),
-        sum(size(col("time")).cast("long")).as("n_events"))
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_name", "run_start_ns", "batch_id")
-      .parquet(local.resolve("periods").toString)
+    writePlane(NexusTables.eventTable(cached), "events", batchId)
+    writePlane(NexusTables.frameTable(cached, eventBase.toMap), "frames", batchId)
+    writePlane(
+      cached
+        .groupBy(
+          col("run_name"),
+          col("run_start_ns"),
+          col("metadata.periodNumber").as("period_number"))
+        .agg(
+          count(lit(1)).as("n_frames"),
+          sum(size(col("time")).cast("long")).as("n_events")),
+      "periods",
+      batchId)
     batchCounts.foreach { case (r, n) => eventBase(r) = eventBase(r) + n }
   }
 
@@ -486,13 +471,7 @@ final class NexusSink(
             cached.filter(
               concat_ws("@", col("run_name"), col("run_start_ns").cast("long"))
                 .isin(live.map { case (n, s) => s"$n@$s" }: _*))
-        liveRows
-          .withColumn("batch_id", lit(batchId))
-          .write
-          .mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_name", "run_start_ns", "batch_id")
-          .parquet(local.resolve(table).toString)
+        writePlane(liveRows, table, batchId)
       }
     } finally cached.unpersist()
   }
@@ -999,8 +978,8 @@ object NexusSink {
       vetoFlags: Int,
       nEvents: Long)
 
-  /** Schema of the frame plane as written (NexusTables.frameTable's
-    * column order and types plus the trailing batch_id) — the
+  /** Schema of the driver-derived frame plane (NexusTables.frameTable's
+    * column order and types; [[writePlane]] appends batch_id) — the
     * driver-derived and distributed paths must stay byte-compatible.
     */
   private val frameplaneSchema: org.apache.spark.sql.types.StructType = {
@@ -1014,8 +993,7 @@ object NexusSink {
       StructField("frame_number", LongType, nullable = false),
       StructField("frame_complete", BooleanType, nullable = false),
       StructField("running", BooleanType, nullable = false),
-      StructField("veto_flags", IntegerType, nullable = false),
-      StructField("batch_id", LongType, nullable = false)))
+      StructField("veto_flags", IntegerType, nullable = false)))
   }
 
   /** Recursive delete for scratch/layout dirs — shared with the

@@ -26,29 +26,34 @@ class CompactionSpec extends AnyFunSuite {
   private def meta(frame: Long) =
     FrameMetadata(1700000000000000000L + frame * 20000000L, 0L, 4, true, frame, 0)
 
+  private val startNs = meta(0).timestampNs - 1L
+
+  /** Micro-batch `b` of generation `run_c`: two frames, three events. */
+  private def assignedBatch(b: Int) = {
+    import spark.implicits._
+    Seq(
+      AssembledFrame(
+        meta(b * 2),
+        Array(5L + b, 6L + b),
+        Array(100 + b, 200 + b),
+        Array(0L, 1L),
+        true,
+        Array(0, 1)),
+      AssembledFrame(meta(b * 2 + 1), Array(7L + b), Array(300 + b), Array(2L), true, Array(0, 1)))
+      .toDS()
+      .withColumn("run_name", lit("run_c"))
+      .withColumn("run_start_ns", lit(startNs))
+  }
+
   /** Build a sink with one finalized generation written across `nBatches`
     * micro-batches (→ nBatches batch_id partitions per table) and one
     * still-open generation under local/.
     */
   private def buildSink(nBatches: Int): (NexusSink, String, Long) = {
-    import spark.implicits._
     val outDir = Files.createTempDirectory("compact").toString
     val sink = new NexusSink(outDir)
-    val startNs = meta(0).timestampNs - 1L
     (0 until nBatches).foreach { b =>
-      val aev2 = Seq(
-        AssembledFrame(
-          meta(b * 2),
-          Array(5L + b, 6L + b),
-          Array(100 + b, 200 + b),
-          Array(0L, 1L),
-          true,
-          Array(0, 1)),
-        AssembledFrame(meta(b * 2 + 1), Array(7L + b), Array(300 + b), Array(2L), true, Array(0, 1)))
-        .toDS()
-      val assigned = aev2
-        .withColumn("run_name", lit("run_c"))
-        .withColumn("run_start_ns", lit(startNs))
+      val assigned = assignedBatch(b)
       sink.writeBatch(assigned, batchId = b.toLong)
       // the open generation that must NOT be compacted
       sink.writeBatch(
@@ -230,5 +235,42 @@ class CompactionSpec extends AnyFunSuite {
     Files.writeString(stale.resolve("part-dead.parquet"), "leftover")
     sink2.compactCompleted(spark)
     assert(!Files.exists(stale), "stale foreign scratch must be reclaimed")
+  }
+
+  private def rowsOf(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
+
+  test("over-cap fallback writes the same planes as the driver-derived path") {
+    val driverDir = Files.createTempDirectory("sink-driver").toString
+    val distributedDir = Files.createTempDirectory("sink-distributed").toString
+    val driver = new NexusSink(driverDir)
+    val distributed = new NexusSink(distributedDir, maxDriverFramesPerBatch = 0L)
+    Seq(0, 1).foreach { b =>
+      driver.writeBatch(assignedBatch(b), batchId = b.toLong)
+      distributed.writeBatch(assignedBatch(b), batchId = b.toLong)
+    }
+    Seq("events", "frames", "periods").foreach { table =>
+      val expected = rowsOf(s"$driverDir/local/$table")
+      assert(expected.nonEmpty, table)
+      assert(rowsOf(s"$distributedDir/local/$table") == expected, table)
+    }
+    // event_index carries across batches: batch 1's first frame starts
+    // after batch 0's three events, on both paths
+    Seq(driverDir, distributedDir).foreach { dir =>
+      val index = spark.read.parquet(s"$dir/local/frames")
+        .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
+      assert(index == Seq(0L, 2L, 3L, 5L), dir)
+    }
+  }
+
+  test("a warm sink compiles no new code for the next same-shape batch") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sink = new NexusSink(Files.createTempDirectory("sink-codegen").toString)
+    sink.writeBatch(assignedBatch(0), batchId = 0L)
+    sink.writeBatch(assignedBatch(1), batchId = 1L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    sink.writeBatch(assignedBatch(2), batchId = 2L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a new batch id must not generate new code")
   }
 }
