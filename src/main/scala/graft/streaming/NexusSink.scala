@@ -378,12 +378,12 @@ final class NexusSink(
     * would duplicate every row of the replayed batch.
     *
     * The batch id enters as a STRING literal. Spark inlines a Long
-    * literal into the generated Java source, so every new batch id used
-    * to compile new classes, growing the JIT code cache batch after
-    * batch in a long-running job; a string literal is passed by
-    * reference, so one compiled write serves every batch. The on-disk
-    * layout is the same either way: partition values live only in the
-    * `batch_id=N` paths.
+    * literal into the generated Java source, so each new batch id would
+    * compile new classes and grow the JIT code cache batch after batch
+    * in a long-running job; a string literal is passed by reference, so
+    * one compiled write serves every batch. The on-disk layout is the
+    * same either way: partition values live only in the `batch_id=N`
+    * paths.
     */
   private def writePlane(rows: DataFrame, table: String, batchId: Long): Unit =
     rows
