@@ -55,6 +55,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the quiet-host gate's knobs (see the gate below), read before the
+    // session is built so a bad value fails before any work
+    val gateOn = !sys.env.get("SPARK_GRAFT_GATE").contains("off")
+    val gateTries = Sessions.intKnob(sys.env, "SPARK_GRAFT_GATE_TRIES", default = 8, min = 1)
+    val gateSleepSec =
+      Sessions.intKnob(sys.env, "SPARK_GRAFT_GATE_SLEEP_SEC", default = 45, min = 0)
     val spark = Sessions.local("graft-bench", cpus)
     // warm-up: exercise codegen/JIT/IO paths once so the first timed
     // query doesn't absorb session warm-up costs
@@ -77,10 +83,7 @@ object Bench {
     // Knobs: SPARK_GRAFT_GATE=off disables (for self-managed law
     // sweeps); SPARK_GRAFT_GATE_TRIES / SPARK_GRAFT_GATE_SLEEP_SEC
     // size the retry loop (defaults 8 × 45 s — bounded so a driver
-    // timeout cannot starve the measured passes).
-    val gateOn = !sys.env.get("SPARK_GRAFT_GATE").contains("off")
-    val gateTries = sys.env.getOrElse("SPARK_GRAFT_GATE_TRIES", "8").toInt
-    val gateSleepSec = sys.env.getOrElse("SPARK_GRAFT_GATE_SLEEP_SEC", "45").toInt
+    // timeout cannot starve the measured passes; tries ≥ 1, sleep ≥ 0).
     val (gateLoadMax, gateCpuMtMax, gateShuffleMax) = (4.0, 4.2, 5.0)
     var calibration: Calibrate.Result = null
     var gateAttempts = 0
@@ -106,7 +109,7 @@ object Bench {
           f"(loadavg1=$gateLoad1%.2f, cpu_mt=${calibration.cpuMtSec}%.2f, " +
           f"shuffle=${calibration.shuffleSec}%.2f) — proceeding; treat timings with care")
     // launch-load marker for the contended heuristic: the LAST PRE-PROBE
-    // reading (gateLoad1). The ~8 s 32-thread calibration probe itself
+    // reading (gateLoad1). The ~8 s all-cores calibration probe itself
     // pushes the 1-min loadavg to ~6–10 on an otherwise idle host, so a
     // fresh /proc/loadavg read AFTER the gate (what r15 compared against
     // the 4.0 threshold) flags every gated run contended — self-inflicted

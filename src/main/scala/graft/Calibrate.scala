@@ -17,10 +17,11 @@ import org.apache.spark.sql.SparkSession
   *     tracks clock speed / steal on the driver-side and per-task
   *     critical paths;
   *   - `cpu_mt_sec`: the identical per-core work on every core at once
-  *     via one 32-partition Spark job — tracks effective multicore
-  *     throughput including scheduler overhead and shared-cache /
-  *     frequency effects under full load (the regime every heavy query
-  *     runs in);
+  *     via one Spark job with one partition per session core
+  *     (`defaultParallelism`, see [[mtSeeds]]) — tracks effective
+  *     multicore throughput including scheduler overhead and
+  *     shared-cache / frequency effects under full load (the regime
+  *     every heavy query runs in);
   *   - `shuffle_sec`: one exchange + hash aggregate over 3×10⁷ rows /
   *     10⁶ keys — tracks the shuffle write/read + codegen-agg path.
   *
@@ -52,6 +53,12 @@ object Calibrate {
 
   private val PerCoreIters = 1200000000L // ~1.5 s nominal per core
 
+  /** Seeds of the `cpu_mt` job, one partition each: one per session core,
+    * so every core runs one [[kernel]] call of `PerCoreIters` and the
+    * probe reads the same nominal time on any core count.
+    */
+  private[graft] def mtSeeds(cores: Int): Range = 1 to math.max(1, cores)
+
   def run(spark: SparkSession): Result = {
     // one untimed warm pass so JIT compiles the kernel before the
     // single-thread measurement (the MT pass runs in executor threads
@@ -61,8 +68,9 @@ object Calibrate {
     val s1 = kernel(0x9E3779B97F4A7C15L, PerCoreIters)
     val cpu1t = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
+    val seeds = mtSeeds(spark.sparkContext.defaultParallelism)
     val s2 = spark.sparkContext
-      .parallelize(1 to 32, 32)
+      .parallelize(seeds, seeds.size)
       .map(i => Calibrate.kernel(i.toLong, PerCoreIters))
       .reduce(_ ^ _)
     val cpuMt = (System.nanoTime() - t1) / 1e9

@@ -157,6 +157,18 @@ object Sessions {
       case Some(v) => throw new IllegalArgumentException(s"$name must be true or false, got '$v'")
     }
 
+  /** An integer env knob: `default` when unset, the value when it parses
+    * as an integer ≥ `min`, and anything else throws with a message
+    * naming the variable.
+    */
+  private[graft] def intKnob(env: Map[String, String], name: String, default: Int, min: Int): Int =
+    env.get(name) match {
+      case None => default
+      case Some(v) =>
+        v.toIntOption.filter(_ >= min).getOrElse(
+          throw new IllegalArgumentException(s"$name must be an integer >= $min, got '$v'"))
+    }
+
   def local(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession
       .builder()

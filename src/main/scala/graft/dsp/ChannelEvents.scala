@@ -47,13 +47,13 @@ object ChannelEvents {
   /** Detect events on one channel trace; returns parallel (times, intensities).
     * `sampleTimeNs = 1e9 / sample_rate` (`processing.rs:31`).
     *
-    * Runs on the [[DetectorKernels]] loop skin (r14): identical
+    * Runs on the [[DetectorKernels]] loops: identical
     * push/signal/assemble call order to the iterator composition — which
     * DspSpec still locks it against on randomized traces — minus the
     * boxed per-sample tuple the iterator chain allocates (the measured
-    * bottleneck of the formation envelope, FormationBench r14). The
-    * double trace is materialized once up front; normalization folds
-    * into the kernel loop.
+    * bottleneck of the r14 formation envelope, SCALE.md). The double
+    * trace is materialized once up front; normalization folds into the
+    * kernel loop.
     */
   def findChannelEvents(
       voltage: Array[Int],

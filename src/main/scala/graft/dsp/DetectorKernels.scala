@@ -1,21 +1,22 @@
 package graft.dsp
 
-/** Primitive-loop drivers for the three detector chains — the HOT skin.
+/** Primitive-loop drivers for the three detector chains — the one
+  * implementation behind every detector query.
   *
   * [[DetectorFn.over]]/[[WindowFn.over]] compose the same stage objects
   * lazily, which is the right shape for unit tests and reference-vector
   * specs, but the iterator chain allocates a boxed `(Double, Double)`
   * tuple per SAMPLE — at the reference's 30 k-bin × 1 GS/s trace shape
-  * that allocation dominated the measured envelope (FormationBench r14:
-  * 1.2–9.3 M samples/s/core). These drivers make exactly the same
-  * `push`/`signal`/`assemble` calls in exactly the same order in a
+  * that allocation dominated the measured formation envelope (r14:
+  * 1.2–9.3 M samples/s/core, SCALE.md). These drivers make exactly the
+  * same `push`/`signal`/`assemble` calls in exactly the same order in a
   * `while` loop, so the emitted events are identical by construction;
   * DspSpec locks kernel ≡ iterator equality on randomized traces.
   *
   * Normalization (`sign · (v − baseline)`) is folded into the loop — the
-  * typed path's [[ChannelEvents]] passes its settings; the Catalyst
-  * expressions pass `sign = 1, baseline = 0` (they detect on raw
-  * doubles).
+  * trace path's [[ChannelEvents]] passes its settings; the table
+  * queries in `SignalQueries` pass `dt = 1, sign = 1, baseline = 0`
+  * (they detect on raw doubles indexed by position).
   */
 object DetectorKernels {
 
@@ -54,8 +55,8 @@ object DetectorKernels {
     val det = new DifferentialThresholdDetector(thresholdV, duration, coolOff, constantMultiple)
     // the W3 N=2 window fused inline: emits [v_i, v_i − v_{i−1}] from
     // index 1 with identity time shift — measured faster than driving
-    // the ArrayDeque-backed FiniteDifferencesWindow per sample
-    // (FormationBench r14 A/B); the reusable buffer is safe because the
+    // the ArrayDeque-backed FiniteDifferencesWindow per sample (r14
+    // A/B); the reusable buffer is safe because the
     // discriminator clones before it stores and otherwise reads
     // transiently (Detectors.scala)
     val buf = new Array[Double](2)

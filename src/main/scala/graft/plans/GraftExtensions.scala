@@ -13,11 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * (or `.withExtensions(new GraftExtensions)`) and every session — SQL,
-  * thrift, notebook — sees `vec_dot` / `detect_pulses` without any
-  * driver-side `register()` call. The per-session
-  * `VecDot.register`/`DetectPulses.register` helpers remain for embedded
-  * use; this is the idiomatic injection path Spark provides for
-  * libraries.
+  * thrift, notebook — sees `vec_dot`, `z_order_key` and the rest without
+  * any driver-side `register()` call. The per-session `register` helpers
+  * (`VecDot.register` and the like) remain for embedded use; this is the
+  * idiomatic injection path Spark provides for libraries.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -32,41 +31,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // count(DISTINCT <integral>) → the mergeable bitmap aggregate
     ext.injectOptimizerRule(_ => RewriteCountDistinctToBitmap)
     val vecDot: Seq[Expression] => Expression = exprs => VecDot(exprs(0), exprs(1))
-    val detect: Seq[Expression] => Expression =
-      exprs => DetectPulses(exprs(0), exprs(1), exprs(2), exprs(3))
-    val detectDiff: Seq[Expression] => Expression =
-      exprs => DetectPulsesDifferential(exprs(0), exprs(1), exprs(2), exprs(3))
-    val detectAdv: Seq[Expression] => Expression =
-      exprs =>
-        DetectPulsesAdvanced(
-          exprs(0), exprs(1), exprs(2), exprs(3), exprs(4), exprs(5), exprs(6))
     ext.injectFunction(
       (
         FunctionIdentifier("vec_dot"),
         info("vec_dot", "vec_dot(a, b) - sequential-fold dot product of two double arrays"),
         vecDot))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("detect_pulses"),
-        info(
-          "detect_pulses",
-          "detect_pulses(samples, threshold, duration, cool_off) - threshold FSM over a trace"),
-        detect))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("detect_pulses_differential"),
-        info(
-          "detect_pulses_differential",
-          "detect_pulses_differential(samples, threshold, duration, cool_off) - derivative-threshold FSM over a trace"),
-        detectDiff))
-    ext.injectFunction(
-      (
-        FunctionIdentifier("detect_pulses_advanced"),
-        info(
-          "detect_pulses_advanced",
-          "detect_pulses_advanced(samples, onset, fall, termination, duration, " +
-            "baseline_length, smoothing_size) - three-phase muon FSM over a trace"),
-        detectAdv))
     ext.injectFunction(
       (
         FunctionIdentifier("z_order_key"),

@@ -5,8 +5,7 @@ import graft.operators.{EventFormation, FrameAssembly, NexusTables, RunAssignmen
 import graft.schemas.{EventListMessage, FrameMetadata, RunStart, RunStop}
 import graft.sources.TraceGenerator
 import graft.sources.TraceGenerator.GeneratorConfig
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The DAQ pipeline as declared queries: dat2 traces through event
@@ -32,6 +31,30 @@ object PipelineQueries {
   private def dev2Encoder(s: SparkSession) =
     org.apache.spark.sql.Encoders.product[EventListMessage]
 
+  /** One row per event of formed dev2 messages: the harness compare can't
+    * hash array cells, and the SoA triple is exactly an exploded zip.
+    * `explodeFn` picks the variant: `explode_outer` keeps zero-event
+    * messages visible as `n_events == 0` rows with null event columns
+    * (the reference's per-frame surface still shows empty frames);
+    * `explode` drops them.
+    */
+  private[queries] def perEventRows(explodeFn: Column => Column)(
+      events: Dataset[EventListMessage]): DataFrame =
+    events
+      .toDF()
+      .select(
+        col("digitizerId"),
+        col("metadata.frameNumber").as("frame_number"),
+        size(col("time")).as("n_events"),
+        explodeFn(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
+      .select(
+        col("digitizerId"),
+        col("frame_number"),
+        col("n_events"),
+        col("ev.time").as("event_time"),
+        col("ev.voltage").as("event_voltage"),
+        col("ev.channel").as("event_channel"))
+
   /** P1–P3/D1/D5 full chain with a DuckDB oracle (VERDICT r4 #4): traces →
     * per-channel threshold FSM → per-message SoA concat → per-event rows,
     * on the closed-form [[TraceFixtures]] grid (same 32×4 shape as the
@@ -46,24 +69,7 @@ object PipelineQueries {
       .formEvents(
         TraceFixtures.arithmeticTraces(s, nFrames = 32, nDigitizers = 4),
         DetectorSettings(FixedThreshold(threshold = 100.0), baseline = 50.0))
-      .toDF()
-      // scalar rows (one per event): the harness compare can't hash
-      // array cells, and the SoA triple is exactly an exploded zip;
-      // explode_outer keeps zero-event frames visible as n_events == 0
-      // rows (null event columns) — the reference's per-frame surface
-      // still shows empty frames
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        size(col("time")).as("n_events"),
-        explode_outer(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("ev.time").as("event_time"),
-        col("ev.voltage").as("event_voltage"),
-        col("ev.channel").as("event_channel"))
+      .transform(perEventRows(explode_outer))
 
   /** DuckDB oracle for [[traceToEvents]]: islands per (f, d, c) →
     * per-event rows (time = first index at 1 GS/s, intensity = max
@@ -94,19 +100,7 @@ object PipelineQueries {
       .formEvents(
         TraceFixtures.arithmeticTraces(s, nFrames = 16, nDigitizers = 4),
         DetectorSettings(DifferentialThreshold(threshold = 5.0), baseline = 50.0))
-      .toDF()
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        size(col("time")).as("n_events"),
-        explode_outer(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("ev.time").as("event_time"),
-        col("ev.voltage").as("event_voltage"),
-        col("ev.channel").as("event_channel"))
+      .transform(perEventRows(explode_outer))
 
   /** DuckDB oracle for [[traceToEventsDifferential]] (gaps-and-islands
     * over dv > 0 with the arming/latch rules, per (f, d, c) trace).
@@ -174,75 +168,19 @@ object PipelineQueries {
             baselineLength = None,
             smoothingWindowSize = Some(3)),
           baseline = 0.0))
-      .toDF()
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        size(col("time")).as("n_events"),
-        // INNER explode, unlike the threshold chains above: this query's
-        // oracle joins ev↔msg inner and the expr twin's explode emits
-        // nothing for an empty message — explode_outer here would
-        // surface a null-field row the other two never produce (latent
-        // parity break, masked only while the sawtooth fixture pulses on
-        // every message)
-        explode(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("ev.time").as("event_time"),
-        col("ev.voltage").as("event_voltage"),
-        col("ev.channel").as("event_channel"))
+      // INNER explode, unlike the threshold chains above: the advanced
+      // oracle joins ev↔msg inner, so a message with no pulses has no
+      // row there — explode_outer would add a null-event row for it
+      // (masked only while the sawtooth fixture pulses on every message)
+      .transform(perEventRows(explode))
 
-  /** [[traceToEventsAdvanced]] through the Catalyst expression path
-    * ([[graft.plans.DetectPulsesAdvanced]]): traces stay in Tungsten rows,
-    * the W2/W3 window chain is fused into the expression's scan, and the
-    * typed path's saturating wire casts (u32 time, u16 intensity) are
-    * applied as SQL expressions — same oracle, same rows.
-    */
-  def traceToEventsAdvancedExpr(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.DetectPulsesAdvanced.register(s)
-    val w = Window.partitionBy(col("digitizerId"), col("frame_number"))
-    TraceFixtures
-      .arithmeticTraces(s, nFrames = 8, nDigitizers = 4)
-      .toDF()
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        explode(col("channels")).as("ch"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("ch.channel").as("event_channel"),
-        explode(
-          expr(
-            "detect_pulses_advanced(transform(ch.voltage, v -> cast(v AS double)), " +
-              "2.0D, -2.0D, -0.5D, 0.0D, 0, 3)")).as("p"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("event_channel"),
-        expr("cast(least(greatest(p.time, 0D), 4294967295D) as bigint)")
-          .as("event_time"),
-        expr("cast(least(greatest(p.height, 0D), 65535D) as int)")
-          .as("event_voltage"))
-      .withColumn("n_events", count(lit(1)).over(w).cast("int"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("event_time"),
-        col("event_voltage"),
-        col("event_channel"))
-  }
-
-  /** DuckDB oracle for BOTH advanced-chain queries. Regenerates the
-    * fixture grid, the smoothed means (`(v[j-2]+v[j-1]+v[j])/3` at
-    * centred time `j-1`) and the finite differences, then walks the
-    * three-phase FSM with a RECURSIVE CTE: from each phase boundary the
-    * next boundary is the first later sample whose derivative satisfies
-    * the current mode's threshold (the exact duration=0 semantics —
-    * see [[traceToEventsAdvanced]]). Superlatives are span aggregates
+  /** DuckDB oracle for the advanced chain, served under both of its
+    * query names. Regenerates the fixture grid, the smoothed means
+    * (`(v[j-2]+v[j-1]+v[j])/3` at centred time `j-1`) and the finite
+    * differences, then walks the three-phase FSM with a RECURSIVE CTE:
+    * from each phase boundary the next boundary is the first later
+    * sample whose derivative satisfies the current mode's threshold (the
+    * exact duration=0 semantics — see [[traceToEventsAdvanced]]). Superlatives are span aggregates
     * with LATEST-tie argmax/argmin (`max(k) FILTER (value = extreme)` —
     * the FSM's `>=`/`<=` update rule); the assembler's degradient
     * correction and the saturating u16 cast are replicated verbatim.
@@ -365,19 +303,7 @@ object PipelineQueries {
             minAmplitude = Some(150.0),
             maxAmplitude = Some(250.0)),
           baseline = 0.0))
-      .toDF()
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        size(col("time")).as("n_events"),
-        explode(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("ev.time").as("event_time"),
-        col("ev.voltage").as("event_voltage"),
-        col("ev.channel").as("event_channel"))
+      .transform(perEventRows(explode))
 
   val traceToEventsBandedSql: String = advancedChainSql(Some((150.0, 250.0)))
 

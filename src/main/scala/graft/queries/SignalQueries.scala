@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.dsp.{DetectorFn, DifferentialThresholdDetector, ThresholdDetector}
+import graft.dsp.DetectorKernels
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,38 +39,15 @@ object SignalQueries {
       .groupByKey(_.user_id)
       .flatMapGroups { (uid: Long, it: Iterator[Ev]) =>
         val trace = it.toArray.sortBy(e => (e.ts, e.event_id))
-        val samples = trace.iterator.zipWithIndex.map { case (e, i) => (i.toDouble, e.value) }
-        DetectorFn
-          .over(samples, new ThresholdDetector(threshold, 1, 0))
-          .map(ev => (uid, trace(ev.time.toInt).ts, ev.pulseHeight))
+        val out = Seq.newBuilder[(Long, java.sql.Timestamp, Double)]
+        DetectorKernels.threshold(
+          trace.map(_.value), dt = 1.0, sign = 1.0, baseline = 0.0,
+          thresholdV = threshold, duration = 1, coolOff = 0) { (t, h) =>
+          out += ((uid, trace(t.toInt).ts, h))
+        }
+        out.result()
       }
       .toDF("user_id", "event_time", "pulse_height")
-  }
-
-  /** The same detection as [[thresholdEvents]] but through the Catalyst
-    * expression path ([[graft.plans.DetectPulses]]): per-user traces stay
-    * in Tungsten rows (collect_list → sorted struct array), the FSM reads
-    * the sample array directly, and event indices map back to timestamps
-    * with array indexing — no Dataset encoders anywhere. Shares the
-    * gaps-and-islands oracle (identical semantics by construction).
-    */
-  def thresholdEventsExpr(s: SparkSession, dir: String, threshold: Double = 150.0): DataFrame = {
-    graft.plans.DetectPulses.register(s)
-    Tables
-      .events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_list(struct(col("ts"), col("event_id"), col("value"))))
-        .as("trace"))
-      .select(
-        col("user_id"),
-        col("trace"),
-        explode(expr(s"detect_pulses(transform(trace, t -> t.value), ${threshold}D, 1, 0)"))
-          .as("pulse"))
-      .select(
-        col("user_id"),
-        expr("trace[cast(pulse.time AS int)].ts").as("event_time"),
-        col("pulse.height").as("pulse_height"))
   }
 
   /** The D2 differential-threshold FSM
@@ -97,44 +74,15 @@ object SignalQueries {
       .groupByKey(_.user_id)
       .flatMapGroups { (uid: Long, it: Iterator[Ev]) =>
         val trace = it.toArray.sortBy(e => (e.ts, e.event_id))
-        val samples = (1 until trace.length).iterator.map { i =>
-          (i.toDouble, Array(trace(i).value, trace(i).value - trace(i - 1).value))
+        val out = Seq.newBuilder[(Long, java.sql.Timestamp, Double)]
+        DetectorKernels.differential(
+          trace.map(_.value), dt = 1.0, sign = 1.0, baseline = 0.0,
+          thresholdV = threshold, duration = 1, coolOff = 0, constantMultiple = None) { (t, h) =>
+          out += ((uid, trace(t.toInt).ts, h))
         }
-        DetectorFn
-          .over(samples, new DifferentialThresholdDetector(threshold, 1, 0, None))
-          .map(ev => (uid, trace(ev.time.toInt).ts, ev.pulseHeight))
+        out.result()
       }
       .toDF("user_id", "event_time", "pulse_height")
-  }
-
-  /** [[thresholdEventsDifferential]] through the Catalyst expression path
-    * ([[graft.plans.DetectPulsesDifferential]]): traces stay in Tungsten
-    * rows, the derivative is fused into the expression's scan, and event
-    * times (raw indices) map back to timestamps by array indexing.
-    * Shares the differential gaps-and-islands oracle — identical
-    * semantics by construction.
-    */
-  def thresholdEventsDifferentialExpr(
-      s: SparkSession,
-      dir: String,
-      threshold: Double = 120.0): DataFrame = {
-    graft.plans.DetectPulsesDifferential.register(s)
-    Tables
-      .events(s, dir)
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_list(struct(col("ts"), col("event_id"), col("value"))))
-        .as("trace"))
-      .select(
-        col("user_id"),
-        col("trace"),
-        explode(expr(
-          s"detect_pulses_differential(transform(trace, t -> t.value), ${threshold}D, 1, 0)"))
-          .as("pulse"))
-      .select(
-        col("user_id"),
-        expr("trace[cast(pulse.time AS int)].ts").as("event_time"),
-        col("pulse.height").as("pulse_height"))
   }
 
   /** Gaps-and-islands oracle for [[thresholdEventsDifferential]]: islands

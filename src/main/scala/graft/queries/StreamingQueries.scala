@@ -616,20 +616,7 @@ object StreamingQueries {
     val events = graft.operators.EventFormation.formEvents(
       input.toDS(),
       graft.dsp.DetectorSettings(graft.dsp.FixedThreshold(threshold = 100.0), baseline = 50.0))
-    val out = events
-      .toDF()
-      .select(
-        col("digitizerId"),
-        col("metadata.frameNumber").as("frame_number"),
-        size(col("time")).as("n_events"),
-        explode_outer(arrays_zip(col("time"), col("voltage"), col("channel"))).as("ev"))
-      .select(
-        col("digitizerId"),
-        col("frame_number"),
-        col("n_events"),
-        col("ev.time").as("event_time"),
-        col("ev.voltage").as("event_voltage"),
-        col("ev.channel").as("event_channel"))
+    val out = PipelineQueries.perEventRows(explode_outer)(events)
     val name = s"stream_t2e_${System.nanoTime()}"
     val ckpt = scratchCheckpoint("graft_t2e_ckpt")
     val query = out.writeStream

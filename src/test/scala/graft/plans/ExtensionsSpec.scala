@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("GraftExtensions injects vec_dot and detect_pulses at session build") {
+  test("GraftExtensions injects the native expressions at session build") {
     // spark.sql.extensions is a STATIC conf read from the SparkContext
     // at session build — a context created by an earlier suite would
     // silently skip injection, so this test needs its own context.
@@ -30,32 +30,6 @@ class ExtensionsSpec extends AnyFunSuite {
         .head()
         .getDouble(0)
       assert(dot === 32.0)
-
-      val pulses = spark
-        .sql("""SELECT detect_pulses(array(0.0d, 0.0d, 9.0d, 9.0d, 0.0d), 5.0d, 1, 0) AS p""")
-        .head()
-        .getSeq[org.apache.spark.sql.Row](0)
-      assert(pulses.nonEmpty)
-      assert(pulses.head.getDouble(0) === 2.0) // onset index of the pulse
-
-      // the differential FSM fuses the derivative into its scan: signal
-      // [0,0,9,9,0] has dv=[0,9,0,-9]; dv=9>5 arms at raw index 2
-      val diff = spark
-        .sql("""SELECT detect_pulses_differential(array(0.0d, 0.0d, 9.0d, 9.0d, 0.0d), 5.0d, 1, 0) AS p""")
-        .head()
-        .getSeq[org.apache.spark.sql.Row](0)
-      assert(diff.nonEmpty)
-      assert(diff.head.getDouble(0) === 2.0)
-
-      // advanced FSM: a clean rise-fall ramp produces one assembled pulse
-      // (onset/fall/termination on the derivative, zero-length warm-ups)
-      val adv = spark
-        .sql("""SELECT detect_pulses_advanced(
-                  array(0.0d, 0.0d, 5.0d, 10.0d, 5.0d, 0.0d, 0.0d, 0.0d),
-                  2.0d, -2.0d, -0.5d, 0.0d, 0, 1) AS p""")
-        .head()
-        .getSeq[org.apache.spark.sql.Row](0)
-      assert(adv.nonEmpty)
 
       // z_order_key: both the 2-arg specialized path and the multi path
       val z2 = spark.sql("SELECT z_order_key(3L, 5L) AS z").head().getLong(0)

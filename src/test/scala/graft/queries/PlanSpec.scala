@@ -126,15 +126,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("advanced detector: expression path matches the typed-Dataset path row for row") {
-    val typed = PipelineQueries.traceToEventsAdvanced(spark, dir).collect()
-      .map(_.toSeq).toSet
-    val viaExpr = PipelineQueries.traceToEventsAdvancedExpr(spark, dir).collect()
-      .map(_.toSeq).toSet
-    assert(viaExpr === typed)
-    assert(typed.nonEmpty && viaExpr.nonEmpty, "fixture must produce pulses")
-  }
-
   test("trace-file DSv2 scan plans with pruned output columns") {
     import org.apache.spark.sql.functions.col
     val path = java.nio.file.Files.createTempDirectory("plan_gtf").resolve("t.gtf").toString
