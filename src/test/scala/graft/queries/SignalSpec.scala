@@ -40,13 +40,12 @@ class SignalSpec extends AnyFunSuite {
       }
   }
 
-  private def rows(name: String): Seq[Row3] =
-    SparkEntry.queries(name)(spark, dir).collect().toSeq
-      .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-      .sortBy(r => (r._1, r._2.getTime, r._2.getNanos, r._3))
-
   private def sorted(rs: Iterable[Row3]): Seq[Row3] =
     rs.toSeq.sortBy(r => (r._1, r._2.getTime, r._2.getNanos, r._3))
+
+  private def rows(name: String): Seq[Row3] =
+    sorted(SparkEntry.queries(name)(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2))))
 
   test("q_threshold_events equals a DetectorFn.over replay of each user's series") {
     val replay = sorted(series.toSeq.flatMap { case (uid, trace) =>
