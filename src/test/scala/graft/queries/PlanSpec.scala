@@ -1,16 +1,23 @@
 package graft.queries
 
-import graft.dsp.{DetectorSettings, FixedThreshold}
+import graft.{SparkEntry, Tables}
+import graft.dsp.{
+  DetectorFn, DetectorSettings, DifferentialThresholdDetector, FixedThreshold, ThresholdDetector}
 import graft.operators.EventFormation
 import graft.sources.TraceGenerator
 import graft.sources.TraceGenerator.GeneratorConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.math.Ordering.Double.TotalOrdering
 
 /** Plan-quality lock: these assertions encode the physical-plan properties
   * the queries are designed around (pushdown, broadcast strategy, top-k
   * pushdown, shuffle counts). A regression here means a 100 TB run just
-  * got slower even though results stay correct.
+  * got slower even though results stay correct. The table detector
+  * queries are locked here too, against the reference iterator chain:
+  * each user's `(ts, event_id)`-ordered value series, replayed on the
+  * driver through [[DetectorFn.over]], must give exactly their rows
+  * under both query names of each pair.
   */
 class PlanSpec extends AnyFunSuite {
 
@@ -124,6 +131,55 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(RelationalQueries.sessionWindow(spark, dir))
     assert(p.toLowerCase.contains("session"), p.take(1500))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  private type Row3 = (Long, java.sql.Timestamp, Double)
+
+  /** Each user's series in `(ts, event_id)` order, read on the driver. */
+  private def series: Map[Long, Array[Ev]] = {
+    import spark.implicits._
+    Tables
+      .events(spark, dir)
+      .select("user_id", "ts", "event_id", "value")
+      .as[Ev]
+      .collect()
+      .groupBy(_.user_id)
+      .map { case (uid, evs) =>
+        uid -> evs.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+      }
+  }
+
+  private def sorted(rs: Iterable[Row3]): Seq[Row3] =
+    rs.toSeq.sortBy(r => (r._1, r._2.getTime, r._2.getNanos, r._3))
+
+  private def rows(name: String): Seq[Row3] =
+    sorted(SparkEntry.queries(name)(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2))))
+
+  test("q_threshold_events equals a DetectorFn.over replay of each user's series") {
+    val replay = sorted(series.toSeq.flatMap { case (uid, trace) =>
+      val samples = trace.iterator.zipWithIndex.map { case (e, i) => (i.toDouble, e.value) }
+      DetectorFn
+        .over(samples, new ThresholdDetector(150.0, 1, 0))
+        .map(ev => (uid, trace(ev.time.toInt).ts, ev.pulseHeight))
+    })
+    assert(replay.nonEmpty, "fixture must produce pulses")
+    assert(rows("q_threshold_events") === replay)
+    assert(rows("q_threshold_events_expr") === replay)
+  }
+
+  test("q_threshold_events_differential equals a DetectorFn.over replay of each user's series") {
+    val replay = sorted(series.toSeq.flatMap { case (uid, trace) =>
+      val samples = (1 until trace.length).iterator.map { i =>
+        (i.toDouble, Array(trace(i).value, trace(i).value - trace(i - 1).value))
+      }
+      DetectorFn
+        .over(samples, new DifferentialThresholdDetector(120.0, 1, 0, None))
+        .map(ev => (uid, trace(ev.time.toInt).ts, ev.pulseHeight))
+    })
+    assert(replay.nonEmpty, "fixture must produce pulses")
+    assert(rows("q_threshold_events_differential") === replay)
+    assert(rows("q_threshold_events_differential_expr") === replay)
   }
 
   test("trace-file DSv2 scan plans with pruned output columns") {
