@@ -22,8 +22,10 @@ import org.apache.spark.sql.SparkSession
   *     multicore throughput including scheduler overhead and
   *     shared-cache / frequency effects under full load (the regime
   *     every heavy query runs in);
-  *   - `shuffle_sec`: one exchange + hash aggregate over 3×10⁷ rows /
-  *     10⁶ keys — tracks the shuffle write/read + codegen-agg path.
+  *   - `shuffle_sec`: one exchange + hash aggregate with a fixed load
+  *     per session core (3×10⁷ rows / 10⁶ keys on 32 cores, see
+  *     [[shuffleShape]]) — tracks the shuffle write/read + codegen-agg
+  *     path.
   *
   * All inputs are compile-time constants; the only run-to-run variable
   * is the host. The checksums fold into a side effect so the JIT
@@ -59,6 +61,16 @@ object Calibrate {
     */
   private[graft] def mtSeeds(cores: Int): Range = 1 to math.max(1, cores)
 
+  /** Rows, keys and partitions of the `shuffle_sec` job: 937,500 rows
+    * and 31,250 keys in one partition per session core, so a 32-core
+    * session runs 3×10⁷ rows over 10⁶ keys in 32 partitions and the probe
+    * reads the same nominal time on any core count.
+    */
+  private[graft] def shuffleShape(cores: Int): (Long, Long, Int) = {
+    val c = math.max(1, cores)
+    (937500L * c, 31250L * c, c)
+  }
+
   def run(spark: SparkSession): Result = {
     // one untimed warm pass so JIT compiles the kernel before the
     // single-thread measurement (the MT pass runs in executor threads
@@ -75,9 +87,10 @@ object Calibrate {
       .reduce(_ ^ _)
     val cpuMt = (System.nanoTime() - t1) / 1e9
     val t2 = System.nanoTime()
+    val (rows, keys, parts) = shuffleShape(spark.sparkContext.defaultParallelism)
     val s3 = spark
-      .range(0L, 30000000L, 1L, 32)
-      .selectExpr("id % 1000000 AS k")
+      .range(0L, rows, 1L, parts)
+      .selectExpr(s"id % $keys AS k")
       .groupBy("k")
       .count()
       .count()

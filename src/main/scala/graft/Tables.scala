@@ -145,6 +145,21 @@ object Sessions {
       .orElse(sys.env.get("GRAFT_STATE_STORE_HIGH_CHURN"))
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
+  /** A session on `s`'s SparkContext with its own session conf
+    * (`newSession()`), keeping what the fork would otherwise drop and
+    * every query here depends on: `s`'s shuffle parallelism, the
+    * TIMESTAMP(NANOS) parquet switch, and UTC. Whether a bare fork
+    * inherits the last two depends on which session built the shared
+    * context first.
+    */
+  def fork(s: SparkSession): SparkSession = {
+    val f = s.newSession()
+    f.conf.set("spark.sql.shuffle.partitions", s.conf.get("spark.sql.shuffle.partitions"))
+    f.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    f.conf.set("spark.sql.session.timeZone", "UTC")
+    f
+  }
+
   /** A boolean env knob as a Spark conf value: `default` when unset,
     * `true`/`false` as given, and anything else fails the session build
     * with a message naming the variable (rather than a Spark conf parse

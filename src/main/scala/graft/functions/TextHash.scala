@@ -69,18 +69,6 @@ object TextHash {
     x ^ (x >>> 31)
   }
 
-  /** 64-bit string hash (FNV-1a core + splitmix finaliser, seedable). */
-  def hash64(s: String, seed: Long = 0L): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
-
   /** Whitespace word tokens. */
   def tokens(text: String): Array[String] =
     text.split("\\s+").filter(_.nonEmpty)

@@ -55,12 +55,6 @@ object TimeFunctions {
       nanosecond = (subNs % 1000L).toInt)
   }
 
-  /** ns-since-epoch → seconds relative to an origin (SURVEY §2.3 P10,
-    * `nexus-writer/src/nexus/logs/mod.rs:97-102`).
-    */
-  def nsToSecondsFromOrigin(ns: Long, originNs: Long): Double =
-    (ns - originNs).toDouble / 1e9
-
   /** Strip EPICS block prefixes from a log source name (SURVEY §2.3 P9,
     * `nexus-writer/src/nexus/logs/mod.rs:110-112`): everything up to the
     * last `:CS:SB:` marker goes; non-block names pass through.

@@ -77,6 +77,7 @@ object ConnectedComponents {
     * forest). 0 disables level-0 contraction AND the local finish —
     * the pure Shiloach–Vishkin path, kept for spec coverage and for
     * clusters whose per-task memory envelope can't hold the default.
+    * Any value but an integer ≥ 0 fails the call naming the key.
     */
   val LocalFinishConfKey = "spark.graft.cc.localFinishMaxEdges"
   val DefaultLocalFinishMaxEdges: Long = 4000000L
@@ -245,10 +246,11 @@ object ConnectedComponents {
   def components(edges: DataFrame, maxIters: Int = DefaultMaxIters): DataFrame = {
     val s = edges.sparkSession
     import s.implicits._
-    val budget =
-      try s.conf.get(LocalFinishConfKey, DefaultLocalFinishMaxEdges.toString).toLong
-      catch { case _: NumberFormatException => DefaultLocalFinishMaxEdges }
-    if (budget <= 0L) return svLoop(edges, maxIters)
+    val raw = s.conf.get(LocalFinishConfKey, DefaultLocalFinishMaxEdges.toString)
+    val budget = raw.toLongOption.filter(_ >= 0L).getOrElse(
+      throw new IllegalArgumentException(
+        s"$LocalFinishConfKey must be an integer >= 0 (0 disables), got '$raw'"))
+    if (budget == 0L) return svLoop(edges, maxIters)
     // level-0 contraction: per-partition spanning forest — narrow (no
     // shuffle), shrinks the edge list to ≤ one row per vertex
     // occurrence before anything iterates (see object Scaladoc)

@@ -112,7 +112,8 @@ object RunAssignment {
     * codegen limits. Matching the fail-closed standard elsewhere
     * (TraceFileSource, NexusSink), the collect is bounded: we fetch at
     * most cap+1 rows and abort with deployment advice when exceeded.
-    * Overridable per-deployment via `graft.runAssignment.maxRuns`.
+    * Overridable per-deployment via `graft.runAssignment.maxRuns` (an
+    * integer ≥ 1; anything else throws naming the property).
     * Per-row assignment cost is O(|runs|) (linear `filter(...)[0]`) —
     * fine at the thousands this cap admits, which is why the default IS
     * thousands: far beyond that, the inlined literal array degrades
@@ -123,7 +124,7 @@ object RunAssignment {
     * range join, not a bigger cap.
     */
   private[graft] def maxCollectedRuns: Int =
-    sys.props.get("graft.runAssignment.maxRuns").map(_.toInt).getOrElse(5000)
+    graft.Sessions.intKnob(sys.props.toMap, "graft.runAssignment.maxRuns", default = 5000, min = 1)
 
   private def firstMatchAssign(
       input: DataFrame,

@@ -59,8 +59,6 @@ object Quantize {
     val y = c * lit(1e9) + lit(0.5)
     (y - y % lit(1.0)) / lit(1e9)
   }
-  def q9uSql(e: String): String =
-    s"((($e) * 1e9 + 0.5) - (($e) * 1e9 + 0.5) % 1.0) / 1e9"
 
   /** Double-domain floor (no half-up rounding) for NON-NEGATIVE
     * operands — the building block for exact quantized-integer sums
@@ -71,5 +69,4 @@ object Quantize {
     * so the sum is exact too. DOMAIN: x ≥ 0.
     */
   def dfloor(c: Column): Column = c - c % lit(1.0)
-  def dfloorSql(e: String): String = s"(($e) - ($e) % 1.0)"
 }

@@ -3065,20 +3065,8 @@ object RelationalQueries {
     // the returned DataFrame is lazy, so a try/finally restore would
     // revert the confs before planning ever ran; the fork carries the
     // altered heuristics for this plan only and the caller's session is
-    // never mutated. (`newSession` shares SparkContext/SharedState —
-    // only session-scoped conf state is isolated; shuffle parallelism
-    // is carried over explicitly since the fork resets runtime confs.)
-    val sc = s.newSession()
-    // carry the session confs newSession() drops and the fixture
-    // depends on (the boundedDrainSession lottery): shuffle
-    // parallelism, the TIMESTAMP(NANOS) parquet switch, and UTC —
-    // whether the fork inherits them otherwise depends on which
-    // session created the shared SparkContext first
-    Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.session.timeZone")
-      .foreach(k => s.conf.getOption(k).foreach(sc.conf.set(k, _)))
+    // never mutated.
+    val sc = graft.Sessions.fork(s)
     sc.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     sc.conf.set("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "50.0")
     val fact = sc.read.parquet(out)

@@ -5,7 +5,7 @@ import graft.streaming.FrameAssemblyTws
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured-Streaming surface exercised through the batch query
   * contract: generated dev2 messages are fed through a MemoryStream into
@@ -18,47 +18,47 @@ object StreamingQueries {
 
   /** Stateful operators open one state store per shuffle partition per
     * micro-batch; for these BOUNDED drains the store-commit overhead
-    * dominates, so they run in a session clone with few partitions (a
+    * dominates, so they run in a session fork with few partitions (a
     * production deployment sizes this to state-key cardinality instead).
     * One definition so every bounded-drain query stays tuned together.
+    * `rocksDb` forces the RocksDB provider, which `transformWithState`
+    * requires.
     */
-  private def boundedDrainSession(s0: SparkSession): SparkSession = {
-    val s = s0.newSession()
+  private def boundedDrainSession(s0: SparkSession, rocksDb: Boolean = false): SparkSession = {
+    val s = graft.Sessions.fork(s0)
     // 8 measured as the flat spot (A/B at sf0.1, r8): 8→4→2 partitions
     // moved q_stream_session_window 5.9→6.4→6.7 s and left join/dedup
     // within noise — the drains' fixed cost is checkpoint+trigger
     // machinery, not per-partition store commits, so fewer partitions
-    // only costs parallelism. Overridable for other deployments.
-    s.conf.set(
-      "spark.sql.shuffle.partitions",
-      sys.props.getOrElse("graft.drain.partitions", "8"))
-    // newSession() drops SESSION conf, and the harness parquet's
-    // TIMESTAMP(NANOS) is only readable with the legacy switch — whether
-    // the clone inherits it otherwise depends on which session created
-    // the shared SparkContext first (a test-order lottery), so carry it
-    // explicitly
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same lottery for the session time zone: microTs's NTZ branch and
-    // every date_trunc/day-window oracle parity assume UTC — carry it
-    // explicitly rather than inherit whatever session built the context
-    s.conf.set("spark.sql.session.timeZone", "UTC")
+    // only costs parallelism.
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     // newSession() drops runtime conf — carry the caller's state-store
-    // choice across the clone, then apply it (RocksDB when opted in;
+    // choice across the fork, then apply it (RocksDB when opted in;
     // see Sessions.stateStoreConfigure and SCALE.md §Streaming)
     s0.conf.getOption(graft.Sessions.StateStoreKey)
       .foreach(s.conf.set(graft.Sessions.StateStoreKey, _))
     graft.Sessions.stateStoreConfigure(s)
+    if (rocksDb)
+      s.conf.set("spark.sql.streaming.stateStore.providerClass", graft.Sessions.RocksDBProvider)
+    s
   }
 
-  /** Normalise a file-stream's `ts` to µs TimestampType whatever the
-    * parquet stored — ns-since-epoch long (under nanosAsLong),
-    * TIMESTAMP, or TIMESTAMP_NTZ — the streaming mirror of
-    * [[graft.Tables.load]]'s normalisation (the harness regenerates its
-    * parquet between rounds and has shipped both physical types; a
-    * hard-coded `ts div 1000` breaks the moment the type flips).
-    * Session TZ is UTC, so the NTZ cast is wall-clock identity.
+  /** The events table of `dir` as a FILE STREAM, `ts` normalised to µs
+    * TimestampType whatever the parquet stored — ns-since-epoch long
+    * (under nanosAsLong), TIMESTAMP, or TIMESTAMP_NTZ — the streaming
+    * mirror of [[graft.Tables.load]]'s normalisation (the harness
+    * regenerates its parquet between rounds and has shipped both
+    * physical types; a hard-coded `ts div 1000` breaks the moment the
+    * type flips). Session TZ is UTC, so the NTZ cast is wall-clock
+    * identity. Each call is a separate source.
     */
-  private def microTs(df: DataFrame): DataFrame =
+  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
+    val raw = s.read.parquet(s"$dir/events.parquet").schema
+    val df = s.readStream
+      .schema(raw)
+      // the file source wants a directory; glob down to the events table
+      .option("pathGlobFilter", "events.parquet")
+      .parquet(dir)
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -66,31 +66,48 @@ object StreamingQueries {
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     }
-
-  /** Checkpoint scratch for the bounded drains, on tmpfs when the host
-    * has one (/dev/shm): a bounded drain's checkpoint is pure harness
-    * machinery — the memory sink holds the result and the dir is deleted
-    * on stop — so durable-disk fsyncs are a fixed cost with zero
-    * recovery value. A/B at sf0.1 recorded in SCALE.md (r9). Production
-    * deployments pass a REAL checkpoint location on durable storage;
-    * only the drain harness routes through this helper.
-    */
-  private def scratchCheckpoint(prefix: String): String = {
-    val base = graft.Sessions.tmpfsScratchDir
-      .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
   }
 
-  /** Remove a bounded drain's scratch checkpoint once the query stops —
-    * repeated bench/verify runs must not accumulate dirs in /tmp. The
-    * memory-sink table holds the RESULT; the checkpoint has no value
-    * after stop.
+  /** Run a bounded drain of `out` to completion: start it on a scratch
+    * checkpoint into a memory table (or, given `eachBatch`, into that
+    * per-batch function), run `feed` — by default one
+    * processAllAvailable — then stop the query and delete the checkpoint
+    * whatever `feed` threw. Returns the memory table (empty under
+    * `eachBatch`).
+    *
+    * The checkpoint sits on tmpfs when the host has one (/dev/shm): it is
+    * pure harness machinery — the memory sink holds the result and the
+    * dir is deleted on stop — so durable-disk fsyncs are a fixed cost with
+    * zero recovery value. A/B at sf0.1 recorded in SCALE.md (r9).
+    * Production deployments pass a REAL checkpoint location on durable
+    * storage; only the drain harness routes through this helper.
     */
-  private def dropCheckpoint(ckpt: String): Unit =
-    // deleteQuietly IS the contract here: best-effort, a deletion
-    // failure must never mask the query's own error propagating through
-    // the enclosing finally
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+  private def drain(
+      out: DataFrame,
+      mode: String = "append",
+      trigger: Trigger = Trigger.ProcessingTime(0L),
+      eachBatch: Option[(DataFrame, Long) => Unit] = None,
+      feed: StreamingQuery => Unit = _.processAllAvailable()): DataFrame = {
+    val s = out.sparkSession
+    val base = graft.Sessions.tmpfsScratchDir
+      .getOrElse(java.nio.file.Paths.get(sys.props("java.io.tmpdir")))
+    val ckpt = java.nio.file.Files.createTempDirectory(base, "graft_drain_ckpt").toFile
+    val writer = out.writeStream
+      .queryName(s"drain_${System.nanoTime()}")
+      .outputMode(mode)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(trigger)
+    val query = eachBatch.fold(writer.format("memory"))(writer.foreachBatch(_)).start()
+    try feed(query)
+    finally {
+      // deleteQuietly IS the contract here: best-effort, a deletion
+      // failure must never mask the query's own error propagating
+      // through the enclosing finally
+      try query.stop()
+      finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
+    }
+    eachBatch.fold(s.table(query.name))(_ => s.emptyDataFrame)
+  }
 
   /** Watermarked tumbling-window aggregation over the events table read
     * as a FILE STREAM (SURVEY §2.10): the harness parquet drives a real
@@ -101,32 +118,13 @@ object StreamingQueries {
     */
   def streamWindowedCounts(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
-    // raw file schema: ts arrives as ns-since-epoch long (nanosAsLong)
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = microTs(s.readStream
-      .schema(raw)
-      // the file source wants a directory; glob down to the events table
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-      .select(col("window.start").as("day"), col("event_type"), col("n"), col("sum_value"))
-    val name = s"win_counts_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_win_ckpt")
-    val query = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(
+      eventsStream(s, dir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+        .select(col("window.start").as("day"), col("event_type"), col("n"), col("sum_value")),
+      "complete")
   }
 
   val streamWindowedCountsSql: String =
@@ -144,31 +142,14 @@ object StreamingQueries {
     */
   def streamDedup(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    def src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-    val doubled = src.unionByName(src)
-    val deduped = doubled
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val name = s"stream_dedup_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_dedup_ckpt")
-    val query = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(
+      eventsStream(s, dir)
+        .unionByName(eventsStream(s, dir))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n")),
+      "complete")
   }
 
   val streamDedupSql: String =
@@ -185,30 +166,12 @@ object StreamingQueries {
     */
   def streamHeavyHitters(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-    val agg = stream
+    val agg = eventsStream(s, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("user_id"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("day"), col("user_id"), col("n"))
-    val name = s"hh_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_hh_ckpt")
-    val query = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(agg, "complete")
       .withColumn(
         "rank",
         row_number()
@@ -256,12 +219,7 @@ object StreamingQueries {
     val s = boundedDrainSession(s0)
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-      .select(col("user_id"), col("ts"), col("value"))
+    val src = eventsStream(s, dir).select(col("user_id"), col("ts"), col("value"))
     val sentinel = MemoryStream[Long]
     sentinel.addData(4102444800L) // 2100-01-01
     val sentinelDf = sentinel
@@ -288,28 +246,16 @@ object StreamingQueries {
         col("w.end").as("session_end"),
         col("n_events"),
         col("sum_value"))
-    val name = s"stream_sessions_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_ssw_ckpt")
-    val query = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      // batch k: file data + sentinel-1 → watermark jumps past every
-      // real session AFTER the batch. The evictions themselves happen in
-      // the NEXT batch — which processAllAvailable only awaits if it is
-      // a DATA batch, so feed a second, later sentinel and drain again
-      // (emission-in-no-data-batch is a race this avoids determinsitically)
-      query.processAllAvailable()
+    // batch k: file data + sentinel-1 → watermark jumps past every
+    // real session AFTER the batch. The evictions themselves happen in
+    // the NEXT batch — which processAllAvailable only awaits if it is
+    // a DATA batch, so feed a second, later sentinel and drain again
+    // (emission-in-no-data-batch is a race this avoids determinsitically)
+    drain(agg, feed = q => {
+      q.processAllAvailable()
       sentinel.addData(4102531200L) // 2100-01-02
-      query.processAllAvailable()
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name).filter(col("user_id") =!= -1L)
+      q.processAllAvailable()
+    }).filter(col("user_id") =!= -1L)
   }
 
   /** Oracle: literally the batch session-window oracle — the streaming
@@ -330,38 +276,17 @@ object StreamingQueries {
     * keyed state scales with key cardinality, not stream length.
     */
   def streamRunningTotals(s0: SparkSession, dir: String): DataFrame = {
-    val s = boundedDrainSession(s0)
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = boundedDrainSession(s0, rocksDb = true)
     import s.implicits._
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val src = s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
+    val out = eventsStream(s, dir)
       .select(col("event_type"), col("event_id"))
       .as[(String, Long)]
-    val out = src
       .groupByKey(_._1)
       .transformWithState(
         new graft.streaming.RunningTotals,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-    val name = s"stream_tws_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_tws_ckpt")
-    val query = out.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(out.toDF(), "update")
       .groupBy(col("_1").as("event_type"))
       .agg(max(col("_2")).as("n_events"), max(col("_3")).as("max_event_id"))
   }
@@ -385,20 +310,15 @@ object StreamingQueries {
     */
   def streamJoin(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    def src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
-    val views = src
+    val views = eventsStream(s, dir)
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "2 hours")
-    val clicks = src
+    val clicks = eventsStream(s, dir)
       .filter(col("event_type") === "click")
       .select(col("user_id").as("click_user"), col("event_id").as("click_id"), col("ts").as("click_ts"))
       .withWatermark("click_ts", "2 hours")
-    val joined = views
+    drain(views
       .join(
         clicks,
         col("user_id") === col("click_user") &&
@@ -408,21 +328,7 @@ object StreamingQueries {
         col("user_id"),
         col("view_id"),
         col("click_id"),
-        (unix_micros(col("click_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
-    val name = s"stream_join_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_sjoin_ckpt")
-    val query = joined.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+        (unix_micros(col("click_ts")) - unix_micros(col("view_ts"))).as("lag_us")))
   }
 
   /** LEFT OUTER stream-stream interval join — the semantic the inner
@@ -448,16 +354,11 @@ object StreamingQueries {
     val s = boundedDrainSession(s0)
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    def src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
     val viewSentinel = MemoryStream[Long]
     val clickSentinel = MemoryStream[Long]
     viewSentinel.addData(4102444800L) // 2100-01-01
     clickSentinel.addData(4102444800L)
-    val views = src
+    val views = eventsStream(s, dir)
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
       .unionByName(viewSentinel
@@ -467,7 +368,7 @@ object StreamingQueries {
           lit(-1L).as("view_id"),
           timestamp_seconds(col("value")).as("view_ts")))
       .withWatermark("view_ts", "2 hours")
-    val clicks = src
+    val clicks = eventsStream(s, dir)
       .filter(col("event_type") === "click")
       .select(
         col("user_id").as("click_user"),
@@ -493,24 +394,12 @@ object StreamingQueries {
         col("click_id"),
         col("click_id").isNotNull.as("converted"),
         (unix_micros(col("click_ts")) - unix_micros(col("view_ts"))).as("lag_us"))
-    val name = s"stream_outer_join_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_sojoin_ckpt")
-    val query = joined.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      query.processAllAvailable()
+    drain(joined, feed = q => {
+      q.processAllAvailable()
       viewSentinel.addData(4102531200L) // 2100-01-02
       clickSentinel.addData(4102531200L)
-      query.processAllAvailable()
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name).filter(col("user_id") =!= -1L)
+      q.processAllAvailable()
+    }).filter(col("user_id") =!= -1L)
   }
 
   /** Oracle: the batch LEFT JOIN — matched rows identical to the inner
@@ -559,32 +448,15 @@ object StreamingQueries {
     */
   def streamEnrich(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
     val cust = graft.Tables
       .customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = stream
-      .join(broadcast(cust), col("user_id") + 1 === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-    val name = s"stream_enrich_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_enrich_ckpt")
-    val query = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(
+      eventsStream(s, dir)
+        .join(broadcast(cust), col("user_id") + 1 === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value")),
+      "complete")
   }
 
   val streamEnrichSql: String =
@@ -609,30 +481,15 @@ object StreamingQueries {
   def streamTraceToEvents(s0: SparkSession, dir: String): DataFrame = {
     val s = boundedDrainSession(s0)
     import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val traces =
-      TraceFixtures.arithmeticTraces(s, nFrames = 32, nDigitizers = 4).collect().toSeq
-    val input = MemoryStream[graft.schemas.TraceMessage]
+    // one MemoryStream partition per session core: the ~2 MB fixture
+    // ships as that many tasks and formation runs on every core
+    val input = MemoryStream[graft.schemas.TraceMessage](s, s.sparkContext.defaultParallelism)
+    input.addData(
+      TraceFixtures.arithmeticTraces(s, nFrames = 32, nDigitizers = 4).collect().toSeq)
     val events = graft.operators.EventFormation.formEvents(
       input.toDS(),
       graft.dsp.DetectorSettings(graft.dsp.FixedThreshold(threshold = 100.0), baseline = 50.0))
-    val out = PipelineQueries.perEventRows(explode_outer)(events)
-    val name = s"stream_t2e_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_t2e_ckpt")
-    val query = out.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      input.addData(traces)
-      query.processAllAvailable()
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(PipelineQueries.perEventRows(explode_outer)(events))
   }
 
   /** Oracle for [[streamTraceToEvents]]: literally the batch
@@ -657,34 +514,22 @@ object StreamingQueries {
     * locked by StreamingSpec's dedicated late-rejection test instead.
     */
   def streamFrameAssembly(s0: SparkSession, dir: String): DataFrame = {
-    val s = boundedDrainSession(s0)
+    val s = boundedDrainSession(s0, rocksDb = true)
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val (originals, _) = PipelineQueries.arithmeticDev2Messages
     val nFrames = 32
-
-    // transformWithState requires the RocksDB provider on the clone
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
     val input = MemoryStream[EventListMessage]
-    val ckpt = scratchCheckpoint("graft_stream_ckpt")
-    val name = s"stream_frames_${System.nanoTime()}"
-    val query = FrameAssemblyTws
+    val frames = FrameAssemblyTws
       // TTL sized to the feed: the single addData batch carries every
       // contribution, so a frame is either complete-dispatched from that
       // batch or a permanent partial — the countdown only has to reach
       // the next trigger, not a real digitiser skew window (the dead wait
       // for the f%5==0 partials is TTL + one trigger period)
       .assemble(input.toDS(), Seq(0, 1, 2, 3), ttlMs = 300L)
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime("100 milliseconds"))
-      .start()
-    try {
+    // processAllAvailable never returns on a ProcessingTime-timer
+    // operator, so the feed polls the memory table against a deadline
+    drain(frames.toDF(), trigger = Trigger.ProcessingTime("100 milliseconds"), feed = q => {
       val deadline = System.currentTimeMillis() + 60000L
       // ONE addData → one micro-batch carries every contribution: a
       // frame is complete-dispatched or TTL-flushed from that single
@@ -692,13 +537,9 @@ object StreamingQueries {
       // digitisers across the TTL horizon (incremental completion across
       // batches is StreamingSpec's dedicated test, not this oracle's)
       input.addData(originals)
-      while (s.table(name).count() < nFrames && System.currentTimeMillis() < deadline)
+      while (s.table(q.name).count() < nFrames && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    })
       .select(
         col("metadata.frameNumber").as("frame_number"),
         col("metadata.vetoFlags").as("veto_flags"),
@@ -787,28 +628,10 @@ object StreamingQueries {
         // event time tracks arrival (doc_id) so the watermark bounds
         // band-key state by recency exactly like production would
         timestamp_seconds(lit(1700000000L) + col("_1")).as("ts"))
-    val deduped = stream
-      .withWatermark("ts", "30 days")
-      .dropDuplicatesWithinWatermark("band")
-    val name = s"stream_minhash_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_minhash_ckpt")
-    val query = deduped.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      input.addData(feed)
-      query.processAllAvailable()
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
+    input.addData(feed)
     // verdict: bands each doc still owns after the drain (sink join is a
     // batch DataFrame, outside the streaming plan)
-    val kept = s
-      .table(name)
+    val kept = drain(stream.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark("band"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_kept_bands"))
     val verdict = docBands
@@ -838,16 +661,9 @@ object StreamingQueries {
     * streaming/batch MERGE parity is the verified property.
     */
   def streamCdcApply(s0: SparkSession, dir: String): DataFrame = {
-    val s = boundedDrainSession(s0)
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = boundedDrainSession(s0, rocksDb = true)
     import s.implicits._
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val src = eventsStream(s, dir)
       .select(
         col("user_id"),
         unix_micros(col("ts").cast("timestamp")).as("ts_us"),
@@ -861,20 +677,7 @@ object StreamingQueries {
         new graft.streaming.CdcLatest,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-    val name = s"stream_cdc_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_cdc_ckpt")
-    val query = out.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
-    s.table(name)
+    drain(out.toDF(), "update")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_changes"), col("ts_us"), col("event_id"),
         col("event_type"), col("value"))).as("m"))
@@ -901,39 +704,18 @@ object StreamingQueries {
     * SQL that checks the batch legs.
     */
   def streamBitmapDistinct(s0: SparkSession, dir: String): DataFrame = {
-    val s = boundedDrainSession(s0)
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = boundedDrainSession(s0, rocksDb = true)
     import s.implicits._
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    val src = microTs(s.readStream
-      .schema(raw)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val out = eventsStream(s, dir)
       .select(col("event_type"), col("user_id"))
       .as[graft.streaming.BitmapDistinctStream.Obs]
-    val out = src
       .groupByKey(_.event_type)
       .transformWithState(
         new graft.streaming.BitmapDistinctStream,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update())
-    val name = s"stream_bitmap_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("graft_bitmap_ckpt")
-    val query = out.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try query.processAllAvailable()
-    finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
     // n_users is monotone per key: max over emissions == final state
-    s.table(name).groupBy(col("event_type")).agg(max(col("n_users")).as("n_users"))
+    drain(out.toDF(), "update").groupBy(col("event_type")).agg(max(col("n_users")).as("n_users"))
   }
 
   /** Oracle: exact distinct — the stream state must land exactly. */
@@ -990,48 +772,36 @@ object StreamingQueries {
     }
     val w = new java.util.concurrent.atomic.AtomicReference(Array(0.0, 0.0, 0.0))
     val input = MemoryStream[(Double, Double, Double)]
-    val ckpt = scratchCheckpoint("graft_sgd_ckpt")
-    val query = input
-      .toDS()
-      .toDF("x1", "x2", "y")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val cur = w.get()
-        val z = lit(cur(0)) + lit(cur(1)) * col("x1") + lit(cur(2)) * col("x2")
-        val sig = lit(1.0) / (lit(1.0) + exp(-z))
-        val g = batch
-          // q-domain note (Quantize): per-term bound as in
-          // MiningQueries.trainLogregWeights — saturation needs a single
-          // ≥ 9.2e8-token document, not corpus growth
-          .agg(
-            count(lit(1)).as("c"),
-            sum(floor((sig - col("y")) * lit(1.0) * lit(1e12)).cast("decimal(38,0)"))
-              .as("s0"),
-            sum(floor((sig - col("y")) * col("x1") * lit(1e12)).cast("decimal(38,0)"))
-              .as("s1"),
-            sum(floor((sig - col("y")) * col("x2") * lit(1e12)).cast("decimal(38,0)"))
-              .as("s2"))
-          .collect()(0)
-        val c = g.getLong(0)
-        if (c > 0) {
-          // exact replica of the oracle's per-batch update expression
-          def upd(j: Int, i: Int): Double =
-            cur(j) - SgdEta * ((g.getDecimal(i).doubleValue() / 1e12) / c)
-          w.set(Array(upd(0, 1), upd(1, 2), upd(2, 3)))
-        }
-        ()
+    val step = (batch: DataFrame, _: Long) => {
+      val cur = w.get()
+      val z = lit(cur(0)) + lit(cur(1)) * col("x1") + lit(cur(2)) * col("x2")
+      val sig = lit(1.0) / (lit(1.0) + exp(-z))
+      val g = batch
+        // q-domain note (Quantize): per-term bound as in
+        // MiningQueries.trainLogregWeights — saturation needs a single
+        // ≥ 9.2e8-token document, not corpus growth
+        .agg(
+          count(lit(1)).as("c"),
+          sum(floor((sig - col("y")) * lit(1.0) * lit(1e12)).cast("decimal(38,0)"))
+            .as("s0"),
+          sum(floor((sig - col("y")) * col("x1") * lit(1e12)).cast("decimal(38,0)"))
+            .as("s1"),
+          sum(floor((sig - col("y")) * col("x2") * lit(1e12)).cast("decimal(38,0)"))
+            .as("s2"))
+        .collect()(0)
+      val c = g.getLong(0)
+      if (c > 0) {
+        // exact replica of the oracle's per-batch update expression
+        def upd(j: Int, i: Int): Double =
+          cur(j) - SgdEta * ((g.getDecimal(i).doubleValue() / 1e12) / c)
+        w.set(Array(upd(0, 1), upd(1, 2), upd(2, 3)))
       }
-      .start()
-    try {
+    }
+    drain(input.toDS().toDF("x1", "x2", "y"), eachBatch = Some(step), feed = q =>
       batches.foreach { rows =>
         input.addData(rows.toIndexedSeq: _*)
-        query.processAllAvailable() // exactly one micro-batch per split
-      }
-    } finally {
-      try query.stop()
-      finally dropCheckpoint(ckpt)
-    }
+        q.processAllAvailable() // exactly one micro-batch per split
+      })
     val fw = w.get()
     val zF = lit(fw(0)) + lit(fw(1)) * col("x1") + lit(fw(2)) * col("x2")
     feat

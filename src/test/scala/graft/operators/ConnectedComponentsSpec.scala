@@ -52,6 +52,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("a malformed local-finish budget fails closed naming the key") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    for (bad <- Seq("4e6", "-1")) {
+      spark.conf.set(ConnectedComponents.LocalFinishConfKey, bad)
+      try {
+        val err = intercept[IllegalArgumentException](ConnectedComponents.components(edges))
+        assert(err.getMessage.contains(ConnectedComponents.LocalFinishConfKey), err.getMessage)
+      } finally spark.conf.unset(ConnectedComponents.LocalFinishConfKey)
+    }
+  }
+
   test("two cliques and a bridge-less pair: labels never leak across components") {
     val edges = Seq(
       (1L, 2L), (2L, 3L), (1L, 3L), // clique {1,2,3}

@@ -225,6 +225,23 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("run assignment cap: a malformed graft.runAssignment.maxRuns fails closed") {
+    val key = "graft.runAssignment.maxRuns"
+    val prev = sys.props.get(key)
+    try {
+      for (bad <- Seq("5k", "0")) {
+        sys.props(key) = bad
+        val err = intercept[IllegalArgumentException](RunAssignment.maxCollectedRuns)
+        assert(err.getMessage.contains(key) && err.getMessage.contains(s"'$bad'"), err.getMessage)
+      }
+    } finally {
+      prev match {
+        case Some(v) => sys.props(key) = v
+        case None => sys.props.remove(key)
+      }
+    }
+  }
+
   test("observe() metrics: events-found counters collected map-side (A6/P5)") {
     import org.apache.spark.sql.Observation
     import org.apache.spark.sql.functions._

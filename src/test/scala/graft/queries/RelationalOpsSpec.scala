@@ -708,6 +708,68 @@ class RelationalOpsSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("drains without another tier-1 lock equal their batch twins") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    def ev = graft.Tables.events(spark, dir).withColumn("ts", col("ts").cast("timestamp"))
+    def views = ev.filter(col("event_type") === "view")
+      .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts"))
+    def clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("click_user"), col("event_id").as("click_id"), col("ts").as("click_ts"))
+    def cents = ev.select(
+      to_date(col("ts")).as("event_date"), round(col("value") * 100).cast("long").as("cents"))
+    def daily = cents.groupBy(col("event_date")).agg(count(lit(1)).as("c"))
+    val cases: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      ("stream_windowed_counts",
+        () => StreamingQueries.streamWindowedCounts(spark, dir),
+        () => ev.groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
+          .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))),
+      ("stream_session_window",
+        () => StreamingQueries.streamSessionWindow(spark, dir),
+        () => RelationalQueries.sessionWindow(spark, dir)),
+      ("stream_running_totals",
+        () => StreamingQueries.streamRunningTotals(spark, dir),
+        () => ev.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n_events"), max(col("event_id")).as("max_event_id"))),
+      ("stream_outer_join",
+        () => StreamingQueries.streamOuterJoin(spark, dir),
+        () => views
+          .join(clicks,
+            col("user_id") === col("click_user") &&
+              col("click_ts") >= col("view_ts") &&
+              col("click_ts") <= col("view_ts") + expr("INTERVAL 60 MINUTES"),
+            "left")
+          .select(col("user_id"), col("view_id"), col("click_id"),
+            col("click_id").isNotNull.as("converted"),
+            (unix_micros(col("click_ts")) - unix_micros(col("view_ts"))).as("lag_us"))),
+      ("stream_bitmap_distinct",
+        () => StreamingQueries.streamBitmapDistinct(spark, dir),
+        () => SketchQueries.bitmapDistinct(spark, dir)),
+      ("partition_pruned_join",
+        () => RelationalQueries.partitionPrunedJoin(spark, dir),
+        () => {
+          val thr = daily.agg(avg(col("c"))).first().getDouble(0) * 1.05
+          cents.join(daily.filter(col("c") > thr).select(col("event_date")), "event_date")
+            .groupBy(col("event_date"))
+            .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("total_cents"))
+        }))
+    // rows as strings in the drained table's column order, doubles at
+    // 1e-6; sessionWindow keeps TIMESTAMP_NTZ where the drains cast to
+    // TIMESTAMP (same wall clock under UTC)
+    def rows(df: DataFrame, columns: Seq[String]): Seq[String] =
+      df.select(columns.map(col): _*).collect().toSeq.map(_.toSeq.map {
+        case d: Double => f"$d%.6f"
+        case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t).toString
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted
+    for ((name, drained, twin) <- cases) {
+      val d = drained()
+      val got = rows(d, d.columns.toSeq)
+      assert(got.nonEmpty, s"$name drained nothing")
+      assert(got == rows(twin(), d.columns.toSeq), name)
+    }
+  }
+
   test("skyline: matches the brute-force Pareto frontier") {
     val sky = CurationQueries
       .skylineDocs(spark, dir)
