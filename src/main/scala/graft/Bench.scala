@@ -132,8 +132,10 @@ object Bench {
       val t0 = System.nanoTime()
       val timing =
         try {
+          // the scope releases what the query pinned or cut, so the next
+          // measurement starts from the same cold-cache state
           val (wall, work) = Obs.measured(spark, s"graft-bench-$pass-$name") {
-            fn(spark, sfDir).count()
+            Reuse.scope(fn(spark, sfDir).count())
             (System.nanoTime() - t0) / 1e9
           }
           Timing(wall, ok = true, work)
@@ -142,20 +144,11 @@ object Bench {
             failedTimings(name) += 1
             Timing((System.nanoTime() - t0) / 1e9, ok = false)
         }
-      // drop anything a query cached/registered so the next measurement
-      // starts from the same cold-cache state
-      spark.catalog.clearCache()
       timing
     }
     // two passes, report the per-query minimum: a single pass is exposed
     // to one-off JIT/GC/host-contention spikes that say nothing about the
-    // plan's actual cost. Queries run in SORTED name order — a plain
-    // Map's hash order could silently reassign which of the
-    // cluster-labeling pair pays the CC run after any key rename. The
-    // memo resets at the pass boundary so each pass measures one real CC
-    // run + one in-session reuse: deterministically, q_corpus_curation
-    // (alphabetically first of the pair) carries the loop's cost in the
-    // bench JSON and q_dedup_clusters shows the reuse.
+    // plan's actual cost.
     // optional name filter (comma-separated) for A/B runs on a family of
     // queries without paying the full suite; default = all
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -208,7 +201,6 @@ object Bench {
     // still require the default two passes.
     val onePass = sys.env.get("SPARK_GRAFT_PASSES").contains("1")
     val pass1 = ordered.map { case (name, fn) => name -> timeOnce(name, 1, fn) }.toMap
-    graft.queries.DedupQueries.clearClusterMemo(spark)
     val pass2 =
       if (onePass) pass1
       else ordered.map { case (name, fn) => name -> timeOnce(name, 2, fn) }.toMap
@@ -226,10 +218,7 @@ object Bench {
     // the JSON; bounded to 40 queries so churn cannot stretch the run,
     // with failed-timing queries served before spiked ones.
     val spiked = if (onePass) Seq.empty else retimeQueue(pass1, pass2)
-    val pass3 = spiked.map { n =>
-      graft.queries.DedupQueries.clearClusterMemo(spark)
-      n -> timeOnce(n, 3, ordered.toMap.apply(n))
-    }.toMap
+    val pass3 = spiked.map(n => n -> timeOnce(n, 3, ordered.toMap.apply(n))).toMap
     val loadAfter = fmtLoad(loadavgVals())
     val pooled = pass1.map { case (name, _) =>
       name -> pool(Seq(pass1(name), pass2(name)) ++ pass3.get(name))

@@ -29,14 +29,14 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
       spark.sparkContext.setJobDescription(s"plandump: $n")
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      df.collect()
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = Reuse.scope {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        df.collect()
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, n + suffix + ".txt"),
         plan.getBytes("UTF-8"))
-      spark.catalog.clearCache()
-      graft.queries.DedupQueries.clearClusterMemo(spark)
     }
     spark.stop()
   }

@@ -74,8 +74,10 @@ object Verify {
           // verify DP ran single-threaded at sf1); repartition inserts
           // an exchange so compute stays parallel and only the tiny
           // result funnels into the one output file
-          fn(spark, sfDir).repartition(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          // the scope releases what the query pinned or cut, so no query
+          // holds storage across the rest of the board
+          Reuse.scope(fn(spark, sfDir).repartition(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -98,9 +100,6 @@ object Verify {
             .map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
           s"""{"ok":true,"rows":$rows,"hash":$h,"sec":$secS,"schema":${jstr(schema)}}"""
       }
-      // queries that persist() intermediates (sketch tables) must not
-      // pin storage across the other 50+ queries of this session
-      spark.catalog.clearCache()
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Reuse
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -196,19 +197,6 @@ object ConnectedComponents {
     uf.entries
   }
 
-  /** Free the block-manager storage behind a `localCheckpoint`'d frame.
-    * `Dataset.unpersist` only reaches cache-manager entries — a
-    * checkpoint's internal RDD is not one — so without this, every
-    * superseded round labeling would sit in executor storage until
-    * nondeterministic driver GC lets ContextCleaner reap it.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Checkpoint a round labeling AND reset its size statistics.
     *
     * `localCheckpoint` truncates lineage but PROPAGATES the child
@@ -226,12 +214,12 @@ object ConnectedComponents {
     * decision that matters at any scale. (GraphFrames ships the same
     * reset as `getCachedDataFrame` for exactly this loop shape.)
     *
-    * Returns (stats-reset frame, checkpoint owner) — `freeCheckpoint`
+    * Returns (stats-reset frame, checkpoint owner) — `Reuse.free`
     * must target the OWNER: the wrapper's own LogicalRDD holds the
     * Row-conversion RDD, not the checkpointed blocks.
     */
   private def truncate(df: DataFrame): (DataFrame, DataFrame) = {
-    val cp = df.localCheckpoint()
+    val cp = Reuse.cut(df)
     (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), cp)
   }
 
@@ -240,8 +228,8 @@ object ConnectedComponents {
     *               directions are derived internally)
     * @return one row per vertex appearing in `edges`: `(id, component)`
     *         where `component` is the minimum vertex id reachable.
-    *         The result is checkpointed; storage is released when the
-    *         session's ContextCleaner reaps it after the caller drops it.
+    *         The result is checkpointed (a [[graft.Reuse.cut]], released
+    *         with the caller's scope); intermediates are freed on the way.
     */
   def components(edges: DataFrame, maxIters: Int = DefaultMaxIters): DataFrame = {
     val s = edges.sparkSession
@@ -254,26 +242,27 @@ object ConnectedComponents {
     // level-0 contraction: per-partition spanning forest — narrow (no
     // shuffle), shrinks the edge list to ≤ one row per vertex
     // occurrence before anything iterates (see object Scaladoc)
-    val forest = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)]
-      .mapPartitions(unionFindPass)
-      .toDF("src", "dst")
-      .persist()
-    try {
+    val forest = Reuse.pin(
+      edges
+        .select(col("src").cast("long"), col("dst").cast("long"))
+        .as[(Long, Long)]
+        .mapPartitions(unionFindPass)
+        .toDF("src", "dst"))
+    val labels =
       if (forest.count() <= budget) {
         // single-TASK finish on the executors (repartition(1) routes the
         // ≤budget forest rows to one task; never a driver collect). The
         // result is checkpointed for parity with the loop path — callers
         // join it repeatedly and must not re-run the finish per consumer.
-        forest
-          .repartition(1)
-          .as[(Long, Long)]
-          .mapPartitions(unionFindPass)
-          .toDF("id", "component")
-          .localCheckpoint()
+        Reuse.cut(
+          forest
+            .repartition(1)
+            .as[(Long, Long)]
+            .mapPartitions(unionFindPass)
+            .toDF("id", "component"))
       } else svLoop(forest, maxIters)
-    } finally forest.unpersist(blocking = false)
+    Reuse.free(forest)
+    labels
   }
 
   /** The Shiloach–Vishkin labeling loop — the past-the-budget path,
@@ -283,107 +272,97 @@ object ConnectedComponents {
     // loop shuffles are tiny (one narrow row per vertex) — AQE coalesces
     // them; the measured cost per round is job scheduling + checkpoint
     // I/O, not shuffle width, so no partition override here
-    val directed = edges
-      .select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist()
-    var propagated: DataFrame = null
-    var hooked: DataFrame = null
-    // try/finally so a mid-loop failure (or the non-convergence throw
-    // below) cannot leak persisted blocks into a long-lived session
-    try {
-      // initial labeling folds the first neighbor-min step into the
-      // vertex-dedup shuffle: comp₀(v) = min(v, min neighbor) — the
-      // distinct() this replaces was a groupBy on the same key doing no
-      // useful work, so round 1 comes free (this job also materializes
-      // the `directed` persist — no separate warm-up count)
-      var (labels, labelsCp) = truncate(
-        directed
-          .groupBy(col("a"))
-          .agg(min(col("b")).as("nmin"))
-          .select(col("a").as("id"), least(col("a"), col("nmin")).as("comp")))
-      var changed = 1L
-      var i = 0
-      while (changed > 0 && i < maxIters) {
-        // step 1: neighbor-min — cand(v) = min(comp(v), min of neighbor
-        // comps). Persisted: it feeds both the root-min aggregate and
-        // the hook join.
-        val neighborMin = directed
-          .join(labels.select(col("id").as("b"), col("comp").as("comp_b")), Seq("b"))
-          .groupBy(col("a"))
-          .agg(min(col("comp_b")).as("nmin"))
-          .select(col("a").as("id"), col("nmin"))
-        propagated = labels
+    val directed = Reuse.pin(
+      edges
+        .select(col("src").as("a"), col("dst").as("b"))
+        .unionByName(edges.select(col("dst").as("a"), col("src").as("b"))))
+    // initial labeling folds the first neighbor-min step into the
+    // vertex-dedup shuffle: comp₀(v) = min(v, min neighbor) — the
+    // distinct() this replaces was a groupBy on the same key doing no
+    // useful work, so round 1 comes free (this job also materializes
+    // the `directed` pin — no separate warm-up count)
+    var (labels, labelsCp) = truncate(
+      directed
+        .groupBy(col("a"))
+        .agg(min(col("b")).as("nmin"))
+        .select(col("a").as("id"), least(col("a"), col("nmin")).as("comp")))
+    var changed = 1L
+    var i = 0
+    while (changed > 0 && i < maxIters) {
+      // step 1: neighbor-min — cand(v) = min(comp(v), min of neighbor
+      // comps). Pinned: it feeds both the root-min aggregate and the
+      // hook join.
+      val neighborMin = directed
+        .join(labels.select(col("id").as("b"), col("comp").as("comp_b")), Seq("b"))
+        .groupBy(col("a"))
+        .agg(min(col("comp_b")).as("nmin"))
+        .select(col("a").as("id"), col("nmin"))
+      val propagated = Reuse.pin(
+        labels
           .join(neighborMin, Seq("id"), "left")
           .select(
             col("id"),
             col("comp"),
-            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("cand"))
-          .persist()
-        // step 2: hook at the ROOT (Shiloach–Vishkin hooking): every
-        // member of a component adopts the component-wide minimum
-        // candidate in one groupBy + join. Leaf-only hooking (the r1–r9
-        // loop updated comp(v) but never comp of v's whole tree) makes
-        // new minima enter a tree at its leaves and crawl up one hop
-        // per round — measured ~40+ rounds on the r10 media star graph
-        // where this converges in ~10.
-        val rootMin = propagated
-          .groupBy(col("comp"))
-          .agg(min(col("cand")).as("rmin"))
-        // persisted: hooked feeds BOTH sides of the pointer-jump
-        // self-join below — unpersisted, the rootMin aggregate + hook
-        // join subtree executes twice per round (ReuseExchange dedups
-        // only the shuffles)
-        hooked = propagated
+            least(col("comp"), coalesce(col("nmin"), col("comp"))).as("cand")))
+      // step 2: hook at the ROOT (Shiloach–Vishkin hooking): every
+      // member of a component adopts the component-wide minimum
+      // candidate in one groupBy + join. Leaf-only hooking (the r1–r9
+      // loop updated comp(v) but never comp of v's whole tree) makes
+      // new minima enter a tree at its leaves and crawl up one hop
+      // per round — measured ~40+ rounds on the r10 media star graph
+      // where this converges in ~10.
+      val rootMin = propagated
+        .groupBy(col("comp"))
+        .agg(min(col("cand")).as("rmin"))
+      // pinned: hooked feeds BOTH sides of the pointer-jump self-join
+      // below — unpinned, the rootMin aggregate + hook join subtree
+      // executes twice per round (ReuseExchange dedups only the
+      // shuffles)
+      val hooked = Reuse.pin(
+        propagated
           .join(rootMin, Seq("comp"))
-          .select(col("id"), col("rmin").as("comp"), col("comp").as("prev"))
-          .persist()
-        // step 3: pointer jump — comp(v) ← comp(comp(v)); comp values
-        // are themselves vertex ids (invariant: comp(v) ≤ v), so the
-        // self-join resolves one indirection level and halves tree
-        // depth per round. The changed-label count is an observe()
-        // metric collected WHILE the checkpoint job materializes the
-        // rows — one job per round, not a checkpoint plus a count job.
-        val obs = new org.apache.spark.sql.Observation(s"cc_round_$i")
-        // truncate(): lineage cut to one round AND size stats reset —
-        // without the reset the self-join above squares the estimate
-        // every round (see [[truncate]])
-        val (updated, updatedCp) = truncate(
-          hooked
-            .join(
-              hooked.select(col("id").as("comp"), col("comp").as("comp2")),
-              Seq("comp"),
-              "left")
-            .select(
-              col("id"),
-              least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"),
-              col("prev"))
-            .observe(
-              obs,
-              coalesce(sum(when(col("comp") < col("prev"), 1L).otherwise(0L)), lit(0L))
-                .as("changed"))
-            .select(col("id"), col("comp"))) // prev served the metric only
-        changed = obs.get("changed").asInstanceOf[Long]
-        propagated.unpersist()
-        propagated = null
-        hooked.unpersist()
-        hooked = null
-        // the superseded labeling's checkpoint blocks are dead now —
-        // free them eagerly so storage holds 2 labelings, not maxIters
-        freeCheckpoint(labelsCp)
-        labels = updated
-        labelsCp = updatedCp
-        i += 1
-      }
-      require(
-        changed == 0,
-        s"connected components did not converge in $maxIters rounds " +
-          s"($changed labels still changing) — raise maxIters for this graph")
-      labels.select(col("id"), col("comp").as("component"))
-    } finally {
-      if (propagated != null) propagated.unpersist()
-      if (hooked != null) hooked.unpersist()
-      directed.unpersist()
+          .select(col("id"), col("rmin").as("comp"), col("comp").as("prev")))
+      // step 3: pointer jump — comp(v) ← comp(comp(v)); comp values
+      // are themselves vertex ids (invariant: comp(v) ≤ v), so the
+      // self-join resolves one indirection level and halves tree
+      // depth per round. The changed-label count is an observe()
+      // metric collected WHILE the checkpoint job materializes the
+      // rows — one job per round, not a checkpoint plus a count job.
+      val obs = new org.apache.spark.sql.Observation(s"cc_round_$i")
+      // truncate(): lineage cut to one round AND size stats reset —
+      // without the reset the self-join above squares the estimate
+      // every round (see [[truncate]])
+      val (updated, updatedCp) = truncate(
+        hooked
+          .join(
+            hooked.select(col("id").as("comp"), col("comp").as("comp2")),
+            Seq("comp"),
+            "left")
+          .select(
+            col("id"),
+            least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"),
+            col("prev"))
+          .observe(
+            obs,
+            coalesce(sum(when(col("comp") < col("prev"), 1L).otherwise(0L)), lit(0L))
+              .as("changed"))
+          .select(col("id"), col("comp"))) // prev served the metric only
+      changed = obs.get("changed").asInstanceOf[Long]
+      // the round's intermediates and the superseded labeling are dead
+      // now — storage holds 2 labelings, not maxIters
+      Reuse.free(propagated)
+      Reuse.free(hooked)
+      Reuse.free(labelsCp)
+      labels = updated
+      labelsCp = updatedCp
+      i += 1
     }
+    // fails closed; what the loop still holds goes with the caller's scope
+    require(
+      changed == 0,
+      s"connected components did not converge in $maxIters rounds " +
+        s"($changed labels still changing) — raise maxIters for this graph")
+    Reuse.free(directed)
+    labels.select(col("id"), col("comp").as("component"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import graft.functions.TextHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -132,21 +133,20 @@ object CurationQueries {
     *
     * STORAGE CONTRACT: the gram stream feeds BOTH the boilerplate-
     * dimension build and the probe join. The narrow (doc_id, tokens)
-    * projection is `persist()`ed — NOT the exploded grams: the token
+    * projection is pinned — NOT the exploded grams: the token
     * array is ~1× corpus size where the 4-gram stream is ~4× (each token
     * appears in four grams), and re-exploding from the cache is a
     * codegen'd map while materializing the gram cache is a measured
     * 1.5× slowdown. `documents` is scanned and tokenized ONCE
-    * (plan-audit-locked). Session owners `clearCache()` when done, as
-    * Verify/Bench do between queries; a production pipeline would write
-    * the gram dimension out as its own artifact instead.
+    * (plan-audit-locked). A production pipeline would write the gram
+    * dimension out as its own artifact instead.
     */
   val BoilerplateMinDocs = 3
 
   def boilerplateNgrams(s: SparkSession, dir: String): DataFrame = {
-    val tokens = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
-      .select(col("doc_id"), toks.as("w"))
-      .persist()
+    val tokens = Reuse.pin(
+      Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
+        .select(col("doc_id"), toks.as("w")))
     val grams = tokens.select(col("doc_id"), explode(expr(gramsExpr(4))).as("g"))
     val boiler = grams
       .groupBy(col("g"))
@@ -467,16 +467,16 @@ object CurationQueries {
 
   def lineDedup(s: SparkSession, dir: String, blockTokens: Int = LineDedupBlockTokens): DataFrame = {
     val B = blockTokens
-    val docs = Tables
-      .documents(s, dir)
-      .select(col("doc_id"), toks.as("w"))
-      .select(
-        col("doc_id"),
-        expr(s"cast(((size(w) - 1) div $B) + 1 as long)").as("n_lines"),
-        col("w"))
-      // one corpus scan: the token projection feeds the line explode
-      // (twice: firsts + probe) AND the final n_lines join
-      .persist()
+    // one corpus scan: the token projection feeds the line explode
+    // (twice: firsts + probe) AND the final n_lines join
+    val docs = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("doc_id"), toks.as("w"))
+        .select(
+          col("doc_id"),
+          expr(s"cast(((size(w) - 1) div $B) + 1 as long)").as("n_lines"),
+          col("w")))
     val lines = docs.select(
       col("doc_id"),
       expr(s"""inline(transform(sequence(0, (size(w) - 1) div $B),
@@ -737,17 +737,17 @@ object CurationQueries {
     *
     * STORAGE CONTRACT: the gram stream feeds both the eval-set dimension
     * and the training-side probe — the narrow (doc_id, tokens) projection
-    * is `persist()`ed so `documents` is scanned and tokenized once (same
-    * contract and same cache-the-tokens-not-the-explode rationale as
-    * [[boilerplateNgrams]]; callers `clearCache()` when done).
+    * is pinned so `documents` is scanned and tokenized once (same
+    * cache-the-tokens-not-the-explode rationale as
+    * [[boilerplateNgrams]]).
     */
   val DecontGramTokens = 8
 
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
     val L = DecontGramTokens
-    val tokens = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
-      .select(col("doc_id"), toks.as("w"))
-      .persist()
+    val tokens = Reuse.pin(
+      Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
+        .select(col("doc_id"), toks.as("w")))
     val grams = tokens
       .select(col("doc_id"), explode(expr(gramsExpr(L))).as("gram"))
     val evalGrams = grams
@@ -820,9 +820,9 @@ object CurationQueries {
     val bUdf = udf { (g: String, j: Int) =>
       TextHash.permHash(TextHash.polyHash(g), 500L + j) % BloomBits
     }
-    val tokens = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
-      .select(col("doc_id"), toks.as("w"))
-      .persist()
+    val tokens = Reuse.pin(
+      Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
+        .select(col("doc_id"), toks.as("w")))
     val grams = tokens
       .select(col("doc_id"), posexplode(expr(gramsExpr(L))).as(Seq("pos", "gram")))
     val evalGrams = grams
@@ -984,25 +984,24 @@ object CurationQueries {
         col("shard").as("pack_shard"),
         explode(expr("sequence(first_seq, last_seq)")).as("seq"))
       .distinct()
-    val base = seqs
-      .select(
-        explode(expr(s"sequence(1L, ${ShuffleEpochs}L)")).as("epoch"),
-        col("pack_shard"),
-        col("seq"))
-      .withColumn(
-        "hkey",
-        expr(
-          "cast(conv(substring(md5(cast(concat_ws(':', " +
-            "cast(epoch as string), cast(pack_shard as string), " +
-            "cast(seq as string)) as binary)), 1, 15), 16, 10) as long)"))
-      .withColumn("out_shard", col("hkey") % ShuffleShards)
-      // top 8 bits of the 60-bit key ≡ the first two hex chars: an
-      // order-consistent bucket prefix, so bucketed ranks compose into
-      // the global hash order
-      .withColumn("hb", shiftright(col("hkey"), 52))
-      // persisted: feeds the local rank AND the bucket-offset table —
-      // same clearCache() session contract as langMixture's projection
-      .persist()
+    // pinned: feeds the local rank AND the bucket-offset table
+    val base = Reuse.pin(
+      seqs
+        .select(
+          explode(expr(s"sequence(1L, ${ShuffleEpochs}L)")).as("epoch"),
+          col("pack_shard"),
+          col("seq"))
+        .withColumn(
+          "hkey",
+          expr(
+            "cast(conv(substring(md5(cast(concat_ws(':', " +
+              "cast(epoch as string), cast(pack_shard as string), " +
+              "cast(seq as string)) as binary)), 1, 15), 16, 10) as long)"))
+        .withColumn("out_shard", col("hkey") % ShuffleShards)
+        // top 8 bits of the 60-bit key ≡ the first two hex chars: an
+        // order-consistent bucket prefix, so bucketed ranks compose into
+        // the global hash order
+        .withColumn("hb", shiftright(col("hkey"), 52)))
     val wLocal = Window
       .partitionBy(col("epoch"), col("out_shard"), col("hb"))
       .orderBy(col("hkey"), col("pack_shard"), col("seq"))
@@ -1080,16 +1079,15 @@ object CurationQueries {
     // bucket-offset table AND the quota target — unpersisted, each
     // consumer rescans documents and re-md5s every doc_id (the window
     // and partial-agg exchanges differ, so ReuseExchange cannot dedup
-    // them). Same clearCache() session contract as the sketch tables;
-    // plan-audit-locked to one FileScan.
-    val bucketed = Tables
-      .documents(s, dir)
-      .select(
-        col("doc_id"),
-        col("lang"),
-        expr("md5(cast(cast(doc_id as string) as binary))").as("ord"))
-      .withColumn("bucket", substring(col("ord"), 1, 2))
-      .persist()
+    // them). Plan-audit-locked to one FileScan.
+    val bucketed = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("doc_id"),
+          col("lang"),
+          expr("md5(cast(cast(doc_id as string) as binary))").as("ord"))
+        .withColumn("bucket", substring(col("ord"), 1, 2)))
     val target = bucketed
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("c"))
@@ -1151,14 +1149,13 @@ object CurationQueries {
     // persisted: the O(languages) aggregate feeds the total, the
     // normalizer fold, and the final projection — unpersisted, each
     // consumer would rescan and retokenize the WHOLE corpus for a
-    // 4-row table (3 corpus passes at 100 TB). Same clearCache()
-    // session contract as the sketch tables.
-    val perLang = Tables
-      .documents(s, dir)
-      .select(col("lang"), size(toks).cast("long").as("n_tokens"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("lang_tokens"))
-      .persist()
+    // 4-row table (3 corpus passes at 100 TB).
+    val perLang = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("lang"), size(toks).cast("long").as("n_tokens"))
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("lang_tokens")))
     val tot = perLang.agg(sum(col("lang_tokens")).as("total_tokens"))
     val withP = perLang
       .crossJoin(broadcast(tot))
@@ -1227,18 +1224,17 @@ object CurationQueries {
     * back (plan-locked: no rangepartitioning, windows bucket-salted).
     */
   def tokenBudget(s: SparkSession, dir: String, frac: Double = 0.5): DataFrame = {
-    // persisted: feeds the quota aggregate, the local cumsum AND the
-    // bucket-offset table — same clearCache() session contract as the
-    // sketch tables
-    val base = Tables
-      .documents(s, dir)
-      .select(
-        col("doc_id"),
-        col("source"),
-        size(toks).cast("long").as("n_tokens"),
-        expr("md5(cast(cast(doc_id as string) as binary))").as("ord"))
-      .withColumn("bucket", substring(col("ord"), 1, 2))
-      .persist()
+    // pinned: feeds the quota aggregate, the local cumsum AND the
+    // bucket-offset table
+    val base = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("doc_id"),
+          col("source"),
+          size(toks).cast("long").as("n_tokens"),
+          expr("md5(cast(cast(doc_id as string) as binary))").as("ord"))
+        .withColumn("bucket", substring(col("ord"), 1, 2)))
     val perSrc = base.groupBy(col("source")).agg(sum(col("n_tokens")).as("src_tokens"))
     val tot = perSrc.agg(sum(col("src_tokens")).as("total"))
     val withQ = perSrc
@@ -1408,9 +1404,9 @@ object CurationQueries {
     // persist point. Both consumers still read one file scan
     // (plan-audit-locked); the per-consumer recompute is the explode +
     // map-side partial agg only.
-    val tokens = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
-      .select(col("doc_id"), toks.as("w"))
-      .persist()
+    val tokens = Reuse.pin(
+      Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; gram explode otherwise 1-core
+        .select(col("doc_id"), toks.as("w")))
     val grams = tokens.select(col("doc_id"), explode(expr(gramsExpr(4))).as("g"))
     // slot counts per (gram, doc): the map-side combine that keeps a
     // boilerplate gram occurring 10⁹ times from shipping 10⁹ probe rows
@@ -1642,7 +1638,8 @@ object CurationQueries {
     */
   /** The shared training loop: learn `steps` merges, returning the merge
     * log and the final tokenization of the word table (w, toks, cnt).
-    * Caller unpersists the returned DataFrame.
+    * The returned table is pinned; [[bpeTrain]] frees it, [[bpeEncode]]'s
+    * result reads it.
     */
   private def bpeLearn(
       s: SparkSession,
@@ -1655,15 +1652,15 @@ object CurationQueries {
       .filter(col("w") =!= "")
       .groupBy(col("w"))
       .agg(count(lit(1)).as("cnt"))
-    var toks = words
-      .select(
-        col("w"),
-        concat(
-          lit(" "),
-          concat_ws(" ", expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")),
-          lit(" ")).as("toks"),
-        col("cnt"))
-      .persist()
+    var toks = Reuse.pin(
+      words
+        .select(
+          col("w"),
+          concat(
+            lit(" "),
+            concat_ws(" ", expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")),
+            lit(" ")).as("toks"),
+          col("cnt")))
     // Per-round control plane, ONE action per round (r16): the round's
     // best pair and the previous round's vocab size are BOTH aggregates
     // over the same tokenization table, so they ride one tagged-union
@@ -1714,7 +1711,7 @@ object CurationQueries {
       val rep = s" ${esc(l)}${esc(r)} "
       val applied = (1 to BpeReplacePasses)
         .foldLeft("toks")((acc, _) => s"replace($acc, '$pat', '$rep')")
-      val next = toks.select(col("w"), expr(applied).as("toks"), col("cnt")).persist()
+      val next = Reuse.pin(toks.select(col("w"), expr(applied).as("toks"), col("cnt")))
       // one action on the merged table: next round's best pair + (train
       // only) this round's vocab size. A None best ends the loop — every
       // word is a single symbol, return the merges learned so far. After
@@ -1725,7 +1722,7 @@ object CurationQueries {
         else if (needVocab)
           (None, vocabCount(next).collect().headOption.map(_.getLong(2)).getOrElse(0L))
         else (None, 0L)
-      toks.unpersist()
+      Reuse.free(toks)
       toks = next
       rows += ((step, l, r, l + r, total, vocab))
       pending = nextBest
@@ -1736,7 +1733,7 @@ object CurationQueries {
 
   def bpeTrain(s: SparkSession, dir: String, steps: Int = BpeSteps): DataFrame = {
     val (rows, toks) = bpeLearn(s, dir, steps)
-    toks.unpersist()
+    Reuse.free(toks)
     import s.implicits._
     rows.toDF("step", "lhs", "rhs", "merged", "pair_count", "vocab_after")
   }
@@ -1775,8 +1772,8 @@ object CurationQueries {
         col("n_bpe_tokens"),
         round(col("n_word_chars").cast("double") / col("n_bpe_tokens").cast("double"), 6)
           .as("chars_per_token"))
-    // toks stays persisted until the session's clearCache — the result is
-    // lazy and wordStats reads it at materialization time
+    // toks stays pinned: the result is lazy and wordStats reads it at
+    // materialization time
     out
   }
 
@@ -1882,18 +1879,18 @@ object CurationQueries {
     import org.apache.spark.sql.expressions.Window
     // ONE persisted corpus projection feeds both the source counts and
     // the selection pass (the documents-scanned-once discipline)
-    val base = Tables
-      .documents(s, dir)
-      .select(
-        col("source"),
-        col("doc_id"),
-        md5(col("doc_id").cast("string").cast("binary")).as("h"))
-      // md5 hex strings order lexicographically, so the first hex char
-      // is an order-consistent bucket prefix — the q_token_budget /
-      // q_epoch_shuffle salt that keeps the per-source fill off a
-      // single reducer
-      .withColumn("hb", substring(col("h"), 1, 1))
-      .persist()
+    val base = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("source"),
+          col("doc_id"),
+          md5(col("doc_id").cast("string").cast("binary")).as("h"))
+        // md5 hex strings order lexicographically, so the first hex char
+        // is an order-consistent bucket prefix — the q_token_budget /
+        // q_epoch_shuffle salt that keeps the per-source fill off a
+        // single reducer
+        .withColumn("hb", substring(col("h"), 1, 1)))
     val counts = base
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
@@ -1976,11 +1973,11 @@ object CurationQueries {
     * plan.
     */
   def curriculumOrder(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables
-      .documents(s, dir)
-      .select(col("doc_id"), col("n_chars"))
-      .withColumn("bkt", expr("n_chars div 64"))
-      .persist()
+    val docs = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("doc_id"), col("n_chars"))
+        .withColumn("bkt", expr("n_chars div 64")))
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bkt"))
       .orderBy(col("n_chars"), col("doc_id"))

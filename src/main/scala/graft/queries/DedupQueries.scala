@@ -1,10 +1,12 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import graft.functions.TextHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.q6
 
 /** Near-duplicate detection over `documents` — MinHash+LSH, SimHash, and
   * exact n-gram Jaccard (LLM-data-pipeline dedup surface).
@@ -25,12 +27,9 @@ object DedupQueries {
     * ~0.6; banding at 16 bands × 8 rows made nearly every pair a
     * candidate, an all-pairs blowup at scale).
     *
-    * STORAGE CONTRACT: the returned plan reads a `persist()`ed sketch
-    * table (see below) that stays pinned for the session after the
-    * result materializes — callers that keep the session alive (notebook
-    * / library use) should `spark.catalog.clearCache()` once done, as
-    * Verify/Bench do between queries. Unpersisting eagerly here would
-    * recompute the sketch per consumer instead.
+    * The returned plan reads a pinned sketch table (see below), so it
+    * must be consumed inside the caller's [[graft.Reuse.scope]]; freeing
+    * it eagerly here would recompute the sketch per consumer instead.
     */
   def minhashPairs(s: SparkSession, dir: String, minSim: Double = 0.7): DataFrame =
     minhashPairsOver(Tables.documents(s, dir).select(col("doc_id"), col("text")), minSim)
@@ -61,11 +60,11 @@ object DedupQueries {
     // one unsplittable row group, so the sketch otherwise computes on one
     // core (the [[MultimodalQueries.decodeParallel]] lesson, conditional
     // form — identity whenever the scan already has ≥ cores partitions)
-    val docs = Tables.spread(docs0
-      .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
-      .select(col("doc_id"), sigUdf(col("text")).as("sig"))
-      .withColumn("band", explode(bandUdf(col("sig"))))
-      .persist()
+    val docs = Reuse.pin(
+      Tables.spread(docs0
+        .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
+        .select(col("doc_id"), sigUdf(col("text")).as("sig"))
+        .withColumn("band", explode(bandUdf(col("sig")))))
     // Cap bucket size: a bucket of n docs yields n²/2 candidate pairs, so
     // degenerate mega-buckets (hash regions where "everything resembles
     // everything") turn the bucket join quadratic. Skipping them is the
@@ -205,13 +204,12 @@ object DedupQueries {
     val estUdf = udf { (a: Seq[Long], b: Seq[Long]) =>
       TextHash.estimatedJaccard(a.toArray, b.toArray)
     }
-    // the sketch artifact computes ONCE and feeds all three bandings —
-    // same clearCache() session contract as the other sketch tables
-    val sigs = Tables.spread(Tables
-      .documents(s, dir)
-      .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
-      .select(col("doc_id"), sigUdf(col("text")).as("sig")) // spread: 1-row-group scan, heavy UDF
-      .persist()
+    // the sketch artifact computes ONCE and feeds all three bandings
+    val sigs = Reuse.pin(
+      Tables.spread(Tables
+        .documents(s, dir)
+        .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
+        .select(col("doc_id"), sigUdf(col("text")).as("sig"))) // spread: 1-row-group scan, heavy UDF
     def one(bands: Int): DataFrame = {
       val bandUdf = udf { (sig: Seq[Long]) => TextHash.bandKeys(sig.toArray, bands) }
       val docs = sigs.withColumn("band", explode(bandUdf(col("sig"))))
@@ -310,17 +308,16 @@ object DedupQueries {
     val estUdf = udf { (a: Seq[Long], b: Seq[Long]) =>
       TextHash.estimatedJaccard(a.toArray, b.toArray)
     }
-    // one signature pass over the corpus feeds both sides of the split —
-    // same clearCache() session contract as the other sketch tables
-    val all = Tables.spread(Tables
-      .documents(s, dir)
-      .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
-      .select( // spread: 1-row-group scan, heavy signature UDF
-        col("doc_id"),
-        sigUdf(col("text")).as("sig"),
-        (expr(OracleHash.bucketExpr("cast(doc_id as string)"))
-          % 5 === 0).as("arrival"))
-      .persist()
+    // one signature pass over the corpus feeds both sides of the split
+    val all = Reuse.pin(
+      Tables.spread(Tables
+        .documents(s, dir)
+        .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0))
+        .select( // spread: 1-row-group scan, heavy signature UDF
+          col("doc_id"),
+          sigUdf(col("text")).as("sig"),
+          (expr(OracleHash.bucketExpr("cast(doc_id as string)"))
+            % 5 === 0).as("arrival")))
     val idxBands = all
       .filter(!col("arrival"))
       .select(col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
@@ -424,23 +421,19 @@ object DedupQueries {
     * word-salad fixture is densely mid-similar, so looser thresholds
     * explode quadratically. Oracle-checked.
     *
-    * STORAGE CONTRACT: same as [[minhashPairs]] — the persisted segment
-    * table stays pinned after materialization; long-lived callers should
-    * `spark.catalog.clearCache()` when done.
+    * Like [[minhashPairs]], the result reads a pinned segment table.
     */
   def simhashPairs(s: SparkSession, dir: String, maxHamming: Int = 2): DataFrame = {
     val docs = simhashDocs(s, dir)
     // one scan + one sketch evaluation per document, exploded into the 4
     // pigeonhole keys (a 4-way union would recompute the sketch per leg);
-    // persisted because the bucket count and both join legs consume it.
-    // Same STORAGE CONTRACT as minhashPairs: the cache stays pinned for
-    // the session — library callers clearCache() when done.
-    val segs = docs.select(
-      col("doc_id"),
-      col("simhash"),
-      explode(
-        array((0 to 3).map(i => concat(lit(s"$i:"), col(s"seg$i"))): _*)).as("seg_key"))
-      .persist()
+    // pinned because the bucket count and both join legs consume it.
+    val segs = Reuse.pin(
+      docs.select(
+        col("doc_id"),
+        col("simhash"),
+        explode(
+          array((0 to 3).map(i => concat(lit(s"$i:"), col(s"seg$i"))): _*)).as("seg_key")))
     // same mega-bucket cap as the MinHash path: a segment value shared
     // by n docs contributes n²/2 candidates, so degenerate buckets turn
     // the pigeonhole join quadratic at corpus scale (never triggers at
@@ -493,9 +486,8 @@ object DedupQueries {
     */
   /** Shared phash + pigeonhole construction for the media dedup family:
     * one hash evaluation per payload, exploded into the 4 pigeonhole
-    * keys; persisted because every consumer reads it more than once
-    * (same STORAGE CONTRACT as minhashPairs/simhashPairs). The key is a
-    * PACKED LONG (segment index in the high bits) — the persist, the
+    * keys; pinned because every consumer reads it more than once. The
+    * key is a PACKED LONG (segment index in the high bits) — the pin, the
     * bucket-count shuffle, and the join legs all carry it, and a long
     * hashes/compares without the per-row string allocation a concat
     * key pays.
@@ -504,17 +496,17 @@ object DedupQueries {
     val hUdf = udf { (docId: Long, media: Array[Byte]) =>
       MultimodalQueries.dhash56(docId, media)
     }
-    MultimodalQueries
-      .mediaTable(s, dir)
-      .select(col("doc_id"), hUdf(col("doc_id"), col("media")).as("phash"))
-      .select(
-        col("doc_id"),
-        col("phash"),
-        explode(array((0 to 3).map(i =>
-          (shiftright(col("phash"), 14 * i).bitwiseAND(lit(0x3fffL)) + lit(i.toLong << 32))
-            .as(s"k$i")): _*))
-          .as("seg_key"))
-      .persist()
+    Reuse.pin(
+      MultimodalQueries
+        .mediaTable(s, dir)
+        .select(col("doc_id"), hUdf(col("doc_id"), col("media")).as("phash"))
+        .select(
+          col("doc_id"),
+          col("phash"),
+          explode(array((0 to 3).map(i =>
+            (shiftright(col("phash"), 14 * i).bitwiseAND(lit(0x3fffL)) + lit(i.toLong << 32))
+              .as(s"k$i")): _*))
+            .as("seg_key")))
   }
 
   def mediaDedup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
@@ -820,62 +812,18 @@ object DedupQueries {
     * feasible at oracle scale, which is exactly why the engine side
     * must NOT do it that way (closure is quadratic per component).
     */
-  /** Single-slot memo of the cluster labeling: [[corpusCuration]] embeds
-    * [[dedupClusters]]' verdict, and recomputing the whole CC loop for
-    * the composed query doubled the most expensive work in the inventory
-    * (VERDICT r5 #5). The labeling is deterministic in (dir, maxIters)
-    * over immutable fixture parquet, and it is CHECKPOINTED — reuse is a
-    * narrow scan of materialized blocks, immune to `clearCache()`
-    * between queries.
-    *
-    * Lifetime: the memo holds AT MOST ONE session's labelings (the most
-    * recent caller); a different session's first call replaces the slot,
-    * releasing the previous session's DataFrames to the GC. A weak-keyed
-    * map would NOT work here — the memoized DataFrames strongly
-    * reference their own SparkSession, and a WeakHashMap value that
-    * (indirectly) refers to its key is never reclaimed — so the bound is
-    * enforced by construction instead: the retained graph is one
-    * session's labelings, worst case, and [[clearClusterMemo]] empties
-    * even that.
-    */
-  private val clusterMemo = new java.util.concurrent.atomic.AtomicReference[
-    (SparkSession, scala.collection.concurrent.TrieMap[(String, Int), DataFrame])]()
-
-  /** Drop the memoized labelings. Bench calls it at pass boundaries so
-    * each timed pass measures one real CC run plus one reuse (the
-    * production shape) instead of the second pass riding the first
-    * pass's labeling; the checkpoint blocks are reaped by the
-    * ContextCleaner once unreferenced.
-    */
-  def clearClusterMemo(s: SparkSession): Unit = {
-    val cur = clusterMemo.get()
-    if (cur != null && (cur._1 eq s)) clusterMemo.compareAndSet(cur, null)
-  }
-
   def dedupClusters(
       s: SparkSession,
       dir: String,
       maxIters: Int = graft.operators.ConnectedComponents.DefaultMaxIters): DataFrame = {
-    val perSession = clusterMemo.synchronized {
-      val cur = clusterMemo.get()
-      if (cur != null && (cur._1 eq s)) cur._2
-      else {
-        val m = scala.collection.concurrent.TrieMap.empty[(String, Int), DataFrame]
-        clusterMemo.set((s, m))
-        m
-      }
-    }
-    perSession.getOrElseUpdate(
-      (dir, maxIters), {
-        val pairs = simhashPairs(s, dir)
-          .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        graft.operators.ConnectedComponents
-          .components(pairs, maxIters)
-          .select(
-            col("id").as("doc_id"),
-            col("component"),
-            (col("id") === col("component")).as("keep"))
-      })
+    val pairs = simhashPairs(s, dir)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    graft.operators.ConnectedComponents
+      .components(pairs, maxIters)
+      .select(
+        col("id").as("doc_id"),
+        col("component"),
+        (col("id") === col("component")).as("keep"))
   }
 
   /** Shared CTE chain ending in `comp(doc_id, component)` — the cluster
@@ -1426,15 +1374,15 @@ object DedupQueries {
         explode(array_distinct(split(col("text"), " ", -1))).as("w"))
       .filter(col("w") =!= "")
     val freq = tok.groupBy(col("w")).agg(count(lit(1)).as("f"))
-    val arr = tok
-      .join(freq, Seq("w"))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("f"), col("w")))).as("fw"))
-      .withColumn("words", expr("transform(fw, x -> x.w)"))
-      .withColumn("n", size(col("words")).cast("long"))
-      .withColumn("p", col("n") - expr("(19 * n) div 20") + 1)
-      .select(col("doc_id"), col("words"), col("n"), col("p"))
-      .persist()
+    val arr = Reuse.pin(
+      tok
+        .join(freq, Seq("w"))
+        .groupBy(col("doc_id"))
+        .agg(array_sort(collect_list(struct(col("f"), col("w")))).as("fw"))
+        .withColumn("words", expr("transform(fw, x -> x.w)"))
+        .withColumn("n", size(col("words")).cast("long"))
+        .withColumn("p", col("n") - expr("(19 * n) div 20") + 1)
+        .select(col("doc_id"), col("words"), col("n"), col("p")))
     val prefixes = arr.select(
       col("doc_id"),
       explode(expr("slice(words, 1, cast(p as int))")).as("pw"))
@@ -1487,11 +1435,11 @@ object DedupQueries {
     * S-curve says it should (≈0.99).
     */
   def minhashRecall(s: SparkSession, dir: String): DataFrame = {
-    val exact = similarityJoin(s, dir).select(col("doc_a"), col("doc_b")).persist()
-    val mh = minhashPairs(s, dir)
-      .filter(col("doc_a") < SimJoinDocCap && col("doc_b") < SimJoinDocCap)
-      .select(col("doc_a").as("ma"), col("doc_b").as("mb"))
-      .persist()
+    val exact = Reuse.pin(similarityJoin(s, dir).select(col("doc_a"), col("doc_b")))
+    val mh = Reuse.pin(
+      minhashPairs(s, dir)
+        .filter(col("doc_a") < SimJoinDocCap && col("doc_b") < SimJoinDocCap)
+        .select(col("doc_a").as("ma"), col("doc_b").as("mb")))
     val hit = exact.join(
       mh,
       col("doc_a") === col("ma") && col("doc_b") === col("mb"),
@@ -1569,26 +1517,26 @@ object DedupQueries {
     * deterministic and oracle-exact.
     */
   def minhashRecallProd(s: SparkSession, dir: String): DataFrame = {
-    val corpus = paraphraseCorpus(s, dir).persist()
+    val corpus = Reuse.pin(paraphraseCorpus(s, dir))
     val sets = corpus.select(
       col("doc_id"),
       array_distinct(split(col("text"), " ", -1)).as("ws"))
-    val exact = sets
-      .filter(col("doc_id") < ParaOffset)
-      .select(col("doc_id").as("doc_a"), col("ws").as("wa"))
-      .join(
-        sets
-          .filter(col("doc_id") >= ParaOffset)
-          .select((col("doc_id") - ParaOffset).as("doc_a"), col("ws").as("wb")),
-        Seq("doc_a"))
-      .withColumn("c", size(array_intersect(col("wa"), col("wb"))).cast("long"))
-      .withColumn("u", size(array_union(col("wa"), col("wb"))).cast("long"))
-      .filter(col("c") * 10 >= col("u") * 7)
-      .select(col("doc_a"), (col("doc_a") + ParaOffset).as("doc_b"))
-      .persist()
-    val mh = minhashPairsOver(corpus, 0.7)
-      .select(col("doc_a").as("ma"), col("doc_b").as("mb"))
-      .persist()
+    val exact = Reuse.pin(
+      sets
+        .filter(col("doc_id") < ParaOffset)
+        .select(col("doc_id").as("doc_a"), col("ws").as("wa"))
+        .join(
+          sets
+            .filter(col("doc_id") >= ParaOffset)
+            .select((col("doc_id") - ParaOffset).as("doc_a"), col("ws").as("wb")),
+          Seq("doc_a"))
+        .withColumn("c", size(array_intersect(col("wa"), col("wb"))).cast("long"))
+        .withColumn("u", size(array_union(col("wa"), col("wb"))).cast("long"))
+        .filter(col("c") * 10 >= col("u") * 7)
+        .select(col("doc_a"), (col("doc_a") + ParaOffset).as("doc_b")))
+    val mh = Reuse.pin(
+      minhashPairsOver(corpus, 0.7)
+        .select(col("doc_a").as("ma"), col("doc_b").as("mb")))
     val hit = exact.join(
       mh,
       col("doc_a") === col("ma") && col("doc_b") === col("mb"),
@@ -1687,7 +1635,6 @@ object DedupQueries {
     */
   def jaroBestMatch(s: SparkSession, dir: String): DataFrame = {
     graft.plans.JaroWinkler.register(s)
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val p = Tables
       .part(s, dir)
       .select(
@@ -1710,7 +1657,7 @@ object DedupQueries {
       .filter(col("rnk") === 1)
       .select(
         col("key_a").as("p_partkey"), col("brand"), col("name_a"),
-        col("match_key"), col("match_name"), q6c(col("jw")).as("jw"))
+        col("match_key"), col("match_name"), q6(col("jw")).as("jw"))
   }
 
   val jaroBestMatchSql: String =

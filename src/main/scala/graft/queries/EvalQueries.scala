@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.{q6, q6Sql}
 
 /** Generation-evaluation and multiple-testing family: corpus BLEU
   * (Papineni et al. 2002), micro-averaged ROUGE-N (Lin 2004),
@@ -26,11 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object EvalQueries {
 
-  // delegates to the shared, property-locked quantizers — domain rules
-  // (q6: |x| << 9.2e12; q6u: x >= 0, any magnitude) live on [[Quantize]]
-  private def q6(c: Column): Column = Quantize.q6(c)
-  private def q6Sql(e: String): String = Quantize.q6Sql(e)
-
   // --------------------------------------------------------------------
   // shared: candidate/reference document pairs
   // --------------------------------------------------------------------
@@ -45,12 +42,11 @@ object EvalQueries {
     // projections of this tokenized table, and the eval queries
     // reference pairedDocs itself up to twice (rouge cg/rg) — without
     // the cache the final plans re-scanned and re-split documents up to
-    // 5×. One tokenize pass, pinned for the session (the itemKnn
-    // storage contract; released by the harness's per-query clearCache).
-    val d = Tables
-      .documents(s, dir)
-      .select(col("doc_id"), col("source"), split(col("text"), " ", -1).as("w"))
-      .persist()
+    // 5×. One tokenize pass, pinned.
+    val d = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("doc_id"), col("source"), split(col("text"), " ", -1).as("w")))
     val cand = d.select(col("doc_id").as("pair_id"), col("source"), col("w").as("cw"))
     val ref = d.select((col("doc_id") - 20).as("pair_id"), col("w").as("rw"))
     cand.join(ref, "pair_id")
@@ -202,13 +198,12 @@ object EvalQueries {
       .agg(count(lit(1)).as("c_cnt"))
     // persisted (r17): rg feeds both the clipped-match join and the
     // recall denominator — unpersisted, the reference gram pipeline
-    // (pair join + explode + aggregate) ran twice. Gram-count table,
-    // same session contract as the dedup sketch tables.
-    val rg = pairs
-      .select(col("pair_id"), col("source"), explode(expr(gramsExpr("rw", 2))).as("g"))
-      .groupBy(col("pair_id"), col("source"), col("g.n").as("n"), col("g.gram").as("gram"))
-      .agg(count(lit(1)).as("r_cnt"))
-      .persist()
+    // (pair join + explode + aggregate) ran twice.
+    val rg = Reuse.pin(
+      pairs
+        .select(col("pair_id"), col("source"), explode(expr(gramsExpr("rw", 2))).as("g"))
+        .groupBy(col("pair_id"), col("source"), col("g.n").as("n"), col("g.gram").as("gram"))
+        .agg(count(lit(1)).as("r_cnt")))
     val matches = cg
       .join(rg.drop("source"), Seq("pair_id", "n", "gram"), "left")
       .groupBy(col("source"), col("n"))

@@ -1,8 +1,10 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Quantize.q6
 
 /** Graph analytics over the document-similarity graph — the centrality
   * companion to the connected-components clustering
@@ -41,24 +43,23 @@ object GraphQueries {
     * document pairs with ≥ `minCommon` common distinct words.
     */
   private def similarityPairs(s: SparkSession, dir: String, minCommon: Int): DataFrame = {
-    val words = Tables
-      .documents(s, dir)
-      .filter(col("doc_id") < 80)
-      .select(
-        col("doc_id"),
-        col("lang"),
-        explode(array_distinct(split(col("text"), " ", -1))).as("w"))
-      // empty tokens (leading/trailing/double spaces) are not shared
-      // vocabulary — counting "" as a common word could push a pair
-      // over minCommon (the sibling text queries all filter it)
-      .filter(col("w") =!= "")
-      // persisted (r17): the a/b sides of the self-join below each
-      // evaluated the scan+explode independently (two documents scans in
-      // every graph query's final plan — the text column decodes twice).
-      // The word table is bounded by the graph's node contract (doc_id <
-      // 80 at any SF), so caching it is constant-size; released by the
-      // harness's per-query clearCache (session contract).
-      .persist()
+    // persisted (r17): the a/b sides of the self-join below each
+    // evaluated the scan+explode independently (two documents scans in
+    // every graph query's final plan — the text column decodes twice).
+    // The word table is bounded by the graph's node contract (doc_id <
+    // 80 at any SF), so caching it is constant-size.
+    val words = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .filter(col("doc_id") < 80)
+        .select(
+          col("doc_id"),
+          col("lang"),
+          explode(array_distinct(split(col("text"), " ", -1))).as("w"))
+        // empty tokens (leading/trailing/double spaces) are not shared
+        // vocabulary — counting "" as a common word could push a pair
+        // over minCommon (the sibling text queries all filter it)
+        .filter(col("w") =!= ""))
     val a = words.select(col("doc_id").as("doc_a"), col("lang"), col("w"))
     val b = words.select(col("doc_id").as("doc_b"), col("lang").as("lang_b"), col("w"))
     a.join(b, Seq("w"))
@@ -71,8 +72,7 @@ object GraphQueries {
   /** The symmetrized (src, dst) edge list every iterative graph query
     * walks — ONE construction (and one SQL mirror, [[edgesCteSql]]) so
     * a change to edge derivation can never desynchronize a query from
-    * its oracle. Persisted: each caller's rounds rescan it (Verify/
-    * Bench clearCache between queries, the repo's session contract).
+    * its oracle. Pinned: each caller's rounds rescan it.
     */
   private def symmetricEdges(s: SparkSession, dir: String, minCommon: Int): DataFrame = {
     val pairs = similarityPairs(s, dir, minCommon)
@@ -86,12 +86,12 @@ object GraphQueries {
     // itemKnn's symmetrization records (r13). Row ORDER differs from the
     // union form; every consumer groups/joins, so the edge SET is what
     // matters (and the SQL mirror's UNION ALL produces the same set).
-    pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+    Reuse.pin(
+      pairs
+        .select(explode(array(
+          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
   }
 
   /** SQL mirror of [[symmetricEdges]] as a CTE body (follows `pairs`). */
@@ -113,13 +113,8 @@ object GraphQueries {
     // the cached edge table each reference. Persisting them bounds each
     // to one evaluation; state is the same node-sized bound the rank
     // table already carries.
-    // Session contract (ADVICE r16, same as the dedup sketch tables):
-    // these persists are released by the harness's per-query
-    // spark.catalog.clearCache(); a long-lived interactive session that
-    // calls this repeatedly should clearCache()/unpersist between calls
-    // or the node-sized cached tables accumulate.
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg")).persist()
-    val nodes = edges.select(col("src").as("node")).distinct().persist()
+    val deg = Reuse.pin(edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg")))
+    val nodes = Reuse.pin(edges.select(col("src").as("node")).distinct())
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
     var rank = nodes
       .crossJoin(broadcast(nn))
@@ -176,7 +171,7 @@ object GraphQueries {
     * wedge partition.
     */
   def triangleCount(s: SparkSession, dir: String, minCommon: Int = 12): DataFrame = {
-    val pairs = similarityPairs(s, dir, minCommon).select(col("doc_a"), col("doc_b")).persist()
+    val pairs = Reuse.pin(similarityPairs(s, dir, minCommon).select(col("doc_a"), col("doc_b")))
     val tri = pairs
       .as("e1")
       .join(pairs.as("e2"), col("e1.doc_b") === col("e2.doc_a"))
@@ -262,13 +257,16 @@ object GraphQueries {
         .join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      labels = counts
-        .groupBy(col("dst"))
-        .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("label"))
-        .withColumnRenamed("dst", "node")
-        // lineage truncation per round (the pagerank/textRank idiom,
-        // measured r16): node-sized table, one eager job per round
-        .localCheckpoint()
+      // lineage truncation per round (the pagerank/textRank idiom,
+      // measured r16): node-sized table, one eager job per round; the
+      // superseded round is read by nothing after the cut
+      val prev = labels
+      labels = Reuse.cut(
+        counts
+          .groupBy(col("dst"))
+          .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("label"))
+          .withColumnRenamed("dst", "node"))
+      Reuse.free(prev)
     }
     labels
   }
@@ -332,20 +330,17 @@ object GraphQueries {
     // is exactly the Σ|ball(v)| rows the Scaladoc above already names as
     // this exact operator's scale bound (HyperANF registers replace it at
     // 100 TB), so the persist adds no new scale liability.
-    // Session contract (ADVICE r16): released by the harness's per-query
-    // spark.catalog.clearCache(); long-lived sessions calling this
-    // repeatedly should clearCache()/unpersist between calls.
-    val r1 = edges
-      .select(col("src").as("node"), col("dst").as("reach"))
-      .distinct()
-      .persist()
-    val r2 = r1
-      .join(edges.withColumnRenamed("src", "reach"), "reach")
-      .select(col("node"), col("dst").as("reach"))
-      .filter(col("reach") =!= col("node"))
-      .unionByName(r1)
-      .distinct()
-      .persist()
+    val r1 = Reuse.pin(
+      edges
+        .select(col("src").as("node"), col("dst").as("reach"))
+        .distinct())
+    val r2 = Reuse.pin(
+      r1
+        .join(edges.withColumnRenamed("src", "reach"), "reach")
+        .select(col("node"), col("dst").as("reach"))
+        .filter(col("reach") =!= col("node"))
+        .unionByName(r1)
+        .distinct())
     val r3 = r2
       .join(edges.withColumnRenamed("src", "reach"), "reach")
       .select(col("node"), col("dst").as("reach"))
@@ -399,7 +394,7 @@ object GraphQueries {
     * cross-engine bit-parity — production uses plain `sum`.
     */
   def linkPrediction(s: SparkSession, dir: String, minCommon: Int = 12): DataFrame = {
-    val pairs = similarityPairs(s, dir, minCommon).select(col("doc_a"), col("doc_b")).persist()
+    val pairs = Reuse.pin(similarityPairs(s, dir, minCommon).select(col("doc_a"), col("doc_b")))
     val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -518,6 +513,31 @@ object GraphQueries {
        FROM r$iters r JOIN deg d ON r.node = d.src"""
   }
 
+  /** The count-to-fixpoint loop of [[kcore]], [[bfsHops]] and
+    * [[closeness]]: from the pinned `start`, each round pins
+    * `step(current)` and counts it — the round's one job — and stops
+    * when a successor's row count equals its predecessor's (for these
+    * monotone steps the fixpoint) or after `maxRounds` rounds. The
+    * superseded iterate and the successor that matched its count are
+    * freed. Returns the last iterate and whether it converged; each
+    * caller fails closed on its own terms.
+    */
+  private def countToFixpoint(start: DataFrame, maxRounds: Int)(
+      step: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    var cur = start
+    var size = cur.count()
+    var converged = size == 0
+    var round = 0
+    while (!converged && round < maxRounds) {
+      val next = Reuse.pin(step(cur))
+      val n = next.count()
+      if (n == size) { Reuse.free(next); converged = true }
+      else { Reuse.free(cur); cur = next; size = n }
+      round += 1
+    }
+    (cur, converged)
+  }
+
   /** k-core decomposition (fixed k): iteratively peel nodes of degree
     * < k until the subgraph stabilises; emit the surviving nodes with
     * their in-core degree. The density filter behind community mining
@@ -539,31 +559,18 @@ object GraphQueries {
       k: Int = 3,
       minCommon: Int = 12,
       maxRounds: Int = 12): DataFrame = {
-    var edges = symmetricEdges(s, dir, minCommon)
-    var nEdges = edges.count()
-    var rounds = 0
-    var converged = nEdges == 0
-    while (!converged && rounds < maxRounds) {
-      val weak = edges
-        .groupBy(col("src"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k)
-        .select(col("src").as("weak"))
-      val pruned = edges
-        .join(weak, col("src") === col("weak"), "left_anti")
-        .join(weak.withColumnRenamed("weak", "weak2"), col("dst") === col("weak2"), "left_anti")
-        .persist()
-      val n = pruned.count() // the round's ONE action; weak derives from cache
-      if (n == nEdges) {
-        pruned.unpersist()
-        converged = true
-      } else {
-        edges.unpersist()
-        edges = pruned
-        nEdges = n
+    // weak derives from the pinned edge table inside the prune DAG
+    val (edges, converged) =
+      countToFixpoint(symmetricEdges(s, dir, minCommon), maxRounds) { edges =>
+        val weak = edges
+          .groupBy(col("src"))
+          .agg(count(lit(1)).as("deg"))
+          .filter(col("deg") < k)
+          .select(col("src").as("weak"))
+        edges
+          .join(weak, col("src") === col("weak"), "left_anti")
+          .join(weak.withColumnRenamed("weak", "weak2"), col("dst") === col("weak2"), "left_anti")
       }
-      rounds += 1
-    }
     // fail closed like ConnectedComponents: peeling can cascade up to
     // O(n) rounds on chain-shaped graphs — returning the partially
     // peeled graph would silently include sub-k nodes, and the
@@ -621,9 +628,9 @@ object GraphQueries {
     // ride the SAME persisted edge table for the label derivation — the
     // pre-r16 shape built a second identical edge cache inside
     // labelPropagation() and materialized the words self-join twice
-    val labels = labelPropagationFrom(edges, iters)
-      .select(col("node"), col("label").as("community"))
-      .persist()
+    val labels = Reuse.pin(
+      labelPropagationFrom(edges, iters)
+        .select(col("node"), col("label").as("community")))
     val m2 = edges.agg(count(lit(1)).as("m2")) // = 2M (symmetric list)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val dsum = deg
@@ -750,35 +757,21 @@ object GraphQueries {
       minCommon: Int = 12,
       maxHops: Int = 8): DataFrame = {
     val edges = symmetricEdges(s, dir, minCommon)
-    var dist = edges
-      .select(col("src").as("node"))
-      .distinct()
-      .filter(col("node") % 17 === 0)
-      .withColumn("hops", lit(0L))
-      .persist()
-    var size = dist.count()
-    var converged = size == 0
-    var round = 0
-    while (!converged && round < maxHops) {
-      val next = dist
+    val sources = Reuse.pin(
+      edges
+        .select(col("src").as("node"))
+        .distinct()
+        .filter(col("node") % 17 === 0)
+        .withColumn("hops", lit(0L)))
+    val (dist, converged) = countToFixpoint(sources, maxHops) { dist =>
+      dist
         .join(edges, col("node") === col("src"))
         .select(col("dst").as("node"), (col("hops") + 1).as("hops"))
         .unionByName(dist.select(col("node"), col("hops")))
         .groupBy(col("node"))
         .agg(min(col("hops")).as("hops"))
-        .persist()
-      val n = next.count() // the round's one action
-      if (n == size) {
-        next.unpersist()
-        converged = true
-      } else {
-        dist.unpersist()
-        dist = next
-        size = n
-      }
-      round += 1
     }
-    edges.unpersist()
+    Reuse.free(edges)
     require(converged,
       s"BFS frontier still growing after $maxHops hops — raise maxHops " +
         "(and regenerate the unrolled oracle) for this graph")
@@ -848,13 +841,12 @@ object GraphQueries {
     // sampled score is < nSources·n — the BIGINT floor clamps only past
     // n ≈ 9.2e12/nSources ≈ 2.3e12 graph nodes, far beyond any corpus
     // this query's O(nSources·hops) BFS would be pointed at
-    val q6 = (c: org.apache.spark.sql.Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val edges = symmetricEdges(s, dir, minCommon)
-    val nodes = edges.select(col("src").as("node")).distinct().persist()
+    val nodes = Reuse.pin(edges.select(col("src").as("node")).distinct())
     val sources = nodes.orderBy(col("node")).limit(nSources).select(col("node").as("s"))
-    var fw = sources
-      .select(col("s"), col("s").as("node"), lit(0L).as("d"), lit(1L).as("sigma"))
-      .localCheckpoint()
+    var fw = Reuse.cut(
+      sources
+        .select(col("s"), col("s").as("node"), lit(0L).as("d"), lit(1L).as("sigma")))
     var size = fw.count()
     var converged = false
     var round = 0
@@ -877,16 +869,17 @@ object GraphQueries {
       // output multiple times per round, so a lineage-only cache makes
       // Catalyst re-analysis grow 3^rounds (the ConnectedComponents
       // lesson — heap-death at round ~8)
-      val next = fw.unionByName(newv).localCheckpoint()
+      val next = Reuse.cut(fw.unionByName(newv))
       val n = next.count()
-      if (n == size) converged = true
-      else { fw = next; size = n }
+      if (n == size) { Reuse.free(next); converged = true }
+      else { Reuse.free(fw); fw = next; size = n }
       round += 1
     }
     require(converged,
       s"Brandes frontier still growing after $maxHops hops — raise maxHops " +
         "(and regenerate the unrolled oracle) for this graph")
-    var bwd = fw.withColumn("dl", lit(0.0)).localCheckpoint()
+    var bwd = Reuse.cut(fw.withColumn("dl", lit(0.0)))
+    Reuse.free(fw)
     // Start the accumulation at the CONVERGED depth, not the maxHops
     // budget: after the forward loop, max d = round − 1 (the final round
     // added nothing), so every level above it has an empty successor set
@@ -918,17 +911,18 @@ object GraphQueries {
           (col("sigma_v").cast("double") / col("sigma_w").cast("double")) *
             (lit(1.0) + col("dl_w"))).as("term"))
         .select(col("s_v").as("s3"), col("v").as("n3"), col("term"))
-      val next = bwd
-        .join(term, col("s") === col("s3") && col("node") === col("n3"), "left")
-        .select(
-          col("s"),
-          col("node"),
-          col("d"),
-          col("sigma"),
-          when(col("d") === lev - 1, coalesce(col("term"), lit(0.0)))
-            .otherwise(col("dl"))
-            .as("dl"))
-        .localCheckpoint()
+      val next = Reuse.cut(
+        bwd
+          .join(term, col("s") === col("s3") && col("node") === col("n3"), "left")
+          .select(
+            col("s"),
+            col("node"),
+            col("d"),
+            col("sigma"),
+            when(col("d") === lev - 1, coalesce(col("term"), lit(0.0)))
+              .otherwise(col("dl"))
+              .as("dl")))
+      Reuse.free(bwd)
       bwd = next
       lev -= 1
     }
@@ -939,9 +933,10 @@ object GraphQueries {
     val out = nodes
       .join(bc, Seq("node"), "left")
       .select(col("node").as("doc_id"), q6(coalesce(col("bc"), lit(0.0))).as("betweenness"))
-    val rows = out.localCheckpoint()
-    nodes.unpersist()
-    edges.unpersist()
+    val rows = Reuse.cut(out)
+    Reuse.free(bwd)
+    Reuse.free(nodes)
+    Reuse.free(edges)
     rows
   }
 
@@ -1026,50 +1021,42 @@ object GraphQueries {
       minCommon: Int = 12,
       maxHops: Int = 8): DataFrame = {
     val edges = symmetricEdges(s, dir, minCommon)
-    var dist = edges
-      .select(col("src").as("node"))
-      .distinct()
-      .filter(col("node") % 5 === 0)
-      .select(col("node").as("s"), col("node"), lit(0L).as("hops"))
-      .persist()
-    var size = dist.count()
-    var converged = size == 0
-    var round = 0
-    while (!converged && round < maxHops) {
-      val next = dist
+    val sources = Reuse.pin(
+      edges
+        .select(col("src").as("node"))
+        .distinct()
+        .filter(col("node") % 5 === 0)
+        .select(col("node").as("s"), col("node"), lit(0L).as("hops")))
+    val (dist, converged) = countToFixpoint(sources, maxHops) { dist =>
+      dist
         .join(edges, col("node") === col("src"))
         .select(col("s"), col("dst").as("node"), (col("hops") + 1).as("hops"))
         .unionByName(dist.select(col("s"), col("node"), col("hops")))
         .groupBy(col("s"), col("node"))
         .agg(min(col("hops")).as("hops"))
-        .persist()
-      val n = next.count()
-      if (n == size) { next.unpersist(); converged = true }
-      else { dist.unpersist(); dist = next; size = n }
-      round += 1
     }
-    edges.unpersist()
+    Reuse.free(edges)
     require(converged,
       s"closeness BFS still growing after $maxHops hops — raise maxHops " +
         "(and regenerate the unrolled oracle) for this graph")
     // localCheckpoint the aggregate then release `dist` — returning a
     // plan over the still-persisted iterate would leak one executor
     // cache entry per invocation (the betweenness pattern)
-    val out = dist
-      .filter(col("hops") > 0)
-      .groupBy(col("node"))
-      .agg(
-        count(lit(1)).as("n_sources"),
-        aggregate(
-          array_sort(collect_list(lit(1.0) / col("hops").cast("double"))),
-          lit(0.0),
-          (acc, x) => acc + x).as("h"))
-      .select(
-        col("node").as("doc_id"),
-        col("n_sources"),
-        floor(col("h") * lit(1e6) + lit(0.5)) / lit(1e6) as "harmonic")
-      .localCheckpoint()
-    dist.unpersist()
+    val out = Reuse.cut(
+      dist
+        .filter(col("hops") > 0)
+        .groupBy(col("node"))
+        .agg(
+          count(lit(1)).as("n_sources"),
+          aggregate(
+            array_sort(collect_list(lit(1.0) / col("hops").cast("double"))),
+            lit(0.0),
+            (acc, x) => acc + x).as("h"))
+        .select(
+          col("node").as("doc_id"),
+          col("n_sources"),
+          q6(col("h")) as "harmonic"))
+    Reuse.free(dist)
     out
   }
 
@@ -1136,15 +1123,17 @@ object GraphQueries {
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).as("sup"))
     }
-    var e = similarityPairs(s, dir, minCommon)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+    var e = Reuse.cut(
+      similarityPairs(s, dir, minCommon)
+        .select(col("doc_a"), col("doc_b")))
     for (_ <- 1 to rounds) {
-      e = e
-        .join(support(e), Seq("doc_a", "doc_b"))
-        .filter(col("sup") >= k - 2)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
+      val prev = e
+      e = Reuse.cut(
+        e
+          .join(support(e), Seq("doc_a", "doc_b"))
+          .filter(col("sup") >= k - 2)
+          .select(col("doc_a"), col("doc_b")))
+      Reuse.free(prev)
     }
     e.join(support(e), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"), coalesce(col("sup"), lit(0L)).as("support"))

@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.q6
 
 /** Closed-form and collaborative learners beyond the iterative
   * gradient trainers ([[MiningQueries.logregTrain]] & co.): a
@@ -61,9 +63,8 @@ object LearnQueries {
     // and feeds THREE consumers (lstat, the vocab scalar below, and the
     // scored join) — unpersisted, each consumer re-ran the train
     // tokenization (the final plan carried 6 documents scans, 3 of them
-    // text-decoding). Session contract: released by the harness's
-    // per-query clearCache.
-    val cnts = trainTok.groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c")).persist()
+    // text-decoding).
+    val cnts = Reuse.pin(trainTok.groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c")))
     // bounded per-language stats (languages are a semantic constant):
     // token totals, doc priors, and the global vocab/doc scalars
     val lstat = cnts.groupBy(col("lang")).agg(sum(col("c")).as("tl"))
@@ -161,11 +162,11 @@ object LearnQueries {
     * both factor tables, tagged.
     */
   def alsRank1(s: SparkSession, dir: String): DataFrame = {
-    val ratings = Tables
-      .events(s, dir)
-      .groupBy(col("user_id"), col("event_type").as("item"))
-      .agg(count(lit(1)).as("r"))
-      .persist()
+    val ratings = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .groupBy(col("user_id"), col("event_type").as("item"))
+        .agg(count(lit(1)).as("r")))
     var v = ratings.select(col("item")).distinct().withColumn("vq", lit(1000L))
     var u: DataFrame = null
     for (_ <- 1 to AlsRounds) {
@@ -309,7 +310,6 @@ object LearnQueries {
     * is `dayofweek(ts) + 1`.
     */
   def infoGain(s: SparkSession, dir: String): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     def h2(c0: String, c1: String, n: String): String = {
       def part(c: String) =
         s"""CASE WHEN $c > 0 THEN -(CAST($c AS DOUBLE) / CAST($n AS DOUBLE))
@@ -345,9 +345,9 @@ object LearnQueries {
       .withColumn("h_label", expr(h2("n - t1", "t1", "n")))
       .select(
         col("feature"), col("n_values"),
-        q6c(col("h_label")).as("h_label"),
-        q6c(col("h_cond")).as("h_cond"),
-        q6c(col("h_label") - col("h_cond")).as("info_gain"))
+        q6(col("h_label")).as("h_label"),
+        q6(col("h_cond")).as("h_cond"),
+        q6(col("h_label") - col("h_cond")).as("info_gain"))
   }
 
   val infoGainSql: String = {

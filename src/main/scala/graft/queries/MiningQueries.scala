@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -51,13 +52,13 @@ object MiningQueries {
     * PlanAuditSpec locks the single-shuffle + broadcast shape.
     */
   def assocRules(s: SparkSession, dir: String, minSupport: Double = 0.02): DataFrame = {
-    val baskets = Tables
-      .lineitem(s, dir)
-      .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("p_brand").as("item"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("item"))).as("items"))
-      .persist() // pinned for the session; Verify/Bench clearCache between queries
+    val baskets = Reuse.pin(
+      Tables
+        .lineitem(s, dir)
+        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey"), col("p_brand").as("item"))
+        .groupBy(col("l_orderkey"))
+        .agg(sort_array(collect_set(col("item"))).as("items")))
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     val itemSup = baskets
       .select(explode(col("items")).as("item"))
@@ -590,12 +591,12 @@ object MiningQueries {
     * final exchange (the q_top_per_group machinery).
     */
   def itemKnn(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val baskets = Tables
-      .lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey").as("item"))
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("item"))).as("items"))
-      .persist() // pinned for the session (minhashPairs storage contract)
+    val baskets = Reuse.pin(
+      Tables
+        .lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_partkey").as("item"))
+        .groupBy(col("l_orderkey"))
+        .agg(sort_array(collect_set(col("item"))).as("items")))
     val sup = baskets
       .select(explode(col("items")).as("item"))
       .groupBy(col("item"))
@@ -961,19 +962,19 @@ object MiningQueries {
     * projections of exact integers.
     */
   def cuped(s: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables
-      .events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(
-        col("user_id"),
-        (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp")).as("pre"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("user_id"))
-      .agg(
-        sum(when(col("pre"), col("cents")).otherwise(0L)).as("x"),
-        sum(when(col("pre"), 0L).otherwise(col("cents"))).as("y"))
-      .withColumn("arm", expr(md5Bucket("cast(user_id as string)", 2)).cast("int"))
-      .persist()
+    val perUser = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .filter(col("event_type") === "purchase")
+        .select(
+          col("user_id"),
+          (col("ts") < lit("2024-01-16 00:00:00").cast("timestamp")).as("pre"),
+          round(col("value") * 100).cast("long").as("cents"))
+        .groupBy(col("user_id"))
+        .agg(
+          sum(when(col("pre"), col("cents")).otherwise(0L)).as("x"),
+          sum(when(col("pre"), 0L).otherwise(col("cents"))).as("y"))
+        .withColumn("arm", expr(md5Bucket("cast(user_id as string)", 2)).cast("int")))
     val pooled = perUser.agg(
       count(lit(1)).as("n"),
       sum(col("x")).as("sx"),
@@ -1268,9 +1269,9 @@ object MiningQueries {
     * model-eval table behind [[rocAuc]].
     */
   def rocCurve(s: SparkSession, dir: String): DataFrame = {
-    // persisted: the totals scalar and the rate projection share the one
-    // curve computation (session clearCache contract, as elsewhere)
-    val base = rocBase(s, dir).persist()
+    // pinned: the totals scalar and the rate projection share the one
+    // curve computation
+    val base = Reuse.pin(rocBase(s, dir))
     val tot = base.agg(sum(col("np")).as("p"), sum(col("nn")).as("n"))
     base
       .crossJoin(broadcast(tot))
@@ -1310,7 +1311,7 @@ object MiningQueries {
     * two rates are single divisions of exact longs.
     */
   def prCurve(s: SparkSession, dir: String): DataFrame = {
-    val base = rocBase(s, dir).persist()
+    val base = Reuse.pin(rocBase(s, dir))
     val tot = base.agg(sum(col("np")).as("p"))
     base
       .crossJoin(broadcast(tot))
@@ -1408,7 +1409,7 @@ object MiningQueries {
     * max — a partial aggregate, no ordering pass.
     */
   def ksStatistic(s: SparkSession, dir: String): DataFrame = {
-    val base = rocBase(s, dir).persist()
+    val base = Reuse.pin(rocBase(s, dir))
     val tot = base.agg(sum(col("np")).as("p"), sum(col("nn")).as("n"))
     base
       .crossJoin(broadcast(tot))
@@ -1466,15 +1467,15 @@ object MiningQueries {
           round(col("value") * 100).cast("long")).otherwise(0L)).as("cents"))
       .withColumn("arm", expr(md5Bucket("cast(user_id as string)", 2)).cast("int"))
       .withColumn("b", expr("n_ev div 20"))
-    val strata = perUser
-      .groupBy(col("b"))
-      .agg(
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("nt"),
-        sum(when(col("arm") === 0, 1L).otherwise(0L)).as("nc"),
-        sum(when(col("arm") === 1, col("cents")).otherwise(0L)).as("st"),
-        sum(when(col("arm") === 0, col("cents")).otherwise(0L)).as("sc"))
-      .filter(col("nt") > 0 && col("nc") > 0)
-      .persist()
+    val strata = Reuse.pin(
+      perUser
+        .groupBy(col("b"))
+        .agg(
+          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("nt"),
+          sum(when(col("arm") === 0, 1L).otherwise(0L)).as("nc"),
+          sum(when(col("arm") === 1, col("cents")).otherwise(0L)).as("st"),
+          sum(when(col("arm") === 0, col("cents")).otherwise(0L)).as("sc"))
+        .filter(col("nt") > 0 && col("nc") > 0))
     val naiveAndN = perUser.agg(
       count(lit(1)).as("n_users"),
       (sum(when(col("arm") === 1, col("cents")).otherwise(0L)).cast("double") /
@@ -1583,14 +1584,14 @@ object MiningQueries {
     */
   private def logregFeatures(s: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ", -1)
-    Tables
-      .documents(s, dir)
-      .select(
-        col("source"),
-        (size(toks).cast("double") / lit(100.0)).as("x1"),
-        (size(array_distinct(toks)).cast("double") / size(toks).cast("double")).as("x2"),
-        when(col("n_chars") >= 300, lit(1.0)).otherwise(lit(0.0)).as("y"))
-      .persist()
+    Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("source"),
+          (size(toks).cast("double") / lit(100.0)).as("x1"),
+          (size(array_distinct(toks)).cast("double") / size(toks).cast("double")).as("x2"),
+          when(col("n_chars") >= 300, lit(1.0)).otherwise(lit(0.0)).as("y")))
   }
 
   /** The GD loop shared by [[logregTrain]] and [[qualityFilter]]. */
@@ -1772,15 +1773,15 @@ object MiningQueries {
 
   def gbmStumps(s: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ", -1)
-    val feat = Tables
-      .documents(s, dir)
-      .select(
-        size(toks).cast("long").as("xq1"),
-        floor(
-          size(array_distinct(toks)).cast("double") / size(toks).cast("double") *
-            lit(100)).as("xq2"),
-        when(col("n_chars") >= 300, 1000000L).otherwise(0L).as("yq"))
-      .persist()
+    val feat = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          size(toks).cast("long").as("xq1"),
+          floor(
+            size(array_distinct(toks)).cast("double") / size(toks).cast("double") *
+              lit(100)).as("xq2"),
+          when(col("n_chars") >= 300, 1000000L).otherwise(0L).as("yq")))
     val base = feat.agg(count(lit(1)).as("n"), sum(col("yq")).as("syq")).collect()(0)
     val n = base.getLong(0)
     val f0 = math.floor(base.getLong(1).toDouble / n + 0.5).toLong
@@ -1931,13 +1932,13 @@ object MiningQueries {
     * over user histories.
     */
   def negativeSampling(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val pos = Tables
-      .orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-      .select(col("o_custkey").as("custkey"), col("p_brand").as("item"))
-      .distinct()
-      .persist() // pinned for the session (minhashPairs storage contract)
+    val pos = Reuse.pin(
+      Tables
+        .orders(s, dir)
+        .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
+        .select(col("o_custkey").as("custkey"), col("p_brand").as("item"))
+        .distinct())
     val catalog = broadcast(
       Tables
         .part(s, dir)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Shared float→fixed-point quantizers for oracle parity. Every derived
   * float a query emits is quantized so the last-ulp differences between
   * Spark's and DuckDB's expression evaluation cannot flip a comparison,
-  * rank, or dumped value. ONE definition site (the per-file `private def
-  * q6` helpers delegate here) so the domain rules below are enforced in
-  * one place and property-locked by QuantizerSpec.
+  * rank, or dumped value. ONE definition site (queries import it) so the
+  * domain rules below are enforced in one place and property-locked by
+  * QuantizerSpec.
   *
   * DOMAIN RULES (the r12 sf1 sweep's floor-saturation class):
   *

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -242,7 +243,7 @@ object RelationalQueries {
     * bounded state.)
     */
   def anomalyMad(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(col("event_type"), col("value")).persist()
+    val ev = Reuse.pin(Tables.events(s, dir).select(col("event_type"), col("value")))
     val med = ev
       .groupBy(col("event_type"))
       .agg(round(expr("percentile(value, 0.5)"), 6).as("med"))
@@ -365,12 +366,11 @@ object RelationalQueries {
   def retentionCohorts(s: SparkSession, dir: String): DataFrame = {
     // persisted: the cohort reduction AND the join probe both consume
     // this 2-column projection — caching it reads events once
-    // (plan-audit-locked). Same STORAGE CONTRACT as the sketch tables:
-    // callers clearCache() when done.
-    val ev = Tables
-      .events(s, dir)
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .persist()
+    // (plan-audit-locked).
+    val ev = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(col("user_id"), date_trunc("day", col("ts")).as("day")))
     val cohorts = ev.groupBy(col("user_id")).agg(min(col("day")).as("cohort_day"))
     val sizes = cohorts
       .groupBy(col("cohort_day"))
@@ -1194,11 +1194,11 @@ object RelationalQueries {
     * count. No self-join of the fact table, no sliding-window state.
     */
   def activeUsers(s: SparkSession, dir: String): DataFrame = {
-    val ud = Tables
-      .events(s, dir)
-      .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
-      .distinct()
-      .persist()
+    val ud = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(date_trunc("day", col("ts")).as("day"), col("user_id"))
+        .distinct())
     val days = ud.select(col("day").as("d")).distinct()
     val wau = ud
       .join(broadcast(days), datediff(col("d"), col("day")).between(0, 6))
@@ -1245,11 +1245,11 @@ object RelationalQueries {
     * |types|-row broadcast dimension and a broadcast scalar.
     */
   def eventPmi(s: SparkSession, dir: String): DataFrame = {
-    val baskets = Tables
-      .events(s, dir)
-      .select(col("user_id"), date_trunc("day", col("ts")).as("day"), col("event_type"))
-      .distinct()
-      .persist()
+    val baskets = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(col("user_id"), date_trunc("day", col("ts")).as("day"), col("event_type"))
+        .distinct())
     val nb = baskets
       .select(col("user_id"), col("day"))
       .distinct()
@@ -1526,14 +1526,14 @@ object RelationalQueries {
     * scoring keeps the final pass embarrassingly parallel at 100 TB.
     */
   def rfmSegments(s: SparkSession, dir: String): DataFrame = {
-    val cust = Tables
-      .orders(s, dir)
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg(
-        count(lit(1)).as("frequency"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("monetary_cents"),
-        date_trunc("day", max(col("o_orderdate"))).as("last_day"))
-      .persist()
+    val cust = Reuse.pin(
+      Tables
+        .orders(s, dir)
+        .groupBy(col("o_custkey").as("custkey"))
+        .agg(
+          count(lit(1)).as("frequency"),
+          sum(round(col("o_totalprice") * 100).cast("long")).as("monetary_cents"),
+          date_trunc("day", max(col("o_orderdate"))).as("last_day")))
     val horizon = cust.agg(max(col("last_day")).as("horizon_day"))
     val rec = cust
       .crossJoin(broadcast(horizon))
@@ -2225,10 +2225,10 @@ object RelationalQueries {
     val seg = Tables
       .customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
-    val base = rev
-      .join(seg, col("custkey") === col("c_custkey"))
-      .select(col("segment"), col("custkey"), col("cents"))
-      .persist()
+    val base = Reuse.pin(
+      rev
+        .join(seg, col("custkey") === col("c_custkey"))
+        .select(col("segment"), col("custkey"), col("cents")))
     val bounds = base
       .groupBy(col("segment"))
       .agg(min(col("cents")).as("lo"), max(col("cents")).as("hi"))
@@ -2307,15 +2307,15 @@ object RelationalQueries {
     * exact integer cents.
     */
   def cohortLtv(s: SparkSession, dir: String): DataFrame = {
-    val perYear = Tables
-      .orders(s, dir)
-      .select(
-        col("o_custkey").as("custkey"),
-        year(col("o_orderdate")).cast("long").as("order_year"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy(col("custkey"), col("order_year"))
-      .agg(sum(col("cents")).as("cents"))
-      .persist()
+    val perYear = Reuse.pin(
+      Tables
+        .orders(s, dir)
+        .select(
+          col("o_custkey").as("custkey"),
+          year(col("o_orderdate")).cast("long").as("order_year"),
+          round(col("o_totalprice") * 100).cast("long").as("cents"))
+        .groupBy(col("custkey"), col("order_year"))
+        .agg(sum(col("cents")).as("cents")))
     val cohorts = perYear
       .groupBy(col("custkey"))
       .agg(min(col("order_year")).as("cohort_year"))
@@ -2584,12 +2584,12 @@ object RelationalQueries {
     * never by row sampling.
     */
   def winsorizedStats(s: SparkSession, dir: String): DataFrame = {
-    val dist = Tables
-      .events(s, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
+    val dist = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
+        .groupBy(col("event_type"), col("cents"))
+        .agg(count(lit(1)).as("c")))
     val tot = dist.groupBy(col("event_type")).agg(sum(col("c")).as("n"))
     val wCum = Window
       .partitionBy(col("event_type"))
@@ -2700,12 +2700,12 @@ object RelationalQueries {
     * cardinality, and a per-type cumulative window over it is keyed).
     */
   def iqrOutliers(s: SparkSession, dir: String): DataFrame = {
-    val dist = Tables
-      .events(s, dir)
-      .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
+    val dist = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(col("event_type"), round(col("value") * 100).cast("long").as("cents"))
+        .groupBy(col("event_type"), col("cents"))
+        .agg(count(lit(1)).as("c")))
     val tot = dist.groupBy(col("event_type")).agg(sum(col("c")).as("n"))
     val wCum = Window
       .partitionBy(col("event_type"))
@@ -3235,13 +3235,13 @@ object RelationalQueries {
     */
   def weightedQuantiles(s: SparkSession, dir: String, nBuckets: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val vw = Tables
-      .lineitem(s, dir)
-      .select(
-        col("l_returnflag"),
-        col("l_extendedprice").as("v"),
-        col("l_quantity").cast("long").as("wt"))
-      .persist()
+    val vw = Reuse.pin(
+      Tables
+        .lineitem(s, dir)
+        .select(
+          col("l_returnflag"),
+          col("l_extendedprice").as("v"),
+          col("l_quantity").cast("long").as("wt")))
     val mm = vw.agg(min(col("v")).as("vmin"), max(col("v")).as("vmax"))
     val bucketed = vw
       .crossJoin(broadcast(mm))
@@ -3454,7 +3454,7 @@ object RelationalQueries {
       x.withColumnRenamed("event_id", "aid")
         .join(y.withColumnRenamed("event_id", "bid"), Seq("user_id", "day"))
         .select(col("user_id"), col("aid"), col("bid"))
-    val vOld = pairs(aOld, bOld).persist() // the stored materialized view
+    val vOld = Reuse.pin(pairs(aOld, bOld)) // the stored materialized view
     val incr = vOld
       .unionByName(pairs(broadcast(aDelta), bOld))
       .unionByName(pairs(aOld, broadcast(bDelta)))
@@ -3852,22 +3852,22 @@ object RelationalQueries {
     */
   def latenessProfile(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev = Tables
-      .events(s, dir)
-      // NTZ files: cast to TIMESTAMP first (identity under the UTC
-      // session contract) — unix_micros rejects TIMESTAMP_NTZ directly.
-      // event_id is assigned in timestamp order in the test data, so a
-      // deterministic ±100-position md5 jitter models the bounded
-      // out-of-orderness a real transport introduces (without it every
-      // event is 'in_order' and the profile is vacuous)
-      .select(
-        col("event_id"),
-        expr("unix_micros(cast(ts as timestamp))").as("us"),
-        (col("event_id") +
-          expr(OracleHash.bucketExpr("cast(event_id as string)", 200)) - lit(100L))
-          .as("jk"))
-      .withColumn("blk", expr("jk div 1000"))
-      .persist()
+    val ev = Reuse.pin(
+      Tables
+        .events(s, dir)
+        // NTZ files: cast to TIMESTAMP first (identity under the UTC
+        // session contract) — unix_micros rejects TIMESTAMP_NTZ directly.
+        // event_id is assigned in timestamp order in the test data, so a
+        // deterministic ±100-position md5 jitter models the bounded
+        // out-of-orderness a real transport introduces (without it every
+        // event is 'in_order' and the profile is vacuous)
+        .select(
+          col("event_id"),
+          expr("unix_micros(cast(ts as timestamp))").as("us"),
+          (col("event_id") +
+            expr(OracleHash.bucketExpr("cast(event_id as string)", 200)) - lit(100L))
+            .as("jk"))
+        .withColumn("blk", expr("jk div 1000")))
     val wCarry = Window
       .orderBy(col("blk"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -4033,13 +4033,14 @@ object RelationalQueries {
       StructField("cents", LongType),
       StructField("_corrupt", StringType)))
     try {
-      val back = s.read
-        .schema(schema)
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(goodDir)
-        .cache() // corrupt-record capture requires materializing the raw parse
+      // corrupt-record capture requires materializing the raw parse
+      val back = Reuse.pin(
+        s.read
+          .schema(schema)
+          .option("header", "false")
+          .option("mode", "PERMISSIVE")
+          .option("columnNameOfCorruptRecord", "_corrupt")
+          .csv(goodDir))
       back.count()
       // one tiny row — materialize eagerly so the staging dir can be
       // deleted before returning (the /tmp-hygiene discipline)
@@ -4052,7 +4053,7 @@ object RelationalQueries {
             .as("good_checksum"))
         .collect()
         .head
-      back.unpersist()
+      Reuse.free(back)
       Seq((r.getLong(0), r.getLong(1), r.getLong(2)))
         .toDF("n_good", "n_quarantined", "good_checksum")
     } finally deleteScratch(base)

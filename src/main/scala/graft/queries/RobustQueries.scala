@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.{q6, q6Sql}
 
 /** Robust statistics, ranking evaluation and process-control operators —
   * the monitoring/QA layer a production data pipeline runs beside the
@@ -36,12 +38,6 @@ import org.apache.spark.sql.functions._
   * shape as q_zipf_slope's bucketed rank.
   */
 object RobustQueries {
-
-  /** Tie-free 6-decimal quantization — see the exactness contract. */
-  // delegates to the shared, property-locked quantizers — domain rules
-  // (q6: |x| << 9.2e12; q6u: x >= 0, any magnitude) live on [[Quantize]]
-  private def q6(c: Column): Column = Quantize.q6(c)
-  private def q6Sql(e: String): String = Quantize.q6Sql(e)
 
   // --------------------------------------------------------------------
   // shared per-nation monthly revenue series (exact 1e-4-dollar units)
@@ -93,10 +89,7 @@ object RobustQueries {
     // one task per shuffle partition — measured r17, 1.2–1.6×
     // regressions from exactly that. One partition is the right layout
     // for a table whose row bound is |nation|×|months| at any SF.
-    // Session contract (same as pagerank deg/nodes): released by the
-    // harness's per-query spark.catalog.clearCache(); long-lived
-    // sessions calling these repeatedly should clearCache between.
-    if (persist) base.coalesce(1).persist() else base
+    if (persist) Reuse.pin(base.coalesce(1)) else base
   }
 
   private[queries] val seriesCteSql: String =
@@ -298,15 +291,14 @@ object RobustQueries {
     // persisted (r17): ev is referenced by both the popularity and the
     // relevance legs — unpersisted, the events scan AND the per-row JSON
     // item extraction ran twice (5 events scans in the final plan with
-    // rel's four consumers). 3-column projection, itemKnn storage
-    // contract (released by the harness's per-query clearCache).
-    val ev = Tables
-      .events(s, dir)
-      .select(
-        col("user_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"),
-        col("event_type"))
-      .persist()
+    // rel's four consumers). 3-column projection.
+    val ev = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(
+          col("user_id"),
+          get_json_object(col("props"), "$.k").cast("long").as("item"),
+          col("event_type")))
     val pop = ev
       .filter(col("event_type") === "view")
       .groupBy(col("item"))
@@ -317,13 +309,12 @@ object RobustQueries {
     val gain = (relCol: Column) =>
       when(relCol === 1, 1.0).when(relCol === 2, 3.0).when(relCol === 3, 7.0).otherwise(0.0)
     // persisted (r17): rel feeds FOUR consumers (users, the dcg join,
-    // idcg, rr) — bounded by distinct (user, purchased item) pairs;
-    // same session contract as ev above
-    val rel = ev
-      .filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), col("item"))
-      .agg(least(count(lit(1)), lit(3L)).as("rel"))
-      .persist()
+    // idcg, rr) — bounded by distinct (user, purchased item) pairs
+    val rel = Reuse.pin(
+      ev
+        .filter(col("event_type") === "purchase")
+        .groupBy(col("user_id"), col("item"))
+        .agg(least(count(lit(1)), lit(3L)).as("rel")))
     val users = rel.select(col("user_id")).distinct()
     val dcg = users
       .crossJoin(broadcast(top10.select(col("item"), col("pos"))))
@@ -420,17 +411,16 @@ object RobustQueries {
     // persisted (r17): the split-conformal recipe is inherently
     // sequential (fit -> calibrate -> rank -> test), and each stage
     // re-referenced this projection — FOUR full lineitem scans in the
-    // final adaptive plan. Pinning the 3-column integer projection for
-    // the session (the itemKnn/negativeSampling storage contract;
-    // released by the harness's per-query clearCache) bounds it to one
-    // scan; the cached footprint is the projection, not the table.
-    val li = Tables
-      .lineitem(s, dir)
-      .select(
-        round(col("l_quantity")).cast("long").as("x"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"),
-        ((col("l_orderkey") * 31 + col("l_linenumber")) % 4).as("h"))
-      .persist()
+    // final adaptive plan. Pinning the 3-column integer projection
+    // bounds it to one scan; the cached footprint is the projection,
+    // not the table.
+    val li = Reuse.pin(
+      Tables
+        .lineitem(s, dir)
+        .select(
+          round(col("l_quantity")).cast("long").as("x"),
+          round(col("l_extendedprice") * 100).cast("long").as("y"),
+          ((col("l_orderkey") * 31 + col("l_linenumber")) % 4).as("h")))
     val train = li.filter(col("h") <= 1)
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val fit = train

@@ -1,9 +1,11 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.{q6, q6Sql, q6u, q6uSql}
 
 /** Second tranche of the robust-statistics / evaluation family:
   * exact-integer isotonic regression (the calibration fit under the
@@ -18,14 +20,6 @@ import org.apache.spark.sql.functions._
   * `⌊ln·10⁹⌋` BIGINT sums for log-likelihoods.
   */
 object RobustQueries2 {
-
-  // delegates to the shared, property-locked quantizers — domain rules
-  // (q6: |x| << 9.2e12; q6u: x >= 0, any magnitude) live on [[Quantize]]
-  private def q6(c: Column): Column = Quantize.q6(c)
-  private def q6Sql(e: String): String = Quantize.q6Sql(e)
-
-  private def q6u(c: Column): Column = Quantize.q6u(c)
-  private def q6uSql(e: String): String = Quantize.q6uSql(e)
 
   // --------------------------------------------------------------------
   // q_isotonic_fit — weighted isotonic regression via exact minimax
@@ -251,17 +245,18 @@ object RobustQueries2 {
     * item side is catalogue-bounded; the user side shards on user_id.
     */
   def hits(s: SparkSession, dir: String): DataFrame = {
-    val edges = Tables
-      .events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(
-        col("user_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .distinct()
-      .persist()
+    val edges = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .filter(col("event_type") === "purchase")
+        .select(
+          col("user_id"),
+          get_json_object(col("props"), "$.k").cast("long").as("item"))
+        .distinct())
     val users = edges.select(col("user_id")).distinct()
     var hub = users.select(col("user_id"), lit(1.0).as("h"))
     var auth: DataFrame = null
+    var raws = Seq.empty[DataFrame]
     val foldSum = (c: Column) =>
       aggregate(array_sort(collect_list(c)), lit(0.0), (acc, x) => acc + x)
     for (_ <- 1 to 4) {
@@ -270,30 +265,33 @@ object RobustQueries2 {
       // truncation point the round-4 plan re-executes every earlier
       // round multiplicatively (~4^rounds) — the ConnectedComponents
       // localCheckpoint rule, measured here as 29 s -> ~2 s at sf0.1
-      val aRaw = edges
-        .join(hub, "user_id")
-        .groupBy(col("item"))
-        .agg(foldSum(col("h")).as("a_raw"))
-        .localCheckpoint()
+      val aRaw = Reuse.cut(
+        edges
+          .join(hub, "user_id")
+          .groupBy(col("item"))
+          .agg(foldSum(col("h")).as("a_raw")))
       val aMax = aRaw.agg(max(col("a_raw")).as("am"))
       auth = aRaw
         .crossJoin(broadcast(aMax))
         .select(col("item"), (col("a_raw") / col("am")).as("a"))
-      val hRaw = edges
-        .join(auth, "item")
-        .groupBy(col("user_id"))
-        .agg(foldSum(col("a")).as("h_raw"))
-        .localCheckpoint()
+      val hRaw = Reuse.cut(
+        edges
+          .join(auth, "item")
+          .groupBy(col("user_id"))
+          .agg(foldSum(col("a")).as("h_raw")))
       val hMax = hRaw.agg(max(col("h_raw")).as("hm"))
       hub = hRaw
         .crossJoin(broadcast(hMax))
         .select(col("user_id"), (col("h_raw") / col("hm")).as("h"))
+      // the previous round's two tables fed only this round's cuts
+      raws.foreach(Reuse.free)
+      raws = Seq(aRaw, hRaw)
     }
     val out = auth
       .select(lit("item").as("kind"), col("item").as("id"), q6(col("a")).as("score"))
       .unionAll(
         hub.select(lit("user").as("kind"), col("user_id").as("id"), q6(col("h")).as("score")))
-    edges.unpersist()
+    Reuse.free(edges)
     out
   }
 

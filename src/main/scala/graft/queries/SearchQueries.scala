@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -330,22 +331,22 @@ object SearchQueries {
     *    only collect_list holds ≤63 structs.
     */
   def zipfSlope(s: SparkSession, dir: String): DataFrame = {
-    val tf = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; explode otherwise 1-core
-      .select(explode(toks).as("term"))
-      .groupBy(col("term"))
-      .agg(count(lit(1)).as("freq"))
-      .withColumn("p2", substring(col("term"), 1, 2))
-      .withColumn("band", length(bin(col("freq"))))
-      .persist()
+    val tf = Reuse.pin(
+      Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; explode otherwise 1-core
+        .select(explode(toks).as("term"))
+        .groupBy(col("term"))
+        .agg(count(lit(1)).as("freq"))
+        .withColumn("p2", substring(col("term"), 1, 2))
+        .withColumn("band", length(bin(col("freq")))))
     // L1: rank within the (freq, prefix) bucket — balanced even on the
     // massive low-freq tie classes, where the prefix does the splitting
     val wLocal = Window.partitionBy(col("freq"), col("p2")).orderBy(col("term"))
     val local = tf.withColumn("lr", row_number().over(wLocal).cast("long"))
     // bucket counts feed all three offset levels
-    val bc = tf
-      .groupBy(col("band"), col("freq"), col("p2"))
-      .agg(count(lit(1)).as("bn"))
-      .persist()
+    val bc = Reuse.pin(
+      tf
+        .groupBy(col("band"), col("freq"), col("p2"))
+        .agg(count(lit(1)).as("bn")))
     // L2a: terms of the SAME freq in lexicographically earlier prefixes
     val wG = Window
       .partitionBy(col("freq"))
@@ -557,13 +558,13 @@ object SearchQueries {
     * per-term quantization bias is far under the round(4) output).
     */
   def sourceDivergence(s: SparkSession, dir: String): DataFrame = {
-    val perSrc = Tables
-      .documents(s, dir)
-      .select(col("source"), explode(toks).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist()
+    val perSrc = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("source"), explode(toks).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy(col("source"), col("w"))
+        .agg(count(lit(1)).as("cnt")))
     val srcTot = perSrc.groupBy(col("source")).agg(sum(col("cnt")).as("tot"))
     val corpCnt = perSrc.groupBy(col("w")).agg(sum(col("cnt")).as("ccnt"))
     val corpTot = corpCnt.agg(sum(col("ccnt")).as("ctot"))
@@ -682,7 +683,7 @@ object SearchQueries {
     val docs = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; tokenize otherwise 1-core
       .select(col("doc_id"), toks.as("ws"))
     val tokens = docs.select(explode(col("ws")).as("w"))
-    val uni = tokens.groupBy(col("w")).agg(count(lit(1)).as("cw")).persist()
+    val uni = Reuse.pin(tokens.groupBy(col("w")).agg(count(lit(1)).as("cw")))
     val totals = uni.agg(
       sum(col("cw")).as("t_tokens"),
       (sum(col("cw")) - count(lit(1))).as("dummy"))
@@ -772,11 +773,11 @@ object SearchQueries {
     * across all phrases (one scan total).
     */
   def phraseSearch(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables
-      .documents(s, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " ", -1)).as(Seq("pos", "w")))
-      .filter(col("w") =!= "")
-      .persist()
+    val toks = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("doc_id"), posexplode(split(col("text"), " ", -1)).as(Seq("pos", "w")))
+        .filter(col("w") =!= ""))
     val results = SearchPhrases.map { phrase =>
       val words = phrase.split(" ").toSeq
       val first = toks
@@ -832,10 +833,10 @@ object SearchQueries {
       Array.tabulate(RagDims)(j =>
         graft.functions.TextHash.permHash(h, 200L + j).toDouble / graft.functions.TextHash.P)
     }
-    val chunks = CurationQueries
-      .chunkGrid(s, dir) // the docChunk grid — ONE chunking definition
-      .select(col("doc_id"), col("idx"), embedUdf(col("chunk")).as("emb"))
-      .persist()
+    val chunks = Reuse.pin(
+      CurationQueries
+        .chunkGrid(s, dir) // the docChunk grid — ONE chunking definition
+        .select(col("doc_id"), col("idx"), embedUdf(col("chunk")).as("emb")))
     graft.plans.VecDot.register(s)
     val queries = chunks
       .filter(col("doc_id") < RagQueryDocs)
@@ -949,12 +950,12 @@ object SearchQueries {
       .select(least(col("a"), col("b")).as("wa"), greatest(col("a"), col("b")).as("wb"))
       .groupBy(col("wa"), col("wb"))
       .agg(count(lit(1)).as("w"))
-    val edges = undirected
-      .select(col("wa").as("src"), col("wb").as("dst"), col("w"))
-      .unionByName(undirected.select(col("wb").as("src"), col("wa").as("dst"), col("w")))
-      .persist()
+    val edges = Reuse.pin(
+      undirected
+        .select(col("wa").as("src"), col("wb").as("dst"), col("w"))
+        .unionByName(undirected.select(col("wb").as("src"), col("wa").as("dst"), col("w"))))
     val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("wdeg"))
-    val nodes = deg.select(col("src").as("node"), col("wdeg")).persist()
+    val nodes = Reuse.pin(deg.select(col("src").as("node"), col("wdeg")))
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
     var ranks = nodes
       .crossJoin(broadcast(nn))
@@ -966,19 +967,21 @@ object SearchQueries {
         .select(
           col("dst"),
           (col("rank") * col("w").cast("double") / col("wdeg").cast("double")).as("c"))
-      ranks = nodes
-        .crossJoin(broadcast(nn))
-        .join(
-          contrib
-            .groupBy(col("dst"))
-            .agg(expr("aggregate(array_sort(collect_list(c)), 0.0D, (a, x) -> a + x)").as("s")),
-          col("node") === col("dst"),
-          "left")
-        .select(
-          col("node"),
-          (lit(0.15) / col("n_nodes").cast("double") +
-            lit(0.85) * coalesce(col("s"), lit(0.0))).as("rank"))
-        .localCheckpoint()
+      val prev = ranks
+      ranks = Reuse.cut(
+        nodes
+          .crossJoin(broadcast(nn))
+          .join(
+            contrib
+              .groupBy(col("dst"))
+              .agg(expr("aggregate(array_sort(collect_list(c)), 0.0D, (a, x) -> a + x)").as("s")),
+            col("node") === col("dst"),
+            "left")
+          .select(
+            col("node"),
+            (lit(0.15) / col("n_nodes").cast("double") +
+              lit(0.85) * coalesce(col("s"), lit(0.0))).as("rank")))
+      Reuse.free(prev)
     }
     ranks
       .select(col("node").as("word"), round(col("rank"), 6).as("textrank"))

@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.{q6, q6Sql}
 
 /** Sequential-decision analytics: always-valid sequential testing
   * (the "peeking problem" fix for experiment dashboards) and absorbing
@@ -14,11 +15,6 @@ import org.apache.spark.sql.functions._
   * float sum, tie-free `floor(x·10⁶+0.5)/10⁶` outputs.
   */
 object SequentialQueries {
-
-  // delegates to the shared, property-locked quantizers — domain rules
-  // (q6: |x| << 9.2e12; q6u: x >= 0, any magnitude) live on [[Quantize]]
-  private def q6(c: Column): Column = Quantize.q6(c)
-  private def q6Sql(e: String): String = Quantize.q6Sql(e)
 
   // --------------------------------------------------------------------
   // q_msprt — mixture-SPRT always-valid experiment monitoring

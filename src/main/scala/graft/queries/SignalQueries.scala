@@ -1,10 +1,12 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import graft.dsp.DetectorKernels
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Quantize.q6
 
 /** Signal-processing operators lifted onto the harness tables, so the
   * detector FSMs get an independently-checkable oracle: with duration=1 and
@@ -514,7 +516,7 @@ object SignalQueries {
         "seg_mean",
         // q6 domain (Quantize): the operand is a per-day MEAN event
         // count — saturation would need ≥ 9.2e12 events per type-day
-        floor(col("seg_events").cast("double") / col("seg_len").cast("double") * lit(1e6) + lit(0.5)) / lit(1e6))
+        q6(col("seg_events").cast("double") / col("seg_len").cast("double")))
   }
 
   /** Penalty multiplier for [[pelt]]: β = (1 + Mult·mean_level)·SCALE.
@@ -816,13 +818,13 @@ object SignalQueries {
     * rows per type at any corpus size); weekday indices broadcast back.
     */
   def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables
-      .events(s, dir)
-      .groupBy(
-        col("event_type"),
-        date_trunc("day", col("ts")).as("day"))
-      .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
-      .persist()
+    val daily = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .groupBy(
+          col("event_type"),
+          date_trunc("day", col("ts")).as("day"))
+        .agg(sum(round(col("value") * 100).cast("long")).as("cents")))
     val w7 = Window
       .partitionBy(col("event_type"))
       .orderBy(col("day"))
@@ -1321,7 +1323,6 @@ object SignalQueries {
     * constant-size math.
     */
   def ljungBox(s: SparkSession, dir: String, maxLag: Int = 7): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     dailySeries(s, dir)
       .groupBy(col("event_type"))
       .agg(array_sort(collect_list(struct(col("day"), col("dm")))).as("arr"))
@@ -1347,7 +1348,7 @@ object SignalQueries {
         col("event_type"),
         col("n").cast("long").as("n_days"),
         col("lmax").cast("long").as("dof"),
-        q6c(col("q_lb")).as("q_lb"))
+        q6(col("q_lb")).as("q_lb"))
   }
 
   def ljungBoxSql(maxLag: Int = 7): String =
@@ -1389,7 +1390,6 @@ object SignalQueries {
     * the sanity check run before fitting any AR structure.
     */
   def runsTest(s: SparkSession, dir: String): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val zSql =
       """((CAST(r AS DOUBLE) - (2.0 * CAST(n1 * n2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE) + 1.0))
           / sqrt(2.0 * CAST(n1 * n2 AS DOUBLE)
@@ -1414,8 +1414,8 @@ object SignalQueries {
       .withColumn("z", expr(zSql))
       .select(
         col("event_type"), col("n1"), col("n2"), col("r").as("runs"),
-        q6c(col("z")).as("z"),
-        q6c(expr(EvalQueries.pValSql("abs(z)"))).as("p"))
+        q6(col("z")).as("z"),
+        q6(expr(EvalQueries.pValSql("abs(z)"))).as("p"))
   }
 
   val runsTestSql: String = {
@@ -1466,7 +1466,6 @@ object SignalQueries {
     * calendar-bounded day axis, evaluated in day order by both engines.
     */
   def pageHinkley(s: SparkSession, dir: String): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val wCum = Window
       .partitionBy(col("event_type"))
       .orderBy(col("day"))
@@ -1488,7 +1487,7 @@ object SignalQueries {
       .select(
         col("event_type"),
         col("peak_day").cast("date").cast("string").as("peak_day"),
-        q6c(col("ph")).as("ph"))
+        q6(col("ph")).as("ph"))
   }
 
   val pageHinkleySql: String =
@@ -1534,7 +1533,6 @@ object SignalQueries {
     * shared float expression per 5-row group.
     */
   def yuleWalker(s: SparkSession, dir: String): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     def rhoExpr(lag: Int): String =
       s"""aggregate(sequence(1, n - $lag), 0.0D,
             (a, t) -> a + (get(dms, t - 1) - mu) * (get(dms, t + $lag - 1) - mu)) / den"""
@@ -1551,9 +1549,9 @@ object SignalQueries {
       .select(
         col("event_type"),
         col("n").cast("long").as("n_days"),
-        q6c(expr("r1 * (1.0D - r2) / (1.0D - r1 * r1)")).as("phi1"),
-        q6c(expr("(r2 - r1 * r1) / (1.0D - r1 * r1)")).as("phi2"),
-        q6c(expr(
+        q6(expr("r1 * (1.0D - r2) / (1.0D - r1 * r1)")).as("phi1"),
+        q6(expr("(r2 - r1 * r1) / (1.0D - r1 * r1)")).as("phi2"),
+        q6(expr(
           """1.0D - (r1 * (1.0D - r2) / (1.0D - r1 * r1)) * r1
              - ((r2 - r1 * r1) / (1.0D - r1 * r1)) * r2""")).as("var_ratio"))
   }
@@ -1606,7 +1604,6 @@ object SignalQueries {
     * calendar-bounded daily table; the grid is |types|·3·⌊n/w⌋ rows.
     */
   def hurst(s: SparkSession, dir: String): DataFrame = {
-    val q6c: Column => Column = c => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val blocks = dailySeries(s, dir)
       .groupBy(col("event_type"))
       .agg(array_sort(collect_list(struct(col("day"), col("dm")))).as("arr"))
@@ -1652,10 +1649,10 @@ object SignalQueries {
       .select(
         col("event_type"),
         col("n").cast("long").as("n_days"),
-        q6c(expr("element_at(pts, 1).rs_avg")).as("rs5"),
-        q6c(expr("element_at(pts, 2).rs_avg")).as("rs10"),
-        q6c(expr("element_at(pts, 3).rs_avg")).as("rs15"),
-        q6c(expr("(3.0D * sxy - sx * sy) / (3.0D * sxx - sx * sx)")).as("hurst"))
+        q6(expr("element_at(pts, 1).rs_avg")).as("rs5"),
+        q6(expr("element_at(pts, 2).rs_avg")).as("rs10"),
+        q6(expr("element_at(pts, 3).rs_avg")).as("rs15"),
+        q6(expr("(3.0D * sxy - sx * sy) / (3.0D * sxx - sx * sx)")).as("hurst"))
   }
 
   val hurstSql: String =
@@ -1781,7 +1778,7 @@ object SignalQueries {
         col("event_type"),
         col("n_days"),
         (col("p0") + 1).cast("long").as("lag"),
-        floor(col("col") * lit(1e6) + lit(0.5)) / lit(1e6) as "pacf")
+        q6(col("col")) as "pacf")
   }
 
   def pacfSql(maxLag: Int = 7): String =

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import graft.functions.{MinK, TextHash}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -90,17 +91,17 @@ object SketchQueries {
     */
   def kmvDistinct(s: SparkSession, dir: String, k: Int = 16): DataFrame = {
     val hUdf = udf { (g: String) => TextHash.permHash(TextHash.polyHash(g), 7L) }
-    val grams = Tables
-      .documents(s, dir)
-      .select(col("source"), split(col("text"), " ", -1).as("ws"))
-      .filter(size(col("ws")) >= 2)
-      .select(
-        col("source"),
-        explode(array_distinct(expr(
-          "transform(sequence(0, size(ws) - 2), i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))")))
-          .as("g"))
-      .select(col("source"), hUdf(col("g")).as("h"))
-      .persist()
+    val grams = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(col("source"), split(col("text"), " ", -1).as("ws"))
+        .filter(size(col("ws")) >= 2)
+        .select(
+          col("source"),
+          explode(array_distinct(expr(
+            "transform(sequence(0, size(ws) - 2), i -> concat(element_at(ws, i + 1), ' ', element_at(ws, i + 2)))")))
+            .as("g"))
+        .select(col("source"), hUdf(col("g")).as("h")))
     val minK = udaf(new MinK(k))
     val sketch = grams.groupBy(col("source")).agg(minK(col("h")).as("mins"))
     val exact = grams.distinct().groupBy(col("source")).agg(count(lit(1)).as("n_exact"))
@@ -172,14 +173,14 @@ object SketchQueries {
     */
   def hllDistinct(s: SparkSession, dir: String, m: Int = 64): DataFrame = {
     val hUdf = udf { (w: String) => TextHash.permHash(TextHash.polyHash(w), 11L) }
-    val toks = Tables
-      .documents(s, dir)
-      .select(
-        col("source"),
-        explode(array_distinct(split(col("text"), " ", -1))).as("w"))
-      .filter(col("w") =!= "")
-      .select(col("source"), col("w"), hUdf(col("w")).as("h"))
-      .persist()
+    val toks = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("source"),
+          explode(array_distinct(split(col("text"), " ", -1))).as("w"))
+        .filter(col("w") =!= "")
+        .select(col("source"), col("w"), hUdf(col("w")).as("h")))
     val ranked = toks.select(
       col("source"),
       (col("h") % m).as("bucket"),
@@ -258,11 +259,11 @@ object SketchQueries {
     val bUdf = udf { (w: String, d: Int) =>
       TextHash.permHash(TextHash.polyHash(w), 100L + d) % width
     }
-    val toks = Tables
-      .documents(s, dir)
-      .select(explode(split(col("text"), " ", -1)).as("w"))
-      .filter(col("w") =!= "")
-      .persist()
+    val toks = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(explode(split(col("text"), " ", -1)).as("w"))
+        .filter(col("w") =!= ""))
     val cells = toks
       .withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
       .select(col("d"), bUdf(col("w"), col("d")).as("bucket"))
@@ -484,17 +485,17 @@ object SketchQueries {
     // the entity space itself is hashed, like any hash-sketch input.)
     // ONE persisted projection serves the sketch legs AND the exact
     // verification leg — the sketch family's single-scan convention.
-    val ents = Tables
-      .events(s, dir)
-      .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
-      .withColumn(
-        "ent",
-        pmod(
-          col("user_id") * 65536 +
-            pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(65536)),
-          lit(TextHash.P)))
-      .select(col("event_type"), col("day"), col("ent"))
-      .persist()
+    val ents = Reuse.pin(
+      Tables
+        .events(s, dir)
+        .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
+        .withColumn(
+          "ent",
+          pmod(
+            col("user_id") * 65536 +
+              pmod(datediff(col("day"), lit("1970-01-01").cast("date")), lit(65536)),
+            lit(TextHash.P)))
+        .select(col("event_type"), col("day"), col("ent")))
     val ranked = ents
       .select(col("event_type"), col("day"), hUdf(col("ent")).as("h"))
       .select(
@@ -618,14 +619,14 @@ object SketchQueries {
     */
   def kmvSetOps(s: SparkSession, dir: String, k: Int = 64): DataFrame = {
     val hUdf = udf { (w: String) => TextHash.permHash(TextHash.polyHash(w), 13L) }
-    val hs = Tables
-      .documents(s, dir)
-      .select(
-        col("source"),
-        explode(expr("filter(split(text, ' '), w -> w <> '')")).as("w"))
-      .select(col("source"), hUdf(col("w")).as("h"))
-      .distinct()
-      .persist()
+    val hs = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .select(
+          col("source"),
+          explode(expr("filter(split(text, ' '), w -> w <> '')")).as("w"))
+        .select(col("source"), hUdf(col("w")).as("h"))
+        .distinct())
     val minK = udaf(new MinK(k))
     val sk = hs
       .groupBy(col("source"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -302,10 +303,10 @@ object SpatialQueries {
     * not the data.
     */
   def gridDensity(s: SparkSession, dir: String): DataFrame = {
-    val cells = points(s, dir)
-      .groupBy(col("cx"), col("cy"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
+    val cells = Reuse.pin(
+      points(s, dir)
+        .groupBy(col("cx"), col("cy"))
+        .agg(count(lit(1)).as("n")))
     val contrib = cells
       .withColumn("dx", explode(expr("sequence(-1, 1)")))
       .withColumn("dy", explode(expr("sequence(-1, 1)")))
@@ -422,7 +423,7 @@ object SpatialQueries {
     * test scale, exactly what the SV loop avoids in production.
     */
   def dbscan(s: SparkSession, dir: String): DataFrame = {
-    val pairs = neighborPairs(s, dir).persist()
+    val pairs = Reuse.pin(neighborPairs(s, dir))
     val sym = pairs
       .select(col("ia").as("id"), col("ib").as("nb"), col("d2"))
       .unionByName(pairs.select(col("ib").as("id"), col("ia").as("nb"), col("d2")))
@@ -436,10 +437,10 @@ object SpatialQueries {
       .components(coreEdges)
       .select(col("id").as("cid"), col("component"))
     // isolated cores (no core neighbor) are their own singleton cluster
-    val coreCluster = core
-      .join(comp, col("core_id") === col("cid"), "left")
-      .select(col("core_id"), coalesce(col("component"), col("core_id")).as("cluster"))
-      .persist()
+    val coreCluster = Reuse.pin(
+      core
+        .join(comp, col("core_id") === col("cid"), "left")
+        .select(col("core_id"), coalesce(col("component"), col("core_id")).as("cluster")))
     val borderPick = sym
       .join(coreCluster.withColumnRenamed("core_id", "nbc"), col("nb") === col("nbc"))
       .join(coreCluster.withColumnRenamed("core_id", "selfc")

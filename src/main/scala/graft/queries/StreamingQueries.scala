@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.schemas.EventListMessage
 import graft.streaming.FrameAssemblyTws
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -597,16 +598,16 @@ object StreamingQueries {
         8)
     }
     // token-less docs excluded as in the batch path (no shingle set)
-    val docBands = graft.Tables
-      .documents(s, dir)
-      .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0)
-      // DISTINCT band values per doc: a doc whose 8 band keys contain a
-      // mod-P collision would otherwise see its own second identical row
-      // dropped by the band-keyed state (n_kept < n_bands forever) while
-      // the oracle counts both — distinct-ifying makes "owns ALL its
-      // bands" well-defined on both engines (~1 doc per 75M hits this)
-      .select(col("doc_id"), explode(array_distinct(bandUdf(col("text")))).as("band"))
-      .persist()
+    val docBands = Reuse.pin(
+      graft.Tables
+        .documents(s, dir)
+        .filter(length(regexp_replace(col("text"), lit(" "), lit(""))) > 0)
+        // DISTINCT band values per doc: a doc whose 8 band keys contain a
+        // mod-P collision would otherwise see its own second identical row
+        // dropped by the band-keyed state (n_kept < n_bands forever) while
+        // the oracle counts both — distinct-ifying makes "owns ALL its
+        // bands" well-defined on both engines (~1 doc per 75M hits this)
+        .select(col("doc_id"), explode(array_distinct(bandUdf(col("text")))).as("band")))
     // harness feed: the band rows in doc_id order through ONE
     // single-partition MemoryStream batch (collect is test plumbing, not
     // the operator — production points the same dedup at a real source)
@@ -634,19 +635,18 @@ object StreamingQueries {
     val kept = drain(stream.withWatermark("ts", "30 days").dropDuplicatesWithinWatermark("band"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_kept_bands"))
-    val verdict = docBands
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bands"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("n_kept_bands"), lit(0L)).as("n_kept_bands"),
-        (coalesce(col("n_kept_bands"), lit(0L)) === col("n_bands")).as("keep"))
-      // eager localCheckpoint materializes the per-doc verdict (one small
-      // row per document) so docBands can be unpersisted here instead of
-      // leaking until the session's next clearCache (ADVICE r8)
-      .localCheckpoint(true)
-    docBands.unpersist(false)
+    // the cut materializes the per-doc verdict (one small row per
+    // document) so docBands can be freed here (ADVICE r8)
+    val verdict = Reuse.cut(
+      docBands
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_bands"))
+        .join(kept, Seq("doc_id"), "left")
+        .select(
+          col("doc_id"),
+          coalesce(col("n_kept_bands"), lit(0L)).as("n_kept_bands"),
+          (coalesce(col("n_kept_bands"), lit(0L)) === col("n_bands")).as("keep")))
+    Reuse.free(docBands)
     verdict
   }
 
@@ -753,14 +753,14 @@ object StreamingQueries {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val toksC = split(col("text"), " ", -1)
-    val feat = s.read
-      .parquet(s"$dir/documents.parquet")
-      .select(
-        (size(toksC).cast("double") / lit(100.0)).as("x1"),
-        (size(array_distinct(toksC)).cast("double") / size(toksC).cast("double")).as("x2"),
-        when(col("n_chars") >= 300, lit(1.0)).otherwise(lit(0.0)).as("y"),
-        expr(OracleHash.bucketExpr("cast(doc_id as string)", SgdBatches)).as("b"))
-      .persist()
+    val feat = Reuse.pin(
+      s.read
+        .parquet(s"$dir/documents.parquet")
+        .select(
+          (size(toksC).cast("double") / lit(100.0)).as("x1"),
+          (size(array_distinct(toksC)).cast("double") / size(toksC).cast("double")).as("x2"),
+          when(col("n_chars") >= 300, lit(1.0)).otherwise(lit(0.0)).as("y"),
+          expr(OracleHash.bucketExpr("cast(doc_id as string)", SgdBatches)).as("b")))
     val batches = (0 until SgdBatches).map { b =>
       val rows = feat
         .filter(col("b") === b)

@@ -1,8 +1,10 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Quantize.q6
 
 /** Text-analysis and deduplication operators over the `documents` table —
   * the LLM-training-pipeline surface (exact dedup, token statistics,
@@ -104,11 +106,11 @@ object TextQueries {
     * collect_list), driver-size by construction.
     */
   def chi2Assoc(s: SparkSession, dir: String): DataFrame = {
-    val obs = Tables
-      .documents(s, dir)
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_obs"))
-      .persist()
+    val obs = Reuse.pin(
+      Tables
+        .documents(s, dir)
+        .groupBy(col("lang"), col("source"))
+        .agg(count(lit(1)).as("n_obs")))
     val rowTot = obs.groupBy(col("lang")).agg(sum(col("n_obs")).as("lang_tot"))
     val colTot = obs.groupBy(col("source")).agg(sum(col("n_obs")).as("source_tot"))
     val tot = obs.agg(
@@ -265,7 +267,6 @@ object TextQueries {
     * 20-row rollup. The word table is the shuffle; nothing else moves.
     */
   def yuleK(s: SparkSession, dir: String): DataFrame = {
-    val q6c = (c: org.apache.spark.sql.Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; explode otherwise 1-core
       .select(col("source"), explode(split(col("text"), " ", -1)).as("w"))
       .filter(col("w") =!= "")
@@ -279,7 +280,7 @@ object TextQueries {
         sum(col("m") * col("m")).as("m2"))
       .select(
         col("source"), col("n_tokens"), col("vocab"), col("hapax"),
-        q6c(
+        q6(
           lit(1e4) * (col("m2") - col("n_tokens")).cast("double") /
             (col("n_tokens") * col("n_tokens")).cast("double")).as("yule_k"))
   }
@@ -320,7 +321,6 @@ object TextQueries {
     * a second keyed rollup; the term join is word-keyed.
     */
   def hellinger(s: SparkSession, dir: String): DataFrame = {
-    val q6c = (c: org.apache.spark.sql.Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val cells = Tables.spread(Tables.documents(s, dir)) // 1-row-group scan; explode otherwise 1-core
       .select(col("source"), explode(split(col("text"), " ", -1)).as("w"))
       .filter(col("w") =!= "")
@@ -347,8 +347,8 @@ object TextQueries {
       .select(
         col("source"),
         col("n_words"),
-        q6c(expr("CAST(s9 AS DOUBLE) / 1e9")).as("bc"),
-        q6c(expr("sqrt(greatest(1.0 - CAST(s9 AS DOUBLE) / 1e9, 0.0))")).as("hellinger"))
+        q6(expr("CAST(s9 AS DOUBLE) / 1e9")).as("bc"),
+        q6(expr("sqrt(greatest(1.0 - CAST(s9 AS DOUBLE) / 1e9, 0.0))")).as("hellinger"))
   }
 
   val hellingerSql: String = {

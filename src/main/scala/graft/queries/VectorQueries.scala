@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Reuse
 import graft.Tables
 import graft.functions.TextHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1067,14 +1068,13 @@ object VectorQueries {
       nQueries: Int = 8,
       k: Int = 10): DataFrame = {
     graft.plans.VecDot.register(s)
-    val exact = cosineTopK(s, dir, nQueries, k)
-      .select(col("query_id"), col("neighbor_id").as("vec_id"))
-      .persist()
+    val exact = Reuse.pin(
+      cosineTopK(s, dir, nQueries, k)
+        .select(col("query_id"), col("neighbor_id").as("vec_id")))
     def eval(method: String, param: Int, cands0: DataFrame): DataFrame = {
-      // persisted: the candidate set feeds both the cost count and the
-      // ranked recall join — same clearCache() session contract as the
-      // sketch tables
-      val cands = cands0.persist()
+      // pinned: the candidate set feeds both the cost count and the
+      // ranked recall join
+      val cands = Reuse.pin(cands0)
       val topk = rankTopK(cands, k)
         .select(col("query_id"), col("neighbor_id").as("vec_id"))
       val hits = topk
@@ -1111,13 +1111,13 @@ object VectorQueries {
       }
       word
     }
-    val lshBase = Tables
-      .embeddings(s, dir)
-      .select(
-        col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("emb"),
-        wordUdf(transform(col("embedding"), _.cast("double"))).as("word"))
-      .persist()
+    val lshBase = Reuse.pin(
+      Tables
+        .embeddings(s, dir)
+        .select(
+          col("vec_id"),
+          transform(col("embedding"), _.cast("double")).as("emb"),
+          wordUdf(transform(col("embedding"), _.cast("double"))).as("word")))
     def lshCands(bands: Int): DataFrame = {
       val pb = 16 / bands
       val mask = (1L << pb) - 1
@@ -1170,12 +1170,12 @@ object VectorQueries {
         transform(col("embedding"), _.cast("double")).as("qemb"),
         explode(probeRankUdf(col("embedding"))).as("pr"))
       .select(col("query_id"), col("qemb"), col("pr._1").as("cell"), col("pr._2").as("probe_rank"))
-    val ivfBase = assigned
-      .join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", expr("vec_dot(emb, qemb)"))
-      .select(col("query_id"), col("vec_id"), col("sim"), col("probe_rank"))
-      .persist()
+    val ivfBase = Reuse.pin(
+      assigned
+        .join(probes, Seq("cell"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .withColumn("sim", expr("vec_dot(emb, qemb)"))
+        .select(col("query_id"), col("vec_id"), col("sim"), col("probe_rank")))
     def ivfCands(p: Int): DataFrame =
       ivfBase.filter(col("probe_rank") <= p).select(col("query_id"), col("vec_id"), col("sim"))
     val lsh = Seq(2, 4, 8).map(b => eval("lsh", b, lshCands(b)))
@@ -1520,10 +1520,10 @@ object VectorQueries {
   def kmeansTrain(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
-    val e = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), expr("transform(embedding, v -> double(v))").as("emb"))
-      .persist()
+    val e = Reuse.pin(
+      Tables
+        .embeddings(s, dir)
+        .select(col("vec_id"), expr("transform(embedding, v -> double(v))").as("emb")))
     var cents: Array[Array[Double]] = e
       .orderBy(col("vec_id"))
       .limit(KmK)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Reuse
 import graft.operators.NexusTables
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -254,12 +255,9 @@ final class NexusSink(
     * idempotent restart.
     */
   def writeBatch(assignedFrames: DataFrame, batchId: Long): Unit = {
-    val spark = assignedFrames.sparkSession
-    // try/finally like writeLogBatch: a transient write failure must not
+    // a scope like writeLogBatch's: a transient write failure must not
     // leave this batch's cache pinned across the engine's replay
-    val cached = assignedFrames.persist()
-    try writeBatchCached(spark, cached, batchId)
-    finally cached.unpersist()
+    Reuse.scope(writeBatchCached(assignedFrames.sparkSession, Reuse.pin(assignedFrames), batchId))
   }
 
   private def writeBatchCached(
@@ -453,27 +451,27 @@ final class NexusSink(
     require(logTables.contains(table), s"unknown log table: $table")
     // one evaluation of the assignment+explode lineage for the key scan
     // AND the write — not one job each (same pattern as writeBatch)
-    val cached = assignedLogs.persist()
-    try {
+    Reuse.scope {
+      val cached = Reuse.pin(assignedLogs)
       val gens = cached
         .select(col("run_name"), col("run_start_ns").cast("long"))
         .distinct()
         .collect()
         .map(r => (r.getString(0), r.getLong(1)))
       // empty micro-batch (trigger with no data) → nothing to write
-      if (gens.isEmpty) return
-      moveLock.synchronized {
+      if (gens.nonEmpty) moveLock.synchronized {
         val live = gens.filterNot(finalizedGens.contains)
-        if (live.isEmpty) return
-        val liveRows =
-          if (live.length == gens.length) cached
-          else
-            cached.filter(
-              concat_ws("@", col("run_name"), col("run_start_ns").cast("long"))
-                .isin(live.map { case (n, s) => s"$n@$s" }: _*))
-        writePlane(liveRows, table, batchId)
+        if (live.nonEmpty) {
+          val liveRows =
+            if (live.length == gens.length) cached
+            else
+              cached.filter(
+                concat_ws("@", col("run_name"), col("run_start_ns").cast("long"))
+                  .isin(live.map { case (n, s) => s"$n@$s" }: _*))
+          writePlane(liveRows, table, batchId)
+        }
       }
-    } finally cached.unpersist()
+    }
   }
 
   /** Move finished generations' partitions local/ → completed/ (K5). A

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Doc-lint (VERDICT r7): the README/COVERAGE query counts are derived
   * from [[SparkEntry]] itself, so documentation drift fails the build
   * instead of under- or over-claiming to the first reader.
@@ -66,6 +68,25 @@ class DocLintSpec extends AnyFunSuite {
     SparkEntry.queries.keySet.filter(_.startsWith("q_stream_")).foreach { n =>
       assert(contracts(n).cls == Contract.Streaming, s"$n not tagged streaming")
     }
+  }
+
+  test("every materialised intermediate in src/main goes through graft.Reuse") {
+    val calls = Seq(".persist(", ".localCheckpoint(", ".cache()", "unpersist(")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(java.nio.file.Paths.get("graft/Reuse.scala")))
+      .toSeq
+    assert(files.nonEmpty)
+    val offenders = for {
+      f <- files
+      (line, i) <- read(f.toString).split("\n").zipWithIndex
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+      if calls.exists(code.contains)
+    } yield s"${root.relativize(f)}:${i + 1}: $code"
+    assert(offenders.isEmpty,
+      "materialise through Reuse.pin/cut/free, not Spark directly:\n" + offenders.mkString("\n"))
   }
 
   test("README.md carries the current query/oracle counts") {

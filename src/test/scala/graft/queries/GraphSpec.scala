@@ -14,6 +14,39 @@ class GraphSpec extends AnyFunSuite {
   }
   private val dir = "/root/testdata/sf0.001"
 
+  /** The similarity graph rebuilt on the driver exactly as
+    * `similarityPairs` defines it: same-language pairs of the first 80
+    * documents sharing at least 12 distinct non-empty words.
+    */
+  private def adjacency(): Map[Long, Set[Long]] = {
+    val docs = graft.Tables
+      .documents(spark, dir)
+      .filter(org.apache.spark.sql.functions.col("doc_id") < 80)
+      .collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("lang"),
+        r.getAs[String]("text").split(" ").toSet.filter(_.nonEmpty)))
+    val adj = scala.collection.mutable.Map.empty[Long, Set[Long]].withDefaultValue(Set.empty)
+    for {
+      (da, la, wa) <- docs; (db, lb, wb) <- docs
+      if da < db && la == lb && (wa & wb).size >= 12
+    } { adj(da) += db; adj(db) += da }
+    adj.toMap
+  }
+
+  /** Hop distances from `src` over `adj` (textbook BFS). */
+  private def bfs(adj: Map[Long, Set[Long]], src: Set[Long]): Map[Long, Long] = {
+    val dist = scala.collection.mutable.Map.empty[Long, Long]
+    var frontier = src
+    frontier.foreach(dist(_) = 0L)
+    var h = 0L
+    while (frontier.nonEmpty) {
+      h += 1
+      frontier = frontier.flatMap(adj).filterNot(dist.contains)
+      frontier.foreach(dist(_) = h)
+    }
+    dist.toMap
+  }
+
   test("pagerank: mass conservation, positivity, teleport floor, determinism") {
     val a = GraphQueries.pagerank(spark, dir).collect()
     assert(a.nonEmpty)
@@ -155,28 +188,57 @@ class GraphSpec extends AnyFunSuite {
 
   test("bfs_hops: matches driver-side BFS distances from the mod-17 seed set") {
     val rows = GraphQueries.bfsHops(spark, dir).collect()
-    val docs = graft.Tables
-      .documents(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("doc_id") < 80)
-      .collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("lang"),
-        r.getAs[String]("text").split(" ").toSet.filter(_.nonEmpty)))
-    val adj = scala.collection.mutable.Map.empty[Long, Set[Long]].withDefaultValue(Set.empty)
-    for {
-      (da, la, wa) <- docs; (db, lb, wb) <- docs
-      if da < db && la == lb && (wa & wb).size >= 12
-    } { adj(da) += db; adj(db) += da }
-    // textbook BFS from every seed node present in the graph
-    val dist = scala.collection.mutable.Map.empty[Long, Long]
-    var frontier = adj.keys.filter(_ % 17 == 0).toSet
-    frontier.foreach(dist(_) = 0L)
-    var h = 0L
-    while (frontier.nonEmpty) {
-      h += 1
-      frontier = frontier.flatMap(adj).filterNot(dist.contains)
-      frontier.foreach(dist(_) = h)
+    val adj = adjacency()
+    // BFS from every seed node present in the graph
+    val dist = bfs(adj, adj.keys.filter(_ % 17 == 0).toSet)
+    assert(rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("hops")).toMap == dist)
+    spark.catalog.clearCache()
+  }
+
+  test("kcore: matches driver-side peeling (core degree of every surviving node)") {
+    val rows = GraphQueries.kcore(spark, dir).collect()
+    assert(rows.nonEmpty)
+    // peel every node of degree < 3 until none is left
+    var core = adjacency()
+    var weak = core.collect { case (v, ns) if ns.size < 3 => v }.toSet
+    while (weak.nonEmpty) {
+      core = core.collect { case (v, ns) if !weak(v) => v -> (ns -- weak) }.filter(_._2.nonEmpty)
+      weak = core.collect { case (v, ns) if ns.size < 3 => v }.toSet
     }
-    assert(rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("hops")).toMap == dist.toMap)
+    assert(rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("core_degree")).toMap ==
+      core.map { case (v, ns) => v -> ns.size.toLong })
+    spark.catalog.clearCache()
+  }
+
+  test("closeness: matches driver-side harmonic sums from the mod-5 sources") {
+    val rows = GraphQueries.closeness(spark, dir).collect()
+    assert(rows.nonEmpty)
+    val adj = adjacency()
+    // per node: the sources that reach it in > 0 hops and Σ 1/d over them
+    val reached = adj.keys.filter(_ % 5 == 0).toSeq
+      .flatMap(s => bfs(adj, Set(s)).filter(_._2 > 0))
+      .groupBy(_._1)
+    val got = rows.map(r =>
+      r.getAs[Long]("doc_id") -> (r.getAs[Long]("n_sources"), r.getAs[Double]("harmonic"))).toMap
+    assert(got.keySet == reached.keySet)
+    for ((v, ds) <- reached) {
+      val (n, h) = got(v)
+      assert(n == ds.size.toLong, s"node $v")
+      val want = ds.map(d => 1.0 / d._2).sorted.sum
+      assert(math.abs(h - want) <= 1e-6, s"node $v: $h vs $want")
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("label_propagation: at most one round checkpoint outlives the call with no scope open") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    GraphQueries.labelPropagation(spark, dir, iters = 4)
+    val rounds = sc.getPersistentRDDs.collect {
+      case (id, rdd) if !before.contains(id) && rdd.isCheckpointed => id
+    }
+    assert(rounds.size <= 1, s"${rounds.size} round checkpoints still held")
     spark.catalog.clearCache()
   }
 
