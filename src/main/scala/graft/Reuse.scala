@@ -28,10 +28,11 @@ import scala.collection.mutable.ArrayBuffer
   * would be gone.
   *
   * Outside any scope nothing changes against plain Spark: a pin stays in
-  * the cache manager until the caller's `spark.catalog.clearCache()` (or
-  * a `free`), and a cut's blocks stay until the driver's
+  * the cache manager until the caller clears the session's cache (or
+  * calls `free`), and a cut's blocks stay until the driver's
   * `ContextCleaner` reaps them after the frame is garbage-collected.
-  * `clearCache()` never reaches a cut's blocks; [[free]] and a scope do.
+  * Clearing the cache never reaches a cut's blocks; [[free]] and a scope
+  * do.
   */
 object Reuse {
 
