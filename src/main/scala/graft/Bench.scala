@@ -52,12 +52,21 @@ object Bench {
   private def jobj(kvs: Iterable[(String, String)]): String =
     kvs.toSeq.sortBy(_._1).map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
 
+  /** `SPARK_GRAFT_GATE`: `on` (the default) or `off`; anything else throws. */
+  private[graft] def gateKnob(env: Map[String, String]): Boolean =
+    Sessions.choiceKnob(env, "SPARK_GRAFT_GATE", default = true)("on" -> true, "off" -> false)
+
+  /** `SPARK_GRAFT_PASSES`: `2` (the default) or `1`; anything else throws. */
+  private[graft] def onePassKnob(env: Map[String, String]): Boolean =
+    Sessions.choiceKnob(env, "SPARK_GRAFT_PASSES", default = false)("1" -> true, "2" -> false)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // the quiet-host gate's knobs (see the gate below), read before the
     // session is built so a bad value fails before any work
-    val gateOn = !sys.env.get("SPARK_GRAFT_GATE").contains("off")
+    val gateOn = gateKnob(sys.env)
+    val onePass = onePassKnob(sys.env)
     val gateTries = Sessions.intKnob(sys.env, "SPARK_GRAFT_GATE_TRIES", default = 8, min = 1)
     val gateSleepSec =
       Sessions.intKnob(sys.env, "SPARK_GRAFT_GATE_SLEEP_SEC", default = 45, min = 0)
@@ -80,8 +89,8 @@ object Bench {
     // or the attempt budget runs out, then proceed regardless with the
     // gate outcome stamped in the JSON. The calibration that lands in
     // the artifact is the probe from the accepted (or final) attempt.
-    // Knobs: SPARK_GRAFT_GATE=off disables (for self-managed law
-    // sweeps); SPARK_GRAFT_GATE_TRIES / SPARK_GRAFT_GATE_SLEEP_SEC
+    // Knobs: SPARK_GRAFT_GATE=off disables (for self-managed law sweeps;
+    // `on` is the default); SPARK_GRAFT_GATE_TRIES / SPARK_GRAFT_GATE_SLEEP_SEC
     // size the retry loop (defaults 8 × 45 s — bounded so a driver
     // timeout cannot starve the measured passes; tries ≥ 1, sleep ≥ 0).
     val (gateLoadMax, gateCpuMtMax, gateShuffleMax) = (4.0, 4.2, 5.0)
@@ -193,13 +202,12 @@ object Bench {
     def fmtLoad(v: Seq[Double]): String = v.mkString("[", ",", "]")
     val loadBeforeVals = loadavgVals()
     val loadBefore = fmtLoad(loadBeforeVals)
-    // SPARK_GRAFT_PASSES=1 skips the second pass — for LAW probes at
+    // SPARK_GRAFT_PASSES=1 (read above) skips the second pass — for LAW probes at
     // big scale factors (sf2/sf10 scaling sweeps), where a second pass
     // doubles a multi-minute run and the question is order-of-growth,
     // not the minimum. The spread then reads 0 and the contention guard
     // falls back to the loadavg check alone; comparable-minimum claims
     // still require the default two passes.
-    val onePass = sys.env.get("SPARK_GRAFT_PASSES").contains("1")
     val pass1 = ordered.map { case (name, fn) => name -> timeOnce(name, 1, fn) }.toMap
     val pass2 =
       if (onePass) pass1

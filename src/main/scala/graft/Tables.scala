@@ -86,10 +86,13 @@ object Sessions {
   /** Route recreatable scratch I/O (bounded-drain checkpoints, shuffle
     * spills, RocksDB working dirs) to tmpfs when the host has one.
     * Default on for local single-node runs; `GRAFT_TMPFS_SCRATCH=0`
-    * disables (A/B measured in SCALE.md §Streaming, r9).
+    * (or `false`) disables, `1`/`true` keeps it on, and any other value
+    * throws (A/B measured in SCALE.md §Streaming, r9).
     */
-  def tmpfsScratchEnabled: Boolean =
-    !sys.env.get("GRAFT_TMPFS_SCRATCH").exists(v => v == "0" || v.equalsIgnoreCase("false"))
+  def tmpfsScratchEnabled: Boolean = tmpfsScratchEnabled(sys.env)
+
+  private[graft] def tmpfsScratchEnabled(env: Map[String, String]): Boolean =
+    choiceKnob(env, "GRAFT_TMPFS_SCRATCH", default = true)(OnOff: _*)
 
   /** The ONE definition of "is tmpfs scratch usable here": opted in AND
     * /dev/shm exists and is writable. Shared by the session factory's
@@ -108,12 +111,9 @@ object Sessions {
     * clone). No-op under the default; idempotent.
     */
   def stateStoreConfigure(s: SparkSession): SparkSession = {
-    val choice = s.conf
-      .getOption(StateStoreKey)
-      .orElse(sys.env.get("GRAFT_STATE_STORE"))
-    if (choice.exists(_.equalsIgnoreCase("rocksdb"))) {
+    if (rocksDbChosen(s.conf.getOption, sys.env)) {
       s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
-      if (highChurnStateStore(s)) {
+      if (highChurnChosen(s.conf.getOption, sys.env)) {
         // HIGH-CHURN profile (frame assembly and anything else whose
         // keys live ~1 TTL then die): the frame-soak A/B (SCALE.md r13)
         // measured changelog checkpointing pinning RocksDB
@@ -136,14 +136,34 @@ object Sessions {
     s
   }
 
-  /** Opt-in high-churn RocksDB profile ([[stateStoreConfigure]]):
-    * `graft.stateStore.highChurn` session conf or
-    * `GRAFT_STATE_STORE_HIGH_CHURN` env.
+  /** The RocksDB opt-in ([[stateStoreConfigure]]): the [[StateStoreKey]]
+    * session conf, else the `GRAFT_STATE_STORE` env var; `rocksdb` is
+    * the one accepted value.
     */
-  private def highChurnStateStore(s: SparkSession): Boolean =
-    s.conf.getOption("graft.stateStore.highChurn")
-      .orElse(sys.env.get("GRAFT_STATE_STORE_HIGH_CHURN"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
+  private[graft] def rocksDbChosen(conf: String => Option[String], env: Map[String, String]): Boolean =
+    confOrEnv(conf, StateStoreKey, env, "GRAFT_STATE_STORE", default = false)("rocksdb" -> true)
+
+  /** Opt-in high-churn RocksDB profile ([[stateStoreConfigure]]):
+    * `graft.stateStore.highChurn` session conf, else the
+    * `GRAFT_STATE_STORE_HIGH_CHURN` env var.
+    */
+  private[graft] def highChurnChosen(conf: String => Option[String], env: Map[String, String]): Boolean =
+    confOrEnv(conf, "graft.stateStore.highChurn", env, "GRAFT_STATE_STORE_HIGH_CHURN", default = false)(
+      OnOff: _*)
+
+  /** A knob read from the session conf `key` when set there, else from
+    * the env var `name`; a rejected value names where it came from.
+    */
+  private def confOrEnv[A](
+      conf: String => Option[String],
+      key: String,
+      env: Map[String, String],
+      name: String,
+      default: A)(accepted: (String, A)*): A =
+    conf(key) match {
+      case Some(v) => choiceKnob(Map(key -> v), key, default)(accepted: _*)
+      case None => choiceKnob(env, name, default)(accepted: _*)
+    }
 
   /** A session on `s`'s SparkContext with its own session conf
     * (`newSession()`), keeping what the fork would otherwise drop and
@@ -160,17 +180,31 @@ object Sessions {
     f
   }
 
+  /** An env knob with a closed set of values: `default` when unset, the
+    * meaning `accepted` gives a value, and anything else throws with a
+    * message naming the variable (rather than taking the default on a
+    * typo).
+    */
+  private[graft] def choiceKnob[A](env: Map[String, String], name: String, default: A)(
+      accepted: (String, A)*): A =
+    env.get(name) match {
+      case None => default
+      case Some(v) =>
+        accepted.collectFirst { case (`v`, a) => a }.getOrElse(throw new IllegalArgumentException(
+          s"$name must be one of ${accepted.map(_._1).mkString(", ")}, got '$v'"))
+    }
+
+  /** The values a switch knob accepts: the two spellings of on and off. */
+  private[graft] val OnOff: Seq[(String, Boolean)] =
+    Seq("1" -> true, "true" -> true, "0" -> false, "false" -> false)
+
   /** A boolean env knob as a Spark conf value: `default` when unset,
     * `true`/`false` as given, and anything else fails the session build
     * with a message naming the variable (rather than a Spark conf parse
     * error far from it).
     */
   private[graft] def boolKnob(env: Map[String, String], name: String, default: Boolean): String =
-    env.get(name) match {
-      case None => default.toString
-      case Some(v @ ("true" | "false")) => v
-      case Some(v) => throw new IllegalArgumentException(s"$name must be true or false, got '$v'")
-    }
+    choiceKnob(env, name, default.toString)("true" -> "true", "false" -> "false")
 
   /** An integer env knob: `default` when unset, the value when it parses
     * as an integer ≥ `min`, and anything else throws with a message

@@ -39,8 +39,12 @@ import scala.jdk.CollectionConverters._
   */
 object Obs {
 
+  /** Jobs and tasks of one micro-batch of a measured streaming query. */
+  final case class BatchWork(jobs: Long = 0L, tasks: Long = 0L)
+
   /** Work done under one tag. Task-metric sums cover completed stage
-    * attempts; `progress` holds the tag's micro-batches in arrival order.
+    * attempts; `progress` holds the tag's micro-batches in arrival order
+    * and `batches` their jobs and tasks by (query id, batch id).
     */
   final case class Work(
       jobs: Long = 0L,
@@ -53,7 +57,8 @@ object Obs {
       inputBytes: Long = 0L,
       memorySpillBytes: Long = 0L,
       diskSpillBytes: Long = 0L,
-      progress: Vector[StreamingQueryProgress] = Vector.empty) {
+      progress: Vector[StreamingQueryProgress] = Vector.empty,
+      batches: Map[(String, Long), BatchWork] = Map.empty) {
 
     def cpuSec: Double = executorCpuNs / 1e9
 
@@ -66,6 +71,15 @@ object Obs {
       progress
         .flatMap(_.durationMs.asScala.map { case (k, v) => k -> v.longValue })
         .groupMapReduce(_._1)(_._2)(_ + _)
+
+    /** Each micro-batch that read input rows with its jobs and tasks. */
+    def nonEmptyBatches: Seq[(StreamingQueryProgress, BatchWork)] =
+      progress.filter(_.numInputRows > 0).map { p =>
+        p -> batches.getOrElse((p.id.toString, p.batchId), BatchWork())
+      }
+
+    private[obs] def inBatch(batch: Option[(String, Long)])(f: BatchWork => BatchWork): Work =
+      batch.fold(this)(b => copy(batches = batches.updated(b, f(batches.getOrElse(b, BatchWork())))))
   }
 
   /** Run `action` with `tag` on this thread's Spark jobs (and on the
@@ -86,7 +100,7 @@ object Obs {
   }
 
   private val watched = new ConcurrentHashMap[String, Work]()
-  private val stageTags = new ConcurrentHashMap[(Int, Int), Seq[String]]()
+  private val stageTags = new ConcurrentHashMap[(Int, Int), (Seq[String], Option[(String, Long)])]()
   private val runTags = new ConcurrentHashMap[UUID, Seq[String]]()
 
   /** Entries the spine holds right now: 0 whenever no measurement runs. */
@@ -101,24 +115,39 @@ object Obs {
       .map(v => watchedOf(v.split(',')))
       .getOrElse(Seq.empty)
 
+  /** The (query id, batch id) of a streaming query's micro-batch job; the
+    * stream thread sets both as local properties, and threads it starts
+    * inherit them. A batch replayed after a restart adds to its first run.
+    */
+  private def batchOf(props: java.util.Properties): Option[(String, Long)] =
+    for {
+      p <- Option(props)
+      query <- Option(p.getProperty("sql.streaming.queryId"))
+      batch <- Option(p.getProperty("streaming.sql.batchId"))
+    } yield (query, batch.toLong)
+
   private def add(tags: Seq[String])(f: Work => Work): Unit =
     tags.foreach(t => watched.computeIfPresent(t, (_, w) => f(w)))
 
   private object Listener extends SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
-      add(watchedOf(e.properties))(w => w.copy(jobs = w.jobs + 1))
+      add(watchedOf(e.properties)) { w =>
+        w.copy(jobs = w.jobs + 1).inBatch(batchOf(e.properties))(b => b.copy(jobs = b.jobs + 1))
+      }
 
     override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
       val tags = watchedOf(e.properties)
-      if (tags.nonEmpty) stageTags.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()), tags)
+      if (tags.nonEmpty)
+        stageTags.put((e.stageInfo.stageId, e.stageInfo.attemptNumber()), (tags, batchOf(e.properties)))
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val info = e.stageInfo
-      Option(stageTags.remove((info.stageId, info.attemptNumber()))).foreach { tags =>
+      Option(stageTags.remove((info.stageId, info.attemptNumber()))).foreach { case (tags, batch) =>
         val m = info.taskMetrics
         add(tags) { w =>
           val counted = w.copy(stages = w.stages + 1, tasks = w.tasks + info.numTasks)
+            .inBatch(batch)(b => b.copy(tasks = b.tasks + info.numTasks))
           if (m == null) counted
           else counted.copy(
             executorRunMs = w.executorRunMs + m.executorRunTime,

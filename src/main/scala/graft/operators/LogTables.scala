@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TimeFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.schemas.{RunStart, RunStop}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructField
@@ -44,7 +44,7 @@ object RunAssignment {
     * collect_until_ns (nullable)), applying latest-match stop pairing and
     * abort-on-restart. 0-stops must be pre-resolved ([[resolveStopNow]]).
     */
-  def runs(spark: SparkSession, starts: Dataset[RunStart], stops: Dataset[RunStop]): DataFrame = {
+  def runs(starts: Dataset[RunStart], stops: Dataset[RunStop]): DataFrame = {
     val st = starts
       .withColumnRenamed("runName", "run_name")
       .withColumn("collect_from_ns", col("startTimeMs") * 1000000L)

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Reuse
 import graft.Tables
 import graft.functions.TextHash
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Quantize.q6

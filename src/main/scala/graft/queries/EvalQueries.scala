@@ -67,18 +67,6 @@ object EvalQueries {
           transform(slice(sequence(1, size($arr)), 1, greatest(size($arr) - n + 1, 0)),
                     i -> named_struct('n', n, 'gram', concat_ws(' ', slice($arr, i, n))))))"""
 
-  /** Sorted word n-grams of one side as an in-row array — the building
-    * block of the WITHIN-ROW clipped-match plan shared by BLEU, ROUGE
-    * and chrF (r13): both texts of a pair sit on the same row, so
-    * per-pair clipping needs no (pair, gram)-keyed shuffle at all. The
-    * slice guard keeps texts shorter than n at an EMPTY array, never a
-    * descending sequence.
-    */
-  private def sortedGramsExpr(arr: String, n: Int): String =
-    s"""array_sort(transform(
-          slice(sequence(1, size($arr)), 1, greatest(size($arr) - $n + 1, 0)),
-          i -> concat_ws(' ', slice($arr, i, $n))))"""
-
   /** Σ_g min(count_a(g), count_b(g)) over two SORTED multiset arrays: a
     * two-pointer merge as a bounded fold (one pointer advances per
     * step, so size(a)+size(b) steps always suffice); greatest(…, 1)

@@ -5,8 +5,6 @@ import graft.dsp.{DetectorSettings, FixedThreshold}
 import graft.functions.{GpsTime, TimeFunctions}
 import graft.operators.EventFormation
 import graft.schemas._
-import graft.sources.TraceGenerator
-import graft.sources.TraceGenerator.GeneratorConfig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -201,7 +199,6 @@ object LogQueries {
   }
 
   def runlogTyped(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val logs = runlogFixture(s)
     val strip = graft.operators.LogTables.strip _
     // generators can't sit inside when/otherwise — split the union by tag
@@ -292,7 +289,7 @@ object LogQueries {
       RunStart("run_1", runStartNs / 1000000L, "muon"),
       RunStart("run_2", runStartNs / 1000000L + 4000L, "muon")).toDS()
     val stops = Seq(RunStop("run_1", runStartNs / 1000000L + 4000L)).toDS()
-    val runs = graft.operators.RunAssignment.runs(s, starts, stops)
+    val runs = graft.operators.RunAssignment.runs(starts, stops)
     val assigned = graft.operators.RunAssignment.assignLogs(logs.toDF(), runs)
     // per-application scratch dir (the traceFileRoundtrip convention):
     // a fresh createTempDirectory per invocation leaked one parquet
@@ -385,7 +382,6 @@ object LogQueries {
 
   /** F1: GpsTime ↔ epoch-ns round trip over a generated component grid. */
   def gpsRoundTrip(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val gps = udf { (ns: Long) =>
       val g = TimeFunctions.epochNsToGps(ns)
       (g.year, g.day, g.hour, g.minute, g.second, g.millisecond, g.microsecond, g.nanosecond)

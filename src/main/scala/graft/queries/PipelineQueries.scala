@@ -3,7 +3,6 @@ package graft.queries
 import graft.dsp.{AdvancedMuon, DetectorSettings, DifferentialThreshold, FixedThreshold}
 import graft.operators.{EventFormation, FrameAssembly, NexusTables, RunAssignment}
 import graft.schemas.{EventListMessage, FrameMetadata, RunStart, RunStop}
-import graft.sources.TraceGenerator
 import graft.sources.TraceGenerator.GeneratorConfig
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +27,7 @@ object PipelineQueries {
 
   private val expected = Seq(0, 1, 2, 3)
 
-  private def dev2Encoder(s: SparkSession) =
+  private def dev2Encoder =
     org.apache.spark.sql.Encoders.product[EventListMessage]
 
   /** One row per event of formed dev2 messages: the harness compare can't
@@ -453,7 +452,7 @@ object PipelineQueries {
       RunStart("run_1", (base - 1000000L) / 1000000L, "muon"),
       RunStart("run_2", (base + 16 * cfg.frameIntervalNs) / 1000000L, "muon")).toDS()
     val stops = Seq(RunStop("run_2", (base + 40 * cfg.frameIntervalNs) / 1000000L)).toDS()
-    val runs = RunAssignment.runs(s, starts, stops)
+    val runs = RunAssignment.runs(starts, stops)
     NexusTables.frameTable(RunAssignment.assignFrames(aev2, runs))
   }
 
@@ -633,7 +632,7 @@ object PipelineQueries {
         "event_formation",
         count(lit(1)).as("n_messages"),
         sum(size(col("time")).cast("long")).as("n_events"))
-      .as(dev2Encoder(s))
+      .as(dev2Encoder)
     val aev2 = FrameAssembly.assemble(dev2, expected)
     aev2
       .withColumn("run_name", lit("bench_run"))
@@ -721,7 +720,7 @@ object PipelineQueries {
       RunStop("alpha", B + 25000L), // pairs with generation 2, never gen 1
       RunStop("gamma", B + 5000L), // precedes gamma's start: rejected
       RunStop("epsilon", B + 99000L)).toDS() // no such run: dropped
-    RunAssignment.runs(s, starts, stops)
+    RunAssignment.runs(starts, stops)
   }
 
   /** DuckDB oracle for [[runIntervals]]. */
@@ -1005,7 +1004,7 @@ object PipelineQueries {
     val aev2 = FrameAssembly.assemble(arithmeticDev2(s), expected)
     val starts = Seq(RunStart("run_1", (cfg.startTimestampNs - 1000000L) / 1000000L, "muon")).toDS()
     val stops = Seq.empty[RunStop].toDS()
-    val runs = RunAssignment.runs(s, starts, stops)
+    val runs = RunAssignment.runs(starts, stops)
     NexusTables.eventTable(RunAssignment.assignFrames(aev2, runs))
   }
 

@@ -43,11 +43,11 @@ import org.apache.spark.sql.streaming._
   * unbounded per-frame memory, which neither engine pays. Locked by
   * the StreamingSpec tombstone test (post-expiry re-seed scenario).
   *
-  * Scale: state per in-flight frame only (bounded by TTL × frame rate ×
-  * digitiser count), keyed writes through the RocksDB provider
-  * (`transformWithState` requires it — changelog checkpoints, off-heap
-  * keyed state); one shuffle on the frame key, identical topology to the
-  * batch operator.
+  * Scale: state per in-flight frame only (TTL × frame rate × digitiser
+  * count), keyed writes through the RocksDB provider `transformWithState`
+  * requires; one shuffle on the frame key, as in the batch operator. The
+  * pipeline jobs shuffle into ONE partition (`PipelineJobs`' assembler
+  * conf): a TTL of frames is tens of rows, so one commit per micro-batch.
   */
 object FrameAssemblyTws {
 

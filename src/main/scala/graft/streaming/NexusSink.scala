@@ -50,6 +50,7 @@ final class NexusSink(
     // ~80 B/frame driver footprint at the cap is ~40 MB transient.
     maxDriverFramesPerBatch: Long = 500000L)
     extends Serializable {
+  require(maxDriverFramesPerBatch >= 0L, s"maxDriverFramesPerBatch must be >= 0, got $maxDriverFramesPerBatch")
 
   private val local = Paths.get(outputDir, "local")
   private val completed = Paths.get(outputDir, "completed")
@@ -194,11 +195,14 @@ final class NexusSink(
     */
   private val finalizedGens = scala.collection.mutable.Set.empty[(String, Long)]
 
-  /** Cumulative compaction outcomes for this sink instance — the
-    * lifecycle job invokes [[compactCompleted]] inside its own
-    * foreachBatch and discards the return, so an operator auditing
-    * write amplification (e.g. the chain soak) reads the history here.
-    * Bounded: one entry per generation×table per compaction pass.
+  /** Frames the lifecycle job dropped with no run open, and failed
+    * maintenance (archiver) passes and generation moves; each is logged.
+    */
+  val framesDroppedNoRun, maintenanceFailures = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Cumulative compaction outcomes, for auditing write amplification of
+    * the maintenance thread's passes. Bounded: one entry per
+    * generation×table per compaction pass.
     */
   private val compactionHistory =
     scala.collection.mutable.ArrayBuffer.empty[NexusSink.CompactionStat]
@@ -264,36 +268,15 @@ final class NexusSink(
       spark: SparkSession,
       cached: DataFrame,
       batchId: Long): Unit = {
-    // ONE narrow pass serves the whole metadata side (r15 — the r14
-    // chain soak named the sink stage as the end-to-end bottleneck:
-    // TWO corpus-bearing scans per batch, the frames plane re-scanning
-    // the cached batch through a window shuffle the events plane had
-    // already paid for). The per-frame scalars are collected once —
-    // this job also materializes the persist, so the expensive part
-    // (formation + assembly + state commit upstream) runs exactly once
-    // — and the frame plane (event_index cumsum), the periods plane,
+    // ONE narrow pass serves the whole metadata side: the per-frame
+    // scalars are collected once — this job also materializes the pin,
+    // so formation, assembly and the state commit upstream run exactly
+    // once — and the frame plane (event_index cumsum), the periods plane
     // and the offset-cache counts are all derived driver-side from it.
-    // Bounded: one row of 9 scalars per ASSEMBLED FRAME in the batch
-    // (~1/|digitisers| of the input rows), with [[maxDriverFramesPerBatch]]
-    // as the validated cap — an over-cap batch (a giant backlog-replay
-    // trigger) falls back to the fully distributed r13-shaped writes,
-    // and the cap is checked with a count() BEFORE anything is collected
-    // (ADVICE r15: the old order collected first and gated second, so
-    // the one batch the fallback exists for was still materialized
-    // driver-side as boxed Rows). The count() job also materializes the
-    // persist, so the expensive upstream work still runs exactly once;
-    // every later pass in this batch reads the cache.
-    // (ADVICE r14 on the periods collect: period rows are ≤ frame rows,
-    // so the same cap now bounds them too.)
-    val nFrames = cached.count()
-    // empty micro-batch (the lifecycle job's finalization poll): nothing
-    // to write, and dynamic overwrite of zero partitions is a no-op —
-    // skip the write jobs entirely
-    if (nFrames == 0L) return
-    if (nFrames > maxDriverFramesPerBatch) {
-      writeBatchDistributed(spark, cached, batchId)
-      return
-    }
+    // Bounded: one row of 9 scalars per ASSEMBLED FRAME, and the collect
+    // stops at [[maxDriverFramesPerBatch]] + 1 rows, so an over-cap batch
+    // (a giant backlog-replay trigger) falls back to the fully
+    // distributed writes before more than the cap reaches the driver.
     val frameMeta: Array[NexusSink.FrameMeta] = cached
       .select(
         col("run_name"),
@@ -305,11 +288,19 @@ final class NexusSink(
         col("metadata.running"),
         col("metadata.vetoFlags"),
         size(col("time")).cast("long"))
+      .limit(math.min(maxDriverFramesPerBatch, Int.MaxValue - 1L).toInt + 1)
       .collect()
       .map(r => NexusSink.FrameMeta(
         r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5), r.getBoolean(6), r.getInt(7),
         r.getLong(8)))
+    // empty micro-batch (the lifecycle job's finalization poll): nothing
+    // to write, and dynamic overwrite of zero partitions is a no-op
+    if (frameMeta.isEmpty) return
+    if (frameMeta.length > maxDriverFramesPerBatch) {
+      writeBatchDistributed(spark, cached, batchId)
+      return
+    }
     val batchCounts: Map[(String, Long), Long] = frameMeta
       .groupBy(m => (m.runName, m.runStartNs))
       .map { case (k, ms) => k -> ms.iterator.map(_.nEvents).sum }
@@ -340,12 +331,11 @@ final class NexusSink(
         (n, s, p, ms.length.toLong, ms.iterator.map(_.nEvents).sum)
       }
       .toSeq
-    // the events plane is now the ONLY distributed write; it reads the
+    // the events plane is the ONLY distributed write; it reads the
     // already-materialized cache, so it runs concurrently with the two
-    // tiny driver-local plane writes below (independent Spark jobs —
-    // the local writes are single-task and slot in beside the events
-    // tasks). Failure of any write fails the batch, and replay rewrites
-    // all three planes' (run, batch_id) partitions idempotently.
+    // driver-local plane writes below, one task each. Failure of any
+    // write fails the batch, and replay rewrites all three planes'
+    // (run, batch_id) partitions idempotently.
     val eventsFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val eventsThread = new Thread(
       () =>
@@ -356,11 +346,12 @@ final class NexusSink(
     eventsThread.start()
     try {
       import spark.implicits._
-      writePlane(spark.createDataFrame(frameRows, NexusSink.frameplaneSchema), "frames", batchId)
+      writePlane(
+        spark.createDataFrame(frameRows, NexusSink.frameplaneSchema).coalesce(1), "frames", batchId)
       // periods group: per-period accumulation from frame metadata
       // (period.rs:23-55, UpdatePeriodList) — same derived-plane shape
       writePlane(
-        periodRows.toDF("run_name", "run_start_ns", "period_number", "n_frames", "n_events"),
+        periodRows.toDF("run_name", "run_start_ns", "period_number", "n_frames", "n_events").coalesce(1),
         "periods",
         batchId)
     } finally eventsThread.join()
@@ -561,7 +552,10 @@ final class NexusSink(
                     moved += ((name, start))
                   } catch {
                     // reference behavior: warn and retry next interval
-                    case _: java.io.IOException => failed += ((name, start))
+                    case e: java.io.IOException =>
+                      failed += ((name, start))
+                      maintenanceFailures.incrementAndGet()
+                      NexusSink.log.warn(s"archiving $table of $name@$start failed", e)
                   }
                 }
             }
@@ -960,6 +954,8 @@ final class NexusSink(
 }
 
 object NexusSink {
+
+  private[streaming] val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.NexusSink")
 
   /** Per-frame scalars collected once per micro-batch — everything the
     * frame and period planes plus the offset cache need, with the event

@@ -58,25 +58,20 @@ final class RunCatalog extends Serializable {
 object PipelineJobs {
 
   /** Spark 4.1's foreachBatch state-commit validation false-positives on
-    * EMPTY micro-batches: the batch planner prunes a stateful operator
-    * whose input is empty (provably-empty output under NoTimeout), so the
-    * per-partition commits the coordinator expects never happen —
-    * `StateStoreCommitValidationFailed` then TERMINATES the query. That
-    * is fatal by design for these jobs, whose empty batches ARE the
-    * finalization/archive poll. Every foreachBatch body here processes
-    * its whole batch (driver collect of the tiny run dimension, or full
-    * partitioned writes), so the misbehavior this validation hunts for —
-    * `show()`/`limit()` partial consumption — is structurally absent;
-    * disable it on the owning session before starting the query.
+    * EMPTY micro-batches: the planner prunes a stateful operator whose
+    * input is empty, so the per-partition commits the coordinator expects
+    * never happen and `StateStoreCommitValidationFailed` TERMINATES the
+    * query — fatal for these jobs, whose empty batches ARE the
+    * finalization/archive poll. Every foreachBatch body here consumes
+    * its whole batch (a count, a collect of the tiny run dimension, or a
+    * pinned batch whose partitions are cached whole), so the partial
+    * consumption the validation hunts for cannot happen; disable it.
     *
-    * BLAST RADIUS: the conf is session-wide (Spark offers no per-query
-    * scope for it) and is NOT restored — restoring after start would
-    * re-arm the validator against this very job's later empty batches.
-    * An application that wants the guard for its own unrelated
+    * BLAST RADIUS: the conf is session-wide and NOT restored (restoring
+    * after start would re-arm it against this job's later empty
+    * batches). An application that wants the guard for its own
     * foreachBatch queries should run these jobs on a session clone
-    * (`spark.newSession()` — build the source streams there), the same
-    * isolation pattern [[graft.queries.StreamingQueries]] uses for
-    * shuffle-partition overrides.
+    * (`spark.newSession()`, with the source streams built there).
     */
   private def allowEmptyBatches(ds: Dataset[_]): Unit =
     ds.sparkSession.conf
@@ -174,23 +169,31 @@ object PipelineJobs {
       triggerMs: Long = 100L): StreamingQuery =
     logStream(alarms.toDF(), "alarm", LogTables.alarmTable, sink, catalog, checkpoint, triggerMs)
 
-  /** The production A2 assembler (TWS) requires the RocksDB provider.
-    * Pin it ONLY for the duration of the `start()` call: a streaming
-    * query snapshots the session conf into its own cloned session at
-    * start, so the pin is captured by the new query while the owning
-    * session's conf is restored — another stream on the same session
-    * (e.g. an HDFS-backed query with an existing checkpoint) keeps its
-    * provider on restart instead of silently inheriting RocksDB.
+  /** Conf the frame-assembly queries pin for their `start()` call ONLY
+    * (a query snapshots the session conf at start, so the owning
+    * session's conf is restored and its other streams keep theirs):
+    *   - the RocksDB provider, which the TWS assembler requires;
+    *   - ONE shuffle partition, sized to the load: the assembly state is
+    *     one TTL of frames (peak 53 rows on perfbench's `chain_live`),
+    *     the reference's digitiser-aggregator is one task
+    *     (`digitiser-aggregator/src/frame/cache.rs`), and formation, the
+    *     only per-sample work, keeps the source's partitions ahead of the
+    *     shuffle. The state commit, the sink's pinned batch and its
+    *     events write then run once per micro-batch, not once per core.
+    *     The count lives in a checkpoint's offset log, so a checkpoint
+    *     created with more partitions restarts with them.
     */
-  private def withRocksDbPinned(session: SparkSession)(
+  private def withAssemblerConf(session: SparkSession)(
       start: => StreamingQuery): StreamingQuery = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = session.conf.getOption(key)
-    session.conf.set(key, graft.Sessions.RocksDBProvider)
+    val pins = Seq(
+      "spark.sql.streaming.stateStore.providerClass" -> graft.Sessions.RocksDBProvider,
+      "spark.sql.shuffle.partitions" -> "1")
+    val prior = pins.map { case (k, _) => k -> session.conf.getOption(k) }
+    pins.foreach { case (k, v) => session.conf.set(k, v) }
     try start
-    finally prior match {
-      case Some(v) => session.conf.set(key, v)
-      case None => session.conf.unset(key)
+    finally prior.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
     }
   }
 
@@ -217,7 +220,7 @@ object PipelineJobs {
     // ONE definition of the producer's wire-encode stage, shared with the
     // Kafka writer so the parquet stand-in and a broker deployment can
     // never drift
-    withRocksDbPinned(traces.sparkSession) {
+    withAssemblerConf(traces.sparkSession) {
       KafkaWiring
         .frameWireBytes(aev2)
         .writeStream
@@ -239,11 +242,9 @@ object PipelineJobs {
     *
     * The trace source is pluggable: tests inject a MemoryStream; a
     * production deployment reads `spark.readStream.format("kafka")` with
-    * the dat2 decode in front (the Kafka connector is configuration — this
-    * environment ships no broker or connector jar, so that branch stays
-    * untested here). Run intervals come from a snapshot of the live
-    * control-fed [[RunCatalog]] per micro-batch — the reference engine's
-    * run cache — and the job adds the nexus-writer's linger
+    * the dat2 decode in front. Run intervals come from a snapshot of the
+    * live control-fed [[RunCatalog]] per micro-batch — the reference
+    * engine's run cache — and the job adds the nexus-writer's linger
     * finalization: stopped generations whose linger window has passed
     * move local/ → completed/ and leave the catalog, exactly the engine's
     * poll loop (`run_engine/engine.rs:329-356`). A processing-time
@@ -252,14 +253,16 @@ object PipelineJobs {
     * with no new data (the reference polls on `--cache-poll-interval-ms`
     * the same way).
     *
-    * A checkpoint written by the earlier `flatMapGroupsWithState` assembly
-    * of this job has a different state schema and cannot be restarted
-    * here: start on a fresh checkpoint directory ([[RunCatalog.resumeFrom]]
-    * still recovers the runs from the sink layout).
+    * A checkpoint of the earlier `flatMapGroupsWithState` assembly has
+    * another state schema: start on a fresh checkpoint directory
+    * ([[RunCatalog.resumeFrom]] still recovers the runs from the sink).
     *
-    * Scale: stage 1 is shuffle-free; stage 2 shuffles once on the frame
-    * key with state bounded by TTL × frame rate; stage 3 broadcasts the
-    * run dimension and writes partition dirs directly from executors.
+    * Scale: stage 1 (decode, formation) is shuffle-free on the source's
+    * partitions; stage 2 shuffles once on the frame key into ONE
+    * partition ([[withAssemblerConf]]) with state bounded by TTL × frame
+    * rate; stage 3 broadcasts the run dimension and writes one file per
+    * plane per run and batch. A non-empty batch is one state commit and
+    * four jobs: the bounded frame collect and the three plane writes.
     */
   def traceToNexusWithLifecycle(
       traces: Dataset[TraceMessage],
@@ -283,21 +286,25 @@ object PipelineJobs {
     val dev2 = EventFormation.formEvents(traces, settings)
     val aev2 = FrameAssemblyTws.assemble(dev2, expectedDigitizers, ttlMs)
     val maintenanceSpark = traces.sparkSession
-    val query = withRocksDbPinned(traces.sparkSession) {
+    val query = withAssemblerConf(traces.sparkSession) {
       aev2.writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds"))
         .foreachBatch { (batch: Dataset[graft.schemas.AssembledFrame], batchId: Long) =>
-          // no run open: the frames drop, as the reference drops frames
-          // with no open run (`engine.rs:214-238`). Assigning against an
-          // empty run dimension would let the planner prune the stateful
-          // operator and skip this batch's state commit, so the next batch
-          // could not load its state; count() still runs the operator.
-          // Only this thread removes catalog entries, so a non-empty check
-          // holds for the snapshot below.
-          if (catalog.entries.isEmpty) batch.count()
-          else
+          // no run open: the frames drop (logged and counted), as the
+          // reference drops frames with no open run (`engine.rs:214-238`).
+          // count() runs the stateful operator, which assigning against an
+          // empty run dimension would prune, skipping the state commit the
+          // next batch loads. Only this thread removes catalog entries, so
+          // a non-empty check holds for the snapshot below.
+          if (catalog.entries.isEmpty) {
+            val dropped = batch.count()
+            if (dropped > 0L) {
+              sink.framesDroppedNoRun.addAndGet(dropped)
+              NexusSink.log.warn(s"batch $batchId: $dropped frame(s) dropped, no run open")
+            }
+          } else
             sink.writeBatch(
               RunAssignment.assignFrames(batch.toDF(), catalog.snapshot(batch.sparkSession)),
               batchId)
@@ -319,18 +326,13 @@ object PipelineJobs {
         .start()
     }
     // archiver tier (flush_to_archive.rs, polled by main.rs:101-103 on
-    // its own wall-clock interval): a MAINTENANCE THREAD, not a
-    // foreachBatch step (r15) — the r14 shape ran compaction + archive
-    // inside the data batch, so a generation's compaction rewrite
-    // (reading and re-writing its whole corpus) stalled the hot path
-    // for its full duration every poll. Completed generations are
-    // immutable and the sink's swap/recovery protocol is already
-    // multi-thread safe under moveLock (it was built for an archiver
-    // poll racing the writers), so the tier runs beside the stream
-    // exactly like the reference's separate poll loop. A maintenance
-    // failure never takes the pipeline down (same stance as
-    // flushToArchive's per-generation tolerance); the thread exits with
-    // the query.
+    // its own wall-clock interval): a MAINTENANCE THREAD beside the
+    // stream, like the reference's separate poll loop, so a compaction
+    // rewrite never stalls the hot path. Completed generations are
+    // immutable and the sink's swap/recovery protocol is multi-thread
+    // safe under moveLock. A failed pass is logged and counted in the
+    // sink's maintenanceFailures and never takes the pipeline down; the
+    // thread exits with the query.
     if (archiveIntervalMs > 0L) {
       val archiver = new Thread(
         () =>
@@ -340,7 +342,11 @@ object PipelineJobs {
               // few right-sized files instead of one per micro-batch
               if (compactBeforeArchive) sink.compactCompleted(maintenanceSpark)
               sink.flushToArchive()
-            } catch { case scala.util.control.NonFatal(_) => () }
+            } catch {
+              case scala.util.control.NonFatal(e) =>
+                sink.maintenanceFailures.incrementAndGet()
+                NexusSink.log.warn("archiver pass failed", e)
+            }
             val next = System.currentTimeMillis() + math.max(archiveIntervalMs, 10L)
             while (query.isActive && System.currentTimeMillis() < next)
               Thread.sleep(10L)
@@ -353,12 +359,10 @@ object PipelineJobs {
     query
   }
 
-  /** Maintenance (compaction + archive) threads by lifecycle query id —
-    * a pass in flight when the query stops runs to completion (the swap
-    * protocol is crash-safe, so that is always sound for the LAYOUT),
-    * but a same-process caller that stops the query and then reads the
-    * sink tiers must [[awaitMaintenance]] first or its reads race the
-    * tail of that pass.
+  /** Maintenance (compaction + archive) threads by lifecycle query id: a
+    * pass in flight when the query stops runs to completion (sound for the
+    * layout, the swap protocol being crash-safe), so a same-process caller
+    * that then reads the sink tiers must [[awaitMaintenance]] first.
     */
   private val maintenanceThreads =
     new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Thread]()

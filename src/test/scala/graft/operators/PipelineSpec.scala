@@ -157,7 +157,7 @@ class PipelineSpec extends AnyFunSuite {
       RunStart("run_b", 2000L, "muon"), // aborts run_a (no stop seen)
       RunStart("run_c", 5000L, "muon")).toDS()
     val stops = Seq(RunStop("run_b", 3000L)).toDS()
-    val runs = RunAssignment.runs(spark, starts, stops).cache()
+    val runs = RunAssignment.runs(starts, stops).cache()
     val byName = runs.collect().map(r =>
       r.getAs[String]("run_name") ->
         (r.getAs[Long]("collect_from_ns"), Option(r.getAs[java.lang.Long]("collect_until_ns")))).toMap

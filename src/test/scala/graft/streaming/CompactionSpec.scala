@@ -245,18 +245,23 @@ class CompactionSpec extends AnyFunSuite {
     val distributedDir = Files.createTempDirectory("sink-distributed").toString
     val driver = new NexusSink(driverDir)
     val distributed = new NexusSink(distributedDir, maxDriverFramesPerBatch = 0L)
+    // the largest cap still collects the batch (its bounded collect must
+    // not overflow into an empty one)
+    val uncappedDir = Files.createTempDirectory("sink-uncapped").toString
+    val uncapped = new NexusSink(uncappedDir, maxDriverFramesPerBatch = Long.MaxValue)
+    intercept[IllegalArgumentException](new NexusSink(uncappedDir, maxDriverFramesPerBatch = -1L))
     Seq(0, 1).foreach { b =>
-      driver.writeBatch(assignedBatch(b), batchId = b.toLong)
-      distributed.writeBatch(assignedBatch(b), batchId = b.toLong)
+      Seq(driver, distributed, uncapped).foreach(_.writeBatch(assignedBatch(b), batchId = b.toLong))
     }
     Seq("events", "frames", "periods").foreach { table =>
       val expected = rowsOf(s"$driverDir/local/$table")
       assert(expected.nonEmpty, table)
       assert(rowsOf(s"$distributedDir/local/$table") == expected, table)
+      assert(rowsOf(s"$uncappedDir/local/$table") == expected, table)
     }
     // event_index carries across batches: batch 1's first frame starts
-    // after batch 0's three events, on both paths
-    Seq(driverDir, distributedDir).foreach { dir =>
+    // after batch 0's three events, on every path
+    Seq(driverDir, distributedDir, uncappedDir).foreach { dir =>
       val index = spark.read.parquet(s"$dir/local/frames")
         .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
       assert(index == Seq(0L, 2L, 3L, 5L), dir)

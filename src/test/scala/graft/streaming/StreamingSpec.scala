@@ -521,7 +521,8 @@ class StreamingSpec extends AnyFunSuite {
     val catalog = new RunCatalog
     def eventCount = countAt(s"$outDir/local/events")
     val input = MemoryStream[TraceMessage]
-    val query = lifecycleJob(input, new NexusSink(outDir), catalog,
+    val sink = new NexusSink(outDir)
+    val query = lifecycleJob(input, sink, catalog,
       Files.createTempDirectory("no_run_ckpt").toString)
     try {
       // a complete frame while the catalog is empty: dropped, but its
@@ -533,6 +534,7 @@ class StreamingSpec extends AnyFunSuite {
       while (!frameBatchDone && query.isActive && System.currentTimeMillis() < deadline)
         Thread.sleep(100L)
       assert(frameBatchDone, s"the first frame's batch never finished: ${query.exception}")
+      assert(sink.framesDroppedNoRun.get === 1L, "the dropped frame is counted")
       catalog.update(Iterator(RunInterval("run_late", meta(0).timestampNs - 1L, None)))
       input.addData(traceMsg(0, 1), traceMsg(1, 1))
       val deadline2 = System.currentTimeMillis() + 20000L
@@ -542,6 +544,100 @@ class StreamingSpec extends AnyFunSuite {
       // only the second frame: 2 digitisers × 2 channels × 2 events
       assert(eventCount === 8)
     } finally query.stop()
+  }
+
+  test("lifecycle job: one state partition, one file per plane per batch, one task per " +
+    "post-shuffle stage, at most 4 jobs per non-empty batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("one_partition").toString
+    val ckpt = Files.createTempDirectory("one_partition_ckpt").toString
+    val catalog = new RunCatalog
+    catalog.update(Iterator(RunInterval("run_one", meta(0).timestampNs - 1L, None)))
+    val input = MemoryStream[TraceMessage]
+    // (query id, reads a shuffle, tasks) of every stage submitted
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId"))).foreach {
+          id => stages.add((id, e.stageInfo.parentIds.nonEmpty, e.stageInfo.numTasks))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (queryId, work) = try graft.obs.Obs.measured(spark, "one-partition-lock") {
+      val query = lifecycleJob(input, new NexusSink(outDir), catalog, ckpt)
+      // two frames per batch, so a batch spread over several partitions
+      // would show as several tasks and files
+      def feed(frames: Long*): Unit = {
+        val fed = input.addData(frames.flatMap(f => Seq(traceMsg(0, f), traceMsg(1, f))): _*).json
+        val deadline = System.currentTimeMillis() + 20000L
+        while (!query.recentProgress.exists(_.sources.exists(_.endOffset == fed)) &&
+          query.isActive && System.currentTimeMillis() < deadline) Thread.sleep(100L)
+      }
+      try { feed(0L, 1L); feed(2L, 3L) } finally query.stop()
+      query.id.toString
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // 4 frames × 2 digitisers × 2 channels × 2 events
+    assert(countAt(s"$outDir/local/events") === 32)
+
+    val partitions = Paths.get(ckpt, "state", "0").toFile.list().filter(_.forall(_.isDigit))
+    assert(partitions.toSeq === Seq("0"), "one state partition")
+
+    for (plane <- Seq("events", "frames", "periods")) {
+      val gen = Paths.get(outDir, "local", plane, "run_name=run_one").toFile.listFiles().head
+      val batches = gen.listFiles().filter(_.getName.startsWith("batch_id="))
+      assert(batches.length === 2, s"$plane: one dir per non-empty batch")
+      for (b <- batches)
+        assert(b.list().count(_.endsWith(".parquet")) === 1, s"$plane ${b.getName}: one file")
+    }
+
+    val postShuffle = stages.toArray(Array.empty[(String, Boolean, Int)]).filter(s => s._1 == queryId && s._2)
+    assert(postShuffle.nonEmpty && postShuffle.forall(_._3 == 1),
+      s"post-shuffle stage tasks: ${postShuffle.map(_._3).mkString(",")}")
+
+    val batches = work.nonEmptyBatches
+    assert(batches.length === 2)
+    assert(batches.forall { case (_, b) => b.jobs >= 1 && b.jobs <= 4 },
+      s"jobs per non-empty batch: ${batches.map(_._2.jobs).mkString(",")}")
+  }
+
+  test("lifecycle job: a failed archive move is logged and counted, not swallowed") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val outDir = Files.createTempDirectory("archive_fail").toString
+    // a regular file where the archive tier's directory must go
+    Files.writeString(Paths.get(outDir, "archive"), "not a directory")
+    val sink = new NexusSink(outDir)
+    val catalog = new RunCatalog
+    val startNs = meta(0).timestampNs - 1L
+    catalog.update(Iterator(RunInterval("run_arch", startNs, None)))
+    val input = MemoryStream[TraceMessage]
+    val query = PipelineJobs.traceToNexusWithLifecycle(
+      input.toDS(),
+      graft.dsp.DetectorSettings(graft.dsp.FixedThreshold(5.0, 1, 0)),
+      expectedDigitizers = Seq(0, 1),
+      sink = sink,
+      catalog = catalog,
+      ttlMs = 200L,
+      checkpoint = Files.createTempDirectory("archive_fail_ckpt").toString,
+      lingerMs = 1000L,
+      nowNs = () => meta(0).timestampNs + 60L * 1000000000L,
+      archiveIntervalMs = 20L)
+    def await(pred: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 20000L
+      while (!pred && query.isActive && System.currentTimeMillis() < deadline) Thread.sleep(100L)
+    }
+    try {
+      input.addData(traceMsg(0, 0), traceMsg(1, 0))
+      await(countAt(s"$outDir/local/events") == 8)
+      catalog.update(Iterator(RunInterval("run_arch", startNs, Some(meta(0).timestampNs + 1L))))
+      await(sink.maintenanceFailures.get > 0L)
+      assert(sink.maintenanceFailures.get > 0L, "the failed archive move is counted")
+      assert(query.isActive, s"query died: ${query.exception}")
+      // the generation waits in completed/ for the next poll
+      assert(countAt(s"$outDir/completed/events") === 8)
+    } finally { query.stop(); PipelineJobs.awaitMaintenance(query) }
   }
 
   test("nexus sink: per-run layout, linger finalisation, crash resume") {
