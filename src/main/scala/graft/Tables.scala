@@ -66,21 +66,28 @@ object Tables {
 object Sessions {
 
   /** Spark's bundled RocksDB state store provider (rocksdbjni ships with
-    * the distribution). The default HDFS-backed store keeps every
-    * operator's keyed state on the JVM heap — fine for bounded test
-    * drains, a scale-killer for 100 TB keyed state (dedup keys, session
-    * windows): state competes with execution memory and full snapshots
-    * rewrite per checkpoint. RocksDB spills state to local disk with
-    * incremental changelog checkpointing.
+    * the distribution); `transformWithState` requires it.
     */
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Session-level opt-in: `graft.stateStore = rocksdb`. Read by
-    * [[stateStoreConfigure]] on the session (or clone) that runs the
-    * stateful stream; also honored from the `GRAFT_STATE_STORE` env var
-    * so deployments flip it without code.
+  /** The one state-store profile, for frame assembly and every other
+    * stateful stream whose keys live about one TTL and then die: RocksDB
+    * with full-snapshot checkpoints and compaction on each commit. The
+    * frame-soak A/B (SCALE.md r13) measured changelog checkpointing
+    * pinning RocksDB delete-tombstones — per-batch cost grew LINEARLY at
+    * constant live state as timer scans and map seeks read through them —
+    * while this profile stayed FLAT to 10⁷ frames. State is one TTL
+    * window's keys, so the snapshot is tiny and the compaction bounded.
+    * A deployment that wants RocksDB for another stream sets Spark's own
+    * `spark.sql.streaming.stateStore.providerClass`.
     */
+  val StateStoreProfile: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDBProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false",
+    "spark.sql.streaming.stateStore.rocksdb.compactOnCommit" -> "true")
+
+  /** Read by nothing; perfbench's chain session still sets it. */
   val StateStoreKey = "graft.stateStore"
 
   /** Route recreatable scratch I/O (bounded-drain checkpoints, shuffle
@@ -107,63 +114,13 @@ object Sessions {
     else None
   }
 
-  /** Apply the opted-in state store provider to `s` (a fresh session or
-    * clone). No-op under the default; idempotent.
+  /** Apply [[StateStoreProfile]] to `s` (a fresh session or clone);
+    * idempotent.
     */
   def stateStoreConfigure(s: SparkSession): SparkSession = {
-    if (rocksDbChosen(s.conf.getOption, sys.env)) {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
-      if (highChurnChosen(s.conf.getOption, sys.env)) {
-        // HIGH-CHURN profile (frame assembly and anything else whose
-        // keys live ~1 TTL then die): the frame-soak A/B (SCALE.md r13)
-        // measured changelog checkpointing pinning RocksDB
-        // delete-tombstones — per-batch cost grew LINEARLY at constant
-        // live state as timer scans and map seeks read through them —
-        // while full-snapshot checkpoints + per-commit compaction stay
-        // FLAT (~41k vs ~7k-and-falling msgs/s). State is one TTL
-        // window's keys, so the snapshot is tiny and the compaction
-        // bounded.
-        s.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "false")
-        s.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "true")
-      } else {
-        // default: LARGE-state profile — checkpoint cost proportional to
-        // the delta, not the state
-        s.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      }
-    }
+    StateStoreProfile.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
-
-  /** The RocksDB opt-in ([[stateStoreConfigure]]): the [[StateStoreKey]]
-    * session conf, else the `GRAFT_STATE_STORE` env var; `rocksdb` is
-    * the one accepted value.
-    */
-  private[graft] def rocksDbChosen(conf: String => Option[String], env: Map[String, String]): Boolean =
-    confOrEnv(conf, StateStoreKey, env, "GRAFT_STATE_STORE", default = false)("rocksdb" -> true)
-
-  /** Opt-in high-churn RocksDB profile ([[stateStoreConfigure]]):
-    * `graft.stateStore.highChurn` session conf, else the
-    * `GRAFT_STATE_STORE_HIGH_CHURN` env var.
-    */
-  private[graft] def highChurnChosen(conf: String => Option[String], env: Map[String, String]): Boolean =
-    confOrEnv(conf, "graft.stateStore.highChurn", env, "GRAFT_STATE_STORE_HIGH_CHURN", default = false)(
-      OnOff: _*)
-
-  /** A knob read from the session conf `key` when set there, else from
-    * the env var `name`; a rejected value names where it came from.
-    */
-  private def confOrEnv[A](
-      conf: String => Option[String],
-      key: String,
-      env: Map[String, String],
-      name: String,
-      default: A)(accepted: (String, A)*): A =
-    conf(key) match {
-      case Some(v) => choiceKnob(Map(key -> v), key, default)(accepted: _*)
-      case None => choiceKnob(env, name, default)(accepted: _*)
-    }
 
   /** A session on `s`'s SparkContext with its own session conf
     * (`newSession()`), keeping what the fork would otherwise drop and
@@ -198,14 +155,6 @@ object Sessions {
   private[graft] val OnOff: Seq[(String, Boolean)] =
     Seq("1" -> true, "true" -> true, "0" -> false, "false" -> false)
 
-  /** A boolean env knob as a Spark conf value: `default` when unset,
-    * `true`/`false` as given, and anything else fails the session build
-    * with a message naming the variable (rather than a Spark conf parse
-    * error far from it).
-    */
-  private[graft] def boolKnob(env: Map[String, String], name: String, default: Boolean): String =
-    choiceKnob(env, name, default.toString)("true" -> "true", "false" -> "false")
-
   /** An integer env knob: `default` when unset, the value when it parses
     * as an integer ≥ `min`, and anything else throws with a message
     * naming the variable.
@@ -232,27 +181,11 @@ object Sessions {
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // Scale-adaptive partition sizing knobs (guide §2.2), parameterised
-      // for deployment A/Bs; measured r17 (OPTIMIZATION_r17.md §AQE
-      // cached-plan A/B):
-      // - cached-plan repartitioning lets AQE coalesce the tiny shuffles
-      //   UNDER a .persist() — without it a cached bounded aggregate
-      //   keeps one sub-MB partition per shuffle partition and every
-      //   downstream stage pays that task count. The r17 sweep read
-      //   AMBIGUOUS at sf0.1 (graph loops ~10% faster ON in paired runs;
-      //   the one quiet full-suite comparison read worse ON), so the
-      //   default stays Spark's (false) and bounded caches coalesce
-      //   explicitly at their persist sites instead; flip per deployment.
-      .config(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        boolKnob(sys.env, "GRAFT_AQE_CACHED_REPART", default = false))
-      // - parallelismFirst=true (Spark default) targets partition count ≈
-      //   cores for small shuffles; false targets advisoryPartitionSize
-      //   (fewer, larger partitions — the §2.2 posture). Kept env-
-      //   flippable because the right answer is deployment-dependent.
-      .config(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        boolKnob(sys.env, "GRAFT_AQE_PARALLELISM_FIRST", default = true))
+      // AQE's partition sizing stays at Spark's defaults
+      // (parallelismFirst=true, canChangeCachedPlanOutputPartitioning=
+      // false): the r17 A/B read ambiguous at sf0.1 (OPTIMIZATION_r17.md
+      // §AQE cached-plan A/B). A deployment or sweep sets those Spark
+      // confs itself (SparkConf, -Dspark.sql.…).
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
@@ -267,10 +200,6 @@ object Sessions {
       builder.config("spark.local.dir", shm.resolve("graft-spark-local").toString))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // every session built here honors the state-store opt-in, so the
-    // PRODUCTION streams (PipelineJobs, NexusSink maintenance) get
-    // RocksDB from GRAFT_STATE_STORE alone — not only the bounded test
-    // drains (which re-apply it across their clones)
-    stateStoreConfigure(spark)
+    spark
   }
 }

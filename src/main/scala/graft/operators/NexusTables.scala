@@ -27,37 +27,18 @@ object NexusTables {
     * (aev2 layout from [[FrameAssembly.assemble]]) with a `run_name`
     * column and `run_start_ns` per frame (from [[RunAssignment]]).
     */
-  def frameTable(assignedFrames: DataFrame): DataFrame =
-    frameTable(assignedFrames, Map.empty)
-
-  /** As [[frameTable]], with a per-run base offset added to `event_index` —
-    * the running event count already persisted for the run by earlier
-    * micro-batches (`event_data.rs:196` defines event_index as cumulative
-    * across the whole run file, not per append).
-    */
-  def frameTable(assignedFrames: DataFrame, baseOffsets: Map[(String, Long), Long]): DataFrame = {
+  def frameTable(assignedFrames: DataFrame): DataFrame = {
     // a run's identity is (run_name, run_start_ns): generations of a
     // reused name each restart their own event_index at 0
     val w = Window
       .partitionBy(col("run_name"), col("run_start_ns"))
       .orderBy(col("metadata.timestampNs"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val base =
-      if (baseOffsets.isEmpty) lit(0L)
-      else {
-        val byKey = baseOffsets.map { case ((n, s), v) => s"$n@$s" -> v }
-        coalesce(
-          element_at(
-            typedLit(byKey),
-            concat(col("run_name"), lit("@"), col("run_start_ns").cast("string"))),
-          lit(0L))
-      }
     assignedFrames.select(
       col("run_name"),
       col("run_start_ns"),
       (col("metadata.timestampNs") - col("run_start_ns")).as("event_time_zero"),
-      (coalesce(sum(size(col("time")).cast("long")).over(w), lit(0L)) + base)
-        .as("event_index"),
+      coalesce(sum(size(col("time")).cast("long")).over(w), lit(0L)).as("event_index"),
       col("metadata.periodNumber").as("period_number"),
       col("metadata.frameNumber").as("frame_number"),
       col("complete").as("frame_complete"),

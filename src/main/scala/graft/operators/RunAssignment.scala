@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.StructField
   *   - a RunStop applies to the latest run with a matching name and no
   *     stop yet (`engine.rs:290-309`); stop_time == 0 means "stop NOW"
   *     and MUST be pre-resolved by the caller to a concrete timestamp
-  *     (e.g. via [[resolveStopNow]], or the stream path's ingest-time
-  *     resolution in [[graft.streaming.RunStream]]) — an unresolved
+  *     (the stream path resolves it at ingest time in
+  *     [[graft.streaming.RunStream]]) — an unresolved
   *     0-stop fails the strict `stop_ns > collect_from_ns` pairing
   *     filter below and is dropped, leaving the run open;
   *   - a new RunStart aborts an unstopped predecessor (`engine.rs:199-204`):
@@ -31,18 +31,10 @@ import org.apache.spark.sql.types.StructField
   */
 object RunAssignment {
 
-  /** Resolve "stop NOW" markers (stopTimeMs == 0,
-    * `run_parameters.rs:94-127`) to a caller-supplied wall-clock before
-    * pairing — [[runs]] drops unresolved 0-stops by design.
-    */
-  def resolveStopNow(stops: Dataset[RunStop], nowMs: Long): Dataset[RunStop] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[RunStop]
-    stops.map(s => if (s.stopTimeMs == 0L) s.copy(stopTimeMs = nowMs) else s)
-  }
-
   /** Pair starts with stops into run intervals [collect_from_ns,
     * collect_until_ns (nullable)), applying latest-match stop pairing and
-    * abort-on-restart. 0-stops must be pre-resolved ([[resolveStopNow]]).
+    * abort-on-restart. 0-stops ("stop NOW", `run_parameters.rs:94-127`)
+    * must be pre-resolved to a wall-clock; unresolved ones are dropped.
     */
   def runs(starts: Dataset[RunStart], stops: Dataset[RunStop]): DataFrame = {
     val st = starts

@@ -298,16 +298,18 @@ object RobustQueries2 {
   val hitsSql: String = {
     val rounds = (1 to 4)
       .map { r =>
-        s"""ar$r AS (SELECT e.item,
+        // MATERIALIZED: each round is read twice, and DuckDB would
+        // otherwise re-evaluate every earlier round for each read
+        s"""ar$r AS MATERIALIZED (SELECT e.item,
                         list_reduce(list_sort(list(h.h)), (a, b) -> a + b) AS a_raw
                  FROM edges e JOIN h${r - 1} h ON e.user_id = h.user_id
                  GROUP BY 1),
-         a$r AS (SELECT item, a_raw / (SELECT max(a_raw) FROM ar$r) AS a FROM ar$r),
-         hr$r AS (SELECT e.user_id,
+         a$r AS MATERIALIZED (SELECT item, a_raw / (SELECT max(a_raw) FROM ar$r) AS a FROM ar$r),
+         hr$r AS MATERIALIZED (SELECT e.user_id,
                         list_reduce(list_sort(list(a.a)), (x, y) -> x + y) AS h_raw
                  FROM edges e JOIN a$r a ON e.item = a.item
                  GROUP BY 1),
-         h$r AS (SELECT user_id, h_raw / (SELECT max(h_raw) FROM hr$r) AS h FROM hr$r)"""
+         h$r AS MATERIALIZED (SELECT user_id, h_raw / (SELECT max(h_raw) FROM hr$r) AS h FROM hr$r)"""
       }
       .mkString(",\n       ")
     s"""WITH edges AS (

@@ -22,8 +22,9 @@ object StreamingQueries {
     * dominates, so they run in a session fork with few partitions (a
     * production deployment sizes this to state-key cardinality instead).
     * One definition so every bounded-drain query stays tuned together.
-    * `rocksDb` forces the RocksDB provider, which `transformWithState`
-    * requires.
+    * `rocksDb` applies the one state-store profile
+    * ([[graft.Sessions.stateStoreConfigure]]): `transformWithState`
+    * requires the RocksDB provider.
     */
   private def boundedDrainSession(s0: SparkSession, rocksDb: Boolean = false): SparkSession = {
     val s = graft.Sessions.fork(s0)
@@ -33,14 +34,7 @@ object StreamingQueries {
     // machinery, not per-partition store commits, so fewer partitions
     // only costs parallelism.
     s.conf.set("spark.sql.shuffle.partitions", "8")
-    // newSession() drops runtime conf — carry the caller's state-store
-    // choice across the fork, then apply it (RocksDB when opted in;
-    // see Sessions.stateStoreConfigure and SCALE.md §Streaming)
-    s0.conf.getOption(graft.Sessions.StateStoreKey)
-      .foreach(s.conf.set(graft.Sessions.StateStoreKey, _))
-    graft.Sessions.stateStoreConfigure(s)
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", graft.Sessions.RocksDBProvider)
+    if (rocksDb) graft.Sessions.stateStoreConfigure(s)
     s
   }
 
@@ -582,9 +576,8 @@ object StreamingQueries {
     *
     * Scale: state is ONE row per distinct band key within the watermark
     * horizon (here sized past the bounded feed so streaming ≡ global
-    * batch dedup; production trims it to the dedup window, and the
-    * RocksDB provider opt-in moves the key set off-heap —
-    * RocksDBStateStoreSpec locks provider parity). No shuffle beyond
+    * batch dedup; production trims it to the dedup window, and Spark's
+    * RocksDB provider conf moves the key set off-heap). No shuffle beyond
     * the one exchange onto band keys; no pairwise joins anywhere.
     */
   def streamMinhashDedup(s0: SparkSession, dir: String): DataFrame = {

@@ -188,10 +188,11 @@ object FrameAssemblyTws {
     }
   }
 
-  /** Assemble dev2 event-list messages into frames. Requires the RocksDB
-    * state-store provider on the running session (`transformWithState`
-    * contract) — [[graft.Sessions.stateStoreConfigure]] or an explicit
-    * providerClass conf.
+  /** Assemble dev2 event-list messages into frames. The query must start
+    * under the RocksDB provider (`transformWithState` contract): the
+    * [[PipelineJobs]] jobs pin [[graft.Sessions.StateStoreProfile]] for
+    * their `start()`, and any other caller applies it with
+    * [[graft.Sessions.stateStoreConfigure]].
     */
   def assemble(
       dev2: Dataset[EventListMessage],

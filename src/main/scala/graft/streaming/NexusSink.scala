@@ -35,22 +35,12 @@ import scala.jdk.CollectionConverters._
   * `partitionBy(run_name, run_start_ns, batch_id)` job — executors
   * write partition dirs directly, the driver never touches event rows.
   * The frame and period planes are DERIVED driver-side from one narrow
-  * per-frame scalar pass (bounded by `maxDriverFramesPerBatch`, with a
-  * fully distributed fallback above it), so the batch's corpus is
-  * scanned by exactly one write job instead of three.
+  * per-frame scalar pass (9 scalars per frame, far less than the batch's
+  * cached events), so the batch's corpus is scanned by exactly one write
+  * job instead of three.
   */
-final class NexusSink(
-    outputDir: String,
-    scratchStaleMs: Long = 15L * 60 * 1000,
-    // frames-per-micro-batch bound for the driver-derived frame/period
-    // planes (see writeBatchCached): above it the batch falls back to
-    // the fully distributed writes. Frames per batch is an
-    // ENGINE-CONTROLLED quantity (maxOffsetsPerTrigger & co.), so the
-    // default covers any sanely configured trigger with margin; the
-    // ~80 B/frame driver footprint at the cap is ~40 MB transient.
-    maxDriverFramesPerBatch: Long = 500000L)
+final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     extends Serializable {
-  require(maxDriverFramesPerBatch >= 0L, s"maxDriverFramesPerBatch must be >= 0, got $maxDriverFramesPerBatch")
 
   private val local = Paths.get(outputDir, "local")
   private val completed = Paths.get(outputDir, "completed")
@@ -273,10 +263,10 @@ final class NexusSink(
     // so formation, assembly and the state commit upstream run exactly
     // once — and the frame plane (event_index cumsum), the periods plane
     // and the offset-cache counts are all derived driver-side from it.
-    // Bounded: one row of 9 scalars per ASSEMBLED FRAME, and the collect
-    // stops at [[maxDriverFramesPerBatch]] + 1 rows, so an over-cap batch
-    // (a giant backlog-replay trigger) falls back to the fully
-    // distributed writes before more than the cap reaches the driver.
+    // One row of 9 scalars (~80 B) per ASSEMBLED FRAME, while the batch's
+    // one cached partition already holds ≥ 20 B per event (~2.6 KB for a
+    // 128-event frame); `spark.driver.maxResultSize` fails the collect
+    // closed beyond that.
     val frameMeta: Array[NexusSink.FrameMeta] = cached
       .select(
         col("run_name"),
@@ -288,7 +278,6 @@ final class NexusSink(
         col("metadata.running"),
         col("metadata.vetoFlags"),
         size(col("time")).cast("long"))
-      .limit(math.min(maxDriverFramesPerBatch, Int.MaxValue - 1L).toInt + 1)
       .collect()
       .map(r => NexusSink.FrameMeta(
         r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -297,10 +286,6 @@ final class NexusSink(
     // empty micro-batch (the lifecycle job's finalization poll): nothing
     // to write, and dynamic overwrite of zero partitions is a no-op
     if (frameMeta.isEmpty) return
-    if (frameMeta.length > maxDriverFramesPerBatch) {
-      writeBatchDistributed(spark, cached, batchId)
-      return
-    }
     val batchCounts: Map[(String, Long), Long] = frameMeta
       .groupBy(m => (m.runName, m.runStartNs))
       .map { case (k, ms) => k -> ms.iterator.map(_.nEvents).sum }
@@ -311,8 +296,7 @@ final class NexusSink(
     }
     // frame plane rows, driver-derived: per-generation sort by frame
     // timestamp (the same ordering NexusTables.frameTable's window
-    // declares) and a running cumsum seeded from the offset cache —
-    // identical schema and partition layout to the distributed plane
+    // declares) and a running cumsum seeded from the offset cache
     val frameRows = new java.util.ArrayList[org.apache.spark.sql.Row](frameMeta.length)
     frameMeta
       .groupBy(m => (m.runName, m.runStartNs))
@@ -382,44 +366,6 @@ final class NexusSink(
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("run_name", "run_start_ns", "batch_id")
       .parquet(local.resolve(table).toString)
-
-  /** The r13-shaped fully distributed write path, kept as the fallback
-    * for batches larger than [[maxDriverFramesPerBatch]] (e.g. one giant
-    * backlog-replay trigger): per-run counts from a bounded aggregate,
-    * then distributed events/frames/periods plane writes. Identical
-    * on-disk layout to the driver-derived path.
-    */
-  private def writeBatchDistributed(
-      spark: SparkSession,
-      cached: DataFrame,
-      batchId: Long): Unit = {
-    // bounded by |runs in batch| — the run catalog is a tiny dimension
-    val batchCounts: Map[(String, Long), Long] = cached
-      .groupBy(col("run_name"), col("run_start_ns"))
-      .agg(sum(size(col("time")).cast("long")).as("n_events"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
-      .toMap
-    val newRuns = batchCounts.keySet.diff(eventBase.keySet)
-    if (newRuns.nonEmpty) {
-      val onDisk = onDiskEventCounts(spark, newRuns, batchId)
-      newRuns.foreach(r => eventBase(r) = onDisk.getOrElse(r, 0L))
-    }
-    writePlane(NexusTables.eventTable(cached), "events", batchId)
-    writePlane(NexusTables.frameTable(cached, eventBase.toMap), "frames", batchId)
-    writePlane(
-      cached
-        .groupBy(
-          col("run_name"),
-          col("run_start_ns"),
-          col("metadata.periodNumber").as("period_number"))
-        .agg(
-          count(lit(1)).as("n_frames"),
-          sum(size(col("time")).cast("long")).as("n_events")),
-      "periods",
-      batchId)
-    batchCounts.foreach { case (r, n) => eventBase(r) = eventBase(r) + n }
-  }
 
   /** Write one micro-batch of run-assigned, per-sample-expanded log rows
     * ([[graft.operators.LogTables]] output) into a per-run log table —
@@ -836,10 +782,6 @@ final class NexusSink(
     Files.deleteIfExists(src)
   }
 
-  /** K6 crash resume: run names with data still on disk under local/. */
-  def resumeRunNames(): Seq[String] =
-    resumeRunGenerations().map(_._1).distinct.sorted
-
   /** K6 crash resume, generation-level: every (run_name, run_start_ns,
     * stop_ns?) with data still under local/ — the runs a restarted
     * engine must reopen (the reference re-extracts run parameters from
@@ -973,8 +915,8 @@ object NexusSink {
       nEvents: Long)
 
   /** Schema of the driver-derived frame plane (NexusTables.frameTable's
-    * column order and types; [[writePlane]] appends batch_id) — the
-    * driver-derived and distributed paths must stay byte-compatible.
+    * column order and types; [[writePlane]] appends batch_id), so the
+    * sink's plane and the batch frame table stay byte-compatible.
     */
   private val frameplaneSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._

@@ -172,7 +172,9 @@ object PipelineJobs {
   /** Conf the frame-assembly queries pin for their `start()` call ONLY
     * (a query snapshots the session conf at start, so the owning
     * session's conf is restored and its other streams keep theirs):
-    *   - the RocksDB provider, which the TWS assembler requires;
+    *   - the one state-store profile ([[graft.Sessions.StateStoreProfile]]:
+    *     RocksDB, which the TWS assembler requires, with full snapshots
+    *     and compaction on commit);
     *   - ONE shuffle partition, sized to the load: the assembly state is
     *     one TTL of frames (peak 53 rows on perfbench's `chain_live`),
     *     the reference's digitiser-aggregator is one task
@@ -185,9 +187,7 @@ object PipelineJobs {
     */
   private def withAssemblerConf(session: SparkSession)(
       start: => StreamingQuery): StreamingQuery = {
-    val pins = Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> graft.Sessions.RocksDBProvider,
-      "spark.sql.shuffle.partitions" -> "1")
+    val pins = graft.Sessions.StateStoreProfile :+ ("spark.sql.shuffle.partitions" -> "1")
     val prior = pins.map { case (k, _) => k -> session.conf.getOption(k) }
     pins.foreach { case (k, v) => session.conf.set(k, v) }
     try start

@@ -89,6 +89,53 @@ class DocLintSpec extends AnyFunSuite {
       "materialise through Reuse.pin/cut/free, not Spark directly:\n" + offenders.mkString("\n"))
   }
 
+  /** Every env var and `graft.*`/`spark.graft.*` conf key `src/main`
+    * reads, each with the reason it stays. An unlisted knob fails the
+    * build, and so does a listed one nothing reads any more, so the list
+    * only shrinks as knobs are deleted.
+    */
+  private val knobs: Map[String, String] = Map(
+    "SPARK_GRAFT_CPUS" -> "Bench, Verify and PlanDump size their session to the host",
+    "SPARK_GRAFT_SF_DIR" -> "Bench and PlanDump read the scale factor being measured",
+    "SPARK_GRAFT_GATE" -> "Bench skips its quiet-host gate on a host known to be shared",
+    "SPARK_GRAFT_GATE_TRIES" -> "how many times Bench's gate waits for a quiet host",
+    "SPARK_GRAFT_GATE_SLEEP_SEC" -> "the wait between Bench's gate tries",
+    "SPARK_GRAFT_PASSES" -> "one Bench pass for family A/Bs, two for a recorded board",
+    "SPARK_GRAFT_ONLY" -> "Bench runs a named family for A/Bs",
+    "SPARK_GRAFT_SKIP" -> "Bench leaves named queries out, recorded in its JSON",
+    "SPARK_GRAFT_SWEEP" -> "Bench's big-SF sweep drops the by-contract quadratics",
+    "SPARK_GRAFT_BENCH_OUT" -> "where Bench writes its per-query JSON",
+    "GRAFT_TMPFS_SCRATCH" -> "scratch I/O on tmpfs (SCALE.md r9); off where /dev/shm is small",
+    "GRAFT_SPATIAL_UNITS" -> "the spatial extent of the sf1 constant-density scale study",
+    "graft.stateStore" -> "read by nothing; perfbench sets it",
+    "graft.runAssignment.maxRuns" -> "the fail-closed cap on the collected run dimension",
+    "spark.graft.cc.localFinishMaxEdges" -> "connected components' single-task finish budget",
+    "spark.graft.bitmapCountDistinct.enabled" -> "the opt-in bitmap count(distinct) rewrite")
+
+  test("every env var and graft conf key src/main reads is listed with its reason") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val envName = "\"([A-Z][A-Z0-9]*(?:_[A-Z0-9]+)+)\"".r
+    // a conf key, not a class or logger name (whose last segment is
+    // capitalised)
+    val confKey = "\"((?:spark\\.)?graft(?:\\.[A-Za-z0-9_]+)*\\.[a-z][A-Za-z0-9_]*)\"".r
+    val found = (for {
+      f <- java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      if f.toString.endsWith(".scala")
+      line <- read(f.toString).split("\n")
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+      name <- envName.findAllMatchIn(code).map(_.group(1)).filter(n =>
+        n.contains("GRAFT") || code.contains("sys.env") || code.contains("getenv")) ++
+        confKey.findAllMatchIn(code).map(_.group(1))
+    } yield name).toSet
+    assert(found.nonEmpty)
+    val unlisted = found.diff(knobs.keySet)
+    assert(unlisted.isEmpty,
+      s"src/main reads knobs with no listed reason: ${unlisted.toSeq.sorted.mkString(", ")}")
+    val stale = knobs.keySet.diff(found)
+    assert(stale.isEmpty, s"listed knobs nothing reads any more: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
   test("README.md carries the current query/oracle counts") {
     val readme = read("README.md")
     val want = s"currently $total queries, $oracled with\n  exact DuckDB oracles"

@@ -141,12 +141,13 @@ class WireCodecsSpec extends AnyFunSuite {
     val dat2Buf = WireCodecs.encodeDat2(
       TraceMessage(1, meta(), 1000000000L, Array(ChannelTrace(0L, Array(1, 2, 3)))))
     val garbage = Array[Byte](1, 2, 3) // too short for an identifier
-    val corrupt = {
-      val b = WireCodecs.encodeDev2(valid.head)
-      // valid identifier, destroyed root offset → decode throws → malformed
-      b(0) = 0x7f.toByte; b(1) = 0x7f.toByte; b(2) = 0x7f.toByte; b(3) = 0x7f.toByte
-      b
+    // valid identifier, destroyed root offset → decode throws → malformed
+    def brokenRoot(b: Array[Byte]): Array[Byte] = {
+      val c = b.clone()
+      (0 until 4).foreach(i => c(i) = 0x7f.toByte)
+      c
     }
+    val corrupt = brokenRoot(WireCodecs.encodeDev2(valid.head))
     val lengthBomb = {
       // valid identifier and structure, then a vector length field forged
       // to ~2^31 — must land in "malformed" as a caught decode error, not
@@ -159,27 +160,49 @@ class WireCodecsSpec extends AnyFunSuite {
       bb.putInt(vec, Int.MaxValue)
       b
     }
-    val raw = (valid.map(WireCodecs.encodeDev2) ++
-      Seq(dat2Buf, garbage, corrupt, null, lengthBomb)).toDS()
-
-    // batch path: the named observe() metrics capture the drop taxonomy
-    // map-side (read back through queryExecution after the action)
-    val decoded = graft.streaming.WireIngest.dev2FromBinary(raw)
-    val out = decoded.collect()
-    assert(out.map(_.digitizerId).sorted.toSeq === Seq(0, 1, 2, 3))
-    assert(out.forall(_.time.toSeq == Seq(1L, 2L)))
-    val m = decoded.queryExecution.observedMetrics("wire_ingest")
-    assert(m.getAs[Long]("n_messages") === 9L)
-    assert(m.getAs[Long]("n_ok") === 4L)
-    assert(m.getAs[Long]("n_foreign") === 3L) // dat2 + short garbage + null payload
-    assert(m.getAs[Long]("n_malformed") === 2L) // corrupt root + length bomb
+    // batch path, one row per routed codec: the named observe() metrics
+    // capture the drop taxonomy map-side (read back through
+    // queryExecution after the action). Every codec sees the same three
+    // foreign payloads (dat2 + short garbage + null payload); its
+    // malformed buffers keep the identifier over a broken body. The
+    // survivors' key column must be exactly the valid messages' keys.
+    val logs = Seq(
+      LogData("pv_a", 1700000000000000001L, "Double", 1.5, Array.empty),
+      LogData("pv_b", 1700000000000000002L, "ArrayInt", 0.0, Array(1.0, 2.0)))
+    val envs = Seq("se_a", "se_b", "se_c").map(n => SampleEnvLog(
+      name = n, channel = 1, packetTimestampNs = 1700000000000000005L,
+      timeDelta = 1000.0, timestampLocation = "Start",
+      values = Array(1.0, 2.0), timestamps = Array.empty, messageCounter = 7L))
+    case class Route(
+        observeName: String,
+        ok: Seq[Array[Byte]],
+        malformed: Seq[Array[Byte]],
+        decode: org.apache.spark.sql.Dataset[Array[Byte]] => org.apache.spark.sql.DataFrame,
+        key: String,
+        keys: Seq[Any])
+    val routes = Seq(
+      Route("wire_ingest", valid.map(WireCodecs.encodeDev2), Seq(corrupt, lengthBomb),
+        graft.streaming.WireIngest.dev2FromBinary(_).toDF(), "digitizerId", valid.map(_.digitizerId)),
+      Route("wire_ingest_f144", logs.map(WireCodecs.encodeF144), Seq(brokenRoot(WireCodecs.encodeF144(logs.head))),
+        graft.streaming.WireIngest.f144FromBinary(_).toDF(), "sourceName", logs.map(_.sourceName)),
+      Route("wire_ingest_se00", envs.map(WireCodecs.encodeSe00), Seq(brokenRoot(WireCodecs.encodeSe00(envs.head))),
+        graft.streaming.WireIngest.se00FromBinary(_).toDF(), "name", envs.map(_.name)))
+    routes.foreach { r =>
+      val decoded = r.decode((r.ok ++ Seq(dat2Buf, garbage, null) ++ r.malformed).toDS())
+      val out = decoded.collect()
+      assert(out.map(_.getAs[Any](r.key)).toSeq.sortBy(_.toString) === r.keys.sortBy(_.toString), r.observeName)
+      val m = decoded.queryExecution.observedMetrics(r.observeName)
+      assert(m.getAs[Long]("n_messages") === r.ok.length + 3L + r.malformed.length, r.observeName)
+      assert(m.getAs[Long]("n_ok") === r.ok.length.toLong, r.observeName)
+      assert(m.getAs[Long]("n_foreign") === 3L, r.observeName)
+      assert(m.getAs[Long]("n_malformed") === r.malformed.length.toLong, r.observeName)
+    }
+    val dev2 = graft.streaming.WireIngest.dev2FromBinary(valid.map(WireCodecs.encodeDev2).toDS()).collect()
+    assert(dev2.forall(_.time.toSeq == Seq(1L, 2L)))
 
     // streaming path: same transform on a MemoryStream feeds the real
     // stateful assembler (transformWithState needs the RocksDB provider)
-    val s = spark.newSession()
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
     implicit val sqlCtx = s.sqlContext
     val input =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Array[Byte]]

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import graft.operators.NexusTables
 import graft.schemas._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -237,35 +238,33 @@ class CompactionSpec extends AnyFunSuite {
     assert(!Files.exists(stale), "stale foreign scratch must be reclaimed")
   }
 
-  private def rowsOf(dir: String): Seq[String] =
-    spark.read.parquet(dir).collect().map(_.toString).toSeq.sorted
+  test("the sink's frames and periods planes equal NexusTables.frameTable and a groupBy " +
+    "over the same two batches") {
+    val dir = Files.createTempDirectory("sink-planes").toString
+    val sink = new NexusSink(dir)
+    Seq(0, 1).foreach(b => sink.writeBatch(assignedBatch(b), batchId = b.toLong))
+    val batches = Seq(0, 1).map(b => assignedBatch(b).withColumn("batch_id", lit(b))).reduce(_ union _)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def written(table: String, like: DataFrame): Seq[String] =
+      rows(spark.read.parquet(s"$dir/local/$table").select(like.columns.toSeq.map(col): _*))
 
-  test("over-cap fallback writes the same planes as the driver-derived path") {
-    val driverDir = Files.createTempDirectory("sink-driver").toString
-    val distributedDir = Files.createTempDirectory("sink-distributed").toString
-    val driver = new NexusSink(driverDir)
-    val distributed = new NexusSink(distributedDir, maxDriverFramesPerBatch = 0L)
-    // the largest cap still collects the batch (its bounded collect must
-    // not overflow into an empty one)
-    val uncappedDir = Files.createTempDirectory("sink-uncapped").toString
-    val uncapped = new NexusSink(uncappedDir, maxDriverFramesPerBatch = Long.MaxValue)
-    intercept[IllegalArgumentException](new NexusSink(uncappedDir, maxDriverFramesPerBatch = -1L))
-    Seq(0, 1).foreach { b =>
-      Seq(driver, distributed, uncapped).foreach(_.writeBatch(assignedBatch(b), batchId = b.toLong))
-    }
-    Seq("events", "frames", "periods").foreach { table =>
-      val expected = rowsOf(s"$driverDir/local/$table")
-      assert(expected.nonEmpty, table)
-      assert(rowsOf(s"$distributedDir/local/$table") == expected, table)
-      assert(rowsOf(s"$uncappedDir/local/$table") == expected, table)
-    }
+    val frameTable = NexusTables.frameTable(batches)
+    assert(rows(frameTable).length === 4)
+    assert(written("frames", frameTable) === rows(frameTable))
+    val periods = batches
+      .groupBy(
+        col("run_name"),
+        col("run_start_ns"),
+        col("metadata.periodNumber").as("period_number"),
+        col("batch_id"))
+      .agg(count(lit(1)).as("n_frames"), sum(size(col("time")).cast("long")).as("n_events"))
+    assert(rows(periods).length === 2)
+    assert(written("periods", periods) === rows(periods))
     // event_index carries across batches: batch 1's first frame starts
-    // after batch 0's three events, on every path
-    Seq(driverDir, distributedDir, uncappedDir).foreach { dir =>
-      val index = spark.read.parquet(s"$dir/local/frames")
-        .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
-      assert(index == Seq(0L, 2L, 3L, 5L), dir)
-    }
+    // after batch 0's three events
+    val index = spark.read.parquet(s"$dir/local/frames")
+      .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
+    assert(index == Seq(0L, 2L, 3L, 5L))
   }
 
   test("a warm sink compiles no new code for the next same-shape batch") {

@@ -4,11 +4,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The RocksDB state-store opt-in (Sessions.stateStoreConfigure /
-  * `graft.stateStore = rocksdb`): the provider must actually engage —
-  * asserted via the rocksdb* custom metrics only that provider reports
-  * — and stateful results must be identical to the default HDFS-backed
-  * store. See SCALE.md §Streaming for the state-size envelope.
+/** The one state-store profile (Sessions.stateStoreConfigure): the RocksDB
+  * provider must actually engage — asserted via the rocksdb* custom
+  * metrics only that provider reports — with full-snapshot checkpoints
+  * and compaction on commit. See SCALE.md §Streaming for the state-size
+  * envelope.
   */
 class RocksDBStateStoreSpec extends AnyFunSuite {
 
@@ -18,13 +18,11 @@ class RocksDBStateStoreSpec extends AnyFunSuite {
     s
   }
 
-  test("opting in engages the RocksDB provider on a stateful query") {
-    val s = spark.newSession()
-    s.conf.set(graft.Sessions.StateStoreKey, "rocksdb")
-    graft.Sessions.stateStoreConfigure(s)
-    assert(
-      s.conf.get("spark.sql.streaming.stateStore.providerClass") ===
-        graft.Sessions.RocksDBProvider)
+  test("stateStoreConfigure engages RocksDB with changelog off and compactOnCommit on") {
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
+    assert(s.conf.get("spark.sql.streaming.stateStore.providerClass") === graft.Sessions.RocksDBProvider)
+    assert(s.conf.get("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "false")
+    assert(s.conf.get("spark.sql.streaming.stateStore.rocksdb.compactOnCommit") === "true")
     implicit val sq = s.sqlContext
     import s.implicits._
     val input = MemoryStream[Int]
@@ -52,71 +50,5 @@ class RocksDBStateStoreSpec extends AnyFunSuite {
       try q.stop()
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
-  }
-
-  test("default session keeps the built-in provider (opt-in, not default)") {
-    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
-    assert(
-      !s.conf
-        .getOption("spark.sql.streaming.stateStore.providerClass")
-        .contains(graft.Sessions.RocksDBProvider))
-  }
-
-  test("streamDedup result is identical under RocksDB (conf carried across the drain clone)") {
-    // self-written fixture with a plain-long ts column: the test must
-    // not depend on which suite created the SparkContext (the harness
-    // parquet's TIMESTAMP(NANOS) needs a context-creation-time conf)
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rocksdb_events").toString
-    (0L until 200L)
-      // event_type keyed on event_id so in-file replays (i and i+150)
-      // agree — the dedup winner's type is then deterministic
-      .map(i => (i % 150, s"type_${(i % 150) % 4}", 1700000000000000000L + i * 1000000L, i.toDouble))
-      .toDF("event_id", "event_type", "ts", "value")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$dir/_stage")
-    // the drain's pathGlobFilter expects a FLAT events.parquet file (the
-    // harness layout), not a directory
-    val part = {
-      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "_stage"))
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.find(_.toString.endsWith(".parquet")).get
-      } finally st.close()
-    }
-    java.nio.file.Files.move(part, java.nio.file.Paths.get(dir, "events.parquet"))
-    def run(s0: org.apache.spark.sql.SparkSession): Map[String, Long] =
-      graft.queries.StreamingQueries
-        .streamDedup(s0, dir)
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-    val base = run(spark)
-    val s = spark.newSession()
-    s.conf.set(graft.Sessions.StateStoreKey, "rocksdb")
-    val rocks = run(s)
-    assert(rocks === base)
-    assert(rocks.values.sum === 150L, "dedup must collapse the doubled stream to unique ids")
-  }
-
-  test("streamMinhashDedup verdict is identical under RocksDB") {
-    val dir = "/root/testdata/sf0.001"
-    def run(s0: org.apache.spark.sql.SparkSession): Set[(Long, Long, Boolean)] = {
-      val got = graft.queries.StreamingQueries
-        .streamMinhashDedup(s0, dir)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-        .toSet
-      spark.catalog.clearCache()
-      got
-    }
-    val base = run(spark)
-    val s = spark.newSession()
-    s.conf.set(graft.Sessions.StateStoreKey, "rocksdb")
-    val rocks = run(s)
-    assert(rocks === base)
-    assert(base.exists(!_._3), "fixture must contain at least one dropped doc")
   }
 }

@@ -62,10 +62,7 @@ class StreamingSpec extends AnyFunSuite {
     // completeness dispatch, TTL flush and late rejection on typed
     // state + registered timers (the TTL must run from the FIRST
     // message: later contributions must not extend the deadline)
-    val s = spark.newSession()
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[EventListMessage]
@@ -129,10 +126,7 @@ class StreamingSpec extends AnyFunSuite {
     // delay the test but can never change its outcome. The old
     // wall-clock variant needed a retry-once guard and budget-gated
     // asserts; every assert here is strict.
-    val s = spark.newSession()
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val input = MemoryStream[FrameAssemblyTws.TimedMessage]
@@ -260,10 +254,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming frame assembly drains to the batch operator's frame set") {
-    val s = spark.newSession()
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     // frames 0..7; frames f%3==0 miss digitiser 1 → TTL partials
@@ -602,6 +593,38 @@ class StreamingSpec extends AnyFunSuite {
       s"jobs per non-empty batch: ${batches.map(_._2.jobs).mkString(",")}")
   }
 
+  test("lifecycle job: a session with no state-store conf runs the one RocksDB profile, " +
+    "and start() leaves that session's conf as it was") {
+    val s = spark.newSession()
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val pinned = graft.Sessions.StateStoreProfile.map(_._1) :+ "spark.sql.shuffle.partitions"
+    val before = pinned.map(k => k -> s.conf.getOption(k))
+    assert(!before.exists(_._2.contains(graft.Sessions.RocksDBProvider)))
+    val outDir = Files.createTempDirectory("profile").toString
+    val catalog = new RunCatalog
+    catalog.update(Iterator(RunInterval("run_p", meta(0).timestampNs - 1L, None)))
+    val input = MemoryStream[TraceMessage]
+    val query = lifecycleJob(input, new NexusSink(outDir), catalog,
+      Files.createTempDirectory("profile_ckpt").toString)
+    try {
+      assert(pinned.map(k => k -> s.conf.getOption(k)) === before)
+      input.addData(traceMsg(0, 0), traceMsg(1, 0))
+      val deadline = System.currentTimeMillis() + 20000L
+      while (countAt(s"$outDir/local/events") < 8 && System.currentTimeMillis() < deadline)
+        Thread.sleep(100L)
+      assert(countAt(s"$outDir/local/events") === 8)
+      val ran = query
+        .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.sparkSession.sessionState.conf
+      def ranWith(k: String) = ran.getConfString(k, "unset")
+      assert(ranWith("spark.sql.streaming.stateStore.providerClass") === graft.Sessions.RocksDBProvider)
+      assert(ranWith("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "false")
+      assert(ranWith("spark.sql.streaming.stateStore.rocksdb.compactOnCommit") === "true")
+    } finally query.stop()
+    assert(pinned.map(k => k -> s.conf.getOption(k)) === before)
+  }
+
   test("lifecycle job: a failed archive move is logged and counted, not swallowed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -659,7 +682,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(frames.filter(col("run_name") === "run_a")
       .orderBy("event_time_zero").collect().map(_.getAs[Long]("event_index")).toSeq === Seq(0L, 2L))
 
-    assert(sink.resumeRunNames() === Seq("run_a", "run_b"))
+    assert(sink.resumeRunGenerations().map(_._1) === Seq("run_a", "run_b"))
 
     // restart idempotence: replaying a batch id replaces its partitions
     sink.writeBatch(assigned, batchId = 0L)
@@ -677,7 +700,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(moved === Seq(("run_a", startNs)))
     assert(Files.exists(java.nio.file.Paths.get(s"$outDir/completed/events/run_name=run_a")))
     assert(!Files.exists(java.nio.file.Paths.get(s"$outDir/local/events/run_name=run_a")))
-    assert(sink.resumeRunNames() === Seq("run_b"))
+    assert(sink.resumeRunGenerations().map(_._1) === Seq("run_b"))
     assert(spark.read.parquet(s"$outDir/completed/events").count() === 3)
   }
 
@@ -1041,7 +1064,7 @@ class StreamingSpec extends AnyFunSuite {
     val moved = sink.finalizeRuns(
       Seq(("run_r", gen1Start, Some(meta(1).timestampNs + 1L))), nowNs)
     assert(moved === Seq(("run_r", gen1Start)))
-    assert(sink.resumeRunNames() === Seq.empty)
+    assert(sink.resumeRunGenerations() === Seq.empty)
 
     val gen2 = aev2
       .withColumn("run_name", lit("run_r"))
@@ -1536,10 +1559,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("bitmap distinct stream: cross-batch dedup, monotone counts, per-key isolation") {
-    val s = spark.newSession()
-    s.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      graft.Sessions.RocksDBProvider)
+    val s = graft.Sessions.stateStoreConfigure(spark.newSession())
     implicit val sq = s.sqlContext
     import s.implicits._
     val input = MemoryStream[graft.streaming.BitmapDistinctStream.Obs]
