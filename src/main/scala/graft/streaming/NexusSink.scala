@@ -2,7 +2,10 @@ package graft.streaming
 
 import graft.Reuse
 import graft.operators.NexusTables
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Path, Paths}
@@ -31,13 +34,13 @@ import scala.jdk.CollectionConverters._
   * `(run, batch_id)` subdirectories, making the sink idempotent per
   * micro-batch.
   *
-  * Scale: the event plane (the corpus) is written with one
-  * `partitionBy(run_name, run_start_ns, batch_id)` job — executors
-  * write partition dirs directly, the driver never touches event rows.
-  * The frame and period planes are DERIVED driver-side from one narrow
-  * per-frame scalar pass (9 scalars per frame, far less than the batch's
-  * cached events), so the batch's corpus is scanned by exactly one write
-  * job instead of three.
+  * Scale: a micro-batch is ONE Spark job. The event plane (the corpus)
+  * is written with one `partitionBy(run_name, run_start_ns, batch_id)`
+  * job — executors write partition dirs directly, the driver never
+  * touches event rows — and that job observes the 9 per-frame scalars.
+  * The frame and period planes are DERIVED driver-side from the
+  * observation and written by the driver's parquet writer, one file per
+  * generation and batch, with no Spark job. `outputDir` is a local path.
   */
 final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     extends Serializable {
@@ -104,6 +107,10 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
 
   private def unescName(dirName: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(dirName)
+
+  /** A generation's dir of `table` under a tier (`local`, `completed`). */
+  private def genDir(tier: Path, table: String, gen: (String, Long)): Path =
+    tier.resolve(table).resolve(s"run_name=${escName(gen._1)}").resolve(s"run_start_ns=${gen._2}")
 
   /** Per-attempt compaction scratch naming (ADVICE r5): each rewrite
     * works in `.compact_tmp-<n>` and registers the path here while in
@@ -190,6 +197,13 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     */
   val framesDroppedNoRun, maintenanceFailures = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Frames and events [[writeBatch]] wrote, counted from its
+    * observation. Written + [[framesDroppedNoRun]] is every frame the
+    * lifecycle job assembled, less those an open catalog matched to no
+    * run (RunAssignment filters those, uncounted).
+    */
+  val framesWritten, eventsWritten = new java.util.concurrent.atomic.AtomicLong()
+
   /** Cumulative compaction outcomes, for auditing write amplification of
     * the maintenance thread's passes. Bounded: one entry per
     * generation×table per compaction pass.
@@ -205,23 +219,22 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
       spark: SparkSession,
       runKeys: Set[(String, Long)],
       beforeBatchId: Long): Map[(String, Long), Long] = {
-    val eventsDir = local.resolve("events")
-    // a run first seen in THIS batch has no partitions on disk unless
-    // the process is replaying after a crash — probe the generation
-    // dirs before paying a Spark scan job, so steady-state operation
-    // (where new runs arrive constantly) never reads the events plane
-    // just to learn the base offset is 0 (r15: this scan fired every
-    // couple of batches in the chain soak, one full local/events read
-    // each)
+    // a run first seen in THIS batch has no earlier batches on disk
+    // unless the process is replaying after a crash. The batch's own
+    // events already landed (writeBatch writes them first), so probe the
+    // generation dirs for a `batch_id < N` partition before paying a
+    // Spark scan job: steady-state operation, where new runs arrive
+    // constantly, never reads the events plane just to learn the base
+    // offset is 0
     val replayed = runKeys.filter { case (n, s) =>
-      Files.isDirectory(
-        eventsDir.resolve(s"run_name=${escName(n)}").resolve(s"run_start_ns=$s"))
+      listChildren(genDir(local, "events", (n, s)))
+        .exists(batchIdOf(_).exists(_ < beforeBatchId))
     }
-    if (!Files.exists(eventsDir) || replayed.isEmpty) Map.empty
+    if (replayed.isEmpty) Map.empty
     else
       try {
         spark.read
-          .parquet(eventsDir.toString)
+          .parquet(local.resolve("events").toString)
           .filter(col("batch_id") < beforeBatchId &&
             col("run_name").isin(replayed.map(_._1).toSeq: _*))
           // partition-column inference types small values as INT (and a
@@ -247,101 +260,100 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
   /** Write one micro-batch of run-assigned assembled frames (aev2 layout +
     * `run_name`/`run_start_ns` columns). `batchId` keys the append for
     * idempotent restart.
+    *
+    * One Spark job: the events write, which runs formation, assembly and
+    * the state commit upstream and OBSERVES the 9 per-frame scalars (~80 B
+    * a frame, against ≥ 20 B per event written) — the reference appends a
+    * frame's events and its frame-list entry in one pass
+    * (`event_data.rs:196,236-244`). The frames plane (event_index
+    * cumsum), the periods plane and the offset cache derive from them.
     */
   def writeBatch(assignedFrames: DataFrame, batchId: Long): Unit = {
-    // a scope like writeLogBatch's: a transient write failure must not
-    // leave this batch's cache pinned across the engine's replay
-    Reuse.scope(writeBatchCached(assignedFrames.sparkSession, Reuse.pin(assignedFrames), batchId))
-  }
-
-  private def writeBatchCached(
-      spark: SparkSession,
-      cached: DataFrame,
-      batchId: Long): Unit = {
-    // ONE narrow pass serves the whole metadata side: the per-frame
-    // scalars are collected once — this job also materializes the pin,
-    // so formation, assembly and the state commit upstream run exactly
-    // once — and the frame plane (event_index cumsum), the periods plane
-    // and the offset-cache counts are all derived driver-side from it.
-    // One row of 9 scalars (~80 B) per ASSEMBLED FRAME, while the batch's
-    // one cached partition already holds ≥ 20 B per event (~2.6 KB for a
-    // 128-event frame); `spark.driver.maxResultSize` fails the collect
-    // closed beyond that.
-    val frameMeta: Array[NexusSink.FrameMeta] = cached
-      .select(
-        col("run_name"),
-        col("run_start_ns"),
-        col("metadata.timestampNs"),
-        col("metadata.periodNumber"),
-        col("metadata.frameNumber"),
-        col("complete"),
-        col("metadata.running"),
-        col("metadata.vetoFlags"),
-        size(col("time")).cast("long"))
-      .collect()
-      .map(r => NexusSink.FrameMeta(
+    val observed = new Observation("nexus_frames")
+    val scalars = Seq("run_name", "run_start_ns", "metadata.timestampNs", "metadata.periodNumber",
+      "metadata.frameNumber", "complete", "metadata.running", "metadata.vetoFlags").map(col) :+
+      size(col("time")).cast("long")
+    writePlane(
+      NexusTables.eventTable(
+        assignedFrames.observe(observed, collect_list(struct(scalars: _*)).as("frames"))),
+      "events",
+      batchId)
+    val frameMeta = observed.get("frames").asInstanceOf[scala.collection.Seq[Row]].map(r =>
+      NexusSink.FrameMeta(
         r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5), r.getBoolean(6), r.getInt(7),
         r.getLong(8)))
-    // empty micro-batch (the lifecycle job's finalization poll): nothing
-    // to write, and dynamic overwrite of zero partitions is a no-op
+    // empty micro-batch (the lifecycle job's finalization poll): the
+    // events write above wrote no partition, and there is nothing else
     if (frameMeta.isEmpty) return
-    val batchCounts: Map[(String, Long), Long] = frameMeta
-      .groupBy(m => (m.runName, m.runStartNs))
-      .map { case (k, ms) => k -> ms.iterator.map(_.nEvents).sum }
+    val byGen = frameMeta.groupBy(m => (m.runName, m.runStartNs))
+    val batchCounts = byGen.map { case (k, ms) => k -> ms.iterator.map(_.nEvents).sum }
     val newRuns = batchCounts.keySet.diff(eventBase.keySet)
     if (newRuns.nonEmpty) {
-      val onDisk = onDiskEventCounts(spark, newRuns, batchId)
+      val onDisk = onDiskEventCounts(assignedFrames.sparkSession, newRuns, batchId)
       newRuns.foreach(r => eventBase(r) = onDisk.getOrElse(r, 0L))
     }
-    // frame plane rows, driver-derived: per-generation sort by frame
-    // timestamp (the same ordering NexusTables.frameTable's window
-    // declares) and a running cumsum seeded from the offset cache
-    val frameRows = new java.util.ArrayList[org.apache.spark.sql.Row](frameMeta.length)
-    frameMeta
-      .groupBy(m => (m.runName, m.runStartNs))
-      .foreach { case ((name, start), ms) =>
-        var idx = eventBase((name, start))
-        ms.sortBy(_.tsNs).foreach { m =>
-          frameRows.add(org.apache.spark.sql.Row(
-            name, start, m.tsNs - start, idx, m.periodNumber,
-            m.frameNumber, m.complete, m.running, m.vetoFlags))
-          idx += m.nEvents
-        }
-      }
-    val periodRows: Seq[(String, Long, Long, Long, Long)] = frameMeta
-      .groupBy(m => (m.runName, m.runStartNs, m.periodNumber))
-      .map { case ((n, s, p), ms) =>
-        (n, s, p, ms.length.toLong, ms.iterator.map(_.nEvents).sum)
-      }
-      .toSeq
-    // the events plane is the ONLY distributed write; it reads the
-    // already-materialized cache, so it runs concurrently with the two
-    // driver-local plane writes below, one task each. Failure of any
-    // write fails the batch, and replay rewrites all three planes'
-    // (run, batch_id) partitions idempotently.
-    val eventsFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val eventsThread = new Thread(
-      () =>
-        try writePlane(NexusTables.eventTable(cached), "events", batchId)
-        catch { case t: Throwable => eventsFailure.set(t) },
-      "nexus-events-write")
-    eventsThread.setDaemon(true)
-    eventsThread.start()
-    try {
-      import spark.implicits._
-      writePlane(
-        spark.createDataFrame(frameRows, NexusSink.frameplaneSchema).coalesce(1), "frames", batchId)
+    byGen.foreach { case (gen, ms) =>
+      // frame plane: per-generation sort by frame timestamp (the ordering
+      // NexusTables.frameTable's window declares) and a running cumsum
+      // seeded from the offset cache
+      var idx = eventBase(gen)
+      writeDriverPlane("frames", gen, batchId, NexusSink.framesPlane, ms.sortBy(_.tsNs).map { m =>
+        val g = new SimpleGroup(NexusSink.framesPlane)
+          .append("event_time_zero", m.tsNs - gen._2)
+          .append("event_index", idx)
+          .append("period_number", m.periodNumber)
+          .append("frame_number", m.frameNumber)
+          .append("frame_complete", m.complete)
+          .append("running", m.running)
+          .append("veto_flags", m.vetoFlags)
+        idx += m.nEvents
+        g
+      })
       // periods group: per-period accumulation from frame metadata
-      // (period.rs:23-55, UpdatePeriodList) — same derived-plane shape
-      writePlane(
-        periodRows.toDF("run_name", "run_start_ns", "period_number", "n_frames", "n_events").coalesce(1),
-        "periods",
-        batchId)
-    } finally eventsThread.join()
-    val failure = eventsFailure.get()
-    if (failure != null) throw failure
+      // (period.rs:23-55, UpdatePeriodList)
+      writeDriverPlane("periods", gen, batchId, NexusSink.periodsPlane,
+        ms.groupBy(_.periodNumber).toSeq.sortBy(_._1).map { case (p, pms) =>
+          new SimpleGroup(NexusSink.periodsPlane)
+            .append("period_number", p)
+            .append("n_frames", pms.length.toLong)
+            .append("n_events", pms.iterator.map(_.nEvents).sum)
+        })
+    }
     batchCounts.foreach { case (r, n) => eventBase(r) = eventBase(r) + n }
+    framesWritten.addAndGet(frameMeta.length.toLong)
+    eventsWritten.addAndGet(batchCounts.values.sum)
+  }
+
+  /** Write one generation's rows of a driver-derived plane as ONE snappy
+    * parquet file of batch `batchId`, in [[writePlane]]'s layout but with
+    * no Spark job: the file lands in a dot-prefixed staging dir (readers
+    * skip it; the replay of a crashed batch deletes it), any existing
+    * `batch_id=N` dir — a replayed batch, whichever writer made it — is
+    * deleted, and the staging dir is renamed into place.
+    */
+  private def writeDriverPlane(
+      table: String,
+      gen: (String, Long),
+      batchId: Long,
+      schema: MessageType,
+      rows: Iterable[Group]): Unit = {
+    val dir = genDir(local, table, gen)
+    val stage = dir.resolve(s".stage-batch_id=$batchId")
+    deleteRecursively(stage)
+    Files.createDirectories(stage)
+    val file = stage.resolve(s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.parquet.io.LocalOutputFile(file))
+      .withConf(new org.apache.hadoop.conf.Configuration(false))
+      .withType(schema)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach(writer.write)
+    finally writer.close()
+    val target = dir.resolve(s"batch_id=$batchId")
+    deleteRecursively(target)
+    Files.move(stage, target)
   }
 
   /** Write one plane's rows of micro-batch `batchId` under
@@ -429,13 +441,10 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
       case (runName, startNs, Some(untilNs)) if untilNs + lingerMs * 1000000L < nowNs =>
         finalizedGens += ((runName, startNs))
         tables.foreach { table =>
-          val parent = local.resolve(table).resolve(s"run_name=${escName(runName)}")
-          val src = parent.resolve(s"run_start_ns=$startNs")
+          val src = genDir(local, table, (runName, startNs))
+          val parent = src.getParent
           if (Files.exists(src)) {
-            val dst = completed
-              .resolve(table)
-              .resolve(s"run_name=${escName(runName)}")
-              .resolve(s"run_start_ns=$startNs")
+            val dst = genDir(completed, table, (runName, startNs))
             Files.createDirectories(dst.getParent)
             if (!Files.exists(dst)) Files.move(src, dst)
             else mergeMove(src, dst)
@@ -476,8 +485,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
           listChildren(nameDir)
             .filter(_.getFileName.toString.startsWith("run_start_ns="))
             .foreach { src =>
-              scala.util
-                .Try(src.getFileName.toString.stripPrefix("run_start_ns=").toLong)
+              src.getFileName.toString.stripPrefix("run_start_ns=").toLongOption
                 .foreach { start =>
                   try {
                     // a crash between compaction's park and promote
@@ -559,23 +567,16 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
           listChildren(nameDir)
             .filter(_.getFileName.toString.startsWith("run_start_ns="))
             .foreach { genDir =>
-              scala.util
-                .Try(genDir.getFileName.toString.stripPrefix("run_start_ns=").toLong)
+              genDir.getFileName.toString.stripPrefix("run_start_ns=").toLongOption
                 .foreach { start =>
                   recoverInterruptedCompaction(genDir)
                   val before = parquetFilesUnder(genDir)
-                  val bytesBefore = before.map(f =>
-                    try Files.size(f) catch { case _: java.io.IOException => 0L }).sum
+                  val bytesBefore = bytesOf(before)
                   val batchDirs = listChildren(genDir)
                     .filter(_.getFileName.toString.startsWith("batch_id="))
                   val alreadyCompacted = Files.exists(genDir.resolve(".compacted"))
                   if (before.length > 1 && batchDirs.nonEmpty && !alreadyCompacted) {
-                    val maxBatch = batchDirs
-                      .flatMap(d =>
-                        scala.util
-                          .Try(d.getFileName.toString.stripPrefix("batch_id=").toLong)
-                          .toOption)
-                      .max
+                    val maxBatch = batchDirs.flatMap(batchIdOf).max
                     // FILE-level pre-image, taken before the rewrite
                     // reads: finalizeRuns' mergeMove can add files INTO
                     // an existing batch_id dir without changing any dir
@@ -615,7 +616,6 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
                           // under this same lock) — the rewrite didn't see
                           // it, so parking it would destroy its rows.
                           // Abort the swap; the next pass re-reads.
-                          val _ = current // batch dirs re-listed under the lock
                           if (batchContentSnapshot(genDir) != snapshot) {
                             deleteRecursively(tmp)
                             false
@@ -646,9 +646,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
                         before.length,
                         after.length,
                         bytesBefore,
-                        after.map(f =>
-                          try Files.size(f)
-                          catch { case _: java.io.IOException => 0L }).sum)
+                        bytesOf(after))
                       stats += stat
                       compactionHistory.synchronized(compactionHistory += stat)
                     }
@@ -720,6 +718,15 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     Files.deleteIfExists(old)
   }
 
+  /** The N of a `batch_id=N` partition dir. */
+  private def batchIdOf(d: Path): Option[Long] = {
+    val name = d.getFileName.toString
+    if (name.startsWith("batch_id=")) name.stripPrefix("batch_id=").toLongOption else None
+  }
+
+  private def bytesOf(files: Seq[Path]): Long =
+    files.map(f => try Files.size(f) catch { case _: java.io.IOException => 0L }).sum
+
   private def parquetFilesUnder(p: Path): Seq[Path] =
     listChildren(p).flatMap { c =>
       val n = c.getFileName.toString
@@ -786,8 +793,8 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     * stop_ns?) with data still under local/ — the runs a restarted
     * engine must reopen (the reference re-extracts run parameters from
     * the partial file and resumes with a RunResume warning,
-    * `run_engine/run/mod.rs:82-103`). ALL table layouts (events/frames/periods and the log planes) are scanned
-    * — events/, frames/, and the log tables (a generation whose frames
+    * `run_engine/run/mod.rs:82-103`). ALL tables are scanned — events/,
+    * frames/, periods/ and the log tables (a generation whose frames
     * all carried zero events has no events/ partition, and one that saw
     * only log traffic before the crash has only log partitions); the
     * stop comes from the
@@ -805,7 +812,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
             listChildren(nameDir).flatMap { g =>
               val dir = g.getFileName.toString
               if (dir.startsWith("run_start_ns="))
-                scala.util.Try(dir.stripPrefix("run_start_ns=").toLong).toOption.map(name -> _)
+                dir.stripPrefix("run_start_ns=").toLongOption.map(name -> _)
               else None
             }
           }
@@ -837,12 +844,8 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     */
   def resumeRunParameters(spark: SparkSession): Seq[NexusSink.ResumedRunState] =
     resumeRunGenerations().map { case (name, start, stop) =>
-      def genDir(table: String): Path =
-        local.resolve(table)
-          .resolve(s"run_name=${escName(name)}")
-          .resolve(s"run_start_ns=$start")
       val periods: Seq[(Long, Long, Long)] = {
-        val dir = genDir("periods")
+        val dir = genDir(local, "periods", (name, start))
         if (!Files.isDirectory(dir)) Seq.empty
         else
           spark.read.parquet(dir.toString)
@@ -856,7 +859,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
             .toSeq
       }
       val (nFrames, firstFrameNs, maxBatchId) = {
-        val dir = genDir("frames")
+        val dir = genDir(local, "frames", (name, start))
         if (!Files.isDirectory(dir)) (0L, None: Option[Long], None: Option[Long])
         else {
           val r = spark.read.parquet(dir.toString)
@@ -877,7 +880,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
       // restarted writer continues the running offset where the crash
       // left it
       val nextEventIndex = {
-        val dir = genDir("events")
+        val dir = genDir(local, "events", (name, start))
         if (!Files.isDirectory(dir)) 0L
         else spark.read.parquet(dir.toString).count()
       }
@@ -899,7 +902,7 @@ object NexusSink {
 
   private[streaming] val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.NexusSink")
 
-  /** Per-frame scalars collected once per micro-batch — everything the
+  /** Per-frame scalars observed once per micro-batch — everything the
     * frame and period planes plus the offset cache need, with the event
     * payload (time/voltage/channel arrays) left on the executors.
     */
@@ -914,23 +917,19 @@ object NexusSink {
       vetoFlags: Int,
       nEvents: Long)
 
-  /** Schema of the driver-derived frame plane (NexusTables.frameTable's
-    * column order and types; [[writePlane]] appends batch_id), so the
-    * sink's plane and the batch frame table stay byte-compatible.
+  /** Parquet schemas of the driver-written planes: the columns (names,
+    * order, types) Spark's partitioned writer puts in a file of
+    * NexusTables.frameTable and of the periods aggregate, so both writers'
+    * files read back as one table. The partition columns live only in
+    * the path.
     */
-  private val frameplaneSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("run_name", StringType),
-      StructField("run_start_ns", LongType, nullable = false),
-      StructField("event_time_zero", LongType, nullable = false),
-      StructField("event_index", LongType, nullable = false),
-      StructField("period_number", LongType, nullable = false),
-      StructField("frame_number", LongType, nullable = false),
-      StructField("frame_complete", BooleanType, nullable = false),
-      StructField("running", BooleanType, nullable = false),
-      StructField("veto_flags", IntegerType, nullable = false)))
-  }
+  private val framesPlane = MessageTypeParser.parseMessageType("message spark_schema { " +
+    "required int64 event_time_zero; required int64 event_index; required int64 period_number; " +
+    "required int64 frame_number; required boolean frame_complete; required boolean running; " +
+    "required int32 veto_flags; }")
+
+  private val periodsPlane = MessageTypeParser.parseMessageType("message spark_schema { " +
+    "required int64 period_number; required int64 n_frames; required int64 n_events; }")
 
   /** Recursive delete for scratch/layout dirs — shared with the
     * fixture queries that stand up a throwaway sink layout.

@@ -63,8 +63,8 @@ object PipelineJobs {
     * never happen and `StateStoreCommitValidationFailed` TERMINATES the
     * query — fatal for these jobs, whose empty batches ARE the
     * finalization/archive poll. Every foreachBatch body here consumes
-    * its whole batch (a count, a collect of the tiny run dimension, or a
-    * pinned batch whose partitions are cached whole), so the partial
+    * its whole batch (a count, a collect of the tiny run dimension, or
+    * the sink's events write, which scans every partition), so the partial
     * consumption the validation hunts for cannot happen; disable it.
     *
     * BLAST RADIUS: the conf is session-wide and NOT restored (restoring
@@ -180,8 +180,8 @@ object PipelineJobs {
     *     the reference's digitiser-aggregator is one task
     *     (`digitiser-aggregator/src/frame/cache.rs`), and formation, the
     *     only per-sample work, keeps the source's partitions ahead of the
-    *     shuffle. The state commit, the sink's pinned batch and its
-    *     events write then run once per micro-batch, not once per core.
+    *     shuffle. The state commit and the sink's events write then run
+    *     once per micro-batch, not once per core.
     *     The count lives in a checkpoint's offset log, so a checkpoint
     *     created with more partitions restarts with them.
     */
@@ -262,7 +262,8 @@ object PipelineJobs {
     * partition ([[withAssemblerConf]]) with state bounded by TTL × frame
     * rate; stage 3 broadcasts the run dimension and writes one file per
     * plane per run and batch. A non-empty batch is one state commit and
-    * four jobs: the bounded frame collect and the three plane writes.
+    * one job: the events write, which observes the frame scalars the
+    * driver writes the frames and periods planes from.
     */
   def traceToNexusWithLifecycle(
       traces: Dataset[TraceMessage],

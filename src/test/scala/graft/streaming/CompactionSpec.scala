@@ -262,9 +262,79 @@ class CompactionSpec extends AnyFunSuite {
     assert(written("periods", periods) === rows(periods))
     // event_index carries across batches: batch 1's first frame starts
     // after batch 0's three events
-    val index = spark.read.parquet(s"$dir/local/frames")
+    assert(frameIndex(dir) == Seq(0L, 2L, 3L, 5L))
+  }
+
+  private def planeRows(dir: String, table: String): Seq[String] =
+    spark.read.parquet(s"$dir/local/$table").collect().map(_.toString).toSeq.sorted
+
+  private def frameIndex(dir: String): Seq[Long] =
+    spark.read.parquet(s"$dir/local/frames")
       .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
-    assert(index == Seq(0L, 2L, 3L, 5L))
+
+  test("a replayed batch leaves one file per frames and periods partition with the same rows, " +
+    "also over a file Spark's writer left there") {
+    val dir = Files.createTempDirectory("sink-replay").toString
+    new NexusSink(dir).writeBatch(assignedBatch(0), batchId = 0L)
+    val before = Seq("frames", "periods").map(planeRows(dir, _))
+    // the partition as Spark's partitioned writer lays it out: a second
+    // file, `part-00000-<uuid>.c000.snappy.parquet`, beside the first
+    val periods = assignedBatch(0)
+      .groupBy(col("run_name"), col("run_start_ns"), col("metadata.periodNumber").as("period_number"))
+      .agg(count(lit(1)).as("n_frames"), sum(size(col("time")).cast("long")).as("n_events"))
+    for ((table, rows) <- Seq("frames" -> NexusTables.frameTable(assignedBatch(0)), "periods" -> periods))
+      rows.withColumn("batch_id", lit(0)).write.mode("append")
+        .partitionBy("run_name", "run_start_ns", "batch_id").parquet(s"$dir/local/$table")
+    val part = s"run_name=run_c/run_start_ns=$startNs/batch_id=0"
+    val sparkNamed = ".*/part-00000-[0-9a-f-]{36}\\.c000\\.snappy\\.parquet"
+    assert(files(s"$dir/local/frames/$part").exists(_.matches(sparkNamed)))
+    // replay after a restart: a fresh sink, so the offset cache is cold
+    new NexusSink(dir).writeBatch(assignedBatch(0), batchId = 0L)
+    for ((table, rows) <- Seq("frames", "periods").zip(before)) {
+      assert(files(s"$dir/local/$table/$part").length === 1, s"$table: one file")
+      assert(planeRows(dir, table) === rows, table)
+    }
+  }
+
+  test("a leftover staging dir is invisible to readers and the replay of its batch removes it") {
+    val dir = Files.createTempDirectory("sink-stage").toString
+    val sink = new NexusSink(dir)
+    sink.writeBatch(assignedBatch(0), batchId = 0L)
+    val gen = Paths.get(s"$dir/local/frames/run_name=run_c/run_start_ns=$startNs")
+    // a crash between the file write and the rename into batch_id=1
+    val stage = Files.createDirectories(gen.resolve(".stage-batch_id=1"))
+    files(gen.resolve("batch_id=0").toString).foreach { f =>
+      Files.copy(Paths.get(f), stage.resolve(Paths.get(f).getFileName))
+    }
+    assert(spark.read.parquet(s"$dir/local/frames").count() === 2)
+    sink.writeBatch(assignedBatch(1), batchId = 1L)
+    assert(!Files.exists(stage))
+    assert(frameIndex(dir) === Seq(0L, 2L, 3L, 5L))
+  }
+
+  test("a run first seen in batch N costs no Spark job for its base offset") {
+    val dir = Files.createTempDirectory("sink-new-run").toString
+    val sink = new NexusSink(dir)
+    sink.writeBatch(assignedBatch(0), batchId = 0L)
+    val (_, work) = graft.obs.Obs.measured(spark, "sink-new-run") {
+      sink.writeBatch(assignedBatch(3).withColumn("run_name", lit("run_new")), batchId = 3L)
+    }
+    assert(work.jobs === 1, "the events write only")
+    assert(spark.read.parquet(s"$dir/local/frames").filter(col("run_name") === "run_new")
+      .orderBy("event_time_zero").select("event_index").collect().map(_.getLong(0)).toSeq
+      === Seq(0L, 2L))
+  }
+
+  test("replaying batch N of a generation with earlier batches on disk reproduces event_index") {
+    val dir = Files.createTempDirectory("sink-replay-index").toString
+    val sink = new NexusSink(dir)
+    Seq(0, 1, 2).foreach(b => sink.writeBatch(assignedBatch(b), batchId = b.toLong))
+    val before = planeRows(dir, "frames")
+    // a restarted process replays the last batch: its base offset comes
+    // from batches 0 and 1 on disk, not from batch 2's own events
+    new NexusSink(dir).writeBatch(assignedBatch(2), batchId = 2L)
+    assert(planeRows(dir, "frames") === before)
+    assert(frameIndex(dir) === Seq(0L, 2L, 3L, 5L, 6L, 8L))
   }
 
   test("a warm sink compiles no new code for the next same-shape batch") {
