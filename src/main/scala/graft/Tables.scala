@@ -61,7 +61,8 @@ object Tables {
   * parallelism sized to the harness (32 threads), shuffle partitions
   * matched to cores (not the 200 default), AQE on for runtime re-planning
   * (skew joins, partition coalescing — the knobs that matter at cluster
-  * scale), UTC for oracle parity, and nanosecond-timestamp reads enabled.
+  * scale), UTC for oracle parity, nanosecond-timestamp reads enabled,
+  * and the fork-free local file system ([[Sessions.LocalFsConf]]).
   */
 object Sessions {
 
@@ -86,6 +87,17 @@ object Sessions {
     "spark.sql.streaming.stateStore.providerClass" -> RocksDBProvider,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false",
     "spark.sql.streaming.stateStore.rocksdb.compactOnCommit" -> "true")
+
+  /** Hadoop's `file:` classes with java.nio in place of the `chmod` and
+    * `readlink` processes ([[graft.io.NioRawLocalFileSystem]]), for the
+    * `FileSystem` path (parquet writes, output commits, RocksDB uploads)
+    * and the `FileContext` path (checkpoint logs and state files). Spark's
+    * jars carry no libhadoop, and Hadoop's `FileSystem` cache ignores the
+    * conf, so the keys must be set when the context is created.
+    */
+  val LocalFsConf: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.io.NioLocalFs].getName)
 
   /** Read by nothing; perfbench's chain session still sets it. */
   val StateStoreKey = "graft.stateStore"
@@ -189,6 +201,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+    LocalFsConf.foreach { case (k, v) => builder.config(k, v) }
     // Scratch I/O (shuffle spill files, RocksDB state-store working dirs)
     // on tmpfs when the host has one: all of it is recreatable
     // run-local data with zero recovery value, so durable-disk fsyncs

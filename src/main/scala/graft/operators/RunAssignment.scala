@@ -95,7 +95,8 @@ object RunAssignment {
     * order ≡ the earliest accepted run. Distinct rows sharing a
     * timestamp trivially each keep their row — no join to multiply
     * them, no window key to collapse them. Unmatched rows drop
-    * (inner-join semantics).
+    * (inner-join semantics); the lifecycle job counts its dropped frames
+    * in `NexusSink.framesUnassigned`.
     */
   /** Fail-closed bound on the run-dimension collect (ADVICE r7): the
     * zero-shuffle literal-array design is only valid because runs are a

@@ -197,10 +197,16 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     */
   val framesDroppedNoRun, maintenanceFailures = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Frames the lifecycle job assembled while runs were open but that
+    * matched none of them (before a RunStart, or after their run's
+    * stop), which RunAssignment drops as the reference does
+    * (`engine.rs:214-238`); each batch's count is logged.
+    */
+  val framesUnassigned = new java.util.concurrent.atomic.AtomicLong()
+
   /** Frames and events [[writeBatch]] wrote, counted from its
-    * observation. Written + [[framesDroppedNoRun]] is every frame the
-    * lifecycle job assembled, less those an open catalog matched to no
-    * run (RunAssignment filters those, uncounted).
+    * observation. Written + [[framesUnassigned]] + [[framesDroppedNoRun]]
+    * is every frame the lifecycle job assembled.
     */
   val framesWritten, eventsWritten = new java.util.concurrent.atomic.AtomicLong()
 
@@ -267,8 +273,9 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     * frame's events and its frame-list entry in one pass
     * (`event_data.rs:196,236-244`). The frames plane (event_index
     * cumsum), the periods plane and the offset cache derive from them.
+    * Returns the number of frames written.
     */
-  def writeBatch(assignedFrames: DataFrame, batchId: Long): Unit = {
+  def writeBatch(assignedFrames: DataFrame, batchId: Long): Long = {
     val observed = new Observation("nexus_frames")
     val scalars = Seq("run_name", "run_start_ns", "metadata.timestampNs", "metadata.periodNumber",
       "metadata.frameNumber", "complete", "metadata.running", "metadata.vetoFlags").map(col) :+
@@ -285,7 +292,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
         r.getLong(8)))
     // empty micro-batch (the lifecycle job's finalization poll): the
     // events write above wrote no partition, and there is nothing else
-    if (frameMeta.isEmpty) return
+    if (frameMeta.isEmpty) return 0L
     val byGen = frameMeta.groupBy(m => (m.runName, m.runStartNs))
     val batchCounts = byGen.map { case (k, ms) => k -> ms.iterator.map(_.nEvents).sum }
     val newRuns = batchCounts.keySet.diff(eventBase.keySet)
@@ -323,6 +330,7 @@ final class NexusSink(outputDir: String, scratchStaleMs: Long = 15L * 60 * 1000)
     batchCounts.foreach { case (r, n) => eventBase(r) = eventBase(r) + n }
     framesWritten.addAndGet(frameMeta.length.toLong)
     eventsWritten.addAndGet(batchCounts.values.sum)
+    frameMeta.length.toLong
   }
 
   /** Write one generation's rows of a driver-derived plane as ONE snappy

@@ -3,8 +3,8 @@ package graft.streaming
 import graft.dsp.DetectorSettings
 import graft.operators.{EventFormation, LogTables, RunAssignment}
 import graft.schemas.{Alarm, LogData, SampleEnvLog, TraceMessage}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Driver-side run catalog — the Spark rendering of the reference
@@ -305,10 +305,19 @@ object PipelineJobs {
               sink.framesDroppedNoRun.addAndGet(dropped)
               NexusSink.log.warn(s"batch $batchId: $dropped frame(s) dropped, no run open")
             }
-          } else
-            sink.writeBatch(
-              RunAssignment.assignFrames(batch.toDF(), catalog.snapshot(batch.sparkSession)),
+          } else {
+            // the frames in, observed by the events write itself
+            val in = new Observation("nexus_frames_in")
+            val written = sink.writeBatch(
+              RunAssignment.assignFrames(
+                batch.toDF().observe(in, count(lit(1)).as("n")), catalog.snapshot(batch.sparkSession)),
               batchId)
+            val unassigned = in.get("n").asInstanceOf[Long] - written
+            if (unassigned > 0L) {
+              sink.framesUnassigned.addAndGet(unassigned)
+              NexusSink.log.warn(s"batch $batchId: $unassigned frame(s) dropped, no run matched")
+            }
+          }
           val now = nowNs()
           // durably mark every stopped generation (idempotent; the
           // control query also marks at stop-commit time when wired with
